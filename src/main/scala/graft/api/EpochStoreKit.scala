@@ -5,22 +5,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Shared machinery for the durable epoch-committed stores
-  * ([[SubstringDedupStore]], [[FingerprintStore]], [[FuzzyKeyStore]],
-  * [[SemanticDedupStore]]) — ONE implementation of the store-wide
-  * contract so its crash-safety reasoning lives in one place:
-  *
-  *  - artifacts are written FIRST (idempotent overwrites), then the
-  *    epoch's commit marker is created atomically with overwrite=false
-  *    — unmarked litter is invisible to readers and a replayed commit
-  *    onto a marked epoch fails loudly at the marker create;
-  *  - readers resolve at the highest MARKED epoch;
-  *  - delta-epoch artifact chains resolve LATEST-EPOCH-WINS per key
-  *    from the governing snapshot (valid whenever rows are only added
-  *    or relabeled, never deleted — each store documents why);
-  *  - pruning only ever removes directories BELOW the latest snapshot,
-  *    which readers never resolve, so an interrupted prune is finished
-  *    by the next compaction's sweep.
+/** Low-level IO for the durable epoch stores: filesystem handles,
+  * parquet/marker/token writes, epoch-chain resolution, prunes, and the
+  * test-only fault hooks every mutating write announces itself through.
+  * The protocol built on these primitives — and its crash-safety
+  * contract — lives once in [[EpochStore]]; [[CurationDB]] composes the
+  * same primitives for its facade epochs.
   */
 private[graft] object EpochStoreKit {
 
@@ -87,21 +77,10 @@ private[graft] object EpochStoreKit {
 
   // ---- idempotence tokens (the streaming bridge) --------------------
   //
-  // append(batch, token) must be an exactly-once operation under
-  // Structured Streaming's replay contract: foreachBatch re-delivers
-  // the last batch after a restart, so the sink needs a durable record
-  // of "this batch already committed". The token file (content = the
-  // epoch it committed) is written AFTER the epoch's artifacts and
-  // BEFORE its commit marker:
-  //   - crash before the token: no record, litter invisible — the
-  //     replay recomputes everything (inputs unchanged: the epoch never
-  //     committed);
-  //   - crash between token and marker: the replay finds the token
-  //     naming epoch+1 — artifacts are fully written but uncommitted;
-  //     recompute-and-commit converges (same inputs, idempotent
-  //     overwrites);
-  //   - crash after the marker: the replay finds the token naming a
-  //     committed epoch — a no-op.
+  // append(batch, token) is exactly-once under Structured Streaming's
+  // replay contract: the token file (content = the epoch it committed)
+  // lands between an epoch's artifacts and its commit marker — the
+  // crash windows are argued once in EpochStore's contract.
 
   def tokenPath(root: String, token: String): Path = {
     val safe = sanitizeToken(token)
@@ -119,14 +98,6 @@ private[graft] object EpochStoreKit {
     token.map(c =>
       if (c.isLetterOrDigit || c == '-' || c == '_' || c == '.') c
       else '_')
-
-  /** The pre-digest token path (stores written before the '-digest'
-    * suffix): [[replayCheck]] falls back to it so a replayed
-    * exactly-once append on an UPGRADED store still finds its committed
-    * token instead of re-attempting and wedging on the disjoint-id
-    * guard. New tokens always write the digest-suffixed path. */
-  private def legacyTokenPath(root: String, token: String): Path =
-    new Path(s"$root/_tokens/${sanitizeToken(token)}")
 
   def writeToken(fs: FileSystem, path: Path, epoch: Long): Unit = {
     boundary(path.toString)
@@ -176,8 +147,7 @@ private[graft] object EpochStoreKit {
     * token (recorded but uncommitted) names exactly the next epoch. */
   def replayCheck(fs: FileSystem, root: String, token: String,
                   currentEpoch: Long): Option[Long] =
-    readToken(fs, tokenPath(root, token))
-      .orElse(readToken(fs, legacyTokenPath(root, token))) match {
+    readToken(fs, tokenPath(root, token)) match {
       case Some(n) if n <= currentEpoch => Some(n)
       case Some(n) =>
         require(n == currentEpoch + 1,

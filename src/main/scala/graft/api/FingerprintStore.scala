@@ -1,7 +1,6 @@
 package graft.api
 
 import graft.operators.{Ckpt, Dedup}
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -36,8 +35,6 @@ import org.apache.spark.sql.functions._
   *                    snapshot epochs (init, [[compact]]) hold the FULL
   *                    assignment; append epochs only the rows the append
   *                    ADDED or RELABELED
-  *   _commits/N       empty marker file — the epoch's commit point
-  *   _snapshots/N     marks epoch N's grp/comp as full snapshots
   * }}}
   *
   * Readers resolve `comp` LATEST-EPOCH-WINS per id from the latest
@@ -53,62 +50,22 @@ import org.apache.spark.sql.functions._
   * comp deltas; `prints` epochs must all be retained. Time-travel
   * ([[keptAt]]) reaches epochs at or above the latest snapshot.
   *
-  * Crash safety, single-writer (the [[EpochStoreKit]] contract):
-  * artifacts first (idempotent overwrites), then the marker with
-  * overwrite=false — unmarked litter is invisible and a replayed append
-  * onto a marked epoch fails loudly. [[compact]]'s snapshot marker comes
-  * AFTER its commit marker: a crash between the two leaves a committed
-  * epoch whose full assignment reads correctly as a (full-content)
-  * delta under latest-wins, and the next [[compact]] re-marks; a crash
-  * mid-prune is swept by the next [[compact]]. Appended ids must be
-  * DISJOINT from every stored id (checked, fails loudly — a duplicated
-  * id would double its membership weight in the drop set).
+  * Crash safety and the commit/compact/replay sequence are the
+  * [[EpochStore]] contract. Appended ids must be DISJOINT from every
+  * stored id (checked, fails loudly — a duplicated id would double its
+  * membership weight in the drop set).
   */
-class FingerprintStore private (val spark: SparkSession,
-                                val root: String, val maxHamming: Int,
-                                val autoCompactEpochs: Int) {
+class FingerprintStore private (spark: SparkSession, root: String,
+                                val maxHamming: Int, autoCompactEpochs: Int)
+    extends EpochStore(spark, root, autoCompactEpochs) {
 
-  private def fs = EpochStoreKit.fsOf(spark, root)
+  protected val dataKinds = Seq("prints" -> Seq("_id", "simhash"))
+  protected val snapshotKinds = Seq("grp" -> grpAt _, "comp" -> compAt _)
 
-  private def marker(n: Long) = new Path(s"$root/_commits/$n")
-
-  /** Highest committed epoch, or -1 for a never-initialized root. */
-  def epoch: Long = EpochStoreKit.maxMarked(fs, new Path(s"$root/_commits"))
-
-  /** Highest epoch whose comp artifact is a full snapshot (0 after
-    * [[FingerprintStore.init]]; bumped by [[compact]]). */
-  def latestSnapshot: Long =
-    EpochStoreKit.maxMarked(fs, new Path(s"$root/_snapshots"))
-
-  private def requireCommitted(): Long = {
-    val e = epoch
-    require(e >= 0, s"FingerprintStore at $root has no committed epoch")
-    e
-  }
-
-  private def snapshotFor(e: Long): Long = {
-    val s = latestSnapshot
-    require(s >= 0 && s <= e,
-      s"epoch $e at $root is below the latest snapshot $s — its comp " +
-        "deltas were pruned by compact(); time-travel only reaches " +
-        "epochs at or above the snapshot")
-    s
-  }
-
-  private def printsAt(e: Long): DataFrame =
-    EpochStoreKit.unionEpochs(spark, root, "prints", 0L, e,
-      Seq("_id", "simhash"))
+  private def printsAt(e: Long): DataFrame = dataAt("prints", e)
 
   private def grpAt(e: Long): DataFrame =
-    EpochStoreKit.resolveLatestWins(spark, root, "grp",
-      snapshotFor(e), e, Seq("_sh"), Seq("_sh", "_rep"))
-
-  private def compAt(e: Long): DataFrame = {
-    require(e >= 0 && e <= epoch && fs.exists(marker(e)),
-      s"epoch $e not committed at $root")
-    EpochStoreKit.resolveLatestWins(spark, root, "comp",
-      snapshotFor(e), e, Seq("id"), Seq("id", "component"))
-  }
+    latestWinsAt("grp", e, Seq("_sh"), Seq("_sh", "_rep"))
 
   /** Every stored fingerprint at the latest committed epoch. */
   def prints: DataFrame = printsAt(requireCommitted())
@@ -116,17 +73,6 @@ class FingerprintStore private (val spark: SparkSession,
   /** The maintained rep-level component assignment (latest epoch,
     * snapshot + deltas resolved latest-wins). */
   def components: DataFrame = compAt(requireCommitted())
-
-  private def writeEpoch(n: Long, batch: DataFrame, grp: DataFrame,
-                         comp: DataFrame,
-                         token: Option[String] = None): Unit = {
-    EpochStoreKit.writeParquet(batch, s"$root/prints/epoch=$n")
-    EpochStoreKit.writeParquet(grp, s"$root/grp/epoch=$n")
-    EpochStoreKit.writeParquet(comp, s"$root/comp/epoch=$n")
-    token.foreach(t =>
-      EpochStoreKit.writeToken(fs, EpochStoreKit.tokenPath(root, t), n))
-    EpochStoreKit.commitMarker(fs, marker(n))
-  }
 
   /** Append a batch's fingerprints (_id, simhash) — ids disjoint from
     * every stored id (fails loudly) — extend the component assignment
@@ -138,87 +84,31 @@ class FingerprintStore private (val spark: SparkSession,
 
   /** Exactly-once append for replayable callers (the Structured
     * Streaming `foreachBatch` bridge): a replayed call with the same
-    * `token` is a NO-OP returning the original epoch; every crash
-    * window converges on retry (the [[EpochStoreKit]] token protocol). */
+    * `token` is a NO-OP returning the original epoch. */
   def append(batchHashes: DataFrame, token: String): Long =
-    EpochStoreKit.replayCheck(fs, root, token, epoch)
-      .getOrElse(appendImpl(batchHashes, Some(token)))
+    replayOr(token)(appendImpl(batchHashes, Some(token)))
 
   private def appendImpl(batchHashes: DataFrame,
                          token: Option[String]): Long = {
     val e = requireCommitted()
-    val n = e + 1
     val b = Ckpt.eager(batchHashes.select(
       col("_id").cast("long").as("_id"), col("simhash").cast("long")
         .as("simhash")))
-    val base = printsAt(e)
-    val clash = b.select(col("_id"))
-      .join(base.select(col("_id")), Seq("_id"), "left_semi")
-      .limit(1).collect()
-    require(clash.isEmpty,
-      s"FingerprintStore.append: batch id ${clash.headOption.map(_.get(0))
-        .getOrElse("")} already stored at $root — appended ids must be " +
-        "disjoint (a duplicated id would double-count in the drop set)")
+    requireDisjoint(b, printsAt(e), "_id",
+      "a duplicated id would double-count in the drop set")
     val oldComp = compAt(e)
     // the stored prints are never re-aggregated and the grp artifact is
     // never shuffled: the batch-present hashes resolve through a
     // key-restricted latest-wins window (batch-sized), and the banded
     // candidate join scans the PLAIN grp union (duplicate undercut reps
     // are closure-neutral — extendHashComponentsArtifact's contract)
-    val sharedGrp = Ckpt.eager(EpochStoreKit.resolveLatestWinsForKeys(
-      spark, root, "grp", snapshotFor(e), e, Seq("_sh"),
+    val sharedGrp = Ckpt.eager(latestWinsFor("grp", e, Seq("_sh"),
       Seq("_sh", "_rep"), b.select(col("simhash").as("_sh")).distinct()))
-    val unionGrp = EpochStoreKit.unionEpochs(spark, root, "grp",
-      snapshotFor(e), e, Seq("_sh", "_rep"))
-    val comp = Dedup.extendHashComponentsArtifact(sharedGrp, unionGrp,
-      oldComp, b, maxHamming)
-    // the delta: rows whose (id → component) mapping is new or changed
-    // — extension never deletes a row, so latest-wins reconstruction
-    // over (old resolved state + this delta) IS the new assignment
-    val delta = comp.join(oldComp, Seq("id", "component"), "left_anti")
-    writeEpoch(n, b, Dedup.hashGroupDelta(sharedGrp, b), delta, token)
-    // the epoch write is the last consumer of the pinned batch frames:
-    // free them NOW instead of leaking three checkpoints per append (§5)
-    import org.apache.spark.sql.graftbridge.Bridge
-    Bridge.unpersistCheckpoint(comp)
-    Bridge.unpersistCheckpoint(sharedGrp)
-    Bridge.unpersistCheckpoint(b)
-    if (autoCompactEpochs > 0 && n - latestSnapshot >= autoCompactEpochs)
-      compact()
-    n
-  }
-
-  /** Rewrite the resolved assignment as ONE new snapshot epoch (empty
-    * prints delta) and prune the absorbed comp delta directories below
-    * it — bounding read-side resolution work on a long-lived store.
-    * Idempotent: compacting an already-snapshot head only finishes any
-    * interrupted prune. Returns the snapshot epoch. */
-  def compact(): Long = {
-    val e = requireCommitted()
-    val s = latestSnapshot
-    if (s == e) { pruneBelow(s); return e }
-    val n = e + 1
-    val emptyBatch = spark.read.parquet(s"$root/prints/epoch=0")
-      .select("_id", "simhash").limit(0)
-    val snapGrp = Ckpt.eager(grpAt(e))
-    val snapComp = Ckpt.eager(compAt(e))
-    writeEpoch(n, emptyBatch, snapGrp, snapComp)
-    // the epoch write is the last consumer of the pinned snapshots (§5)
-    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(snapGrp)
-    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(snapComp)
-    // snapshot marker AFTER the commit marker: a crash between the two
-    // leaves epoch n committed as a full-content delta, which reads
-    // identically under latest-wins; the next compact() re-marks
-    EpochStoreKit.markFile(fs, new Path(s"$root/_snapshots/$n"))
-    pruneBelow(n)
-    n
-  }
-
-  private def pruneBelow(snap: Long): Unit = {
-    EpochStoreKit.pruneEpochDirsBelow(fs, root, "comp", snap)
-    EpochStoreKit.pruneEpochDirsBelow(fs, root, "grp", snap)
-    EpochStoreKit.pruneMarkersBelow(fs, new Path(s"$root/_snapshots"),
-      snap)
+    val comp = Dedup.extendHashComponentsArtifact(sharedGrp,
+      unionAt("grp", e, Seq("_sh", "_rep")), oldComp, b, maxHamming)
+    // the epoch write is the last consumer of the pinned batch frames (§5)
+    commitDelta(e + 1, Seq(b, Dedup.hashGroupDelta(sharedGrp, b),
+      changedRows(comp, oldComp)), token, comp, sharedGrp, b)
   }
 
   /** The kept rows of `corpus` (one per duplicate cluster — the min
@@ -259,72 +149,19 @@ object FingerprintStore {
            maxHamming: Int = 3,
            autoCompactEpochs: Int = 16): FingerprintStore = {
     val s = new FingerprintStore(spark, root, maxHamming,
-      autoCompactEpochs)
-    require(s.epoch < 0,
-      s"FingerprintStore already initialized at $root (epoch ${s.epoch})")
+      autoCompactEpochs).fresh()
     val h = Ckpt.eager(hashes.select(col("_id").cast("long").as("_id"),
       col("simhash").cast("long").as("simhash")))
     val comp0 = Dedup.hashComponents(h, maxHamming)
-    s.writeEpoch(0L, h, Dedup.hashGroupArtifact(h), comp0)
     // the epoch write is the last consumer of the pinned frames (§5)
-    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(comp0)
-    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(h)
-    val fs = EpochStoreKit.fsOf(spark, root)
-    EpochStoreKit.markFile(fs, new Path(s"$root/_snapshots/0"))
+    s.commitSnapshot(0L, Seq(h, Dedup.hashGroupArtifact(h), comp0),
+      comp0, h)
     s
   }
 
-  /** Open an existing store (any committed epoch present).
-    *
-    * Legacy migration: roots written before the `_snapshots/` marker
-    * format carried a FULL component assignment at every epoch (the
-    * round-12 first-cut layout) but no snapshot marker, so every read
-    * would fail `snapshotFor`'s `s >= 0` even though the latest epoch's
-    * comp reads correctly as a snapshot. Opening such a root performs
-    * the one-touch migration: mark the LATEST committed epoch as the
-    * snapshot (its full-per-epoch comp IS one). Time-travel below that
-    * epoch is not preserved — the same contract `compact()` applies. */
+  /** Open an existing store (any committed epoch present). */
   def open(spark: SparkSession, root: String, maxHamming: Int = 3,
-           autoCompactEpochs: Int = 16): FingerprintStore = {
-    val s = new FingerprintStore(spark, root, maxHamming,
-      autoCompactEpochs)
-    val e = s.requireCommitted()
-    val fs = EpochStoreKit.fsOf(spark, root)
-    // markFile, not commitMarker: two processes opening the same legacy
-    // root concurrently must both succeed (idempotent create), and the
-    // exclusive-create would fail the loser outright
-    if (!fs.exists(new Path(s"$root/_snapshots")))
-      EpochStoreKit.markFile(fs, new Path(s"$root/_snapshots/$e"))
-    // legacy migration 2 (roots written before the maintained `grp`
-    // artifact): backfill each committed epoch's grp content exactly as
-    // its append would have written it — the snapshot epoch gets the
-    // full groups of the prints stored by then, later epochs the
-    // new/undercut delta — so reads AND time-travel resolve identically
-    // to a store built by the current code (idempotent overwrites)
-    // A PENDING marker brackets the loop (same rationale as the minhash
-    // band migration): a crash mid-migration leaves the grp dir present
-    // but incomplete, and gating on the dir alone would skip the re-run
-    // forever — the marker makes the next open resume, re-writing
-    // exactly the epochs whose parquet commit (_SUCCESS) is missing
-    // (earlier epochs' grp content is already durable, so the sequential
-    // derivation below reads committed state).
-    val pending = new Path(s"$root/_migrations/grp")
-    if (!fs.exists(new Path(s"$root/grp")) || fs.exists(pending)) {
-      EpochStoreKit.markFile(fs, pending)
-      val snap = s.latestSnapshot
-      for (k <- snap to e)
-        if (!fs.exists(new Path(s"$root/grp/epoch=$k/_SUCCESS"))) {
-          val content =
-            if (k == snap) Dedup.hashGroupArtifact(s.printsAt(snap))
-            else Dedup.hashGroupDelta(
-              EpochStoreKit.resolveLatestWins(spark, root, "grp", snap,
-                k - 1, Seq("_sh"), Seq("_sh", "_rep")),
-              spark.read.parquet(s"$root/prints/epoch=$k")
-                .select("_id", "simhash"))
-          EpochStoreKit.writeParquet(content, s"$root/grp/epoch=$k")
-        }
-      fs.delete(pending, false)
-    }
-    s
-  }
+           autoCompactEpochs: Int = 16): FingerprintStore =
+    new FingerprintStore(spark, root, maxHamming, autoCompactEpochs)
+      .opened()
 }

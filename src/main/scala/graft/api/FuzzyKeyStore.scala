@@ -1,7 +1,6 @@
 package graft.api
 
 import graft.operators.{Ckpt, Dedup}
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -34,8 +33,6 @@ import org.apache.spark.sql.functions._
   *                   append ADDED or RELABELED, resolved
   *                   latest-epoch-wins per id (extension never deletes
   *                   a row)
-  *   _commits/N      empty marker file — the epoch's commit point
-  *   _snapshots/N    marks epoch N's index/comp as full snapshots
   * }}}
   *
   * The index stores NO `cnt` column: counts grow under append, so a
@@ -50,15 +47,8 @@ import org.apache.spark.sql.functions._
   * pruned. Time-travel ([[keptKeysAt]]) reaches epochs at or above the
   * latest snapshot.
   *
-  * Crash safety, single-writer (the [[EpochStoreKit]] contract):
-  * artifacts first (idempotent overwrites), then the marker with
-  * overwrite=false — unmarked litter is invisible and a replayed append
-  * onto a marked epoch fails loudly. [[compact]]'s snapshot marker
-  * comes AFTER its commit marker (a full index re-unioned above the old
-  * snapshot would double keys — but the commit-then-mark window is
-  * safe here because the compaction epoch's index holds EXACTLY the
-  * union it replaces and its comp reads correctly as a full-content
-  * delta; see [[compact]]). APPEND CONTRACT: every batch id must
+  * Crash safety and the commit/compact/replay sequence are the
+  * [[EpochStore]] contract. APPEND CONTRACT: every batch id must
   * STRICTLY EXCEED every stored doc id (fails loudly) — this keeps
   * stored reps invariant, which is what lets epoch index slices union
   * instead of merge.
@@ -67,51 +57,26 @@ import org.apache.spark.sql.functions._
   * vector-level; reference storage_engine.py) —
   * training-data-pipeline tier.
   */
-class FuzzyKeyStore private (val spark: SparkSession, val root: String,
+class FuzzyKeyStore private (spark: SparkSession, root: String,
                              val maxKeyLen: Int, val maxEdit: Int,
-                             val autoCompactEpochs: Int) {
+                             autoCompactEpochs: Int)
+    extends EpochStore(spark, root, autoCompactEpochs) {
 
-  private def fs = EpochStoreKit.fsOf(spark, root)
+  protected val dataKinds = Seq("keys" -> Seq("doc_id", "key"))
+  // the index snapshot is written DISTINCT: after a torn compact (commit
+  // marker present, snapshot marker absent) indexAt unions the old
+  // snapshot with the torn epoch's full index, which read-side the
+  // variant join tolerates (pairs are distinct()-ed) but persisted
+  // verbatim would bake duplicate rows into every later snapshot — a
+  // no-op shuffle in the normal disjoint-slice case buys the guarantee
+  protected val snapshotKinds = Seq(
+    "index" -> ((e: Long) => indexAt(e).dropDuplicates("rep", "key", "_vh")),
+    "comp" -> compAt _)
 
-  private def marker(n: Long) = new Path(s"$root/_commits/$n")
-
-  /** Highest committed epoch, or -1 for a never-initialized root. */
-  def epoch: Long = EpochStoreKit.maxMarked(fs, new Path(s"$root/_commits"))
-
-  /** Highest epoch whose index/comp artifacts are full snapshots (0
-    * after [[FuzzyKeyStore.init]]; bumped by [[compact]]). */
-  def latestSnapshot: Long =
-    EpochStoreKit.maxMarked(fs, new Path(s"$root/_snapshots"))
-
-  private def requireCommitted(): Long = {
-    val e = epoch
-    require(e >= 0, s"FuzzyKeyStore at $root has no committed epoch")
-    e
-  }
-
-  private def snapshotFor(e: Long): Long = {
-    val s = latestSnapshot
-    require(s >= 0 && s <= e,
-      s"epoch $e at $root is below the latest snapshot $s — its delta " +
-        "epochs were pruned by compact(); time-travel only reaches " +
-        "epochs at or above the snapshot")
-    s
-  }
-
-  private def keysAt(e: Long): DataFrame =
-    EpochStoreKit.unionEpochs(spark, root, "keys", 0L, e,
-      Seq("doc_id", "key"))
+  private def keysAt(e: Long): DataFrame = dataAt("keys", e)
 
   private def indexAt(e: Long): DataFrame =
-    EpochStoreKit.unionEpochs(spark, root, "index", snapshotFor(e), e,
-      Seq("rep", "key", "_vh"))
-
-  private def compAt(e: Long): DataFrame = {
-    require(e >= 0 && e <= epoch && fs.exists(marker(e)),
-      s"epoch $e not committed at $root")
-    EpochStoreKit.resolveLatestWins(spark, root, "comp",
-      snapshotFor(e), e, Seq("id"), Seq("id", "component"))
-  }
+    unionAt("index", e, Seq("rep", "key", "_vh"))
 
   /** Every stored (doc_id, key) row at the latest committed epoch. */
   def keys: DataFrame = keysAt(requireCommitted())
@@ -122,17 +87,6 @@ class FuzzyKeyStore private (val spark: SparkSession, val root: String,
   /** The maintained rep-level fuzzy-cluster assignment (latest epoch,
     * snapshot + deltas resolved latest-wins). */
   def components: DataFrame = compAt(requireCommitted())
-
-  private def writeEpoch(n: Long, batch: DataFrame, idx: DataFrame,
-                         comp: DataFrame,
-                         token: Option[String] = None): Unit = {
-    EpochStoreKit.writeParquet(batch, s"$root/keys/epoch=$n")
-    EpochStoreKit.writeParquet(idx, s"$root/index/epoch=$n")
-    EpochStoreKit.writeParquet(comp, s"$root/comp/epoch=$n")
-    token.foreach(t =>
-      EpochStoreKit.writeToken(fs, EpochStoreKit.tokenPath(root, t), n))
-    EpochStoreKit.commitMarker(fs, marker(n))
-  }
 
   /** Append a key batch (doc_id, key) — ids strictly above every stored
     * id (fails loudly) — extend the variant index with the batch's
@@ -145,16 +99,13 @@ class FuzzyKeyStore private (val spark: SparkSession, val root: String,
 
   /** Exactly-once append for replayable callers (the Structured
     * Streaming `foreachBatch` bridge): a replayed call with the same
-    * `token` is a NO-OP returning the original epoch; every crash
-    * window converges on retry (the [[EpochStoreKit]] token protocol). */
+    * `token` is a NO-OP returning the original epoch. */
   def append(batch: DataFrame, token: String): Long =
-    EpochStoreKit.replayCheck(fs, root, token, epoch)
-      .getOrElse(appendImpl(batch, Some(token)))
+    replayOr(token)(appendImpl(batch, Some(token)))
 
   private def appendImpl(batch: DataFrame,
                          token: Option[String]): Long = {
     val e = requireCommitted()
-    val n = e + 1
     val b = Ckpt.eager(batch.select(
       col("doc_id").cast("long").as("doc_id"),
       col("key").cast("string").as("key")))
@@ -172,69 +123,19 @@ class FuzzyKeyStore private (val spark: SparkSession, val root: String,
     // variants computed ONCE: the epoch's index delta AND the pair
     // probe are the same frame (the refactor extendFuzzyKeyPairs
     // itself composes)
-    val nv = Ckpt.eager(Dedup.fuzzyNewVariants(idx, b, "key", "doc_id",
-      maxKeyLen, maxEdit))
+    val nv0 = Dedup.fuzzyNewVariants(idx, b, "key", "doc_id", maxKeyLen,
+      maxEdit)
+    val nv = Ckpt.eager(nv0)
     val pairs = Dedup.extendFuzzyKeyPairsOf(idx, nv, maxEdit)
       .select(col("rep_a").as("id1"), col("rep_b").as("id2"))
     val oldComp = compAt(e)
     // extendComponents returns an eagerly-checkpointed frame (and frees
     // its internal checkpoints itself) — no second Ckpt.eager copy here
     val comp = Dedup.extendComponents(oldComp, pairs)
-    // the delta: rows whose (id → component) mapping is new or changed
-    val delta = comp.join(oldComp, Seq("id", "component"), "left_anti")
-    writeEpoch(n, b, nv, delta, token)
-    // the epoch write is the last consumer of the pinned batch frames:
-    // free them NOW instead of leaking three checkpoints per append (§5)
-    import org.apache.spark.sql.graftbridge.Bridge
-    Bridge.unpersistCheckpoint(comp)
-    Bridge.unpersistCheckpoint(nv)
-    Bridge.unpersistCheckpoint(b)
-    if (autoCompactEpochs > 0 && n - latestSnapshot >= autoCompactEpochs)
-      compact()
-    n
-  }
-
-  /** Rewrite the resolved index + assignment as ONE new snapshot epoch
-    * (empty keys delta) and prune the absorbed index/comp delta
-    * directories below it. The snapshot marker comes AFTER the commit
-    * marker — safe because the compaction epoch's index is EXACTLY the
-    * union of the directories it absorbs (unioning both double-counts
-    * nothing the next compact() won't re-resolve: readers between the
-    * crash and the re-mark would union duplicate index rows, which the
-    * variant join tolerates — pairs are distinct()-ed — and the comp
-    * full-content delta reads identically under latest-wins). The index
-    * snapshot is written DISTINCT: after a torn compact (commit marker
-    * present, snapshot marker absent), `indexAt` unions the old
-    * snapshot with the torn epoch's full index, and persisting that
-    * union verbatim would bake the duplicate rows into the new snapshot
-    * permanently (doubling per torn window) — a no-op shuffle in the
-    * normal disjoint-slice case buys the guarantee that no snapshot
-    * ever holds duplicate (rep, key, _vh) rows. Idempotent: compacting
-    * an already-snapshot head only finishes any interrupted prune.
-    * Returns the snapshot epoch. */
-  def compact(): Long = {
-    val e = requireCommitted()
-    val s = latestSnapshot
-    if (s == e) { pruneBelow(s); return e }
-    val n = e + 1
-    val emptyBatch = spark.read.parquet(s"$root/keys/epoch=0")
-      .select("doc_id", "key").limit(0)
-    val snapIdx = Ckpt.eager(indexAt(e).dropDuplicates("rep", "key", "_vh"))
-    val snapComp = Ckpt.eager(compAt(e))
-    writeEpoch(n, emptyBatch, snapIdx, snapComp)
-    // the epoch write is the last consumer of the pinned snapshots (§5)
-    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(snapIdx)
-    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(snapComp)
-    EpochStoreKit.markFile(fs, new Path(s"$root/_snapshots/$n"))
-    pruneBelow(n)
-    n
-  }
-
-  private def pruneBelow(snap: Long): Unit = {
-    EpochStoreKit.pruneEpochDirsBelow(fs, root, "index", snap)
-    EpochStoreKit.pruneEpochDirsBelow(fs, root, "comp", snap)
-    EpochStoreKit.pruneMarkersBelow(fs, new Path(s"$root/_snapshots"),
-      snap)
+    // the epoch write is the last consumer of the pinned batch frames,
+    // nv0's internal distinct-key checkpoint included (§5)
+    commitDelta(e + 1, Seq(b, nv, changedRows(comp, oldComp)), token,
+      comp, nv, nv0, b)
   }
 
   /** The fuzzy-deduped key corpus at the latest epoch — one row per
@@ -271,28 +172,22 @@ object FuzzyKeyStore {
            maxKeyLen: Int = 64, maxEdit: Int = 1,
            autoCompactEpochs: Int = 16): FuzzyKeyStore = {
     val s = new FuzzyKeyStore(spark, root, maxKeyLen, maxEdit,
-      autoCompactEpochs)
-    require(s.epoch < 0,
-      s"FuzzyKeyStore already initialized at $root (epoch ${s.epoch})")
+      autoCompactEpochs).fresh()
     val d = Ckpt.eager(keys.select(col("doc_id").cast("long")
       .as("doc_id"), col("key").cast("string").as("key")))
-    val idx = Ckpt.eager(Dedup.fuzzyVariantIndex(d, "key", "doc_id",
-      maxKeyLen, maxEdit).select(col("rep"), col("key"), col("_vh")))
+    val idx0 = Dedup.fuzzyVariantIndex(d, "key", "doc_id", maxKeyLen,
+      maxEdit)
+    val idx = Ckpt.eager(idx0.select(col("rep"), col("key"), col("_vh")))
     // from-scratch pairs = the extension's within-join against an empty
     // base (one code path for both, so the q120 theorem covers init too)
     val pairs = Dedup.extendFuzzyKeyPairsOf(idx.limit(0), idx, maxEdit)
       .select(col("rep_a").as("id1"), col("rep_b").as("id2"))
     // connectedComponents already returns a checkpoint-backed frame —
-    // no second Ckpt.eager copy; free the pinned frames once the epoch
-    // write — their last consumer — lands (§5)
+    // no second Ckpt.eager copy; free the pinned frames (idx0's internal
+    // distinct-key checkpoint included) once the epoch write — their
+    // last consumer — lands (§5)
     val comp0 = Dedup.connectedComponents(pairs)
-    s.writeEpoch(0L, d, idx, comp0)
-    import org.apache.spark.sql.graftbridge.Bridge
-    Bridge.unpersistCheckpoint(comp0)
-    Bridge.unpersistCheckpoint(idx)
-    Bridge.unpersistCheckpoint(d)
-    EpochStoreKit.markFile(EpochStoreKit.fsOf(spark, root),
-      new Path(s"$root/_snapshots/0"))
+    s.commitSnapshot(0L, Seq(d, idx, comp0), comp0, idx, idx0, d)
     s
   }
 
@@ -301,10 +196,7 @@ object FuzzyKeyStore {
     * with — they parameterize the stored variant family. */
   def open(spark: SparkSession, root: String, maxKeyLen: Int = 64,
            maxEdit: Int = 1,
-           autoCompactEpochs: Int = 16): FuzzyKeyStore = {
-    val s = new FuzzyKeyStore(spark, root, maxKeyLen, maxEdit,
-      autoCompactEpochs)
-    s.requireCommitted()
-    s
-  }
+           autoCompactEpochs: Int = 16): FuzzyKeyStore =
+    new FuzzyKeyStore(spark, root, maxKeyLen, maxEdit, autoCompactEpochs)
+      .opened()
 }

@@ -1,7 +1,6 @@
 package graft.api
 
 import graft.operators.{Ckpt, Dedup}
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -48,8 +47,6 @@ import org.apache.spark.sql.functions._
   *                   duplication the full assignment is corpus-sized,
   *                   so full-per-epoch rewrites would be the
   *                   write-amplification cliff the delta epochs avoid
-  *   _commits/N      empty marker file — the epoch's commit point
-  *   _snapshots/N    marks epoch N's comp as a full snapshot
   * }}}
   *
   * The banding knobs (tau, n, numHashes, bands) parameterize the stored
@@ -59,73 +56,30 @@ import org.apache.spark.sql.functions._
   * never pair and survive [[kept]] by construction (matching
   * [[graft.operators.Dedup.nearDupPairs]] dropping them pre-banding).
   *
-  * Crash safety, single-writer (the [[EpochStoreKit]] contract):
-  * artifacts first (idempotent overwrites), then the commit marker with
-  * overwrite=false — unmarked litter is invisible and a replayed append
-  * onto a marked epoch fails loudly (or no-ops under the token
-  * protocol). [[compact]]'s snapshot marker comes AFTER its commit
-  * marker: a crash between the two leaves a committed epoch whose full
-  * assignment reads correctly as a (full-content) delta under
-  * latest-wins, and the next [[compact]] re-marks; a crash mid-prune is
-  * swept by the next [[compact]]. Appended ids must be DISJOINT from
-  * every stored id (checked, fails loudly — a duplicated id would
-  * corrupt the min-id keep policy).
+  * Crash safety and the commit/compact/replay sequence are the
+  * [[EpochStore]] contract. Appended ids must be DISJOINT from every
+  * stored id (checked, fails loudly — a duplicated id would corrupt the
+  * min-id keep policy).
   *
   * The reference has no corpus-level text dedup (its dedup surface is
   * vector-level; reference storage_engine.py) —
   * training-data-pipeline tier (MinHash+LSH, Broder 1997; the
   * RefinedWeb/Gopher-style crawl-dedup discipline).
   */
-class MinHashDedupStore private (val spark: SparkSession,
-                                 val root: String, val tau: Double,
-                                 val n: Int, val numHashes: Int,
-                                 val bands: Int,
-                                 val autoCompactEpochs: Int) {
-
-  private def fs = EpochStoreKit.fsOf(spark, root)
-
-  private def marker(k: Long) = new Path(s"$root/_commits/$k")
+class MinHashDedupStore private (spark: SparkSession, root: String,
+                                 val tau: Double, val n: Int,
+                                 val numHashes: Int, val bands: Int,
+                                 autoCompactEpochs: Int)
+    extends EpochStore(spark, root, autoCompactEpochs) {
 
   private val sigCols: Seq[String] =
     Seq("_id", "_g") ++ (0 until numHashes).map(j => s"_m$j") :+ "_h"
 
-  /** Highest committed epoch, or -1 for a never-initialized root. */
-  def epoch: Long = EpochStoreKit.maxMarked(fs, new Path(s"$root/_commits"))
+  protected val dataKinds =
+    Seq("sig" -> sigCols, "band" -> Seq("_band", "_bhash", "_id"))
+  protected val snapshotKinds = Seq("comp" -> compAt _)
 
-  /** Highest epoch whose comp artifact is a full snapshot (0 after
-    * [[MinHashDedupStore.init]]; bumped by [[compact]]). */
-  def latestSnapshot: Long =
-    EpochStoreKit.maxMarked(fs, new Path(s"$root/_snapshots"))
-
-  private def requireCommitted(): Long = {
-    val e = epoch
-    require(e >= 0, s"MinHashDedupStore at $root has no committed epoch")
-    e
-  }
-
-  private def snapshotFor(e: Long): Long = {
-    val s = latestSnapshot
-    require(s >= 0 && s <= e,
-      s"epoch $e at $root is below the latest snapshot $s — its comp " +
-        "deltas were pruned by compact(); time-travel only reaches " +
-        "epochs at or above the snapshot")
-    s
-  }
-
-  private val bandCols: Seq[String] = Seq("_band", "_bhash", "_id")
-
-  private def sigAt(e: Long): DataFrame =
-    EpochStoreKit.unionEpochs(spark, root, "sig", 0L, e, sigCols)
-
-  private def bandAt(e: Long): DataFrame =
-    EpochStoreKit.unionEpochs(spark, root, "band", 0L, e, bandCols)
-
-  private def compAt(e: Long): DataFrame = {
-    require(e >= 0 && e <= epoch && fs.exists(marker(e)),
-      s"epoch $e not committed at $root")
-    EpochStoreKit.resolveLatestWins(spark, root, "comp",
-      snapshotFor(e), e, Seq("id"), Seq("id", "component"))
-  }
+  private def sigAt(e: Long): DataFrame = dataAt("sig", e)
 
   /** The full stored signature frame at the latest committed epoch. */
   def signatures: DataFrame = sigAt(requireCommitted())
@@ -133,17 +87,6 @@ class MinHashDedupStore private (val spark: SparkSession,
   /** The maintained pair-graph component assignment (latest epoch,
     * snapshot + deltas resolved latest-wins). */
   def components: DataFrame = compAt(requireCommitted())
-
-  private def writeEpoch(k: Long, batchSig: DataFrame, band: DataFrame,
-                         comp: DataFrame,
-                         token: Option[String] = None): Unit = {
-    EpochStoreKit.writeParquet(batchSig, s"$root/sig/epoch=$k")
-    EpochStoreKit.writeParquet(band, s"$root/band/epoch=$k")
-    EpochStoreKit.writeParquet(comp, s"$root/comp/epoch=$k")
-    token.foreach(t =>
-      EpochStoreKit.writeToken(fs, EpochStoreKit.tokenPath(root, t), k))
-    EpochStoreKit.commitMarker(fs, marker(k))
-  }
 
   /** Append a text batch (idCol, textCol) — ids disjoint from every
     * stored id (fails loudly) — shingle ONLY the batch, band it against
@@ -159,30 +102,21 @@ class MinHashDedupStore private (val spark: SparkSession,
 
   /** Exactly-once append for replayable callers (the Structured
     * Streaming `foreachBatch` bridge): a replayed call with the same
-    * `token` is a NO-OP returning the original epoch; every crash
-    * window converges on retry (the [[EpochStoreKit]] token protocol). */
+    * `token` is a NO-OP returning the original epoch. */
   def append(batch: DataFrame, idCol: String, textCol: String,
              token: String): Long =
-    EpochStoreKit.replayCheck(fs, root, token, epoch)
-      .getOrElse(appendImpl(batch, idCol, textCol, Some(token)))
+    replayOr(token)(appendImpl(batch, idCol, textCol, Some(token)))
 
   private def appendImpl(batch: DataFrame, idCol: String,
                          textCol: String,
                          token: Option[String]): Long = {
     val e = requireCommitted()
-    val k = e + 1
     val bSig = Ckpt.eager(normalizeSig(Dedup.signatureFrame(
       batch.select(col(idCol).cast("long").as(idCol), col(textCol)),
       idCol, textCol, n, numHashes)))
     val baseSig = sigAt(e)
-    val clash = bSig.select(col("_id"))
-      .join(baseSig.select(col("_id")), Seq("_id"), "left_semi")
-      .limit(1).collect()
-    require(clash.isEmpty,
-      s"MinHashDedupStore.append: batch id ${clash.headOption
-        .map(_.get(0)).getOrElse("")} already stored at $root — " +
-        "appended ids must be disjoint (a duplicated id would corrupt " +
-        "the min-id keep policy)")
+    requireDisjoint(bSig, baseSig, "_id",
+      "a duplicated id would corrupt the min-id keep policy")
     // ONE shared exact-dup collapse of the batch (r15): the within-pair,
     // cross-pair and band-artifact consumers all ride the same
     // (membership, rep) frames instead of re-collapsing the batch three
@@ -197,28 +131,22 @@ class MinHashDedupStore private (val spark: SparkSession,
       .sigNearDupPairsCollapsed(bMem, bRep, tau, numHashes, bands)
       .select(col("id1").cast("long"), col("id2").cast("long"))
       .unionByName(Dedup
-        .crossBandNearDupPairsCollapsed(bMem, bRep, bandAt(e), baseSig,
-          tau, numHashes, bands)
+        .crossBandNearDupPairsCollapsed(bMem, bRep, dataAt("band", e),
+          baseSig, tau, numHashes, bands)
         .select(col("existing_id").cast("long").as("id1"),
           col("new_id").cast("long").as("id2")))
     val oldComp = compAt(e)
     // extendComponents returns an eagerly-checkpointed frame (and frees
     // its internal checkpoints itself) — no second Ckpt.eager copy here
     val comp = Dedup.extendComponents(oldComp, newEdges)
-    // the delta: rows whose (id → component) mapping is new or changed
-    // — extension never deletes a row, so latest-wins reconstruction
-    // over (old resolved state + this delta) IS the new assignment
-    val delta = comp.join(oldComp, Seq("id", "component"), "left_anti")
-    writeEpoch(k, bSig, Dedup.bandArtifactOfRep(bRep, numHashes, bands),
-      delta, token)
+    val band = Dedup.bandArtifactOfRep(bRep, numHashes, bands)
+    // the epoch write is the last consumer of the pinned batch frames
+    // (the band artifact and both pair frames are checkpoint-backed):
+    // free them NOW instead of leaking them per append into executor
+    // storage until driver GC (§5)
+    val k = commitDelta(e + 1, Seq(bSig, band, changedRows(comp, oldComp)),
+      token, comp, bSig, band, newEdges)
     bRep.unpersist(false)
-    // the epoch write is the last consumer of the pinned batch frames:
-    // free them NOW instead of leaking one checkpoint pair per append
-    // into executor storage until driver GC (§5)
-    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(comp)
-    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(bSig)
-    if (autoCompactEpochs > 0 && k - latestSnapshot >= autoCompactEpochs)
-      compact()
     k
   }
 
@@ -227,38 +155,6 @@ class MinHashDedupStore private (val spark: SparkSession,
   private def normalizeSig(sig: DataFrame): DataFrame =
     sig.withColumn("_id", col("_id").cast("long")).select(
       sigCols.map(col): _*)
-
-  /** Rewrite the resolved assignment as ONE new snapshot epoch (empty
-    * sig delta) and prune the absorbed comp delta directories below it
-    * — bounding read-side resolution work on a long-lived store.
-    * Idempotent: compacting an already-snapshot head only finishes any
-    * interrupted prune. Returns the snapshot epoch. */
-  def compact(): Long = {
-    val e = requireCommitted()
-    val s = latestSnapshot
-    if (s == e) { pruneBelow(s); return e }
-    val k = e + 1
-    val emptySig = spark.read.parquet(s"$root/sig/epoch=0")
-      .select(sigCols.map(col): _*).limit(0)
-    val emptyBand = spark.read.parquet(s"$root/band/epoch=0")
-      .select(bandCols.map(col): _*).limit(0)
-    val snapComp = Ckpt.eager(compAt(e))
-    writeEpoch(k, emptySig, emptyBand, snapComp)
-    // the epoch write is the last consumer of the pinned snapshot (§5)
-    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(snapComp)
-    // snapshot marker AFTER the commit marker: a crash between the two
-    // leaves epoch k committed as a full-content delta, which reads
-    // identically under latest-wins; the next compact() re-marks
-    EpochStoreKit.markFile(fs, new Path(s"$root/_snapshots/$k"))
-    pruneBelow(k)
-    k
-  }
-
-  private def pruneBelow(snap: Long): Unit = {
-    EpochStoreKit.pruneEpochDirsBelow(fs, root, "comp", snap)
-    EpochStoreKit.pruneMarkersBelow(fs, new Path(s"$root/_snapshots"),
-      snap)
-  }
 
   /** The kept rows of `corpus` at the latest epoch (per near-dup
     * cluster keep the minimum member id — the
@@ -294,9 +190,7 @@ object MinHashDedupStore {
            bands: Int = 4,
            autoCompactEpochs: Int = 16): MinHashDedupStore = {
     val s = new MinHashDedupStore(spark, root, tau, n, numHashes, bands,
-      autoCompactEpochs)
-    require(s.epoch < 0,
-      s"MinHashDedupStore already initialized at $root (epoch ${s.epoch})")
+      autoCompactEpochs).fresh()
     val sig = Ckpt.eager(s.normalizeSig(Dedup.signatureFrame(
       docs.select(col(idCol).cast("long").as(idCol), col(textCol)),
       idCol, textCol, n, numHashes)))
@@ -306,16 +200,12 @@ object MinHashDedupStore {
         bands)
       .select(col("id1").cast("long"), col("id2").cast("long"))
     // connectedComponents already returns a checkpoint-BACKED frame: no
-    // second Ckpt.eager copy; free it (and the pinned sig) once the
-    // epoch write — their last consumer — lands (§5)
+    // second Ckpt.eager copy; free it (and the pinned sig, band artifact
+    // and pairs) once the epoch write — their last consumer — lands (§5)
     val comp0 = Dedup.connectedComponents(pairs)
-    s.writeEpoch(0L, sig, Dedup.bandArtifactOfRep(rep, numHashes, bands),
-      comp0)
+    val band = Dedup.bandArtifactOfRep(rep, numHashes, bands)
+    s.commitSnapshot(0L, Seq(sig, band, comp0), comp0, sig, band, pairs)
     rep.unpersist(false)
-    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(comp0)
-    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(sig)
-    EpochStoreKit.markFile(EpochStoreKit.fsOf(spark, root),
-      new Path(s"$root/_snapshots/0"))
     s
   }
 
@@ -324,31 +214,7 @@ object MinHashDedupStore {
     * parameterize the stored signatures and pair graph. */
   def open(spark: SparkSession, root: String, tau: Double,
            n: Int = 3, numHashes: Int = 16, bands: Int = 4,
-           autoCompactEpochs: Int = 16): MinHashDedupStore = {
-    val s = new MinHashDedupStore(spark, root, tau, n, numHashes, bands,
-      autoCompactEpochs)
-    val e = s.requireCommitted()
-    // legacy migration (roots written before the banded projection
-    // artifact): backfill each committed epoch's band content exactly
-    // as its append would have written it — the epoch's own sig slice's
-    // exact-group reps, banded (idempotent overwrites). A PENDING marker
-    // brackets the loop: a crash mid-migration leaves the band dir
-    // present but incomplete, and gating on the dir alone would skip the
-    // re-run forever (silently dropping candidate pairs) — the marker
-    // makes the next open resume, re-writing exactly the epochs whose
-    // parquet commit (_SUCCESS) is missing.
-    val fs = EpochStoreKit.fsOf(spark, root)
-    val pending = new Path(s"$root/_migrations/band")
-    if (!fs.exists(new Path(s"$root/band")) || fs.exists(pending)) {
-      EpochStoreKit.markFile(fs, pending)
-      for (k <- 0L to e)
-        if (!fs.exists(new Path(s"$root/band/epoch=$k/_SUCCESS")))
-          EpochStoreKit.writeParquet(
-            Dedup.bandArtifact(spark.read.parquet(s"$root/sig/epoch=$k")
-              .select(s.sigCols.map(col): _*), numHashes, bands),
-            s"$root/band/epoch=$k")
-      fs.delete(pending, false)
-    }
-    s
-  }
+           autoCompactEpochs: Int = 16): MinHashDedupStore =
+    new MinHashDedupStore(spark, root, tau, n, numHashes, bands,
+      autoCompactEpochs).opened()
 }

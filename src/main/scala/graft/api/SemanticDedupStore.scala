@@ -45,7 +45,6 @@ import org.apache.spark.sql.functions._
   *   _compacts/N         sentinel marking epoch N a trainer-free
   *                       [[compact]] snapshot (full asg+comp under the
   *                       SAME frozen centroids)
-  *   _commits/N          empty marker file — the epoch's commit point
   * }}}
   *
   * A COMMITTED epoch is a snapshot iff it carries a `centroids/epoch=N`
@@ -82,13 +81,10 @@ import org.apache.spark.sql.functions._
   * Time-travel ([[keptAt]]) reaches epochs at or above the latest
   * snapshot; older epochs were pruned and fail loudly.
   *
-  * Crash safety, single-writer: artifacts first (idempotent
-  * overwrites), then the commit marker with overwrite=false; the
-  * snapshot marker comes AFTER the commit marker — a crash between the
-  * two leaves a committed epoch whose full assignment reads correctly
-  * as a (full-content) union slice, and the next [[retrain]] re-marks.
-  * Appended vec_ids must be DISJOINT from every stored id (checked,
-  * fails loudly). Zero-norm embeddings are unassignable and therefore
+  * Crash safety and the commit/replay sequence are the [[EpochStore]]
+  * contract, with the snapshot rule above in place of its post-commit
+  * marker. Appended vec_ids must be DISJOINT from every stored id
+  * (checked, fails loudly). Zero-norm embeddings are unassignable and therefore
   * never pair — they survive [[kept]] by construction, matching
   * [[graft.operators.Dedup.semanticDeduped]].
   *
@@ -96,18 +92,14 @@ import org.apache.spark.sql.functions._
   * corpus-level semantic dedup (reference storage_engine.py) —
   * training-data-pipeline tier (SemDeDup, Abbas et al. 2023).
   */
-class SemanticDedupStore private (val spark: SparkSession,
-                                  val root: String, val tau: Double,
+class SemanticDedupStore private (spark: SparkSession, root: String,
+                                  val tau: Double,
                                   val maxStaleFrac: Double,
-                                  val autoCompactEpochs: Int) {
+                                  autoCompactEpochs: Int)
+    extends EpochStore(spark, root, autoCompactEpochs) {
 
-  private def fs = EpochStoreKit.fsOf(spark, root)
-  private[api] def fsPub = fs
-
-  private def marker(n: Long) = new Path(s"$root/_commits/$n")
-
-  /** Highest committed epoch, or -1 for a never-initialized root. */
-  def epoch: Long = EpochStoreKit.maxMarked(fs, new Path(s"$root/_commits"))
+  protected val dataKinds = Seq("vecs" -> Seq("vec_id", "embedding"))
+  protected val snapshotKinds = Seq("asg" -> asgAt _, "comp" -> compAt _)
 
   /** Highest committed TRAIN epoch — the epoch whose centroids are the
     * frozen generation every later assignment replays (0 after init;
@@ -129,7 +121,7 @@ class SemanticDedupStore private (val spark: SparkSession,
   /** Highest full-assignment snapshot epoch — the resolution base for
     * asg/comp reads: the latest committed TRAIN epoch or trainer-free
     * [[compact]] epoch, whichever is higher. */
-  def latestSnapshot: Long = {
+  override def latestSnapshot: Long = {
     val e = epoch
     val dir = new Path(s"$root/_compacts")
     val compacts =
@@ -141,35 +133,10 @@ class SemanticDedupStore private (val spark: SparkSession,
     math.max(latestTrain, compacts)
   }
 
-  private def requireCommitted(): Long = {
-    val e = epoch
-    require(e >= 0, s"SemanticDedupStore at $root has no committed epoch")
-    e
-  }
-
-  private def snapshotFor(e: Long): Long = {
-    val s = latestSnapshot
-    require(s >= 0 && s <= e,
-      s"epoch $e at $root is below the latest snapshot $s — its " +
-        "assignment epochs were pruned by retrain(); time-travel only " +
-        "reaches epochs at or above the snapshot")
-    s
-  }
-
-  private def vecsAt(e: Long): DataFrame =
-    EpochStoreKit.unionEpochs(spark, root, "vecs", 0L, e,
-      Seq("vec_id", "embedding"))
+  private def vecsAt(e: Long): DataFrame = dataAt("vecs", e)
 
   private def asgAt(e: Long): DataFrame =
-    EpochStoreKit.unionEpochs(spark, root, "asg", snapshotFor(e), e,
-      Seq("vec_id", "cell", "sim", "dv"))
-
-  private def compAt(e: Long): DataFrame = {
-    require(e >= 0 && e <= epoch && fs.exists(marker(e)),
-      s"epoch $e not committed at $root")
-    EpochStoreKit.resolveLatestWins(spark, root, "comp",
-      snapshotFor(e), e, Seq("id"), Seq("id", "component"))
-  }
+    unionAt("asg", e, Seq("vec_id", "cell", "sim", "dv"))
 
   /** Every stored (vec_id, embedding) row at the latest epoch. */
   def vectors: DataFrame = vecsAt(requireCommitted())
@@ -192,10 +159,9 @@ class SemanticDedupStore private (val spark: SparkSession,
 
   /** `(trainMass, sinceMass)` at epoch `e`: the full-corpus assignment
     * mass when the frozen centroids were TRAINED (persisted in
-    * `_trainmass/T` so it survives compaction pruning; legacy roots
-    * fall back to counting the train epoch's asg directory, which they
-    * still hold — they never compacted) and the mass assigned since.
-    * Shared by [[staleFrac]] and [[append]]'s gate so the two can never
+    * `_trainmass/T` before the train epoch's commit marker, so it
+    * survives compaction pruning) and the mass assigned since. Shared
+    * by [[staleFrac]] and [[append]]'s gate so the two can never
     * diverge. Train-relative, NOT snapshot-relative: a trainer-free
     * [[compact]] must not reset drift accounting. */
   private def staleCounts(e: Long): (Long, Long) = {
@@ -204,9 +170,9 @@ class SemanticDedupStore private (val spark: SparkSession,
       "centroids artifact")
     val trainMass = EpochStoreKit
       .readToken(fs, new Path(s"$root/_trainmass/$t"))
-      .getOrElse(spark.read.parquet(s"$root/asg/epoch=$t").count())
-    val totalMass = asgAt(e).count()
-    (trainMass, totalMass - trainMass)
+    require(trainMass.isDefined, s"SemanticDedupStore at $root has no " +
+      s"_trainmass/$t record for its train epoch $t")
+    (trainMass.get, asgAt(e).count() - trainMass.get)
   }
 
   /** Mass appended since the last [[retrain]] as a fraction of the
@@ -217,17 +183,6 @@ class SemanticDedupStore private (val spark: SparkSession,
     if (since == 0) 0.0
     else if (trainMass == 0) Double.PositiveInfinity
     else since.toDouble / trainMass
-  }
-
-  private def writeEpoch(n: Long, batch: DataFrame, asg: DataFrame,
-                         comp: DataFrame,
-                         token: Option[String] = None): Unit = {
-    EpochStoreKit.writeParquet(batch, s"$root/vecs/epoch=$n")
-    EpochStoreKit.writeParquet(asg, s"$root/asg/epoch=$n")
-    EpochStoreKit.writeParquet(comp, s"$root/comp/epoch=$n")
-    token.foreach(t =>
-      EpochStoreKit.writeToken(fs, EpochStoreKit.tokenPath(root, t), n))
-    EpochStoreKit.commitMarker(fs, marker(n))
   }
 
   /** Append an embedding batch (vec_id, embedding) — ids disjoint from
@@ -242,11 +197,9 @@ class SemanticDedupStore private (val spark: SparkSession,
 
   /** Exactly-once append for replayable callers (the Structured
     * Streaming `foreachBatch` bridge): a replayed call with the same
-    * `token` is a NO-OP returning the original epoch; every crash
-    * window converges on retry (the [[EpochStoreKit]] token protocol). */
+    * `token` is a NO-OP returning the original epoch. */
   def append(batch: DataFrame, token: String): Long =
-    EpochStoreKit.replayCheck(fs, root, token, epoch)
-      .getOrElse(appendImpl(batch, Some(token)))
+    replayOr(token)(appendImpl(batch, Some(token)))
 
   private def appendImpl(batch: DataFrame,
                          token: Option[String]): Long = {
@@ -255,13 +208,8 @@ class SemanticDedupStore private (val spark: SparkSession,
     val n = e + 1
     val b = Ckpt.eager(batch.select(col("vec_id").cast("long")
       .as("vec_id"), col("embedding")))
-    val clash = b.select(col("vec_id"))
-      .join(vecsAt(e).select(col("vec_id")), Seq("vec_id"), "left_semi")
-      .limit(1).collect()
-    require(clash.isEmpty,
-      s"SemanticDedupStore.append: batch vec_id ${clash.headOption
-        .map(_.get(0)).getOrElse("")} already stored at $root — " +
-        "appended ids must be disjoint")
+    requireDisjoint(b, vecsAt(e), "vec_id",
+      "a duplicated id would corrupt the keep policy")
     // cumulative staleness gate (the PQ-codebook discipline): count the
     // post-TRAIN assignment mass, not just this batch — via the same
     // helper staleFrac reports, so the gate and the metric cannot
@@ -288,31 +236,63 @@ class SemanticDedupStore private (val spark: SparkSession,
     // (extendComponents' contract) — no second Ckpt.eager copy here
     val comp = Dedup.extendSemanticComponents(
       asgAt(e), oldComp, batchAsg, tau)
-    // the delta: rows whose (id → component) mapping is new or changed
-    // — extension never deletes a row, so latest-wins reconstruction
-    // over (old resolved state + this delta) IS the new assignment
-    val compDelta = comp.join(oldComp, Seq("id", "component"),
-      "left_anti")
-    // torn-retrain/torn-compact litter: a crashed retrain may have left
-    // a centroids dir (+ trainmass file) at this (then-uncommitted)
-    // epoch, a crashed compact its _compacts sentinel; once THIS append
-    // commits the epoch, that litter would falsely read as a snapshot
-    // and truncate assignment resolution — clear it before the marker
-    // lands
+    clearLitter(n)
+    // the epoch write is the last consumer of the pinned batch frames (§5)
+    commitDelta(n, Seq(b, batchAsg, changedRows(comp, oldComp)), token,
+      comp, batchAsg, b)
+  }
+
+  /** Torn-retrain/torn-compact litter at the still-uncommitted epoch
+    * `n`: a crashed retrain may have left a centroids dir (+ trainmass
+    * file), a crashed compact its `_compacts` sentinel. Once a commit
+    * at `n` lands, that litter would falsely read as a snapshot — a
+    * trainer-free commit would promote never-used centroids to
+    * [[latestTrain]] (later appends would assign against a generation
+    * the stored pair graph never saw) and truncate assignment
+    * resolution — so appends and compactions clear it before their
+    * marker. */
+  private def clearLitter(n: Long): Unit = {
     val cdir = new Path(s"$root/centroids/epoch=$n")
     if (fs.exists(cdir)) fs.delete(cdir, true)
     Seq(new Path(s"$root/_compacts/$n"), new Path(s"$root/_trainmass/$n"))
       .foreach(p => if (fs.exists(p)) fs.delete(p, false))
-    writeEpoch(n, b, batchAsg, compDelta, token)
-    // the epoch write is the last consumer of the pinned batch frames:
-    // free them NOW instead of leaking three checkpoints per append (§5)
-    import org.apache.spark.sql.graftbridge.Bridge
-    Bridge.unpersistCheckpoint(comp)
-    Bridge.unpersistCheckpoint(batchAsg)
-    Bridge.unpersistCheckpoint(b)
-    if (autoCompactEpochs > 0 && n - latestSnapshot >= autoCompactEpochs)
-      compact()
-    n
+  }
+
+  /** Train centroids on `all`, and commit its full assignment + closure
+    * as snapshot epoch `n` with `vecs` as the epoch's data slice. The
+    * centroids dir IS the snapshot marker once the commit marker lands,
+    * so it (and the train-mass record staleness needs after a later
+    * compact prunes this epoch's asg) is durable BEFORE the commit. */
+  private def trainSnapshot(n: Long, all: DataFrame, vecs: DataFrame,
+                            nCells: Int, iters: Int): Unit = {
+    val cents = Clustering.kmeansCentroidsD(all, nCells, iters)
+    val asg = Ckpt.eager(Clustering.assignVecWithCentroids(all, cents))
+    // connectedComponents already returns a checkpoint-backed frame —
+    // no second Ckpt.eager copy
+    val comp = Dedup.connectedComponents(
+      Dedup.assignmentDupPairs(asg, tau).select("id1", "id2"))
+    EpochStoreKit.boundary(s"$root/centroids/epoch=$n")
+    Clustering.saveCentroids(spark, cents, s"$root/centroids/epoch=$n")
+    EpochStoreKit.writeToken(fs, new Path(s"$root/_trainmass/$n"),
+      asg.count())
+    // the epoch write is the last consumer of the pinned frames (§5)
+    commitSnapshot(n, Seq(vecs, asg, comp), comp, asg, all)
+  }
+
+  /** Snapshot-ness derives from artifacts written before the commit
+    * marker (the centroids dir, the `_compacts` sentinel): no
+    * post-commit marker. */
+  override protected def markSnapshot(n: Long): Unit = ()
+
+  /** [[compact]] is trainer-free: it rewrites the resolved asg + comp
+    * under the SAME frozen centroids (sound because extension under
+    * them is append-monotone) and leaves [[staleFrac]] unchanged. Its
+    * `_compacts` sentinel is written BEFORE the commit marker, so
+    * snapshot-ness stays atomic with the commit and there is no torn
+    * commit-then-mark window. */
+  override protected def beforeCompactCommit(n: Long): Unit = {
+    clearLitter(n)
+    EpochStoreKit.markFile(fs, new Path(s"$root/_compacts/$n"))
   }
 
   /** Re-train the centroids on the FULL stored corpus, rewrite the
@@ -328,108 +308,22 @@ class SemanticDedupStore private (val spark: SparkSession,
     val e = requireCommitted()
     val n = e + 1
     val all = Ckpt.eager(vecsAt(e))
-    val cents = Clustering.kmeansCentroidsD(all, nCells, iters)
-    val asg = Ckpt.eager(Clustering.assignVecWithCentroids(all, cents))
-    // connectedComponents already returns a checkpoint-backed frame —
-    // no second Ckpt.eager copy
-    val comp = Dedup.connectedComponents(
-      Dedup.assignmentDupPairs(asg, tau).select("id1", "id2"))
-    // the centroids dir IS the snapshot marker once the commit marker
-    // lands, so it (and the train-mass record staleness needs after a
-    // later compact prunes this epoch's asg) must be durable BEFORE
-    // writeEpoch creates the marker
-    EpochStoreKit.boundary(s"$root/centroids/epoch=$n")
-    Clustering.saveCentroids(spark, cents, s"$root/centroids/epoch=$n")
-    EpochStoreKit.writeToken(fs, new Path(s"$root/_trainmass/$n"),
-      asg.count())
-    writeEpoch(n, all.limit(0), asg, comp)
-    // the epoch write is the last consumer of the pinned frames (§5)
-    import org.apache.spark.sql.graftbridge.Bridge
-    Bridge.unpersistCheckpoint(comp)
-    Bridge.unpersistCheckpoint(asg)
-    Bridge.unpersistCheckpoint(all)
-    pruneForRetrain(n)
+    trainSnapshot(n, all, all.limit(0), nCells, iters)
+    pruneBelow(n)
     n
   }
 
-  /** Trainer-free compaction: rewrite the resolved asg + comp as ONE
-    * new snapshot epoch under the SAME frozen centroids — bounding the
-    * asg union fan-in and the comp latest-wins window without paying
-    * [[retrain]]'s Lloyd passes. Sound because extension under frozen
-    * centroids is append-monotone: the resolved state at any epoch IS a
-    * valid full snapshot of the same generation. [[staleFrac]] is
-    * UNCHANGED (it is train-relative by construction). The `_compacts`
-    * sentinel is written BEFORE the commit marker — snapshot-ness stays
-    * atomic with the commit (the same argument as the centroids dir),
-    * so there is no torn commit-then-mark window; sentinel litter from
-    * a crash before the marker is invisible and swept by the next
-    * [[append]]. A crash mid-prune is finished by the next
-    * [[compact]]/[[retrain]] sweep. Idempotent: compacting an
-    * already-snapshot head only finishes any interrupted prune.
-    * Returns the snapshot epoch. */
-  def compact(): Long = {
-    val e = requireCommitted()
-    val s = latestSnapshot
-    if (s == e) { pruneForCompact(s); return e }
-    val n = e + 1
-    val fullAsg = Ckpt.eager(asgAt(e))
-    val fullComp = Ckpt.eager(compAt(e))
-    val emptyBatch = spark.read.parquet(s"$root/vecs/epoch=0")
-      .select("vec_id", "embedding").limit(0)
-    // legacy roots (pre-_trainmass) still hold the train epoch's asg
-    // dir; persist its mass before the prune below deletes the only
-    // place staleness could fall back to
+  /** Prune below the new snapshot: asg/comp epochs and `_compacts`
+    * sentinels are absorbed, but the TRAIN-generation artifacts
+    * (centroids dir, `_trainmass`) survive down to [[latestTrain]] —
+    * after a [[compact]] the frozen generation is still in use below
+    * the snapshot; after a [[retrain]] latestTrain IS the snapshot. */
+  override protected def pruneBelow(snap: Long): Unit = {
+    pruneKinds(Seq("asg", "comp"), snap)
+    pruneMarkers("_compacts", snap)
     val t = latestTrain
-    val tm = new Path(s"$root/_trainmass/$t")
-    if (!fs.exists(tm))
-      EpochStoreKit.writeToken(fs, tm,
-        spark.read.parquet(s"$root/asg/epoch=$t").count())
-    // torn-retrain litter: a retrain() that crashed after saveCentroids +
-    // _trainmass but before its commit marker left centroids/epoch=n (+
-    // _trainmass/n) at this still-uncommitted epoch; committing THIS
-    // compact at n would silently promote those never-used centroids to
-    // latestTrain (later appends would assign against a generation the
-    // stored pair graph never saw) and reset staleness — sweep exactly as
-    // appendImpl does, before snapshot-ness becomes visible
-    val cdir = new Path(s"$root/centroids/epoch=$n")
-    if (fs.exists(cdir)) fs.delete(cdir, true)
-    val tmLitter = new Path(s"$root/_trainmass/$n")
-    if (fs.exists(tmLitter)) fs.delete(tmLitter, false)
-    EpochStoreKit.markFile(fs, new Path(s"$root/_compacts/$n"))
-    writeEpoch(n, emptyBatch, fullAsg, fullComp)
-    // the epoch write is the last consumer of the pinned frames (§5)
-    import org.apache.spark.sql.graftbridge.Bridge
-    Bridge.unpersistCheckpoint(fullAsg)
-    Bridge.unpersistCheckpoint(fullComp)
-    pruneForCompact(n)
-    n
-  }
-
-  /** Retrain prune: everything below the new TRAIN snapshot is
-    * absorbed — asg/comp/centroids epoch dirs and the compact/trainmass
-    * sentinels. Safe to re-run (readers never resolve below the latest
-    * snapshot); doubles as the interrupted-prune recovery sweep. */
-  private def pruneForRetrain(snap: Long): Unit = {
-    Seq("asg", "comp", "centroids").foreach(kind =>
-      EpochStoreKit.pruneEpochDirsBelow(fs, root, kind, snap))
-    EpochStoreKit.pruneMarkersBelow(fs, new Path(s"$root/_compacts"),
-      snap)
-    EpochStoreKit.pruneMarkersBelow(fs, new Path(s"$root/_trainmass"),
-      snap)
-  }
-
-  /** Compact prune: asg/comp below the new snapshot are absorbed, but
-    * the TRAIN-generation artifacts (centroids dir, `_trainmass`)
-    * survive down to [[latestTrain]] — the frozen generation is still
-    * in use below the snapshot. */
-  private def pruneForCompact(snap: Long): Unit = {
-    Seq("asg", "comp").foreach(kind =>
-      EpochStoreKit.pruneEpochDirsBelow(fs, root, kind, snap))
-    EpochStoreKit.pruneMarkersBelow(fs, new Path(s"$root/_compacts"),
-      snap)
-    val t = latestTrain
-    EpochStoreKit.pruneEpochDirsBelow(fs, root, "centroids", t)
-    EpochStoreKit.pruneMarkersBelow(fs, new Path(s"$root/_trainmass"), t)
+    pruneKinds(Seq("centroids"), t)
+    pruneMarkers("_trainmass", t)
   }
 
   /** The kept rows of `corpus` at the latest epoch under the SemDeDup
@@ -462,27 +356,10 @@ object SemanticDedupStore {
            maxStaleFrac: Double = 0.5,
            autoCompactEpochs: Int = 16): SemanticDedupStore = {
     val s = new SemanticDedupStore(spark, root, tau, maxStaleFrac,
-      autoCompactEpochs)
-    require(s.epoch < 0,
-      s"SemanticDedupStore already initialized at $root (epoch ${s.epoch})")
+      autoCompactEpochs).fresh()
     val v = Ckpt.eager(vecs.select(col("vec_id").cast("long")
       .as("vec_id"), col("embedding")))
-    val cents = Clustering.kmeansCentroidsD(v, nCells, iters)
-    val asg = Ckpt.eager(Clustering.assignVecWithCentroids(v, cents))
-    // connectedComponents already returns a checkpoint-backed frame —
-    // no second Ckpt.eager copy
-    val comp = Dedup.connectedComponents(
-      Dedup.assignmentDupPairs(asg, tau).select("id1", "id2"))
-    EpochStoreKit.boundary(s"$root/centroids/epoch=0")
-    Clustering.saveCentroids(spark, cents, s"$root/centroids/epoch=0")
-    EpochStoreKit.writeToken(s.fsPub, new Path(s"$root/_trainmass/0"),
-      asg.count())
-    s.writeEpoch(0L, v, asg, comp)
-    // the epoch write is the last consumer of the pinned frames (§5)
-    import org.apache.spark.sql.graftbridge.Bridge
-    Bridge.unpersistCheckpoint(comp)
-    Bridge.unpersistCheckpoint(asg)
-    Bridge.unpersistCheckpoint(v)
+    s.trainSnapshot(0L, v, v, nCells, iters)
     s
   }
 
@@ -491,10 +368,7 @@ object SemanticDedupStore {
     * with — they parameterize the stored pair graph. */
   def open(spark: SparkSession, root: String, tau: Double = 0.95,
            maxStaleFrac: Double = 0.5,
-           autoCompactEpochs: Int = 16): SemanticDedupStore = {
-    val s = new SemanticDedupStore(spark, root, tau, maxStaleFrac,
-      autoCompactEpochs)
-    s.requireCommitted()
-    s
-  }
+           autoCompactEpochs: Int = 16): SemanticDedupStore =
+    new SemanticDedupStore(spark, root, tau, maxStaleFrac,
+      autoCompactEpochs).opened()
 }

@@ -1,9 +1,7 @@
 package graft.api
 
 import graft.operators.{Ckpt, SubstringIndex, SuffixArray}
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** PERSISTED incremental substring-dedup store — the deployment packaging
@@ -25,8 +23,6 @@ import org.apache.spark.sql.functions._
   *   deduped/epoch=N/   snapshot epochs: the FULL deduped corpus;
   *                      delta epochs: the rows the append CHANGED
   *                      (recomputed touched base docs + the new batch)
-  *   _commits/N         empty marker file — the epoch's commit point
-  *   _snapshots/N       marks epoch N's index/deduped as full snapshots
   * }}}
   *
   * Epoch 0 (init) is a snapshot; [[append]] writes deltas; readers resolve
@@ -42,18 +38,8 @@ import org.apache.spark.sql.functions._
   * work on a long-lived store. `corpus/` epochs are NEVER pruned: each
   * holds an appended batch, i.e. the data itself, not a derived snapshot.
   *
-  * Crash safety, single-writer (the store-wide contract): an epoch's
-  * artifact directories are written FIRST (idempotent overwrites), then
-  * the commit marker is created atomically with overwrite=false. Readers
-  * resolve at the highest MARKED epoch, so a crash mid-append leaves
-  * unmarked litter the retry simply overwrites; a replayed append onto an
-  * already-marked epoch fails the marker create loudly. [[compact]]'s
-  * snapshot marker is created AFTER its commit marker: a crash between
-  * the two leaves a committed epoch whose full artifacts read correctly
-  * as deltas (latest-wins over a full index IS that index), and the next
-  * [[compact]] re-marks; a crash mid-prune leaves absorbed directories
-  * the next [[compact]] sweeps (readers never resolve below the latest
-  * snapshot, so they are invisible either way).
+  * Crash safety and the commit/compact/replay sequence are the
+  * [[EpochStore]] contract.
   *
   * Time-travel: [[dedupedAt]] serves any epoch at or above the latest
   * snapshot; epochs below it were pruned by [[compact]] and fail loudly.
@@ -61,47 +47,22 @@ import org.apache.spark.sql.functions._
   * The reference engine has no substring machinery (vector-level dedup
   * only; reference storage_engine.py) — training-data-pipeline tier.
   */
-class SubstringDedupStore private (val spark: SparkSession,
-                                   val root: String, val window: Int,
-                                   val autoCompactEpochs: Int) {
+class SubstringDedupStore private (spark: SparkSession, root: String,
+                                   val window: Int,
+                                   autoCompactEpochs: Int)
+    extends EpochStore(spark, root, autoCompactEpochs) {
 
-  private def fs = EpochStoreKit.fsOf(spark, root)
+  private val indexCols = Seq("k1", "k2", "keep", "occ")
 
-  private def marker(n: Long) = new Path(s"$root/_commits/$n")
-  private def snapMarker(n: Long) = new Path(s"$root/_snapshots/$n")
-
-  /** Highest committed epoch, or -1 for an empty/initialized-never store. */
-  def epoch: Long = EpochStoreKit.maxMarked(fs, new Path(s"$root/_commits"))
-
-  /** Highest epoch whose index/deduped artifacts are full snapshots
-    * (epoch 0 after [[SubstringDedupStore.init]]; bumped by [[compact]]). */
-  def latestSnapshot: Long =
-    EpochStoreKit.maxMarked(fs, new Path(s"$root/_snapshots"))
-
-  private def requireCommitted(): Long = {
-    val e = epoch
-    require(e >= 0, s"SubstringDedupStore at $root has no committed epoch")
-    e
-  }
-
-  /** Snapshot base for reads at epoch `e` — fails loudly when `e`
-    * predates the latest compaction (its deltas were pruned). */
-  private def snapshotFor(e: Long): Long = {
-    val s = latestSnapshot
-    require(s >= 0 && s <= e,
-      s"epoch $e at $root is below the latest snapshot $s — its delta " +
-        "epochs were pruned by compact(); time-travel only reaches " +
-        "epochs at or above the snapshot")
-    s
-  }
+  protected val dataKinds = Seq("corpus" -> Seq("doc_id", "text"))
+  protected val snapshotKinds =
+    Seq("index" -> indexAt _, "deduped" -> dedupedResolved _)
 
   private def indexAt(e: Long): DataFrame =
-    EpochStoreKit.resolveLatestWins(spark, root, "index",
-      snapshotFor(e), e, Seq("k1", "k2"), Seq("k1", "k2", "keep", "occ"))
+    latestWinsAt("index", e, Seq("k1", "k2"), indexCols)
 
   private def dedupedResolved(e: Long): DataFrame =
-    EpochStoreKit.resolveLatestWins(spark, root, "deduped",
-      snapshotFor(e), e, Seq("doc_id"),
+    latestWinsAt("deduped", e, Seq("doc_id"),
       Seq("doc_id", "text", "n_tokens_before", "n_tokens_after"))
 
   /** The full corpus at the latest committed epoch (union of appended
@@ -112,10 +73,8 @@ class SubstringDedupStore private (val spark: SparkSession,
     * epoch (`corpus/` holds the data itself and is never pruned, so
     * corpus time-travel is not snapshot-bounded). */
   def corpusAt(e: Long): DataFrame = {
-    require(e >= 0 && e <= epoch && fs.exists(marker(e)),
-      s"epoch $e not committed at $root")
-    EpochStoreKit.unionEpochs(spark, root, "corpus", 0L, e,
-      Seq("doc_id", "text"))
+    requireEpoch(e)
+    dataAt("corpus", e)
   }
 
   /** The maintained window-key index at the latest committed epoch
@@ -129,20 +88,8 @@ class SubstringDedupStore private (val spark: SparkSession,
     * reaches any epoch at or above the latest snapshot; older epochs
     * were pruned by [[compact]] and fail loudly. */
   def dedupedAt(e: Long): DataFrame = {
-    require(e >= 0 && e <= epoch && fs.exists(marker(e)),
-      s"epoch $e not committed at $root")
+    requireEpoch(e)
     dedupedResolved(e)
-  }
-
-  private def writeEpoch(n: Long, batch: DataFrame, idx: DataFrame,
-                         ded: DataFrame,
-                         token: Option[String] = None): Unit = {
-    EpochStoreKit.writeParquet(batch, s"$root/corpus/epoch=$n")
-    EpochStoreKit.writeParquet(idx, s"$root/index/epoch=$n")
-    EpochStoreKit.writeParquet(ded, s"$root/deduped/epoch=$n")
-    token.foreach(t =>
-      EpochStoreKit.writeToken(fs, EpochStoreKit.tokenPath(root, t), n))
-    EpochStoreKit.commitMarker(fs, marker(n))
   }
 
   /** Append a batch (ids strictly above every stored id — enforced by
@@ -158,90 +105,29 @@ class SubstringDedupStore private (val spark: SparkSession,
 
   /** Exactly-once append for replayable callers (the Structured
     * Streaming `foreachBatch` bridge, [[graft.streaming.StoreSink]]):
-    * `token` (e.g. the stream's batchId) is recorded durably between
-    * the epoch's artifacts and its commit marker, so a replayed call
-    * with the same token is a NO-OP returning the original epoch, and
-    * every crash window in between converges on retry (the
-    * [[EpochStoreKit]] token protocol). */
+    * a replayed call with the same `token` (e.g. the stream's batchId)
+    * is a NO-OP returning the original epoch. */
   def append(batch: DataFrame, token: String): Long =
-    EpochStoreKit.replayCheck(fs, root, token, epoch)
-      .getOrElse(appendImpl(batch, Some(token)))
+    replayOr(token)(appendImpl(batch, Some(token)))
 
   private def appendImpl(batch: DataFrame,
                          token: Option[String]): Long = {
     val e = requireCommitted()
-    val n = e + 1
     val b = Ckpt.eager(batch.select(col("doc_id").cast("long")
       .as("doc_id"), col("text").cast("string").as("text")))
-    val baseDocs = corpus
     // the index is consumed KEY-RESTRICTED: the latest-wins window runs
     // only over the rows whose key the batch (then the touched docs)
     // actually carries — filtering on the window's own partition keys
     // first is resolution-transparent — so the stored index is scanned,
     // never shuffled whole (the former base-linear append term, r14)
     val indexFor: DataFrame => DataFrame = keys =>
-      EpochStoreKit.resolveLatestWinsForKeys(spark, root, "index",
-        snapshotFor(e), e, Seq("k1", "k2"),
-        Seq("k1", "k2", "keep", "occ"), keys)
-    val (dedDelta, idxDelta) =
-      SubstringIndex.appendDeltas(baseDocs, indexFor, b, window)
-    writeEpoch(n, b, idxDelta, dedDelta, token)
-    // the epoch write is the last consumer of the pinned frames: free
-    // the batch pin and whatever checkpoints appendDeltas handed back
-    // instead of leaking them per append (§5)
-    import org.apache.spark.sql.graftbridge.Bridge
-    Bridge.unpersistCheckpoint(dedDelta)
-    Bridge.unpersistCheckpoint(idxDelta)
-    Bridge.unpersistCheckpoint(b)
-    maybeAutoCompact(n)
-    n
-  }
-
-  /** The auto-compaction policy: once the latest-wins resolution window
-    * spans more than `autoCompactEpochs` delta epochs, fold it. The
-    * threshold trades append-side compaction wall against read-side
-    * window fan-in — SCALE.md's measured curve sizes it; 0 disables. */
-  private def maybeAutoCompact(n: Long): Unit =
-    if (autoCompactEpochs > 0 && n - latestSnapshot >= autoCompactEpochs)
-      compact()
-
-  /** Rewrite the resolved index + deduped state as ONE new snapshot
-    * epoch and prune the absorbed index/deduped delta directories (and
-    * their snapshot markers) below it — the epoch-chain analogue of
-    * [[graft.streaming.StreamingIngest.compactDeltas]]. The new epoch
-    * appends NO data (its corpus delta is empty); `corpus/` directories
-    * are all retained. Idempotent: compacting an already-snapshot head
-    * only finishes any interrupted prune. Returns the snapshot epoch. */
-  def compact(): Long = {
-    val e = requireCommitted()
-    val s = latestSnapshot
-    if (s == e) { pruneBelow(s); return e }
-    val n = e + 1
-    val emptyBatch = spark.read
-      .parquet(s"$root/corpus/epoch=0").select("doc_id", "text").limit(0)
-    val snapIdx = Ckpt.eager(indexAt(e))
-    val snapDed = Ckpt.eager(dedupedResolved(e))
-    writeEpoch(n, emptyBatch, snapIdx, snapDed)
-    // the epoch write is the last consumer of the pinned snapshots (§5)
-    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(snapIdx)
-    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(snapDed)
-    // the snapshot marker comes AFTER the commit marker: a crash between
-    // the two leaves epoch n committed as a (full-content) delta, which
-    // reads identically under latest-wins; the next compact() re-marks
-    EpochStoreKit.markFile(fs, snapMarker(n))
-    pruneBelow(n)
-    n
-  }
-
-  /** Delete index/deduped epoch directories and snapshot markers below
-    * the latest snapshot. Readers never resolve below it, so this is
-    * safe to (re-)run any time — [[compact]] uses it both as its prune
-    * step and as the recovery sweep for an interrupted prune. */
-  private def pruneBelow(snap: Long): Unit = {
-    Seq("index", "deduped").foreach(kind =>
-      EpochStoreKit.pruneEpochDirsBelow(fs, root, kind, snap))
-    EpochStoreKit.pruneMarkersBelow(fs, new Path(s"$root/_snapshots"),
-      snap)
+      latestWinsFor("index", e, Seq("k1", "k2"), indexCols, keys)
+    val (dedDelta, idxDelta) = SubstringIndex.appendDeltas(
+      dataAt("corpus", e), indexFor, b, window)
+    // the epoch write is the last consumer of the pinned batch and of
+    // whatever checkpoints appendDeltas handed back (§5)
+    commitDelta(e + 1, Seq(b, idxDelta, dedDelta), token,
+      dedDelta, idxDelta, b)
   }
 }
 
@@ -254,27 +140,18 @@ object SubstringDedupStore {
            window: Int,
            autoCompactEpochs: Int = 16): SubstringDedupStore = {
     val s = new SubstringDedupStore(spark, root, window,
-      autoCompactEpochs)
-    require(s.epoch < 0,
-      s"SubstringDedupStore already initialized at $root (epoch ${s.epoch})")
+      autoCompactEpochs).fresh()
     val d = Ckpt.eager(docs.select(col("doc_id").cast("long").as("doc_id"),
       col("text").cast("string").as("text")))
-    s.writeEpoch(0L, d,
-      SubstringIndex.buildIndex(d, window),
-      SuffixArray.substringDeduped(d, window))
     // the epoch write is the last consumer of the pinned corpus (§5)
-    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(d)
-    EpochStoreKit.markFile(EpochStoreKit.fsOf(spark, root),
-      new Path(s"$root/_snapshots/0"))
+    s.commitSnapshot(0L, Seq(d, SubstringIndex.buildIndex(d, window),
+      SuffixArray.substringDeduped(d, window)), d)
     s
   }
 
   /** Open an existing store (any committed epoch present). */
   def open(spark: SparkSession, root: String, window: Int,
-           autoCompactEpochs: Int = 16): SubstringDedupStore = {
-    val s = new SubstringDedupStore(spark, root, window,
-      autoCompactEpochs)
-    s.requireCommitted()
-    s
-  }
+           autoCompactEpochs: Int = 16): SubstringDedupStore =
+    new SubstringDedupStore(spark, root, window, autoCompactEpochs)
+      .opened()
 }

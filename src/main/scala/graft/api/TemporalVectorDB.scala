@@ -39,10 +39,6 @@ class TemporalVectorDB(
   private var pqCodes: Option[DataFrame] = None
   // raw (m, ks, trainSample, nCells, fullCells) as passed to cachePqIndex
   private var pqParams: Option[(Int, Int, Int, Int, Boolean)] = None
-  // whether the live codes are RESIDUAL-encoded (every index built here
-  // is; false only after loading a pre-residual persisted index, whose
-  // raw-encoded codes must keep scoring with the raw ADC formula)
-  private var pqResidual: Boolean = true
   // staleness bookkeeping: corpus rows at codebook-train time, and rows
   // re-encoded with those (fixed) codebooks since
   private var pqTrainedN: Long = 0L
@@ -201,22 +197,16 @@ class TemporalVectorDB(
       col("embedding").as("vec")), "vec")
 
   /** Byte-encode a cell-assigned (`_cell`) normalized frame with the LIVE
-    * codebooks: residual encode for indexes built here, raw encode only
-    * for a loaded pre-residual index (whose books were trained raw). */
+    * codebooks: each vector's residual against its coarse cell. */
   private def encodeWithLiveBooks(assigned: DataFrame,
                                   books: Array[Array[Array[Float]]],
                                   cents: Array[Array[Float]]): DataFrame =
-    if (pqResidual)
-      assigned
-        .withColumn("_resid",
-          SimilaritySearch.residualExpr(cents, col("vec"), col("_cell")))
-        .withColumn("_codes",
-          SimilaritySearch.pqEncodeExpr(books, col("_resid")))
-        .drop("vec", "_resid")
-    else
-      assigned
-        .withColumn("_codes", SimilaritySearch.pqEncodeExpr(books, col("vec")))
-        .drop("vec")
+    assigned
+      .withColumn("_resid",
+        SimilaritySearch.residualExpr(cents, col("vec"), col("_cell")))
+      .withColumn("_codes",
+        SimilaritySearch.pqEncodeExpr(books, col("_resid")))
+      .drop("vec", "_resid")
 
   /** Compressed (IVF-PQ) latest-state index: codebooks AND coarse (IVF)
     * centroids trained ONCE on a bounded sample of the materialized latest
@@ -292,7 +282,6 @@ class TemporalVectorDB(
     // compression
     val books = SimilaritySearch.pqCodebooks(
       SimilaritySearch.sampleResiduals(sample, cents), mm, ks, iters = 5)
-    pqResidual = true
     val codes = pin(encodeWithLiveBooks(
       SimilaritySearch.withCell(corpus, cents, col("vec")), books, cents))
     pqCodes.foreach(
@@ -316,11 +305,10 @@ class TemporalVectorDB(
     * [[cachePqIndex]]/[[retrainPqIndex]] pair new codebooks with the old
     * codes frame (wrong widths → wrong sims). */
   private def currentPqIndex()
-      : (DataFrame, Array[Array[Array[Float]]], Array[Array[Float]],
-         Boolean) =
+      : (DataFrame, Array[Array[Array[Float]]], Array[Array[Float]]) =
     synchronized {
       if (pqCodes.isEmpty) buildPqIndex(0, 256, 4096, 16, fullCells = false)
-      (pqCodes.get, pqBooks.get, pqCents.get, pqResidual)
+      (pqCodes.get, pqBooks.get, pqCents.get)
     }
 
   /** Parameterless GETTER for the live compressed index — returns whatever
@@ -329,29 +317,18 @@ class TemporalVectorDB(
     * [[cachePqIndex]](m, ks, trainSample, nCells) to (re)configure. */
   def pqIndex(): DataFrame = currentPqIndex()._1
 
-  /** Query-side probe frame for the live index: (query_id, _lut, _cell[,
-    * _csim]) — the LUT and probed cells (with their ⟨q, centroid⟩ sims
-    * when the index is residual-encoded) computed once per query, below
-    * any broadcast. */
+  /** Query-side probe frame for the live index: (query_id, _lut, _cell,
+    * _csim) — the LUT and probed cells with their ⟨q, centroid⟩ sims,
+    * computed once per query, below any broadcast. */
   private def probeFrame(qn: DataFrame, books: Array[Array[Array[Float]]],
-                         cents: Array[Array[Float]], probeN: Int,
-                         residual: Boolean): DataFrame = {
-    val withLut =
-      qn.withColumn("_lut", SimilaritySearch.pqLutExpr(books, col("qvec")))
-    if (residual)
-      withLut
-        .withColumn("_pc",
-          SimilaritySearch.probeCellsWithSimExpr(cents, col("qvec"), probeN))
-        .select(col("query_id"), col("_lut"), explode(col("_pc")).as("_p"))
-        .select(col("query_id"), col("_lut"),
-          col("_p.c").as("_cell"), col("_p.s").as("_csim"))
-    else
-      withLut
-        .withColumn("_probes",
-          SimilaritySearch.probeCellsExpr(cents, col("qvec"), probeN))
-        .select(col("query_id"), col("_lut"),
-          explode(col("_probes")).as("_cell"))
-  }
+                         cents: Array[Array[Float]],
+                         probeN: Int): DataFrame =
+    qn.withColumn("_lut", SimilaritySearch.pqLutExpr(books, col("qvec")))
+      .withColumn("_pc",
+        SimilaritySearch.probeCellsWithSimExpr(cents, col("qvec"), probeN))
+      .select(col("query_id"), col("_lut"), explode(col("_pc")).as("_p"))
+      .select(col("query_id"), col("_lut"),
+        col("_p.c").as("_cell"), col("_p.s").as("_csim"))
 
   /** Approximate latest-state search over the COMPRESSED index: the query
     * probes its `nProbe` nearest coarse cells — an EQUI-JOIN on the
@@ -402,15 +379,15 @@ class TemporalVectorDB(
     import org.apache.spark.sql.expressions.Window
     val bc: DataFrame => DataFrame =
       if (broadcastQueries) broadcast else identity
-    val (codes, books, cents, residual) = currentPqIndex()
+    val (codes, books, cents) = currentPqIndex()
     val probeN =
       if (nProbe <= 0) cents.length else math.min(nProbe, cents.length)
     val qn = normQueries(queries)
     // LUT + probe cells computed below the broadcast: once per query
-    val probes = probeFrame(qn, books, cents, probeN, residual)
+    val probes = probeFrame(qn, books, cents, probeN)
     val adc = SimilaritySearch.adcSimExpr(books.length)
     val scored = codes.join(bc(probes), Seq("_cell"))
-      .withColumn("sim", if (residual) col("_csim") + adc else adc)
+      .withColumn("sim", col("_csim") + adc)
       .withColumn("id",
         concat_ws("#", col("content_id"), col("seq")))
     if (refine <= 0)
@@ -457,12 +434,12 @@ class TemporalVectorDB(
     import spark.implicits._
     val bases = cacheBases()
     val latest = cacheLatest()
-    val (codes, books, cents, residual) = currentPqIndex()
+    val (codes, books, cents) = currentPqIndex()
     val (m, ks, ts, nc, fc) = pqParams.get
     bases.write.mode("overwrite").parquet(s"$indexDir/bases")
     latest.write.mode("overwrite").parquet(s"$indexDir/latest")
     codes.write.mode("overwrite").parquet(s"$indexDir/codes")
-    Seq((m, ks, ts, nc, fc, residual,
+    Seq((m, ks, ts, nc, fc, true,
         books.map(_.map(_.toSeq).toSeq).toSeq,
         cents.map(_.toSeq).toSeq))
       .toDF("m", "ks", "train_sample", "n_cells", "full_cells",
@@ -490,6 +467,12 @@ class TemporalVectorDB(
     else {
       type SSeq[A] = scala.collection.Seq[A]
       val meta = spark.read.parquet(s"$indexDir/meta").collect().head
+      // every index this facade builds is residual-encoded; a persisted
+      // index without that flag cannot be scored by this code
+      require(meta.schema.fieldNames.contains("residual") &&
+        meta.getAs[Boolean]("residual"),
+        s"persisted PQ index at $indexDir is not residual-encoded; " +
+          "rebuild it (cachePqIndex) and persist again")
       val books = meta.getAs[SSeq[SSeq[SSeq[Float]]]]("books")
         .map(_.map(_.toArray).toArray).toArray
       val cents = meta.getAs[SSeq[SSeq[Float]]]("cents")
@@ -508,10 +491,6 @@ class TemporalVectorDB(
       pqParams = Some((meta.getAs[Int]("m"), meta.getAs[Int]("ks"),
         meta.getAs[Int]("train_sample"), meta.getAs[Int]("n_cells"),
         meta.getAs[Boolean]("full_cells")))
-      // pre-residual persisted indexes (no `residual` column) carry
-      // raw-encoded codes: keep scoring them with the raw ADC formula
-      pqResidual = meta.schema.fieldNames.contains("residual") &&
-        meta.getAs[Boolean]("residual")
       // drift clock restarts at the loaded snapshot (drift accumulated
       // before the persist is not recoverable from the files — the
       // persist-after-every-append discipline above keeps it ~0 anyway)
@@ -543,7 +522,6 @@ class TemporalVectorDB(
     pqCents = None
     pqCodes = None
     pqParams = None
-    pqResidual = true
     pqTrainedN = 0L
     pqRefreshedSinceTrain = 0L
   }

@@ -245,8 +245,11 @@ object SubstringIndex {
                    newDocs: DataFrame, window: Int,
                    idCol: String = "doc_id",
                    textCol: String = "text"): (DataFrame, DataFrame) = {
-    val (_, changed, idxDelta) =
+    val (touched, changed, idxDelta) =
       appendCore(baseDocs, indexFor, newDocs, window, idCol, textCol)
+    // both results are already pinned, so the touched-id pin has no
+    // consumer left: free it instead of leaving it to driver GC
+    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(touched)
     (changed, idxDelta)
   }
 

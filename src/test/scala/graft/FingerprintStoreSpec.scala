@@ -192,40 +192,4 @@ class FingerprintStoreSpec extends SparkSpec {
     val d2 = grpRows(spark.read.parquet(s"$root/grp/epoch=2"))
     assert(d2 == Set((0x7FFFFFFFFFL, 95L)))
   }
-
-  test("legacy migration: a root written without grp dirs backfills " +
-    "them on open() — per-epoch content identical to a store built by " +
-    "the current code, reads and further appends equal the twin") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-fps5").toString + "/store"
-    val twinRoot = java.nio.file.Files
-      .createTempDirectory("graft-fps5t").toString + "/store"
-    for (r <- Seq(root, twinRoot)) {
-      val st = FingerprintStore.init(spark, r, base)
-      st.append(batch1)
-      st.append(batch2)
-    }
-    // fabricate the legacy layout: delete every grp dir
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rmrf)
-      f.delete(); ()
-    }
-    rmrf(new java.io.File(s"$root/grp"))
-    assert(!new java.io.File(s"$root/grp").exists)
-    val s = FingerprintStore.open(spark, root)
-    def grpRows(p: String): Set[(Long, Long)] = spark.read.parquet(p)
-      .select(col("_sh").cast("long"), col("_rep").cast("long"))
-      .as[(Long, Long)].collect().toSet
-    for (k <- 0 to 2)
-      assert(grpRows(s"$root/grp/epoch=$k") ==
-        grpRows(s"$twinRoot/grp/epoch=$k"), s"epoch $k grp mismatch")
-    val allIds = (base.select("_id") unionByName batch1.select("_id")
-      unionByName batch2.select("_id")).select(col("_id").as("doc_id"))
-    val twin = FingerprintStore.open(spark, twinRoot)
-    assert(ids(s.kept(allIds)) == ids(twin.kept(allIds)))
-    val b3 = Seq((300L, H0), (301L, 0x2BADF00D11L)).toDF("_id", "simhash")
-    s.append(b3); twin.append(b3)
-    val all3 = allIds.unionByName(b3.select(col("_id").as("doc_id")))
-    assert(ids(s.kept(all3)) == ids(twin.kept(all3)))
-  }
 }

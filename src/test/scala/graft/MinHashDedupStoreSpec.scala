@@ -180,39 +180,6 @@ class MinHashDedupStoreSpec extends SparkSpec {
     assert(banded == direct && banded.nonEmpty)
   }
 
-  test("legacy migration: a root written without band dirs backfills " +
-    "them on open() — per-epoch content identical to a current-code " +
-    "twin, reads and further appends equal the twin") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-mhs4").toString + "/store"
-    val twinRoot = java.nio.file.Files
-      .createTempDirectory("graft-mhs4t").toString + "/store"
-    for (r <- Seq(root, twinRoot)) {
-      val st = MinHashDedupStore.init(spark, r, base, Tau)
-      st.append(batch1)
-    }
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rmrf)
-      f.delete(); ()
-    }
-    rmrf(new java.io.File(s"$root/band"))
-    val s = MinHashDedupStore.open(spark, root, Tau)
-    def bandRows(p: String): Set[(Int, String, Long)] = spark.read
-      .parquet(p)
-      .select(col("_band").cast("int"), col("_bhash").cast("string"),
-        col("_id").cast("long"))
-      .as[(Int, String, Long)].collect().toSet
-    for (k <- 0 to 1)
-      assert(bandRows(s"$root/band/epoch=$k") ==
-        bandRows(s"$twinRoot/band/epoch=$k"), s"epoch $k band mismatch")
-    val twin = MinHashDedupStore.open(spark, twinRoot, Tau)
-    assert(s.append(batch2) == twin.append(batch2))
-    val u2 = base.unionByName(batch1).unionByName(batch2)
-    assert(ids(s.kept(u2.select("doc_id"))) ==
-      ids(twin.kept(u2.select("doc_id"))))
-    assert(ids(s.kept(u2.select("doc_id"))) == scratch(u2))
-  }
-
   test("exactly-once token appends: a replayed token is a no-op; a " +
     "fresh token appends") {
     val root = java.nio.file.Files
@@ -227,53 +194,5 @@ class MinHashDedupStoreSpec extends SparkSpec {
     assert(e2 == 2L)
     val u2 = base.unionByName(batch1).unionByName(batch2)
     assert(ids(s.kept(u2.select("doc_id"))) == scratch(u2))
-  }
-
-  test("replayCheck falls back to the legacy un-suffixed token path " +
-    "(r15): a store upgraded from the pre-digest format no-ops a " +
-    "replayed append instead of wedging on the disjoint-id guard") {
-    import graft.api.EpochStoreKit
-    import org.apache.hadoop.fs.Path
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-mhs4").toString + "/store"
-    val s = MinHashDedupStore.init(spark, root, base, Tau)
-    assert(s.append(batch1, "doc_id", "text", "batch/0") == 1L)
-    // simulate the pre-upgrade layout: the committed token lives at the
-    // sanitized-only path, no digest suffix
-    val fs = new Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val newPath = EpochStoreKit.tokenPath(root, "batch/0")
-    val legacy = new Path(s"$root/_tokens/batch_0")
-    assert(fs.rename(newPath, legacy))
-    // the replayed exactly-once append must find the legacy token and
-    // no-op (without the fallback it would re-attempt and fail loudly
-    // on the duplicate ids)
-    assert(s.append(batch1, "doc_id", "text", "batch/0") == 1L)
-    assert(s.epoch == 1L)
-  }
-
-  test("torn band migration resumes (r15): a pending marker with an " +
-    "incomplete epoch dir makes open() re-backfill exactly the " +
-    "unfinished epochs") {
-    import graft.api.EpochStoreKit
-    import org.apache.hadoop.fs.Path
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-mhs5").toString + "/store"
-    val s0 = MinHashDedupStore.init(spark, root, base, Tau)
-    s0.append(batch1)
-    val fs = new Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // simulate a migration that crashed mid-loop: pending marker set,
-    // epoch 1's band artifact torn (no parquet _SUCCESS)
-    EpochStoreKit.markFile(fs, new Path(s"$root/_migrations/band"))
-    assert(fs.delete(new Path(s"$root/band/epoch=1/_SUCCESS"), false))
-    val s1 = MinHashDedupStore.open(spark, root, Tau)
-    assert(!fs.exists(new Path(s"$root/_migrations/band"))) // finished
-    assert(fs.exists(new Path(s"$root/band/epoch=1/_SUCCESS")))
-    // and the resumed store still appends + reads correctly (batch2
-    // pairs with epoch 1's doc 12 THROUGH the re-backfilled band)
-    assert(s1.append(batch2) == 2L)
-    val u2 = base.unionByName(batch1).unionByName(batch2)
-    assert(ids(s1.kept(u2.select("doc_id"))) == scratch(u2))
   }
 }
