@@ -90,42 +90,47 @@ class TemporalVectorDB(
 
   /** Materialized latest-state corpus: every content's RECONSTRUCTED
     * latest version — (content_id, seq, embedding). Built once from the
-    * store, then maintained incrementally per [[addVersions]] batch
-    * (reconstruct only touched contents, carry the rest), so repeated
-    * latest-state searches never re-run the full reconstruction. */
+    * store ([[Reconstruction.latest]]: one scan, one groupBy), then
+    * maintained incrementally per [[addVersions]] batch from the rows the
+    * batch wrote, so repeated latest-state searches never re-run the full
+    * reconstruction. */
   def cacheLatest(): DataFrame = synchronized {
     latestCache.getOrElse {
-      val latest = versions.groupBy("content_id").agg(max("seq").as("seq"))
-      val l = pin(Reconstruction.reconstruct(versions, latest)
+      val l = pin(Reconstruction.latest(versions)
         .select("content_id", "seq", "embedding"))
       latestCache = Some(l)
       l
     }
   }
 
-  /** Incremental index maintenance after an append. Both corpora merge
-    * carried state with ONLY the touched contents' rows — never a full
-    * store re-scan:
-    *  - bases: rows of touched contents not already indexed (append-only
-    *    set, so an anti-join on (content_id, seq) is exact);
-    *  - latest: reconstruct touched contents at their new max seq, carry
-    *    every untouched content's row unchanged.
-    * `touched` derives from the CALLER's frame, and the merged result is
-    * re-pinned lineage-free, so no plan here can be invalidated or
-    * re-executed by this (or any later) append. */
   /** Hook for writers that append to the store OUTSIDE [[addVersions]]
     * (the streaming staged-commit path): refresh the maintained indexes
-    * incrementally for the given touched content ids. */
-  private[graft] def refreshAfterAppend(touched: DataFrame): Unit =
-    refreshCaches(touched)
+    * from the versions-schema rows just written. */
+  private[graft] def refreshAfterAppend(written: DataFrame): Unit =
+    refreshCaches(written)
 
-  private def refreshCaches(touched: DataFrame): Unit = synchronized {
+  /** Incremental index maintenance after a write, from the rows the write
+    * just made (`written`, versions schema, pinned by the caller) — the
+    * store itself is never re-read:
+    *  - bases: union in the normalized `kind='base'` rows of `written`
+    *    (they are new rows, so nothing is indexed twice);
+    *  - latest: [[Reconstruction.latest]] over the touched contents'
+    *    previous latest rows (as bases at their seq) together with
+    *    `written`, then carry every untouched content's row unchanged.
+    *    Every batch [[VersionStore.ingest]] writes opens each content with
+    *    a base, and a promotion rewrites values it already had, so the
+    *    result equals a rebuild from the store.
+    * The merged frames are re-pinned lineage-free, so no plan here can be
+    * invalidated or re-executed by this (or any later) append.
+    *
+    * Rows that other writers append to the store are not seen here: the
+    * indexes reflect this facade's own writes, the same staleness
+    * contract as [[loadIndexes]] — rebuild (`close()`, then `cacheLatest`
+    * / `cacheBases`) when external writers may have moved the store. */
+  private def refreshCaches(written: DataFrame): Unit = synchronized {
+    val touched = written.select("content_id")
     basesCache = basesCache.map { old =>
-      val fresh = normalizedBases(
-        versions.join(touched, Seq("content_id"), "left_semi"))
-      val additions = fresh.join(old.select("content_id", "seq"),
-        Seq("content_id", "seq"), "left_anti")
-      val merged = pin(old.unionByName(additions))
+      val merged = pin(old.unionByName(normalizedBases(written)))
       // free the replaced checkpoint's blocks NOW — per-batch streaming
       // refreshes would otherwise pile up full-corpus copies in executor
       // storage until driver GC gets around to the old frame
@@ -133,9 +138,13 @@ class TemporalVectorDB(
       merged
     }
     latestCache = latestCache.map { old =>
-      val targets = versions.join(touched, Seq("content_id"), "left_semi")
-        .groupBy("content_id").agg(max("seq").as("seq"))
-      val rebuilt = Reconstruction.reconstruct(versions, targets)
+      val previous = old.join(touched, Seq("content_id"), "left_semi")
+        .select(col("content_id"), col("seq"), lit("base").as("kind"),
+          col("embedding"), lit(null).cast("array<int>").as("delta_idx"),
+          lit(null).cast("array<float>").as("delta_val"),
+          lit(null).cast("double").as("change_magnitude"))
+      val rebuilt = Reconstruction.latest(previous.unionByName(
+          written.select(previous.columns.map(col): _*)))
         .select("content_id", "seq", "embedding")
       val carried = old.join(touched, Seq("content_id"), "left_anti")
       val merged = pin(carried.unionByName(rebuilt))
@@ -159,9 +168,9 @@ class TemporalVectorDB(
       val carried = old.join(touched, Seq("content_id"), "left_anti")
       val merged = pin(carried.unionByName(encoded))
       org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(old)
-      // one count on the CALLER's (small, already-materialized) touched
-      // frame — the price of knowing how far the books have drifted
-      pqRefreshedSinceTrain += touched.count()
+      // one count of the written contents (a small, pinned frame) — the
+      // price of knowing how far the books have drifted
+      pqRefreshedSinceTrain += touched.distinct().count()
       merged
     }
   }
@@ -529,9 +538,10 @@ class TemporalVectorDB(
   /** Batch ingest of (content_id, ts, embedding[, metadata]) rows; assigns
     * sequence numbers after any existing versions and appends to the store
     * (reference add_content_version, temporal_database.py:86-178 — but one
-    * job for the whole batch instead of per-row timeline reloads). Live
-    * indexes are maintained incrementally from the batch's content ids,
-    * never rebuilt from a full scan. */
+    * job for the whole batch instead of per-row timeline reloads). The
+    * ingested rows are pinned once: the append writes them and the live
+    * indexes are maintained from them (see [[refreshCaches]]), never
+    * rebuilt from a store scan; the pin is freed before returning. */
   def addVersions(df: DataFrame): Unit = synchronized {
     // synchronized up here (not just inside refreshCaches): the max-seq
     // read + append must not interleave with another same-facade append
@@ -539,8 +549,12 @@ class TemporalVectorDB(
     // window (a lost append)
     val existing =
       if (storeExists) Some(versions.select("content_id", "seq")) else None
-    appendToStore(VersionStore.ingest(df, existing, cfg))
-    refreshCaches(df.select("content_id").distinct())
+    val ingested = pin(VersionStore.ingest(df, existing, cfg))
+    try {
+      appendToStore(ingested)
+      refreshCaches(ingested)
+    } finally
+      org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(ingested)
   }
 
   /** Storage seam (overridden by [[BucketedTemporalVectorDB]]). */
@@ -569,21 +583,17 @@ class TemporalVectorDB(
       versionId.substring(idx + 2).toInt)
   }
 
-  /** Latest version per requested content (reference :222-236). */
-  def getLatestVersion(contentId: String): DataFrame = {
-    val target = versions.where(col("content_id") === contentId)
-      .groupBy("content_id").agg(max("seq").as("seq"))
-    Reconstruction.reconstruct(versions, target)
-  }
+  /** Latest version of one content (reference :222-236): one scan,
+    * filtered to the content. */
+  def getLatestVersion(contentId: String): DataFrame =
+    Reconstruction.latest(versions.where(col("content_id") === contentId))
 
   /** As-of read: greatest seq with ts <= t (reference :238-253; `<=`
-    * semantics core/data_structures.py:213-227). */
-  def getVersionAtTime(contentId: String, t: java.sql.Timestamp): DataFrame = {
-    val target = versions
-      .where(col("content_id") === contentId && col("ts") <= lit(t))
-      .groupBy("content_id").agg(max("seq").as("seq"))
-    Reconstruction.reconstruct(versions, target)
-  }
+    * semantics core/data_structures.py:213-227), folded from every row at
+    * or before that seq. One scan, filtered to the content. */
+  def getVersionAtTime(contentId: String, t: java.sql.Timestamp): DataFrame =
+    Reconstruction.latest(versions.where(col("content_id") === contentId),
+      visible = col("ts") <= lit(t))
 
   /** All versions in [fromSeq, toSeq] reconstructed in ONE set-based job
     * (reference get_version_range loops, :255-272). */
@@ -723,8 +733,10 @@ class TemporalVectorDB(
       val rewritten = VersionStore.promoteBases(versions, maxCost)
         .transform(Ckpt.eager)
       overwriteStore(rewritten)
+      // the promoted rows are the only rows the rewrite changed
+      refreshCaches(rewritten.join(targets, Seq("content_id", "seq"),
+        "left_semi"))
       org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(rewritten)
-      refreshCaches(targets.select("content_id").distinct())
     }
     org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(targets)
     n
@@ -821,10 +833,10 @@ class TemporalVectorDB(
 /** The cluster-scale storage layout behind the same facade: versions live
   * in a `bucketBy(content_id)` + `sortBy(content_id, seq)` managed table
   * ([[graft.operators.BucketedStore]]'s layout), so every per-content
-  * aggregation and content-keyed join — max-seq lookups, the nearest-base
-  * as-of, the delta-chain range join — reads pre-hashed data and SKIPS its
-  * shuffle exchange (the plan shape BucketedStoreSpec asserts, now on the
-  * facade path). On 100 TB this removes the read path's dominant data
+  * aggregation and content-keyed join — max-seq lookups and
+  * reconstruction's per-content history collect — reads pre-hashed data
+  * and SKIPS its shuffle exchange (the plan shape BucketedStoreSpec
+  * asserts, now on the facade path). On 100 TB this removes the read path's dominant data
   * movement; appends land bucket-aligned via `saveAsTable(Append)`.
   *
   * `table` is a session-catalog table name, not a filesystem path; the

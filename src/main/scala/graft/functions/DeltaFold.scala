@@ -1,8 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder}
+import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
 
 /** Typed single-pass delta-chain fold (SURVEY §2 row 19 / §7.3): merges the
   * sparse (delta_idx, delta_val) rows of a chain into one dense additive
@@ -11,11 +10,10 @@ import org.apache.spark.sql.functions.udaf
   * Because delta application is pure element-wise addition, the fold is
   * order-insensitive (reconstructed[i] = base[i] + Σ delta_val[i]) — this
   * Aggregator exploits that with a mutable dense buffer: one pass over the
-  * chain rows, no per-dimension explode. Compared to the posexplode+sum
-  * formulation in [[graft.operators.Reconstruction]], it shuffles one row
-  * per DELTA instead of one row per (delta × changed-dim): ~n_changed×
-  * less shuffle volume on wide chains. Out-of-range indices are silently
-  * ignored (reference core/data_structures.py:118).
+  * chain rows, no per-dimension explode. PropertySpec checks those
+  * algebraic laws on it; the read path folds with the compiled
+  * [[DeltaChainFoldExpr]], which sums the same way. Out-of-range indices
+  * are silently ignored (reference core/data_structures.py:118).
   */
 class DeltaFoldAggregator(dim: Int)
     extends Aggregator[(Seq[Int], Seq[Float]), Array[Double], Seq[Float]] {
@@ -49,13 +47,4 @@ class DeltaFoldAggregator(dim: Int)
 
   override def outputEncoder: Encoder[Seq[Float]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Float]]()
-}
-
-object DeltaFold {
-  /** Column-level UDAF: `foldUdaf(dim)(delta_idx, delta_val)` returns the
-    * dense additive array for the group. */
-  def apply(dim: Int): (Column, Column) => Column = {
-    val agg = udaf(new DeltaFoldAggregator(dim))
-    (idx: Column, vs: Column) => agg(idx, vs)
-  }
 }

@@ -133,6 +133,16 @@ object VectorFunctions {
       Bridge.expression(base), Bridge.expression(adds)))
   }
 
+  /** Compiled nearest-base + delta-chain fold of one content's collected
+    * stored rows at `target` via [[DeltaChainFoldExpr]]: struct(embedding,
+    * base_seq, deltas_applied, avg_magnitude), NULL when no base precedes
+    * the target. */
+  def foldChainNative(history: Column, target: Column): Column = {
+    import org.apache.spark.sql.graftbridge.Bridge
+    Bridge.column(DeltaChainFoldExpr(
+      Bridge.expression(history), Bridge.expression(target)))
+  }
+
   /** Change magnitude from sparse values only (used when the dense diff is
     * unavailable; reference core/data_structures.py:92-95). */
   def sparseMagnitude(deltaVal: Column): Column =

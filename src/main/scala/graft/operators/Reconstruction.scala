@@ -1,9 +1,9 @@
 package graft.operators
 
-import graft.functions.VectorFunctions.applyMapDeltaNative
+import graft.functions.VectorFunctions.foldChainNative
 import graft.model.Defaults
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** Set-based version reconstruction (SURVEY §2 rows 19, 24-25, 41, 45;
   * reference read path /root/reference/core/reconstruction_service.py:61-127,
@@ -13,16 +13,23 @@ import org.apache.spark.sql.DataFrame
   * probe downward for the nearest base at-or-before the target
   * (core/data_structures.py:242-252), then fold the delta chain forward.
   * `batch_reconstruct` loops that per target (:176-183) despite claiming
-  * reuse. Here ALL targets reconstruct in one job:
+  * reuse. Here ALL targets reconstruct in one job over ONE scan of the
+  * store:
   *
-  *   1. as-of join: targets × base seqs -> max(base_seq <= target) per
-  *      target (equi-join on content_id + range post-filter, then a groupBy —
-  *      both shuffle-partitioned by content, skew-free at scale);
-  *   2. range join: deltas with base_seq < seq <= target_seq;
-  *   3. fold: because delta application is pure element-wise addition, the
-  *      chain is order-insensitive — explode (idx,val), sum per
-  *      (content, target, idx), and scatter-add the summed map into the base
-  *      vector. One shuffle keyed by (content_id, target_seq).
+  *   1. prune: a semi-join keeps the stored rows of targeted contents at
+  *      or before their latest target;
+  *   2. collect: one groupBy(content_id) gathers each content's rows into
+  *      one history row — the only hash exchange on the store side (none
+  *      on a store bucketed by content_id), and every stored row crosses
+  *      it once however many targets share its content;
+  *   3. fold: each (content, target) pair runs one compiled kernel
+  *      ([[graft.functions.DeltaChainFoldExpr]]) that picks the max base
+  *      seq at or before the target and scatter-adds the deltas after it.
+  *
+  * The targets join both sides as a small broadcast at interactive sizes
+  * (no store-sized data is broadcast); larger target sets shuffle by
+  * content_id instead. [[latest]] is the same collect + fold with each
+  * content's max seq as the target, so it needs no targets at all.
   *
   * Error/quality provenance columns reproduce the reference's formulas
   * (core/reconstruction_service.py:229-297).
@@ -31,64 +38,58 @@ object Reconstruction {
 
   /** Reconstruct every (content_id, seq) in `targets` from `versions`.
     * Output: content_id, seq, embedding, base_seq_used, deltas_applied,
-    * reconstruction_cost, plus error/quality metrics. Targets that precede
-    * the earliest base produce no row (the reference raises there,
-    * core/delta_computer.py:116-119). */
+    * reconstruction_cost, plus error/quality metrics — one row per
+    * distinct target. Targets that precede the earliest base produce no
+    * row (the reference raises there, core/delta_computer.py:116-119). */
   def reconstruct(versions: DataFrame, targets: DataFrame): DataFrame = {
-    val bases = versions.where(col("kind") === "base")
-      .select(col("content_id"), col("seq").as("base_seq"),
-        col("embedding").as("base_embedding"))
-    val deltas = versions.where(col("kind") === "delta")
-      .select(col("content_id"), col("seq").as("delta_seq"),
-        col("delta_idx"), col("delta_val"), col("change_magnitude"))
+    val t = targets.select(col("content_id").as("_tcid"),
+      col("seq").as("_target"))
+    val rows = versions.join(t, col("content_id") === col("_tcid") &&
+      col("seq") <= col("_target"), "left_semi")
+    fold(histories(rows).join(t, col("content_id") === col("_tcid")))
+      // duplicate targets pair with the history more than once; the
+      // dedup is partition-local (the rows are clustered by content_id)
+      .dropDuplicates("content_id", "seq")
+  }
 
-    // 1. nearest base at-or-before target (as-of join, SURVEY row 24).
-    val nearest = targets.select(col("content_id"), col("seq"))
-      .join(bases.select(col("content_id"), col("base_seq")),
-        Seq("content_id"))
-      .where(col("base_seq") <= col("seq"))
-      .groupBy("content_id", "seq")
-      .agg(max("base_seq").as("base_seq"))
+  /** Every content's latest version in `rows` (a versions-schema frame),
+    * reconstructed: the target is each content's max seq among the rows
+    * where `visible` holds (all rows by default), folded from every row at
+    * or before it. Same output as [[reconstruct]]. One groupBy over
+    * `rows`, no targets frame and no second pass. */
+  def latest(rows: DataFrame, visible: Column = lit(true)): DataFrame =
+    fold(histories(rows, max(when(visible, col("seq"))).as("_target")))
 
-    val withBase = nearest.join(bases, Seq("content_id", "base_seq"))
+  /** One row per content: its stored rows collected as the fold kernel's
+    * `_history`, the first base seq (to drop targets before it without
+    * running the kernel), plus `more` aggregates. */
+  private def histories(rows: DataFrame, more: Column*): DataFrame =
+    rows.where(col("kind").isin("base", "delta"))
+      .groupBy("content_id")
+      .agg(collect_list(struct(col("seq"),
+          (col("kind") === "base").as("is_base"), col("embedding"),
+          col("delta_idx"), col("delta_val"), col("change_magnitude")))
+          .as("_history"),
+        min(when(col("kind") === "base", col("seq"))).as("_first_base")
+          +: more: _*)
 
-    // 2-3. delta chain contributions summed per dimension (SURVEY row 19).
-    val chain = nearest
-      .join(deltas, Seq("content_id"))
-      .where(col("delta_seq") > col("base_seq") &&
-        col("delta_seq") <= col("seq"))
-
-    val chainStats = chain.groupBy("content_id", "seq")
-      .agg(count(lit(1)).cast("int").as("deltas_applied"),
-        avg("change_magnitude").as("avg_chain_magnitude"))
-
-    val contribs = chain
+  /** Run the fold kernel on (content_id, _history, _first_base, _target)
+    * rows and shape the reconstruction output. */
+  private def fold(paired: DataFrame): DataFrame = {
+    val folded = paired
+      .where(col("_first_base") <= col("_target"))
+      .select(col("content_id"), col("_target").as("seq"),
+        foldChainNative(col("_history"), col("_target")).as("_f"))
       .select(col("content_id"), col("seq"),
-        explode(arrays_zip(col("delta_idx"), col("delta_val"))).as("p"))
-      .groupBy(col("content_id"), col("seq"),
-        col("p.delta_idx").as("idx"))
-      .agg(sum(col("p.delta_val").cast("double")).as("add"))
-      .groupBy("content_id", "seq")
-      .agg(map_from_entries(collect_list(struct(col("idx"), col("add"))))
-        .as("add_map"))
-
-    val folded = withBase
-      .join(contribs, Seq("content_id", "seq"), "left")
-      .join(chainStats, Seq("content_id", "seq"), "left")
-      // compiled scatter+add (O(d + |map|) per row vs the HOF transform's
-      // O(d·|map|) interpreted element_at scans) — bit-identical values
-      .withColumn("embedding",
-        when(col("add_map").isNull, col("base_embedding"))
-          .otherwise(applyMapDeltaNative(col("base_embedding"),
-            col("add_map"))))
-      .withColumn("deltas_applied", coalesce(col("deltas_applied"), lit(0)))
-      .withColumn("reconstruction_cost", col("seq") - col("base_seq"))
-
+        col("_f.embedding").as("embedding"),
+        col("_f.base_seq").as("base_seq_used"),
+        col("_f.deltas_applied").as("deltas_applied"),
+        (col("seq") - col("_f.base_seq")).as("reconstruction_cost"),
+        col("_f.avg_magnitude").as("avg_chain_magnitude"))
     withMetrics(folded)
-      .select("content_id", "seq", "embedding", "base_seq",
+      .select("content_id", "seq", "embedding", "base_seq_used",
         "deltas_applied", "reconstruction_cost", "estimated_error",
         "quality_score")
-      .withColumnRenamed("base_seq", "base_seq_used")
   }
 
   /** Error-bound estimate and quality score, reproducing the reference's
@@ -111,50 +112,6 @@ object Reconstruction {
 
     df.withColumn("estimated_error", estError)
       .withColumn("quality_score", quality)
-  }
-
-  /** Alternative reconstruction using the typed [[graft.functions.DeltaFoldAggregator]]
-    * (SURVEY §7.3): one UDAF row per DELTA in the shuffle instead of one row
-    * per changed dimension — ~n_changed× less shuffle volume on wide
-    * chains. Values agree with [[reconstruct]] to float precision
-    * (cross-checked in ReconstructionSpec); the posexplode formulation
-    * remains the oracle-parity path. */
-  def reconstructTyped(versions: DataFrame, targets: DataFrame,
-                       dim: Int): DataFrame = {
-    val bases = versions.where(col("kind") === "base")
-      .select(col("content_id"), col("seq").as("base_seq"),
-        col("embedding").as("base_embedding"))
-    val deltas = versions.where(col("kind") === "delta")
-      .select(col("content_id"), col("seq").as("delta_seq"),
-        col("delta_idx"), col("delta_val"))
-
-    val nearest = targets.select(col("content_id"), col("seq"))
-      .join(bases.select(col("content_id"), col("base_seq")),
-        Seq("content_id"))
-      .where(col("base_seq") <= col("seq"))
-      .groupBy("content_id", "seq")
-      .agg(max("base_seq").as("base_seq"))
-
-    val fold = graft.functions.DeltaFold(dim)
-    val adds = nearest
-      .join(deltas, Seq("content_id"))
-      .where(col("delta_seq") > col("base_seq") &&
-        col("delta_seq") <= col("seq"))
-      .groupBy("content_id", "seq")
-      .agg(fold(col("delta_idx"), col("delta_val")).as("add_arr"),
-        count(lit(1)).cast("int").as("deltas_applied"))
-
-    nearest.join(bases, Seq("content_id", "base_seq"))
-      .join(adds, Seq("content_id", "seq"), "left")
-      .withColumn("embedding",
-        when(col("add_arr").isNull, col("base_embedding"))
-          .otherwise(zip_with(col("base_embedding"), col("add_arr"),
-            (b, a) => (b.cast("double") + a.cast("double")).cast("float"))))
-      .withColumn("deltas_applied", coalesce(col("deltas_applied"), lit(0)))
-      .withColumn("reconstruction_cost", col("seq") - col("base_seq"))
-      .select("content_id", "seq", "embedding", "base_seq",
-        "deltas_applied", "reconstruction_cost")
-      .withColumnRenamed("base_seq", "base_seq_used")
   }
 
   /** Reconstruction validation (reference validate_reconstruction,

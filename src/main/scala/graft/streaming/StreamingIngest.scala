@@ -2,9 +2,10 @@ package graft.streaming
 
 import graft.api.{BucketedTemporalVectorDB, TemporalVectorDB}
 import graft.model.VersionRecord
-import graft.operators.VersionStore
+import graft.operators.{Ckpt, VersionStore}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Per-content ingest state for [[StreamingIngest.statefulIngest]]: the
@@ -99,29 +100,32 @@ object StreamingIngest {
     }
     val existing =
       if (hasData) Some(db.versions.select("content_id", "seq")) else None
-    VersionStore.ingest(batch, existing, db.cfg)
-      .write.mode("overwrite").parquet(staging.toString)
-    // per-file renames (atomic on HDFS-like filesystems); the batch prefix
-    // marks them uncommitted until the marker lands. Hadoop rename reports
-    // most failures by RETURNING FALSE, not throwing — an unchecked false
-    // here would let the marker commit a batch whose files never moved,
-    // then delete them with the staging dir: silent permanent loss. Abort
-    // instead; replay rolls back and retries.
-    fs.listStatus(staging).map(_.getPath)
-      .filter(_.getName.startsWith("part-"))
-      .foreach { p =>
-        val dest = new Path(root, prefix + p.getName)
-        if (!fs.rename(p, dest))
-          throw new java.io.IOException(
-            s"staged-commit rename failed: $p -> $dest (batch $batchId); " +
-              "aborting before marker — replay will roll back and retry")
-      }
-    if (crashBeforeMarker)
-      throw new IllegalStateException("failpoint: crash before marker")
-    fs.mkdirs(commits)
-    fs.create(marker, true).close()
-    fs.delete(staging, true)
-    db.refreshAfterAppend(batch.select("content_id").distinct())
+    // pinned once: staged from, then the live indexes refresh from it
+    val ingested = Ckpt.eager(VersionStore.ingest(batch, existing, db.cfg))
+    try {
+      ingested.write.mode("overwrite").parquet(staging.toString)
+      // per-file renames (atomic on HDFS-like filesystems); the batch prefix
+      // marks them uncommitted until the marker lands. Hadoop rename reports
+      // most failures by RETURNING FALSE, not throwing — an unchecked false
+      // here would let the marker commit a batch whose files never moved,
+      // then delete them with the staging dir: silent permanent loss. Abort
+      // instead; replay rolls back and retries.
+      fs.listStatus(staging).map(_.getPath)
+        .filter(_.getName.startsWith("part-"))
+        .foreach { p =>
+          val dest = new Path(root, prefix + p.getName)
+          if (!fs.rename(p, dest))
+            throw new java.io.IOException(
+              s"staged-commit rename failed: $p -> $dest (batch $batchId); " +
+                "aborting before marker — replay will roll back and retry")
+        }
+      if (crashBeforeMarker)
+        throw new IllegalStateException("failpoint: crash before marker")
+      fs.mkdirs(commits)
+      fs.create(marker, true).close()
+      fs.delete(staging, true)
+      db.refreshAfterAppend(ingested)
+    } finally Bridge.unpersistCheckpoint(ingested)
   }
 
   /** Fully streaming-native versioned ingest via `flatMapGroupsWithState`:

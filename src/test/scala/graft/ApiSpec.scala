@@ -2,7 +2,9 @@ package graft
 
 import graft.api.TemporalVectorDB
 import graft.operators.VersionStore
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import java.sql.Timestamp
 import java.nio.file.Files
 
@@ -434,6 +436,65 @@ class ApiSpec extends SparkSpec {
     assert(db.cacheBases().count() == basesBefore + n)
     // nothing left to promote: second run is a no-op
     assert(db.applyBaseOptimization(maxCost = 2) == 0)
+  }
+
+  /** `n` versions of `content` from day `day0` on: a seeded random walk
+    * editing ~20% of the dims per version by random amounts, so delta
+    * chains sum floats whose rounding a refresh could get wrong. */
+  private def walk(content: String, day0: Int, n: Int,
+                   seed: Int): Seq[(String, Timestamp, Array[Float])] = {
+    val r = new scala.util.Random(seed)
+    var cur = Array.fill(dim)(r.nextFloat() - 0.5f)
+    (0 until n).map { k =>
+      if (k > 0) cur = cur.map(x =>
+        if (r.nextDouble() < 0.2) x + (r.nextFloat() - 0.5f) * 0.3f else x)
+      (content, ts(day0 + k), cur.clone())
+    }
+  }
+
+  test("indexes maintained through appends and a base promotion equal a " +
+    "cold facade's on the same store") {
+    val db = freshDb()
+    db.addVersions((walk("a", 1, 4, 1) ++ walk("b", 1, 3, 2))
+      .toDF("content_id", "ts", "embedding"))
+    db.cacheBases(); db.cacheLatest()
+    Seq(walk("a", 5, 4, 3), walk("c", 5, 6, 4) ++ walk("b", 4, 2, 5),
+        walk("a", 9, 3, 6) ++ walk("c", 11, 4, 7))
+      .foreach(b => db.addVersions(b.toDF("content_id", "ts", "embedding")))
+    assert(db.applyBaseOptimization(maxCost = 1) > 0)
+    val cold = new TemporalVectorDB(spark, db.path,
+      VersionStore.Config(baseInterval = 5))
+    def rows(df: DataFrame) = df.collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getSeq[Float](2)))
+      .sortBy(r => (r._1, r._2)).toSeq
+    assert(rows(db.cacheBases()) == rows(cold.cacheBases()))
+    assert(rows(db.cacheLatest()) == rows(cold.cacheLatest()))
+    assert(rows(db.cacheLatest()).map(r => (r._1, r._2)) ==
+      Seq(("a", 11), ("b", 5), ("c", 10)))
+    cold.close()
+  }
+
+  test("appends and reads pin nothing beyond the live indexes: every " +
+    "addVersions frees the ingested rows it pinned") {
+    val db = freshDb()
+    val sc = spark.sparkContext
+    val baseline = sc.getPersistentRDDs.keySet
+    def extra = sc.getPersistentRDDs.keySet -- baseline
+    db.addVersions(walk("a", 1, 3, 1).toDF("content_id", "ts", "embedding"))
+    assert(extra.isEmpty)
+    val live = () => Seq(db.cacheBases(), db.cacheLatest())
+      .flatMap(Bridge.checkpointRddIds).toSet
+    val built = live() // builds both indexes
+    assert(built.size == 2 && extra == built)
+    for (step <- 1 to 3) {
+      db.addVersions(walk("a", 3 * step + 1, 3, step)
+        .toDF("content_id", "ts", "embedding"))
+      assert(extra == live(), s"after append $step")
+      db.getVersion("a", 2 * step).collect()
+      assert(extra == live(), s"after getVersion $step")
+    }
+    db.close()
+    assert(extra.isEmpty)
   }
 
   test("close() releases every pinned index block (temporal_database.py" +

@@ -83,17 +83,78 @@ class ReconstructionSpec extends SparkSpec {
     assert(got == ((0, 0, 1.0)))
   }
 
-  test("reconstructTyped (Aggregator fold) agrees with the posexplode fold") {
-    val targets = (1 to 12).map(("doc", _)).toDF("content_id", "seq")
-    val a = Reconstruction.reconstruct(versions, targets)
-      .select("seq", "embedding").as[(Int, Array[Float])].collect().toMap
-    val b = Reconstruction.reconstructTyped(versions, targets, dim)
-      .select("seq", "embedding").as[(Int, Array[Float])].collect().toMap
-    assert(a.keySet == b.keySet)
-    for (k <- a.keySet) {
-      val diff = a(k).zip(b(k)).map { case (x, y) => math.abs(x - y) }.max
-      assert(diff < 1e-4, s"seq $k max elementwise diff $diff")
+  /** The fold computed on the driver from the stored rows: nearest base
+    * at or before `k`, then every later delta up to `k` summed per
+    * dimension in double and added to the base. */
+  private lazy val stored = versions.collect()
+  private def driverFold(k: Int): (Int, Int, Array[Float]) = {
+    val b = stored.filter(r => r.getAs[String]("kind") == "base" &&
+      r.getAs[Int]("seq") <= k).maxBy(_.getAs[Int]("seq"))
+    val bSeq = b.getAs[Int]("seq")
+    val chain = stored.filter(r => r.getAs[String]("kind") == "delta" &&
+      r.getAs[Int]("seq") > bSeq && r.getAs[Int]("seq") <= k)
+    val base = b.getAs[scala.collection.Seq[Float]]("embedding").toArray
+    val add = new Array[Double](base.length)
+    for (r <- chain) {
+      val idx = r.getAs[scala.collection.Seq[Int]]("delta_idx")
+      val vals = r.getAs[scala.collection.Seq[Float]]("delta_val")
+      idx.zip(vals).foreach { case (i, v) => add(i) += v.toDouble }
     }
+    (bSeq, chain.length,
+      if (chain.exists(_.getAs[scala.collection.Seq[Int]]("delta_idx")
+          .nonEmpty))
+        Array.tabulate(base.length)(i => (base(i).toDouble + add(i)).toFloat)
+      else base)
+  }
+
+  test("embeddings equal a driver-side fold of the stored rows, exactly") {
+    val targets = (1 to 12).map(("doc", _)).toDF("content_id", "seq")
+    val got = Reconstruction.reconstruct(versions, targets)
+      .select("seq", "base_seq_used", "deltas_applied", "embedding")
+      .as[(Int, Int, Int, Seq[Float])].collect()
+    assert(got.length == 12)
+    for ((k, b, n, emb) <- got) {
+      val (wantB, wantN, want) = driverFold(k)
+      assert((b, n) == ((wantB, wantN)), s"seq $k")
+      assert(emb == want.toSeq, s"seq $k")
+    }
+  }
+
+  test("duplicate targets give one row each and do not double-count deltas") {
+    val once = Reconstruction.reconstruct(versions,
+        Seq(("doc", 4), ("doc", 10)).toDF("content_id", "seq"))
+      .as[(String, Int, Seq[Float], Int, Int, Int, Double, Double)]
+      .collect().sortBy(_._2).toSeq
+    val dup = Reconstruction.reconstruct(versions,
+        Seq(("doc", 10), ("doc", 4), ("doc", 10), ("doc", 4), ("doc", 10))
+          .toDF("content_id", "seq"))
+      .as[(String, Int, Seq[Float], Int, Int, Int, Double, Double)]
+      .collect().sortBy(_._2).toSeq
+    assert(dup == once)
+    assert(dup.map(r => (r._2, r._5)) == Seq((4, 3), (10, 4)))
+    assert(dup.map(_._3) ==
+      Seq(driverFold(4)._3.toSeq, driverFold(10)._3.toSeq))
+  }
+
+  test("a target before the earliest base gives no row; the others " +
+    "in the same batch still reconstruct") {
+    val noEarly = versions.where(col("seq") =!= 1)
+    val got = Reconstruction.reconstruct(noEarly,
+        Seq(("doc", 3), ("doc", 5), ("doc", 7), ("ghost", 7))
+          .toDF("content_id", "seq"))
+      .select("seq", "base_seq_used").as[(Int, Int)].collect().toSeq
+    // bases left: {6, 11}; 3 and 5 precede both, "ghost" has no rows
+    assert(got == Seq((7, 6)))
+  }
+
+  test("a target past a content's max seq folds the whole last chain " +
+    "(nearest base 11, chain {12}, cost counted to the target)") {
+    val got = Reconstruction.reconstruct(versions,
+        Seq(("doc", 20)).toDF("content_id", "seq"))
+      .select("seq", "base_seq_used", "deltas_applied",
+        "reconstruction_cost", "embedding")
+      .as[(Int, Int, Int, Int, Seq[Float])].collect().toSeq
+    assert(got == Seq((20, 11, 1, 9, driverFold(12)._3.toSeq)))
   }
 
   test("validate() flags reconstructions within/outside tolerance") {
