@@ -8,9 +8,11 @@ import org.apache.spark.sql.graftbridge.Bridge
 
 /** The epoch protocol of the durable dedup stores ([[SubstringDedupStore]],
   * [[FingerprintStore]], [[FuzzyKeyStore]], [[MinHashDedupStore]],
-  * [[SemanticDedupStore]]), written once. A store supplies its artifact
-  * kinds, its batch → delta operator and its reads; this class owns the
-  * commit, snapshot, replay, compaction and prune sequence.
+  * [[SemanticDedupStore]]) and the streaming live artifacts
+  * ([[graft.streaming.LiveArtifact]]), written once. A store supplies
+  * its artifact kinds, its batch → delta operator and its reads; this
+  * class owns the commit, snapshot, replay, compaction and prune
+  * sequence.
   *
   * Layout shared by every store under `root/` (all parquet):
   * {{{

@@ -158,12 +158,15 @@ private[graft] object EpochStoreKit {
       case None => None
     }
 
-  /** Highest numeric child of `dir` (commit/snapshot marker dirs), or
-    * -1 when the directory does not exist / has no numeric child. */
-  def maxMarked(fs: FileSystem, dir: Path): Long =
+  /** Highest numeric child of `dir` (commit/snapshot marker dirs) not
+    * above `upTo`, or -1 when the directory does not exist / has no such
+    * child. */
+  def maxMarked(fs: FileSystem, dir: Path,
+                upTo: Long = Long.MaxValue): Long =
     if (!fs.exists(dir)) -1L
     else fs.listStatus(dir).map(_.getPath.getName)
       .flatMap(n => scala.util.Try(n.toLong).toOption)
+      .filter(_ <= upTo)
       .foldLeft(-1L)(math.max)
 
   /** Create an empty marker file atomically (overwrite=false): the
@@ -185,6 +188,11 @@ private[graft] object EpochStoreKit {
     fs.mkdirs(path.getParent)
     if (!fs.exists(path)) fs.create(path, false).close()
   }
+
+  /** Delete a marker file if present — undoes a torn [[markFile]]
+    * before its epoch number is reused. */
+  def unmark(fs: FileSystem, path: Path): Unit =
+    if (fs.exists(path)) { boundary(path.toString); fs.delete(path, false) }
 
   /** Plain union of `kind`'s epoch directories `from..to` — the
     * resolution for artifacts whose epochs are DISJOINT row slices

@@ -32,10 +32,8 @@ import org.apache.spark.sql.functions._
   * row) and per doc_id for the deduped corpus (an untouched doc's latest
   * row is the last epoch that rewrote it). [[compact]] rewrites the
   * resolved state as ONE new snapshot epoch and prunes the absorbed
-  * index/deduped delta directories (the
-  * [[graft.streaming.StreamingIngest.compactDeltas]] generation
-  * discipline applied to the epoch chain) — bounding read-side resolution
-  * work on a long-lived store. `corpus/` epochs are NEVER pruned: each
+  * index/deduped delta directories ([[EpochStore.compact]]) — bounding
+  * read-side resolution work on a long-lived store. `corpus/` epochs are NEVER pruned: each
   * holds an appended batch, i.e. the data itself, not a derived snapshot.
   *
   * Crash safety and the commit/compact/replay sequence are the

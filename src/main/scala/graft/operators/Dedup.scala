@@ -711,9 +711,7 @@ object Dedup {
     val spark = pairs.sparkSession
     val maxRows = spark.conf.getOption("spark.graft.cc.localMaxRows")
       .map(_.toInt).getOrElse(1000000)
-    if (maxRows <= 0 ||
-      spark.conf.getOption("spark.graft.cc.localMaxBytes").contains("0"))
-      None
+    if (maxRows <= 0) None
     else {
       val rows = pairs
         .select(col("id1").cast("long"), col("id2").cast("long"))

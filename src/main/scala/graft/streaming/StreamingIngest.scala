@@ -47,13 +47,7 @@ object StreamingIngest {
     * batch ids whose commit marker exists are skipped (see class doc). */
   def start(stream: DataFrame, db: TemporalVectorDB,
             checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(db, batch, batchId)
-      }
-      .start()
+    eachBatch(stream, checkpoint)(processBatch(db, _, _))
 
   /** One micro-batch through the staged exactly-once commit (class doc).
     * Exposed for direct testing; `crashBeforeMarker` is a fault-injection
@@ -420,15 +414,8 @@ object StreamingIngest {
   private[graft] def fuzzyKeysJvm(key: String, maxEdit: Int): Seq[Long] = {
     val arr = graft.functions.DeleteVariantsExpr.variants(
       org.apache.spark.unsafe.types.UTF8String.fromString(key), maxEdit)
-    val md = bandDigest.get()
-    (0 until arr.numElements()).map { i =>
-      md.reset()
-      val d = md.digest(arr.getUTF8String(i).getBytes)
-      var v = 0L
-      var j = 0
-      while (j < 7) { v = (v << 8) | (d(j) & 0xffL); j += 1 }
-      v
-    }
+    (0 until arr.numElements())
+      .map(i => md5_56(arr.getUTF8String(i).getBytes))
   }
 
   /** Probe index over the corpus's packed band keys — the broadcast
@@ -488,635 +475,192 @@ object StreamingIngest {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val nKeys = keys.count()
-      if (nKeys <= exactKeyLimit) {
-        val arr = keys.collect().map(_.getLong(0))
-        java.util.Arrays.sort(arr)
-        new ExactBandKeys(arr)
-      } else {
-        new BloomBandKeys(keys.stat.bloomFilter("_k", nKeys, bloomFpp))
-      }
+      if (nKeys <= exactKeyLimit) exactKeys(keys)
+      else new BloomBandKeys(keys.stat.bloomFilter("_k", nKeys, bloomFpp))
     } finally keys.unpersist()
   }
 
+  /** Collect a single long key column as a sorted array (exact probes,
+    * 8 B/key). */
+  private def exactKeys(keys: DataFrame): ExactBandKeys = {
+    val arr = keys.collect().map(_.getLong(0))
+    java.util.Arrays.sort(arr)
+    new ExactBandKeys(arr)
+  }
+
+  /** Run `apply` on every micro-batch of `stream` — the one
+    * `foreachBatch` sink the streaming writers here share. */
+  private def eachBatch(stream: DataFrame, checkpoint: String)(
+      apply: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        apply(batch, batchId)
+      }
+      .start()
+
+  /** Maintain `artifact` over `stream`: each micro-batch commits its
+    * delta exactly once, token = the batch id ([[LiveArtifact]]). */
+  private def maintain(stream: DataFrame, checkpoint: String,
+                       artifact: LiveArtifact): StreamingQuery =
+    eachBatch(stream, checkpoint)((batch, batchId) =>
+      artifact.append(batch, batchId.toString))
+
+  // ---- maintained live artifacts ----------------------------------
+  //
+  // Each streaming* / read* pair below drives one LiveArtifact; its
+  // protocol, merge identity and compact() live on that class.
+
   /** Maintain a [[graft.operators.Sketches.countMin]] frequency sketch
     * over a stream — the profile a 100 TB ingest keeps instead of a
-    * full token frequency table. Exploits the CMS's defining property:
-    * cellwise ADDITIVITY. Each micro-batch writes its own bounded
-    * (≤ depth·width rows) sketch DELTA under `sketchPath/batch=<id>`;
-    * the live sketch is the cellwise sum over all committed deltas
-    * ([[readCountMin]]), so maintenance never rewrites history and the
-    * merged sketch equals the batch build over the union BY THE MERGE
-    * IDENTITY (spec-gated).
-    *
-    * Exactly-once without the store's marker protocol: the batch delta
-    * is deterministic and keyed by batchId, staged under
-    * `_staging/b<id>` and RENAMED into place — the rename is the commit
-    * point, a replayed batch whose directory exists is a no-op, and a
-    * crash mid-stage leaves only staging litter that replay overwrites.
-    * Single-writer assumption, as with the store. */
+    * full token frequency table. Each micro-batch commits a bounded
+    * (≤ depth·width rows) delta; the live sketch is the cellwise sum
+    * ([[CountMinArtifact]]). */
   def streamingCountMin(stream: DataFrame, valueCol: String,
                         sketchPath: String, checkpoint: String,
                         depth: Int = 4, width: Int = 1024)
       : StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processSketchBatch(batch, batchId, sketchPath, valueCol, depth,
-          width)
-      }
-      .start()
+    maintain(stream, checkpoint, new CountMinArtifact(stream.sparkSession,
+      sketchPath, valueCol, depth, width))
 
-  /** One sketch micro-batch (exposed for replay/crash testing). */
-  private[graft] def processSketchBatch(batch: DataFrame, batchId: Long,
-                                        sketchPath: String,
-                                        valueCol: String, depth: Int,
-                                        width: Int): Unit = {
-    import org.apache.hadoop.fs.Path
-    val dst = new Path(s"$sketchPath/batch=$batchId")
-    val fs = dst.getFileSystem(
-      batch.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(dst)) return // committed: replayed batch is a no-op
-    val stg = new Path(s"$sketchPath/_staging/b$batchId")
-    fs.delete(stg, true) // crashed earlier attempt's litter
-    graft.operators.Sketches.countMin(batch, col(valueCol), depth, width)
-      .coalesce(1) // <= depth*width rows: one file, no small-file spray
-      .write.mode("overwrite").parquet(stg.toString)
-    fs.mkdirs(dst.getParent)
-    if (!fs.rename(stg, dst))
-      sys.error(s"sketch commit rename failed: $stg -> $dst")
-  }
-
-  /** The live maintained sketch: cellwise sum over every committed
-    * micro-batch delta — same (row, bucket, cnt) shape as a batch
-    * [[graft.operators.Sketches.countMin]], so
-    * [[graft.operators.Sketches.countMinEstimate]] probes it
-    * unchanged. */
+  /** The live maintained sketch — same (row, bucket, cnt) shape as a
+    * batch [[graft.operators.Sketches.countMin]], so
+    * [[graft.operators.Sketches.countMinEstimate]] probes it unchanged;
+    * empty before the first commit. */
   def readCountMin(spark: org.apache.spark.sql.SparkSession,
-                   sketchPath: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(sketchPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // before the first commit (or after a crash that left only staging
-    // litter) there is nothing visible: the live sketch is EMPTY, not an
-    // AnalysisException — a monitor may race the first rename
-    val hasCommits = fs.exists(root) && fs.listStatus(root)
-      .exists(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-    if (!hasCommits) {
-      // schema DERIVED from an empty countMin build (no jobs run), so
-      // this branch cannot drift from the real sketch layout
-      import spark.implicits._
-      graft.operators.Sketches.countMin(
-        Seq.empty[String].toDF("_v"), col("_v"))
-    } else
-      spark.read.parquet(sketchPath)
-        .groupBy("row", "bucket").agg(sum("cnt").as("cnt"))
-  }
+                   sketchPath: String): DataFrame =
+    new CountMinArtifact(spark, sketchPath).read
 
   /** Maintain a [[graft.operators.Sketches.hllRegisters]] distinct-count
     * sketch over a stream — the live cardinality profile beside the
-    * frequency profile ([[streamingCountMin]]). Exploits HLL's defining
-    * property: registers merge by cellwise MAX, so each micro-batch
-    * writes its own bounded (≤ groups·2^p rows) register DELTA under
-    * `sketchPath/batch=<id>` behind the staged rename (the commit
-    * point: replayed ids no-op, crash litter absorbed), and the live
-    * sketch is the per-(group, bucket) max over committed deltas
-    * ([[readHll]]) — EQUAL to the batch build over the union by the
-    * merge identity (spec-gated). [[graft.operators.Sketches.hllEstimate]]
-    * reads it unchanged. Single-writer assumption, as with the store. */
+    * frequency profile. Each micro-batch commits a bounded
+    * (≤ groups·2^p rows) register delta; the live sketch is the
+    * per-(group, bucket) max ([[HllArtifact]]). */
   def streamingHll(stream: DataFrame, groupCol: String, valueCol: String,
                    sketchPath: String, checkpoint: String, p: Int = 8)
       : StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processHllBatch(batch, batchId, sketchPath, groupCol, valueCol, p)
-      }
-      .start()
+    maintain(stream, checkpoint, new HllArtifact(stream.sparkSession,
+      sketchPath, groupCol, valueCol, p))
 
-  /** One HLL micro-batch (exposed for replay/crash testing). */
-  private[graft] def processHllBatch(batch: DataFrame, batchId: Long,
-                                     sketchPath: String, groupCol: String,
-                                     valueCol: String, p: Int): Unit = {
-    import org.apache.hadoop.fs.Path
-    val dst = new Path(s"$sketchPath/batch=$batchId")
-    val fs = dst.getFileSystem(
-      batch.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(dst)) return // committed: replayed batch is a no-op
-    val stg = new Path(s"$sketchPath/_staging/b$batchId")
-    fs.delete(stg, true) // crashed earlier attempt's litter
-    graft.operators.Sketches.hllRegisters(batch, groupCol, col(valueCol), p)
-      .coalesce(1) // <= groups * 2^p rows: one file
-      .write.mode("overwrite").parquet(stg.toString)
-    fs.mkdirs(dst.getParent)
-    if (!fs.rename(stg, dst))
-      sys.error(s"hll commit rename failed: $stg -> $dst")
-  }
-
-  /** The live maintained HLL: per-(group, bucket) MAX over every
-    * committed delta — same (group, bucket, register) shape as a batch
-    * [[graft.operators.Sketches.hllRegisters]] build, so
-    * [[graft.operators.Sketches.hllEstimate]] probes it unchanged. */
+  /** The live maintained HLL — same (group, bucket, register) shape as
+    * a batch build, so [[graft.operators.Sketches.hllEstimate]] reads
+    * it unchanged. */
   def readHll(spark: org.apache.spark.sql.SparkSession, sketchPath: String,
-              groupCol: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(sketchPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasCommits = fs.exists(root) && fs.listStatus(root)
-      .exists(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-    if (!hasCommits) {
-      // schema derived from an empty build — cannot drift from the real
-      // sketch layout (the readCountMin discipline)
-      import spark.implicits._
-      graft.operators.Sketches.hllRegisters(
-        Seq.empty[(String, String)].toDF(groupCol, "_v"), groupCol,
-        col("_v"))
-    } else
-      spark.read.parquet(sketchPath)
-        .groupBy(groupCol, "bucket").agg(max("register").as("register"))
-  }
+              groupCol: String): DataFrame =
+    new HllArtifact(spark, sketchPath, groupCol).read
 
   /** Maintain a dataset publish manifest
     * ([[graft.operators.Pipeline.datasetManifest]]) over a document
-    * stream — the live "what exactly have we published" audit beside
-    * the frequency/cardinality profiles. Exploits the manifest's
-    * defining property: every field is a mergeable aggregate (counts
-    * and token sums add, id bounds min/max, and the two checksums are
-    * SUMS of 56-bit keys mod 2^56 — modular addition merges exactly),
-    * so each micro-batch writes its own ≤ |groups|-row manifest DELTA
-    * under `manifestPath/batch=<id>` behind the staged rename (replayed
-    * ids no-op, crash litter absorbed), and the live manifest is one
-    * tiny aggregation over committed deltas ([[readManifest]]) — EQUAL
-    * to the batch build over the union of every ingested row
-    * (spec-gated identity). Single-writer assumption, as with the
-    * store. */
+    * stream — the live "what exactly have we published" audit. Every
+    * field is a mergeable aggregate (counts and token sums add, id
+    * bounds min/max, the two checksums are sums of 56-bit keys mod 2^56),
+    * so each micro-batch commits a ≤ |groups|-row delta
+    * ([[ManifestArtifact]]). */
   def streamingManifest(stream: DataFrame, groupCol: String,
                         manifestPath: String, checkpoint: String)
       : StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processManifestBatch(batch, batchId, manifestPath, groupCol)
-      }
-      .start()
+    maintain(stream, checkpoint,
+      new ManifestArtifact(stream.sparkSession, manifestPath, groupCol))
 
-  /** One manifest micro-batch (exposed for replay/crash testing). */
-  private[graft] def processManifestBatch(batch: DataFrame, batchId: Long,
-                                          manifestPath: String,
-                                          groupCol: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val dst = new Path(s"$manifestPath/batch=$batchId")
-    val fs = dst.getFileSystem(
-      batch.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(dst)) return // committed: replayed batch is a no-op
-    val stg = new Path(s"$manifestPath/_staging/b$batchId")
-    fs.delete(stg, true) // crashed earlier attempt's litter
-    graft.operators.Pipeline.datasetManifest(batch, groupCol)
-      .coalesce(1) // <= |groups| rows: one file
-      .write.mode("overwrite").parquet(stg.toString)
-    fs.mkdirs(dst.getParent)
-    if (!fs.rename(stg, dst))
-      sys.error(s"manifest commit rename failed: $stg -> $dst")
-  }
-
-  /** The live maintained manifest: every column merged by its own
-    * aggregate over the committed deltas — identical shape to a batch
-    * [[graft.operators.Pipeline.datasetManifest]] over the full ingested
-    * corpus, and identical VALUES by the merge identities. */
+  /** The live maintained manifest — identical shape and values to a
+    * batch [[graft.operators.Pipeline.datasetManifest]] over the full
+    * ingested corpus. */
   def readManifest(spark: org.apache.spark.sql.SparkSession,
-                   manifestPath: String, groupCol: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(manifestPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasCommits = fs.exists(root) && fs.listStatus(root)
-      .exists(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-    if (!hasCommits) {
-      // schema derived from an empty build — cannot drift from the real
-      // manifest layout (the readCountMin discipline)
-      import spark.implicits._
-      graft.operators.Pipeline.datasetManifest(
-        Seq.empty[(Long, String, String)].toDF("doc_id", groupCol, "text"),
-        groupCol)
-    } else {
-      val mod = lit(72057594037927936L).cast("decimal(38,0)") // 2^56
-      def ck(c: String): org.apache.spark.sql.Column =
-        pmod(sum(col(c).cast("decimal(38,0)")) % mod, mod).cast("long")
-      spark.read.parquet(manifestPath)
-        .groupBy(groupCol)
-        .agg(sum("n_docs").as("n_docs"), sum("n_tokens").as("n_tokens"),
-          min("min_id").as("min_id"), max("max_id").as("max_id"),
-          ck("id_checksum").as("id_checksum"),
-          ck("content_checksum").as("content_checksum"))
-    }
-  }
+                   manifestPath: String, groupCol: String): DataFrame =
+    new ManifestArtifact(spark, manifestPath, groupCol).read
 
   /** Maintained streaming priority sample — the DLT weighted sample
     * ([[graft.operators.TextAnalysis.prioritySample]]) kept fresh across
-    * micro-batches. Each batch commits its OWN top-k priority rows (a
-    * bounded ≤ k-row delta) under `batch=<id>` via the staged rename
-    * (the commit point: replayed ids no-op, crash litter is absorbed),
-    * and the live sample is the top-k of the union of deltas — EXACTLY
-    * the batch build over every ingested row, because per-row priorities
-    * are stateless hashes and top-k is a mergeable aggregation:
-    * topk(A ∪ B) = topk(topk(A) ∪ B) (the spec asserts the identity
-    * against the batch twin). The k·batches read-side union stays tiny;
-    * compact by rewriting the read-side top-k as a single delta when
-    * batch count grows unbounded. */
+    * micro-batches: each batch commits its own ≤ k-row top-k, and the
+    * live sample is the top-k of the deltas — exactly the batch build,
+    * because per-row priorities are stateless hashes and top-k merges
+    * ([[PrioritySampleArtifact]]). */
   def streamingPrioritySample(stream: DataFrame, weightCol: String,
                               samplePath: String, checkpoint: String,
                               k: Int, idCol: String = "doc_id",
                               seed: Int = 0): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processPriorityBatch(batch, batchId, samplePath, k, weightCol,
-          idCol, seed)
-      }
-      .start()
+    maintain(stream, checkpoint, new PrioritySampleArtifact(
+      stream.sparkSession, samplePath, k, weightCol, idCol, seed))
 
-  /** One priority-sample micro-batch (exposed for replay/crash tests). */
-  private[graft] def processPriorityBatch(batch: DataFrame, batchId: Long,
-                                          samplePath: String, k: Int,
-                                          weightCol: String, idCol: String,
-                                          seed: Int): Unit = {
-    import org.apache.hadoop.fs.Path
-    val dst = new Path(s"$samplePath/batch=$batchId")
-    val fs = dst.getFileSystem(
-      batch.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(dst)) return // committed: replayed batch is a no-op
-    val stg = new Path(s"$samplePath/_staging/b$batchId")
-    fs.delete(stg, true)
-    graft.operators.TextAnalysis
-      .prioritySample(batch, k, weightCol, idCol, seed)
-      .coalesce(1) // <= k rows
-      .write.mode("overwrite").parquet(stg.toString)
-    fs.mkdirs(dst.getParent)
-    if (!fs.rename(stg, dst))
-      sys.error(s"sample commit rename failed: $stg -> $dst")
-  }
-
-  /** The live sample: top-k of the committed deltas. Empty (with the
-    * correct schema) before the first commit. */
+  /** The live sample: top-k of the committed deltas. */
   def readPrioritySample(spark: org.apache.spark.sql.SparkSession,
                          samplePath: String, k: Int,
-                         idCol: String = "doc_id"): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(samplePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasCommits = fs.exists(root) && fs.listStatus(root)
-      .exists(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-    if (!hasCommits) {
-      // schema DERIVED from an empty prioritySample build (no jobs run)
-      import spark.implicits._
-      graft.operators.TextAnalysis.prioritySample(
-        Seq.empty[(Long, Long)].toDF(idCol, "_w"), k, "_w", idCol)
-    } else
-      spark.read.parquet(samplePath).drop("batch")
-        .orderBy(desc("priority"), col(idCol)).limit(k)
-  }
-
-  // ---- delta-store compaction (shared by the row-state maintained
-  // artifacts: postings, packing counts, substring index) ----
-  //
-  // A months-long streaming job commits one `batch=<id>` directory per
-  // micro-batch; at cluster scale the artifact root accumulates
-  // thousands of small deltas and every read pays the listing + footer
-  // cost. Compaction rewrites the committed prefix as ONE
-  // `compacted_<M>` generation, marked by an append-only
-  // `_compacted/through=<M>` marker file (the atomic commit point —
-  // created with overwrite=false, highest marker wins, no
-  // delete-then-rename window). Readers resolve: latest marked
-  // generation + the batch deltas ABOVE it; writers treat any
-  // batchId ≤ M as already-committed even after its directory is
-  // pruned, so a replayed micro-batch can never re-commit compacted
-  // data. Crash anywhere: an unmarked `compacted_*` directory is
-  // invisible litter the next compaction overwrites; a marked
-  // generation with unpruned old deltas double-EXISTS but readers
-  // never union them (ids ≤ M are excluded), and the next compaction
-  // prunes them. Single-writer per artifact root, the store-wide
-  // contract (compaction runs in the maintenance window, not
-  // concurrently with the stream's commit of a NEW delta).
-
-  private[graft] def compactedThrough(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Long = {
-    val dir = new org.apache.hadoop.fs.Path(root, "_compacted")
-    if (!fs.exists(dir)) -1L
-    else fs.listStatus(dir).map(_.getPath.getName)
-      .filter(_.startsWith("through="))
-      .flatMap(n => scala.util.Try(n.stripPrefix("through=").toLong)
-        .toOption)
-      .foldLeft(-1L)(math.max)
-  }
-
-  private def committedBatchIds(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[Long] =
-    if (!fs.exists(root)) Nil
-    else fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-      .flatMap(st => scala.util.Try(
-        st.getPath.getName.stripPrefix("batch=").toLong).toOption)
-
-  /** The directories a reader unions: the latest marked compacted
-    * generation (if any) plus every committed delta above it. Empty =
-    * nothing ingested yet. */
-  private[graft] def deltaSources(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val m = compactedThrough(fs, root)
-    val gen = if (m >= 0) Seq(s"$path/compacted_$m") else Nil
-    gen ++ committedBatchIds(fs, root).filter(_ > m).sorted
-      .map(i => s"$path/batch=$i")
-  }
-
-  /** True when this batch id must NOT be (re-)committed: its delta
-    * directory exists, or it is covered by a compacted generation
-    * (whose delta directories may already be pruned). */
-  private[graft] def alreadyCommitted(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      dst: org.apache.hadoop.fs.Path, batchId: Long): Boolean =
-    fs.exists(dst) || batchId <= compactedThrough(fs, root)
-
-  /** Compact an artifact root: rewrite [latest generation + committed
-    * deltas] as one `compacted_<M>` generation, mark it, prune the
-    * absorbed directories. `merge` pre-aggregates the generation where
-    * the artifact supports it (the substring index's min/sum — shrinks
-    * the stored generation to one row per key); identity for pure
-    * row-state artifacts (postings, packing counts). Returns the new
-    * (or unchanged) compacted-through id; -1 when nothing is committed
-    * yet. */
-  def compactDeltas(spark: org.apache.spark.sql.SparkSession,
-                    path: String,
-                    merge: DataFrame => DataFrame = identity): Long = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val m0 = compactedThrough(fs, root)
-    // finish any earlier run's interrupted prune FIRST: a crash between
-    // marker creation and prune leaves delta dirs ≤ marker and older
-    // compacted_* generations orphaned — readers already exclude them
-    // (the marker governs), but without this sweep they'd accumulate
-    // forever (the earlier code only deleted ids > the NEW m0 and the
-    // immediately previous generation)
-    if (m0 >= 0) pruneAbsorbed(fs, path, m0)
-    val ids = committedBatchIds(fs, root).filter(_ > m0)
-    if (ids.isEmpty) return m0 // nothing new to absorb
-    val m = ids.max
-    val srcs = deltaSources(spark, path)
-    val stg = new org.apache.hadoop.fs.Path(s"$path/_staging/compact_$m")
-    fs.delete(stg, true) // a crashed earlier attempt's litter
-    merge(spark.read.parquet(srcs: _*).drop("batch"))
-      .write.mode("overwrite").parquet(stg.toString)
-    val dst = new org.apache.hadoop.fs.Path(s"$path/compacted_$m")
-    fs.delete(dst, true) // unmarked litter from a crash after rename
-    if (!fs.rename(stg, dst))
-      sys.error(s"compaction rename failed: $stg -> $dst")
-    // the commit point: append-only marker, highest wins
-    val marker = new org.apache.hadoop.fs.Path(
-      s"$path/_compacted/through=$m")
-    fs.mkdirs(marker.getParent)
-    fs.create(marker, false).close()
-    // prune absorbed directories (crash-safe: readers already exclude
-    // them via the marker; a partial prune is finished by the NEXT run's
-    // opening sweep — pruneAbsorbed covers every delta ≤ marker and every
-    // older generation, not just this run's inputs)
-    pruneAbsorbed(fs, path, m)
-    m
-  }
-
-  /** Delete every artifact directory a compaction marker at `through` has
-    * absorbed: committed `batch=` deltas with id ≤ `through` and every
-    * `compacted_<g>` generation with g < `through`. Idempotent; safe to
-    * run any time the marker exists (readers never union absorbed dirs). */
-  private def pruneAbsorbed(fs: org.apache.hadoop.fs.FileSystem,
-                            path: String, through: Long): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    committedBatchIds(fs, root).filter(_ <= through).foreach(i =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/batch=$i"), true))
-    if (fs.exists(root)) fs.listStatus(root)
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("compacted_"))
-      .flatMap(st => scala.util.Try(
-        st.getPath.getName.stripPrefix("compacted_").toLong).toOption
-        .map(g => (g, st.getPath)))
-      .filter(_._1 < through)
-      .foreach { case (_, p) => fs.delete(p, true) }
-  }
-
-  /** [[compactDeltas]] for the maintained substring index: the
-    * generation stores the MERGED index (one row per window key), so
-    * read-time aggregation shrinks to [new deltas + merged rows]. */
-  def compactSubstringIndex(spark: org.apache.spark.sql.SparkSession,
-                            path: String): Long =
-    compactDeltas(spark, path, df => df.groupBy("k1", "k2")
-      .agg(min(col("keep")).as("keep"), sum(col("occ")).as("occ")))
+                         idCol: String = "doc_id"): DataFrame =
+    new PrioritySampleArtifact(spark, samplePath, k, idCol = idCol).read
 
   /** Maintain the TRAINING-SEQUENCE PACKING inputs (q102's manifest)
-    * over a document stream — closing the last batch-vs-stream
-    * asymmetry: [[graft.operators.Packing.packSequences]]' global
-    * running sum is ORDER-dependent and not per-batch mergeable (a
-    * late-arriving smaller doc_id shifts every later span), so the
-    * streamed state is the per-doc TOKEN COUNT frame — stateless per
-    * row, the expensive text pass — committed per batch as a
-    * (doc_id, n_subtokens) delta under `batch=<id>` behind the staged
-    * rename (replayed ids no-op, crash litter absorbed). The live
-    * manifest derives on read ([[readPackingManifest]]) by re-running
-    * the two-stage running sum over the committed counts: bit-equal to
-    * batch packSequences over every ingested doc (spec-gated), at a
-    * read cost bounded by the counts frame (~16 bytes/doc — a
-    * billion-doc corpus is one cheap job), never a text re-scan.
-    * Single-writer assumption, as with the store. */
+    * over a document stream. [[graft.operators.Packing.packSequences]]'
+    * global running sum is order-dependent and not per-batch mergeable
+    * (a late smaller doc_id shifts every later span), so the streamed
+    * state is the per-doc token-count frame — stateless per row, the
+    * expensive text pass — committed per batch
+    * ([[PackingCountsArtifact]]); [[readPackingManifest]] re-runs the
+    * running sum over the counts (~16 bytes/doc), never a text
+    * re-scan. */
   def streamingPackingCounts(stream: DataFrame, countsPath: String,
                              checkpoint: String,
                              counter: org.apache.spark.sql.Column =>
                                org.apache.spark.sql.Column =
                                graft.operators.TextAnalysis.subtokenCount)
       : StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processPackingBatch(batch, batchId, countsPath, counter)
-      }
-      .start()
-
-  /** One packing-counts micro-batch (exposed for replay/crash tests). */
-  private[graft] def processPackingBatch(batch: DataFrame, batchId: Long,
-                                         countsPath: String,
-                                         counter: org.apache.spark.sql
-                                           .Column => org.apache.spark.sql
-                                           .Column): Unit = {
-    import org.apache.hadoop.fs.Path
-    val dst = new Path(s"$countsPath/batch=$batchId")
-    val fs = dst.getFileSystem(
-      batch.sparkSession.sparkContext.hadoopConfiguration)
-    // committed (directly or via a compacted generation): replay no-ops
-    if (alreadyCommitted(fs, new Path(countsPath), dst, batchId)) return
-    val stg = new Path(s"$countsPath/_staging/b$batchId")
-    fs.delete(stg, true)
-    batch.select(col("doc_id"),
-        counter(col("text")).cast("long").as("n_subtokens"))
-      .write.mode("overwrite").parquet(stg.toString)
-    fs.mkdirs(dst.getParent)
-    if (!fs.rename(stg, dst))
-      sys.error(s"packing commit rename failed: $stg -> $dst")
-  }
+    maintain(stream, checkpoint, new PackingCountsArtifact(
+      stream.sparkSession, countsPath, counter))
 
   /** The live packing manifest over everything ingested so far: the
     * q102 (doc_id, seq_id, tok_from, tok_to, pos_in_seq) rows derived
     * from the committed counts with
     * [[graft.operators.Packing.packSequencesFromCounts]] — identical to
     * a batch [[graft.operators.Packing.packSequences]] over the full
-    * ingested prefix. Empty (correct schema) before the first commit. */
+    * ingested prefix. */
   def readPackingManifest(spark: org.apache.spark.sql.SparkSession,
-                          countsPath: String, seqLen: Long): DataFrame = {
-    val srcs = deltaSources(spark, countsPath)
-    import spark.implicits._
-    val counts =
-      if (srcs.isEmpty) Seq.empty[(Long, Long)].toDF("doc_id", "n_subtokens")
-      else spark.read.parquet(srcs: _*).select("doc_id", "n_subtokens")
-    graft.operators.Packing.packSequencesFromCounts(counts, seqLen)
-  }
+                          countsPath: String, seqLen: Long): DataFrame =
+    graft.operators.Packing.packSequencesFromCounts(
+      new PackingCountsArtifact(spark, countsPath).read, seqLen)
 
   /** Maintained streaming BM25 postings index — the live lexical search
-    * index over a document stream, beside the maintained CMS/sample.
-    * Each micro-batch commits its documents' postings rows
-    * (doc_id, dl, term_key, tf — [[graft.operators.Retrieval.postings]])
-    * as a DELTA under `batch=<id>` via the staged rename (the commit
-    * point: a replayed id no-ops, crash litter is absorbed), and the
-    * live index is the plain UNION of committed deltas
-    * ([[readPostings]]) — equal to the batch postings build over every
-    * ingested document EXACTLY, because postings rows are per
-    * (doc, term) and an append-only stream delivers each document in
-    * one batch (the spec asserts the identity; re-INGESTING the same
-    * doc_id in a later batch would double-index it, same single-ingest
-    * contract as the store). [[graft.operators.Retrieval
-    * .bm25OverPostings]] probes the live index unchanged — df, N and
-    * avgdl derive from the postings rows themselves, so search
-    * freshness is automatic as commits land; no stats refresh step
-    * exists to forget. */
+    * index over a document stream. Each micro-batch commits its
+    * documents' (doc_id, dl, term_key, tf) rows
+    * ([[graft.operators.Retrieval.postings]]) and the live index is their
+    * union ([[PostingsArtifact]]) — exact because postings rows are per
+    * (doc, term) and an append-only stream delivers each document once
+    * (re-ingesting a doc_id would double-index it).
+    * [[graft.operators.Retrieval.bm25OverPostings]] probes the live
+    * index unchanged: df, N and avgdl derive from the rows themselves,
+    * so there is no stats refresh step to forget. */
   def streamingPostings(stream: DataFrame, postingsPath: String,
                         checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processPostingsBatch(batch, batchId, postingsPath)
-      }
-      .start()
+    maintain(stream, checkpoint,
+      new PostingsArtifact(stream.sparkSession, postingsPath))
 
-  /** One postings micro-batch (exposed for replay/crash tests). */
-  private[graft] def processPostingsBatch(batch: DataFrame,
-                                          batchId: Long,
-                                          postingsPath: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val dst = new Path(s"$postingsPath/batch=$batchId")
-    val fs = dst.getFileSystem(
-      batch.sparkSession.sparkContext.hadoopConfiguration)
-    // committed (directly or via a compacted generation): replay no-ops
-    if (alreadyCommitted(fs, new Path(postingsPath), dst, batchId)) return
-    val stg = new Path(s"$postingsPath/_staging/b$batchId")
-    fs.delete(stg, true) // crashed earlier attempt's litter
-    graft.operators.Retrieval.postings(batch)
-      .write.mode("overwrite").parquet(stg.toString)
-    fs.mkdirs(dst.getParent)
-    if (!fs.rename(stg, dst))
-      sys.error(s"postings commit rename failed: $stg -> $dst")
-  }
-
-  /** The live maintained postings index: the union of every committed
-    * micro-batch delta — same (doc_id, dl, term_key, tf) shape as a
-    * batch [[graft.operators.Retrieval.postings]] build, so
-    * [[graft.operators.Retrieval.bm25OverPostings]] searches it
-    * unchanged. Empty (with the correct schema) before the first
-    * commit. Compaction, when batch count grows unbounded, is a rewrite
-    * of the union as one delta — the rows are the state. */
+  /** The live maintained postings index — same shape as a batch
+    * [[graft.operators.Retrieval.postings]] build. */
   def readPostings(spark: org.apache.spark.sql.SparkSession,
-                   postingsPath: String): DataFrame = {
-    val srcs = deltaSources(spark, postingsPath)
-    if (srcs.isEmpty) {
-      // schema DERIVED from an empty postings build (no jobs run)
-      import spark.implicits._
-      graft.operators.Retrieval.postings(
-        Seq.empty[(Long, String)].toDF("doc_id", "text"))
-    } else
-      spark.read.parquet(srcs: _*).drop("batch")
-  }
+                   postingsPath: String): DataFrame =
+    new PostingsArtifact(spark, postingsPath).read
 
   /** Maintained streaming SUBSTRING-DEDUP index — the live counterpart
-    * of [[graft.operators.SubstringIndex.buildIndex]] over a document
-    * stream, completing the maintained-artifact family (postings, CMS,
-    * HLL, manifest, packing counts). Each micro-batch commits its own
-    * batch-local index — the per-key (k1, k2, keep, occ) PARTIAL
-    * aggregate, which holds the expensive text pass (window hashing) —
-    * as a delta under `batch=<id>` behind the staged rename (replayed
-    * ids no-op, crash litter absorbed). Because the index aggregation
-    * is commutative-associative (keep = min of minima, occ = sum of
-    * counts), the live index derives on read
-    * ([[readSubstringIndex]]) by ONE re-aggregation over the committed
-    * partials — bit-equal to a batch `buildIndex` over every ingested
-    * document (spec-gated), at a read cost bounded by the partials
-    * (~32 bytes/window-key), never a text re-scan. Dedup of the
-    * ingested corpus then runs straight off the merged index via
-    * [[graft.operators.SubstringIndex.dedupeWithIndex]]. Single-writer
-    * assumption, as with the store; same single-ingest contract as
-    * postings (re-ingesting a doc_id would double-count its windows).
-    */
+    * of [[graft.operators.SubstringIndex.buildIndex]]. Each micro-batch
+    * commits its batch-local (k1, k2, keep, occ) partial, which holds
+    * the expensive window hashing; the index aggregation is
+    * commutative-associative (keep = min of minima, occ = sum), so the
+    * live index is one re-aggregation over the partials
+    * ([[SubstringIndexArtifact]]), order-insensitive, and
+    * [[graft.operators.SubstringIndex.dedupeWithIndex]] dedups the
+    * ingested corpus straight off it. Same single-ingest contract as
+    * postings (re-ingesting a doc_id double-counts its windows). */
   def streamingSubstringIndex(stream: DataFrame, indexPath: String,
                               checkpoint: String,
                               window: Int): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processSubstringBatch(batch, batchId, indexPath, window)
-      }
-      .start()
+    maintain(stream, checkpoint, new SubstringIndexArtifact(
+      stream.sparkSession, indexPath, window))
 
-  /** One substring-index micro-batch (exposed for replay/crash tests). */
-  private[graft] def processSubstringBatch(batch: DataFrame, batchId: Long,
-                                           indexPath: String,
-                                           window: Int): Unit = {
-    import org.apache.hadoop.fs.Path
-    val dst = new Path(s"$indexPath/batch=$batchId")
-    val fs = dst.getFileSystem(
-      batch.sparkSession.sparkContext.hadoopConfiguration)
-    // committed (directly or via a compacted generation): replay no-ops
-    if (alreadyCommitted(fs, new Path(indexPath), dst, batchId)) return
-    val stg = new Path(s"$indexPath/_staging/b$batchId")
-    fs.delete(stg, true) // crashed earlier attempt's litter
-    graft.operators.SubstringIndex.buildIndex(batch, window)
-      .write.mode("overwrite").parquet(stg.toString)
-    fs.mkdirs(dst.getParent)
-    if (!fs.rename(stg, dst))
-      sys.error(s"substring-index commit rename failed: $stg -> $dst")
-  }
-
-  /** The live substring index: committed per-batch partials merged by
-    * the index's own associative aggregation (keep = least of the
-    * batch minima, occ = summed counts) — equal to
+  /** The live substring index — equal to
     * [[graft.operators.SubstringIndex.buildIndex]] over the full
-    * ingested prefix EXACTLY. Empty (correct schema) before the first
-    * commit. */
+    * ingested prefix. */
   def readSubstringIndex(spark: org.apache.spark.sql.SparkSession,
-                         indexPath: String, window: Int): DataFrame = {
-    val srcs = deltaSources(spark, indexPath)
-    if (srcs.isEmpty) {
-      // schema DERIVED from an empty index build (no jobs run)
-      import spark.implicits._
-      graft.operators.SubstringIndex.buildIndex(
-        Seq.empty[(Long, String)].toDF("doc_id", "text"), window)
-    } else
-      spark.read.parquet(srcs: _*).drop("batch")
-        .groupBy("k1", "k2")
-        .agg(min(col("keep")).as("keep"), sum(col("occ")).as("occ"))
-  }
+                         indexPath: String, window: Int): DataFrame =
+    new SubstringIndexArtifact(spark, indexPath, window).read
 
   /** Ingest-time duplicate guard for MEDIA payloads — the modality
     * counterpart of [[streamingNearDupGuard]]: drop (default) or keep
@@ -1174,11 +718,6 @@ object StreamingIngest {
     }
   }
 
-  /** JVM twin of the column-side band hashing ([[graft.operators
-    * .Dedup.bandedProjection]] over [[graft.functions.MinHashExpr]]
-    * signatures): the SAME compiled kernel computes the signature, and
-    * the packed key replays md5(comma-joined minima) exactly
-    * ([[packedBandKey]]) — empty for docs with no shingles. */
   // per-thread digest: the guard runs per ROW on the ingest hot path —
   // a JCA provider lookup + allocation per row would dominate the probe
   // (the MinHashExpr.digest pattern)
@@ -1188,6 +727,24 @@ object StreamingIngest {
         java.security.MessageDigest.getInstance("MD5")
     }
 
+  /** The leading 56 bits of `bytes`' md5 (first 7 digest bytes,
+    * big-endian) — the JVM form of the column side's md5-prefix keys
+    * ([[graft.operators.Dedup.md5Long]], the 14-hex-char prefix). */
+  private def md5_56(bytes: Array[Byte]): Long = {
+    val md = bandDigest.get()
+    md.reset()
+    val d = md.digest(bytes)
+    var v = 0L
+    var j = 0
+    while (j < 7) { v = (v << 8) | (d(j) & 0xffL); j += 1 }
+    v
+  }
+
+  /** JVM twin of the column-side band hashing ([[graft.operators
+    * .Dedup.bandedProjection]] over [[graft.functions.MinHashExpr]]
+    * signatures): the SAME compiled kernel computes the signature, and
+    * the packed key replays md5(comma-joined minima) exactly
+    * ([[packedBandKey]]) — empty for docs with no shingles. */
   private[graft] def bandKeysJvm(text: String, n: Int, numHashes: Int,
                                  bands: Int): Seq[Long] = {
     val sig = graft.functions.MinHashExpr.compute(
@@ -1196,17 +753,11 @@ object StreamingIngest {
     if (sig.numElements() == 0) Seq.empty
     else {
       val r = numHashes / bands
-      val md = bandDigest.get()
       (0 until bands).map { b =>
         val joined = (b * r until (b + 1) * r)
           .map(j => sig.getLong(j).toString).mkString(",")
-        md.reset()
-        val d = md.digest(joined
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        var v = 0L
-        var j = 0
-        while (j < 7) { v = (v << 8) | (d(j) & 0xffL); j += 1 }
-        (b.toLong << 56) | v
+        (b.toLong << 56) |
+          md5_56(joined.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       }
     }
   }
@@ -1216,7 +767,7 @@ object StreamingIngest {
     * [[graft.operators.TextAnalysis.decontaminate]] as an ingest-time
     * filter). The held-out grams collapse ONCE to the same md5-derived
     * 56-bit keys the batch operator ships and ride a broadcast variable;
-    * each stream row pays one tokenize + (tokens−n+1) hash-set probes
+    * each stream row pays one tokenize + (tokens−n+1) sorted-array probes
     * inside a typed filter.
     *
     * This is the engine's one deliberate non-codegen hot path: Structured
@@ -1234,10 +785,11 @@ object StreamingIngest {
     * shape — see the paragraph above), so the eval-suite-≪-corpus
     * assumption is enforced, not assumed: more than `maxKeys` distinct
     * grams fails FAST with a sizing message instead of quietly OOMing
-    * the driver mid-stream. The default (2^26 ≈ 67M keys ≈ 1 GiB as a
-    * broadcast long-set) covers any realistic eval suite; raise it
-    * deliberately, with driver memory to match, when a bigger held-out
-    * set is genuinely intended. */
+    * the driver mid-stream. The default (2^26 ≈ 67M keys ≈ 512 MiB as
+    * the broadcast sorted long array, 8 B/key — the [[ExactBandKeys]]
+    * probe the other guards share) covers any realistic eval suite;
+    * raise it deliberately, with driver memory to match, when a bigger
+    * held-out set is genuinely intended. */
   def streamingDecontaminate(stream: DataFrame, test: DataFrame, n: Int = 4,
                              textCol: String = "text",
                              invert: Boolean = false,
@@ -1256,14 +808,13 @@ object StreamingIngest {
         "maxKeys (with driver memory to match)")
     // persisted across the sizing count and this collect — the guard must
     // not pay the explode+hash+distinct shuffle twice at stream start
-    val keys: Set[Long] =
-      distinctKeys.collect().map(_.getLong(0)).toSet
+    val keys = exactKeys(distinctKeys)
     distinctKeys.unpersist(false)
     val bKeys = stream.sparkSession.sparkContext.broadcast(keys)
     val idx = stream.schema.fieldIndex(textCol)
     stream.filter { row =>
       val contaminated = !row.isNullAt(idx) &&
-        gramKeysJvm(row.getString(idx), n).exists(bKeys.value.contains)
+        gramKeysJvm(row.getString(idx), n).exists(bKeys.value.mightContain)
       contaminated == invert
     }
   }
@@ -1318,15 +869,8 @@ object StreamingIngest {
     * value (NO trim/tokenize — the whole string's md5 top-7 bytes),
     * bit-identical to the column side so stream and batch novelty keys
     * cannot drift. */
-  private[graft] def textKeyJvm(text: String): Long = {
-    val md = bandDigest.get()
-    md.reset()
-    val d = md.digest(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    var v = 0L
-    var j = 0
-    while (j < 7) { v = (v << 8) | (d(j) & 0xffL); j += 1 }
-    v
-  }
+  private[graft] def textKeyJvm(text: String): Long =
+    md5_56(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   /** JVM twin of the column-side gram hashing
     * ([[graft.operators.TextAnalysis.ngrams]] + md5-prefix key), kept
@@ -1342,20 +886,9 @@ object StreamingIngest {
     s = s.substring(a, b)
     val toks = s.split("\\s+", -1)
     if (toks.length < n) Iterator.empty
-    else {
-      val md = bandDigest.get() // per-thread; per-row lookup+alloc is hot
-      (0 to toks.length - n).iterator.map { i =>
-        md.reset()
-        val d = md.digest(
-          toks.slice(i, i + n).mkString(" ")
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        // first 14 hex chars = the top 7 bytes' hex, i.e. 56 bits
-        var v = 0L
-        var j = 0
-        while (j < 7) { v = (v << 8) | (d(j) & 0xffL); j += 1 }
-        v
-      }
-    }
+    else (0 to toks.length - n).iterator.map(i =>
+      md5_56(toks.slice(i, i + n).mkString(" ")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8)))
   }
 
   /** Watermarked per-hour event statistics — the canonical streaming agg

@@ -523,7 +523,7 @@ class DedupSpec extends SparkSpec {
     // with the local path disabled, min-label propagation moves the
     // label one hop per round (maxIter=20 fails fast — honest, not
     // partial); the star algorithm's reach doubles per round and closes
-    spark.conf.set("spark.graft.cc.localMaxBytes", "0")
+    spark.conf.set("spark.graft.cc.localMaxRows", "0")
     try {
       intercept[IllegalStateException] {
         Dedup.connectedComponents(chain, maxIter = 20)
@@ -531,7 +531,7 @@ class DedupSpec extends SparkSpec {
       val star = Dedup.connectedComponentsStar(chain)
         .as[(Long, Long)].collect()
       assert(star.length == 401 && star.forall(_._2 == 0L))
-    } finally spark.conf.unset("spark.graft.cc.localMaxBytes")
+    } finally spark.conf.unset("spark.graft.cc.localMaxRows")
   }
 
   test("local and distributed closures agree on random graphs, self-pair " +
@@ -544,13 +544,13 @@ class DedupSpec extends SparkSpec {
       val df = edges.toDF("id1", "id2")
       val local = Dedup.connectedComponents(df)
         .as[(Long, Long)].collect().toMap
-      spark.conf.set("spark.graft.cc.localMaxBytes", "0")
+      spark.conf.set("spark.graft.cc.localMaxRows", "0")
       val (dist, star) =
         try (Dedup.connectedComponents(df)
           .as[(Long, Long)].collect().toMap,
           Dedup.connectedComponentsStar(df)
             .as[(Long, Long)].collect().toMap)
-        finally spark.conf.unset("spark.graft.cc.localMaxBytes")
+        finally spark.conf.unset("spark.graft.cc.localMaxRows")
       assert(local == dist, s"trial $trial: local != label-prop")
       assert(local == star, s"trial $trial: local != star")
       assert(local(77L) == 77L)

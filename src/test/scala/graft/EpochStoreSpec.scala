@@ -2,6 +2,8 @@ package graft
 
 import graft.api.{EpochStore, FingerprintStore, FuzzyKeyStore,
   MinHashDedupStore, SemanticDedupStore, SubstringDedupStore}
+import graft.streaming.{CountMinArtifact, LiveArtifact,
+  PrioritySampleArtifact}
 import org.apache.spark.sql.DataFrame
 import java.nio.file.Files
 
@@ -94,5 +96,16 @@ class EpochStoreSpec extends SparkSpec {
         nCells = 2, iters = 2, maxStaleFrac = 10.0))(
       (s, k, t) => t.fold(s.append(vecs(k)))(s.append(vecs(k), _)))(
       SemanticDedupStore.open(spark, _, maxStaleFrac = 10.0))
+
+    // the streaming live artifacts: the first append is the init
+    def live(k: Int) = Seq((10L * k, s"w$k", 2L), (10L * k + 1, "w", 3L))
+      .toDF("doc_id", "text", "w")
+    def liveFamily(name: String, at: String => LiveArtifact): Unit =
+      noNetGrowth[LiveArtifact](name)(
+        r => { val a = at(r); a.append(live(0), "0"); a })(
+        (a, k, t) => a.append(live(k), t.getOrElse(k.toString)))(at)
+    liveFamily("count-min", new CountMinArtifact(spark, _, "text", 3, 16))
+    liveFamily("priority-sample",
+      new PrioritySampleArtifact(spark, _, 3, "w"))
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import graft.api.{EpochStoreKit, FingerprintStore, FuzzyKeyStore,
   MinHashDedupStore, SemanticDedupStore, SubstringDedupStore}
+import graft.streaming.{CountMinArtifact, LiveArtifact,
+  PrioritySampleArtifact}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
@@ -226,6 +228,72 @@ class FaultSweepSpec extends SparkSpec {
     sweep(Scenario("mh-compact", build2,
       r => { MinHashDedupStore.open(spark, r, 0.5).compact(); () },
       mhRead))
+  }
+
+  private def laBatch(k: Int) = (0 until 40)
+    .map(i => (100L * k + i, s"w${(i * k) % 9}", 1L + i % 5))
+    .toDF("doc_id", "text", "w")
+
+  test("live artifacts (count-min: sum merge; priority sample: top-k " +
+    "merge): kill at every append/compact write boundary, and a compact " +
+    "torn at every boundary followed by the NEXT append reads as if the " +
+    "compact never tore") {
+    val families: Seq[(String, String => LiveArtifact)] = Seq(
+      "la-cms" -> (r => new CountMinArtifact(spark, r, "text", 3, 16)),
+      "la-ps" -> (r => new PrioritySampleArtifact(spark, r, 5, "w")))
+    for ((name, artifact) <- families) {
+      def read(r: String): Any = rowSet(artifact(r).read)
+      val build = (r: String) => {
+        artifact(r).append(laBatch(1), "1"); ()
+      }
+      sweep(Scenario(s"$name-append", build,
+        r => { artifact(r).append(laBatch(2), "2"); () }, read))
+      val build2 = (r: String) => {
+        val a = artifact(r)
+        a.append(laBatch(1), "1"); a.append(laBatch(2), "2"); ()
+      }
+      val compact = (r: String) => { artifact(r).compact(); () }
+      sweep(Scenario(s"$name-compact", build2, compact, read))
+
+      // cross-op: the sweep's retry re-runs compact(), which never
+      // reaches an append landing on a torn compaction's pre-commit
+      // snapshot mark — a sum merge would then read the append's delta
+      // as the whole state
+      val next = (r: String) => {
+        artifact(r).append(laBatch(3), "3"); ()
+      }
+      val baseDir = Files
+        .createTempDirectory(s"graft-fault-$name-xop").toString
+      val pristine = s"$baseDir/pristine"
+      build2(pristine)
+      val expectRoot = s"$baseDir/expect"
+      copyDir(pristine, expectRoot)
+      next(expectRoot)
+      val expect = read(expectRoot)
+      val cntRoot = s"$baseDir/count"
+      copyDir(pristine, cntRoot)
+      var count = 0
+      EpochStoreKit.installFaultHook(cntRoot, _ => count += 1)
+      try compact(cntRoot)
+      finally EpochStoreKit.clearFaultHook(cntRoot)
+      for (k <- 1 to count) {
+        val d = s"$baseDir/k$k"
+        copyDir(pristine, d)
+        var fired = 0
+        EpochStoreKit.installFaultHook(d, p => {
+          fired += 1
+          if (fired == k) throw new FaultInjected(p)
+        })
+        val died =
+          try { compact(d); false }
+          catch { case _: FaultInjected => true }
+          finally EpochStoreKit.clearFaultHook(d)
+        assert(died, s"$name-xop k=$k: boundary never fired")
+        next(d)
+        assert(read(d) == expect,
+          s"$name-xop k=$k: the append after the torn compact misread")
+      }
+    }
   }
 
   test("CurationDB composed append: kill at EVERY write boundary " +

@@ -601,16 +601,17 @@ class StreamingSpec extends SparkSpec {
     // the merge identity: streamed deltas sum EXACTLY to the batch build
     assert(cells(live) == cells(batchEquiv))
     // a replayed micro-batch (same id, even different data) is a no-op
-    StreamingIngest.processSketchBatch(
-      Seq.fill(99)("tokX").toDF("w"), 0L, sketchPath, "w", 3, 32)
+    val cms = new graft.streaming.CountMinArtifact(spark, sketchPath, "w",
+      3, 32)
+    cms.append(Seq.fill(99)("tokX").toDF("w"), "0")
     assert(cells(StreamingIngest.readCountMin(spark, sketchPath)) ==
       cells(batchEquiv))
-    // a crash mid-stage leaves only staging litter; replay absorbs it
-    val litter = new java.io.File(s"$sketchPath/_staging/b7/part-junk")
+    // a crashed append leaves only uncommitted litter; the next commit
+    // overwrites it
+    val litter = new java.io.File(s"$sketchPath/delta/epoch=2/part-junk")
     litter.getParentFile.mkdirs()
     java.nio.file.Files.writeString(litter.toPath, "partial")
-    StreamingIngest.processSketchBatch(
-      Seq("extra").toDF("w"), 7L, sketchPath, "w", 3, 32)
+    cms.append(Seq("extra").toDF("w"), "7")
     val withExtra = StreamingIngest.readCountMin(spark, sketchPath)
     assert(cells(withExtra) == cells(
       Sketches.countMin((a ++ b :+ "extra").toDF("w"), col("w"), 3, 32)))
@@ -649,16 +650,17 @@ class StreamingSpec extends SparkSpec {
     // the merge identity: per-cell MAX over deltas = the batch build
     assert(cells(live) == cells(batchEquiv))
     // a replayed micro-batch (same id, even different data) is a no-op
-    StreamingIngest.processHllBatch(
-      Seq(("fr", "tokX")).toDF("g", "w"), 0L, sketchPath, "g", "w", 6)
+    val hll = new graft.streaming.HllArtifact(spark, sketchPath, "g", "w",
+      6)
+    hll.append(Seq(("fr", "tokX")).toDF("g", "w"), "0")
     assert(cells(StreamingIngest.readHll(spark, sketchPath, "g")) ==
       cells(batchEquiv))
-    // a crash mid-stage leaves only staging litter; replay absorbs it
-    val litter = new java.io.File(s"$sketchPath/_staging/b7/part-junk")
+    // a crashed append leaves only uncommitted litter; the next commit
+    // overwrites it
+    val litter = new java.io.File(s"$sketchPath/delta/epoch=2/part-junk")
     litter.getParentFile.mkdirs()
     java.nio.file.Files.writeString(litter.toPath, "partial")
-    StreamingIngest.processHllBatch(
-      Seq(("en", "fresh")).toDF("g", "w"), 7L, sketchPath, "g", "w", 6)
+    hll.append(Seq(("en", "fresh")).toDF("g", "w"), "7")
     val withExtra = StreamingIngest.readHll(spark, sketchPath, "g")
     assert(cells(withExtra) == cells(Sketches.hllRegisters(
       (a ++ b :+ (("en", "fresh"))).toDF("g", "w"), "g", col("w"), 6)))
@@ -702,18 +704,17 @@ class StreamingSpec extends SparkSpec {
     assert(rows(StreamingIngest.readManifest(spark, mPath, "grp")) ==
       rows(batchEquiv))
     // a replayed micro-batch (same id, even different data) is a no-op
-    StreamingIngest.processManifestBatch(
-      Seq((9L, "g9", "junk")).toDF("doc_id", "grp", "text"), 0L, mPath,
-      "grp")
+    val man = new graft.streaming.ManifestArtifact(spark, mPath, "grp")
+    man.append(Seq((9L, "g9", "junk")).toDF("doc_id", "grp", "text"), "0")
     assert(rows(StreamingIngest.readManifest(spark, mPath, "grp")) ==
       rows(batchEquiv))
-    // a crash mid-stage leaves only staging litter; replay absorbs it
-    val litter = new java.io.File(s"$mPath/_staging/b7/part-junk")
+    // a crashed append leaves only uncommitted litter; the next commit
+    // overwrites it
+    val litter = new java.io.File(s"$mPath/delta/epoch=2/part-junk")
     litter.getParentFile.mkdirs()
     java.nio.file.Files.writeString(litter.toPath, "partial")
-    StreamingIngest.processManifestBatch(
-      Seq((6L, "g2", "fresh doc")).toDF("doc_id", "grp", "text"), 7L,
-      mPath, "grp")
+    man.append(
+      Seq((6L, "g2", "fresh doc")).toDF("doc_id", "grp", "text"), "7")
     assert(rows(StreamingIngest.readManifest(spark, mPath, "grp")) ==
       rows(Pipeline.datasetManifest(
         (a ++ b :+ ((6L, "g2", "fresh doc")))
@@ -766,18 +767,15 @@ class StreamingSpec extends SparkSpec {
     assert(rows(StreamingIngest.readPackingManifest(spark, pPath, 8L)) ==
       rows(batchEquiv))
     // replayed micro-batch (same id, different data) is a no-op
-    StreamingIngest.processPackingBatch(
-      Seq((99L, "junk junk junk")).toDF("doc_id", "text"), 0L, pPath,
-      graft.operators.TextAnalysis.subtokenCount)
+    val pack = new graft.streaming.PackingCountsArtifact(spark, pPath)
+    pack.append(Seq((99L, "junk junk junk")).toDF("doc_id", "text"), "0")
     assert(rows(StreamingIngest.readPackingManifest(spark, pPath, 8L)) ==
       rows(batchEquiv))
-    // crash litter in staging is absorbed by the replay
-    val litter = new java.io.File(s"$pPath/_staging/b7/part-junk")
+    // uncommitted crash litter is overwritten by the next commit
+    val litter = new java.io.File(s"$pPath/delta/epoch=2/part-junk")
     litter.getParentFile.mkdirs()
     java.nio.file.Files.writeString(litter.toPath, "partial")
-    StreamingIngest.processPackingBatch(
-      Seq((20L, "x y z")).toDF("doc_id", "text"), 7L, pPath,
-      graft.operators.TextAnalysis.subtokenCount)
+    pack.append(Seq((20L, "x y z")).toDF("doc_id", "text"), "7")
     assert(rows(StreamingIngest.readPackingManifest(spark, pPath, 8L)) ==
       rows(Packing.packSequences(
         (a ++ b :+ ((20L, "x y z"))).toDF("doc_id", "text"), 8L)))
@@ -828,16 +826,15 @@ class StreamingSpec extends SparkSpec {
     assert(ded(SubstringIndex.dedupeWithIndex(union, live, W)) ==
       ded(SuffixArray.substringDeduped(union, W)))
     // replayed micro-batch (same id, different data) is a no-op
-    StreamingIngest.processSubstringBatch(
-      Seq((99L, "j j j j")).toDF("doc_id", "text"), 0L, iPath, W)
+    val ssi = new graft.streaming.SubstringIndexArtifact(spark, iPath, W)
+    ssi.append(Seq((99L, "j j j j")).toDF("doc_id", "text"), "0")
     assert(rows(StreamingIngest.readSubstringIndex(spark, iPath, W)) ==
       rows(SubstringIndex.buildIndex(union, W)))
-    // crash litter in staging is absorbed by the replay
-    val litter = new java.io.File(s"$iPath/_staging/b7/part-junk")
+    // uncommitted crash litter is overwritten by the next commit
+    val litter = new java.io.File(s"$iPath/delta/epoch=2/part-junk")
     litter.getParentFile.mkdirs()
     java.nio.file.Files.writeString(litter.toPath, "partial")
-    StreamingIngest.processSubstringBatch(
-      Seq((20L, "a b c")).toDF("doc_id", "text"), 7L, iPath, W)
+    ssi.append(Seq((20L, "a b c")).toDF("doc_id", "text"), "7")
     val unionExtra = (a ++ b :+ ((20L, "a b c"))).toDF("doc_id", "text")
     assert(rows(StreamingIngest.readSubstringIndex(spark, iPath, W)) ==
       rows(SubstringIndex.buildIndex(unionExtra, W)))
@@ -888,122 +885,140 @@ class StreamingSpec extends SparkSpec {
     "second compaction absorbs them") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.{Retrieval, SubstringIndex}
+    import graft.streaming.{PackingCountsArtifact, PostingsArtifact,
+      SubstringIndexArtifact}
     val dir = java.nio.file.Files
       .createTempDirectory("graft-compact").toString
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def exists(p: String) = fs.exists(new org.apache.hadoop.fs.Path(p))
 
     // ---- postings (pure row-state artifact) ----
     val pPath = s"$dir/postings"
+    val post = new PostingsArtifact(spark, pPath)
     val a = Seq((1L, "a b a c")); val b = Seq((2L, "b d"))
     val c = Seq((3L, "a a d d e"))
-    StreamingIngest.processPostingsBatch(a.toDF("doc_id", "text"), 0, pPath)
-    StreamingIngest.processPostingsBatch(b.toDF("doc_id", "text"), 1, pPath)
-    StreamingIngest.processPostingsBatch(c.toDF("doc_id", "text"), 2, pPath)
+    post.append(a.toDF("doc_id", "text"), "0")
+    post.append(b.toDF("doc_id", "text"), "1")
+    post.append(c.toDF("doc_id", "text"), "2")
     def prows(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_id", "dl", "term_key", "tf")
         .as[(Long, Long, Long, Long)].collect().sorted.toSeq
     val want = prows(Retrieval.postings((a ++ b ++ c).toDF("doc_id", "text")))
-    assert(StreamingIngest.compactDeltas(spark, pPath) == 2L)
-    // the absorbed delta directories are gone; one marked generation
-    val fs = new org.apache.hadoop.fs.Path(pPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$pPath/batch=0")))
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$pPath/compacted_2")))
+    // epochs 0..2 fold into ONE snapshot epoch 3; the absorbed delta
+    // epochs are pruned
+    assert(post.compact() == 3L)
+    assert(!exists(s"$pPath/delta/epoch=0"))
+    assert(exists(s"$pPath/delta/epoch=3"))
+    assert(post.latestSnapshot == 3L)
     assert(prows(StreamingIngest.readPostings(spark, pPath)) == want)
-    // the critical replay property: batch 1's directory no longer
-    // exists, but its id is covered by the generation — re-committing
-    // (with junk data) must still no-op
-    StreamingIngest.processPostingsBatch(
-      Seq((99L, "junk")).toDF("doc_id", "text"), 1, pPath)
+    // the critical replay property: batch 1's delta no longer exists,
+    // but its token does — re-committing (with junk data) still no-ops
+    assert(post.append(
+      Seq((99L, "junk")).toDF("doc_id", "text"), "1") == 1L)
     assert(prows(StreamingIngest.readPostings(spark, pPath)) == want)
-    // a NEW delta above the generation merges on read
+    // a NEW delta above the snapshot merges on read
     val d = Seq((4L, "e f"))
-    StreamingIngest.processPostingsBatch(d.toDF("doc_id", "text"), 3, pPath)
+    assert(post.append(d.toDF("doc_id", "text"), "3") == 4L)
     val want2 = prows(Retrieval.postings(
       (a ++ b ++ c ++ d).toDF("doc_id", "text")))
     assert(prows(StreamingIngest.readPostings(spark, pPath)) == want2)
-    // second compaction absorbs it and prunes the old generation
-    assert(StreamingIngest.compactDeltas(spark, pPath) == 3L)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$pPath/compacted_2")))
+    // second compaction absorbs it and prunes the old snapshot
+    assert(post.compact() == 5L)
+    assert(!exists(s"$pPath/delta/epoch=3"))
     assert(prows(StreamingIngest.readPostings(spark, pPath)) == want2)
     // compaction with nothing new is a no-op
-    assert(StreamingIngest.compactDeltas(spark, pPath) == 3L)
+    assert(post.compact() == 5L)
 
-    // ---- substring index (merged generation) ----
+    // ---- substring index (merged snapshot) ----
     val iPath = s"$dir/ssindex"; val W = 3
+    val ssi = new SubstringIndexArtifact(spark, iPath, W)
     val x = Seq((5L, "a b c d")); val y = Seq((2L, "p a b c"))
-    StreamingIngest.processSubstringBatch(x.toDF("doc_id", "text"), 0, iPath, W)
-    StreamingIngest.processSubstringBatch(y.toDF("doc_id", "text"), 1, iPath, W)
+    ssi.append(x.toDF("doc_id", "text"), "0")
+    ssi.append(y.toDF("doc_id", "text"), "1")
     def irows(df: org.apache.spark.sql.DataFrame) =
       df.select(col("k1"), col("k2"), col("keep.doc_id"),
           col("keep.pos"), col("occ"))
         .as[(Long, Long, Long, Long, Long)].collect().sorted.toSeq
     val iwant = irows(SubstringIndex.buildIndex(
       (x ++ y).toDF("doc_id", "text"), W))
-    assert(StreamingIngest.compactSubstringIndex(spark, iPath) == 1L)
+    assert(ssi.compact() == 2L)
     assert(irows(StreamingIngest.readSubstringIndex(spark, iPath, W)) ==
       iwant)
-    // the generation is PRE-MERGED: one row per key on disk
-    val gen = spark.read.parquet(s"$iPath/compacted_1")
+    // the snapshot is PRE-MERGED: one row per key on disk
+    val gen = spark.read.parquet(s"$iPath/delta/epoch=2")
     assert(gen.count() == gen.select("k1", "k2").distinct().count())
     // a post-compaction delta still merges (occ sums across
-    // generation + delta)
-    StreamingIngest.processSubstringBatch(
-      Seq((9L, "a b c")).toDF("doc_id", "text"), 2, iPath, W)
+    // snapshot + delta)
+    ssi.append(Seq((9L, "a b c")).toDF("doc_id", "text"), "2")
     assert(irows(StreamingIngest.readSubstringIndex(spark, iPath, W)) ==
       irows(SubstringIndex.buildIndex(
         (x ++ y :+ ((9L, "a b c"))).toDF("doc_id", "text"), W)))
 
     // ---- packing counts ----
     val cPath = s"$dir/counts"
-    StreamingIngest.processPackingBatch(
-      Seq((10L, "a b c d e")).toDF("doc_id", "text"), 0, cPath,
-      graft.operators.TextAnalysis.subtokenCount)
-    StreamingIngest.processPackingBatch(
-      Seq((11L, "f g h")).toDF("doc_id", "text"), 1, cPath,
-      graft.operators.TextAnalysis.subtokenCount)
+    val pack = new PackingCountsArtifact(spark, cPath)
+    pack.append(Seq((10L, "a b c d e")).toDF("doc_id", "text"), "0")
+    pack.append(Seq((11L, "f g h")).toDF("doc_id", "text"), "1")
     val mWant = StreamingIngest.readPackingManifest(spark, cPath, 4L)
       .as[(Long, Long, Long, Long, Long)].collect().sorted.toSeq
-    assert(StreamingIngest.compactDeltas(spark, cPath) == 1L)
+    assert(pack.compact() == 2L)
     assert(StreamingIngest.readPackingManifest(spark, cPath, 4L)
       .as[(Long, Long, Long, Long, Long)].collect().sorted.toSeq == mWant)
   }
 
-  test("delta compaction: a crash between marker and prune leaves " +
-    "absorbed deltas and an old generation orphaned — the next " +
-    "compaction sweeps them even when it has nothing new to absorb") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.Retrieval
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-compact-crash").toString
-    val pPath = s"$dir/postings"
-    val fs = new org.apache.hadoop.fs.Path(pPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val a = Seq((1L, "a b a c")); val b = Seq((2L, "b d"))
-    StreamingIngest.processPostingsBatch(a.toDF("doc_id", "text"), 0, pPath)
-    StreamingIngest.processPostingsBatch(b.toDF("doc_id", "text"), 1, pPath)
-    assert(StreamingIngest.compactDeltas(spark, pPath) == 1L)
-    StreamingIngest.processPostingsBatch(
-      Seq((3L, "e")).toDF("doc_id", "text"), 2, pPath)
-    // simulate the crash window of a compaction through=2: its generation
-    // and marker exist, but the absorbed batch=2 delta and the previous
-    // compacted_1 generation were never pruned
-    val gen2 = new org.apache.hadoop.fs.Path(s"$pPath/compacted_2")
-    spark.read.parquet(s"$pPath/compacted_1", s"$pPath/batch=2")
-      .write.parquet(gen2.toString)
-    fs.create(new org.apache.hadoop.fs.Path(s"$pPath/_compacted/through=2"),
-      false).close()
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$pPath/batch=2")))
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$pPath/compacted_1")))
-    val want = StreamingIngest.readPostings(spark, pPath)
-      .select("doc_id", "dl", "term_key", "tf")
-      .as[(Long, Long, Long, Long)].collect().sorted.toSeq
-    // nothing new to absorb — but the opening sweep must finish the prune
-    assert(StreamingIngest.compactDeltas(spark, pPath) == 2L)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$pPath/batch=2")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$pPath/compacted_1")))
-    assert(StreamingIngest.readPostings(spark, pPath)
-      .select("doc_id", "dl", "term_key", "tf")
-      .as[(Long, Long, Long, Long)].collect().sorted.toSeq == want)
+  test("live artifacts after compaction: a compacted batch id replayed " +
+    "with junk no-ops and a new batch merges — each of the seven reads " +
+    "equals its batch build over the union, exactly") {
+    import graft.operators.{Packing, Pipeline, Retrieval, Sketches,
+      SubstringIndex, TextAnalysis}
+    import graft.streaming._
+    import org.apache.spark.sql.DataFrame
+    val dir = Files.createTempDirectory("graft-live-compact").toString
+    val batches = Seq(
+      Seq((1L, "g1", "a b c d a b"), (2L, "g2", "b c d e")),
+      Seq((3L, "g1", "c d e f g"), (4L, "g2", "a b c d")),
+      Seq((5L, "g2", "x y z a b c")))
+    val junk = Seq((99L, "g9", "junk junk junk junk"))
+    def docs(rows: Seq[(Long, String, String)]): DataFrame =
+      rows.toDF("doc_id", "grp", "text")
+        .withColumn("w", col("doc_id") * 7 % 13 + 1)
+    case class Case(name: String, artifact: String => LiveArtifact,
+                    read: String => DataFrame, batch: DataFrame => DataFrame)
+    val cases = Seq(
+      Case("count-min", new CountMinArtifact(spark, _, "text", 3, 32),
+        StreamingIngest.readCountMin(spark, _),
+        Sketches.countMin(_, col("text"), 3, 32)),
+      Case("hll", new HllArtifact(spark, _, "grp", "text", 6),
+        StreamingIngest.readHll(spark, _, "grp"),
+        Sketches.hllRegisters(_, "grp", col("text"), 6)),
+      Case("manifest", new ManifestArtifact(spark, _, "grp"),
+        StreamingIngest.readManifest(spark, _, "grp"),
+        Pipeline.datasetManifest(_, "grp")),
+      Case("priority-sample", new PrioritySampleArtifact(spark, _, 3, "w"),
+        StreamingIngest.readPrioritySample(spark, _, 3),
+        TextAnalysis.prioritySample(_, 3, "w")),
+      Case("packing-counts", new PackingCountsArtifact(spark, _),
+        StreamingIngest.readPackingManifest(spark, _, 4L),
+        Packing.packSequences(_, 4L)),
+      Case("postings", new PostingsArtifact(spark, _),
+        StreamingIngest.readPostings(spark, _), Retrieval.postings(_)),
+      Case("substring-index", new SubstringIndexArtifact(spark, _, 3),
+        StreamingIngest.readSubstringIndex(spark, _, 3),
+        SubstringIndex.buildIndex(_, 3)))
+    for (c <- cases) {
+      val root = s"$dir/${c.name}"
+      val artifact = c.artifact(root)
+      artifact.append(docs(batches(0)), "0")
+      artifact.append(docs(batches(1)), "1")
+      artifact.compact()
+      artifact.append(docs(junk), "0") // replay of a compacted batch id
+      artifact.append(docs(batches(2)), "2")
+      val want = c.batch(docs(batches.flatten))
+      def rows(df: DataFrame) = df.select(want.columns.map(col): _*)
+        .collect().map(_.toString).sorted.toSeq
+      assert(rows(c.read(root)) == rows(want), c.name)
+    }
   }
 
   test("maintained postings index: streamed deltas union to the batch " +
@@ -1034,16 +1049,16 @@ class StreamingSpec extends SparkSpec {
     // the union identity: streamed deltas ARE the batch postings build
     assert(rows(live) == rows(Retrieval.postings(union)))
     // a replayed micro-batch (same id, even different data) is a no-op
-    StreamingIngest.processPostingsBatch(
-      Seq((99L, "x y z")).toDF("doc_id", "text"), 0L, postPath)
+    val post = new graft.streaming.PostingsArtifact(spark, postPath)
+    post.append(Seq((99L, "x y z")).toDF("doc_id", "text"), "0")
     assert(rows(StreamingIngest.readPostings(spark, postPath)) ==
       rows(Retrieval.postings(union)))
-    // a crash mid-stage leaves only staging litter; replay absorbs it
-    val litter = new java.io.File(s"$postPath/_staging/b7/part-junk")
+    // a crashed append leaves only uncommitted litter; the next commit
+    // overwrites it
+    val litter = new java.io.File(s"$postPath/delta/epoch=2/part-junk")
     litter.getParentFile.mkdirs()
     java.nio.file.Files.writeString(litter.toPath, "partial")
-    StreamingIngest.processPostingsBatch(
-      Seq((5L, "a e")).toDF("doc_id", "text"), 7L, postPath)
+    post.append(Seq((5L, "a e")).toDF("doc_id", "text"), "7")
     val withExtra = StreamingIngest.readPostings(spark, postPath)
     val unionExtra = (a ++ b :+ (5L -> "a e")).toDF("doc_id", "text")
     assert(rows(withExtra) == rows(Retrieval.postings(unionExtra)))
@@ -1084,18 +1099,17 @@ class StreamingSpec extends SparkSpec {
     // mergeability: topk(A ∪ B) == topk(topk(A) ∪ topk(B)), exactly
     assert(rows(live) == rows(batchEquiv))
     // a replayed micro-batch (same id, different data) is a no-op
-    StreamingIngest.processPriorityBatch(
-      Seq((9999L, 9999L)).toDF("doc_id", "w"), 0L, samplePath, 5, "w",
-      "doc_id", 0)
+    val ps = new graft.streaming.PrioritySampleArtifact(spark, samplePath,
+      5, "w")
+    ps.append(Seq((9999L, 9999L)).toDF("doc_id", "w"), "0")
     assert(rows(StreamingIngest.readPrioritySample(spark, samplePath, 5))
       == rows(batchEquiv))
-    // crash litter in staging is absorbed by the replacing commit
-    val litter = new java.io.File(s"$samplePath/_staging/b7/part-junk")
+    // uncommitted crash litter is overwritten by the next commit
+    val litter = new java.io.File(s"$samplePath/delta/epoch=2/part-junk")
     litter.getParentFile.mkdirs()
     java.nio.file.Files.writeString(litter.toPath, "partial")
     val c = (700 until 800).map(i => (i.toLong, 200L + i % 50))
-    StreamingIngest.processPriorityBatch(
-      c.toDF("doc_id", "w"), 7L, samplePath, 5, "w", "doc_id", 0)
+    ps.append(c.toDF("doc_id", "w"), "7")
     assert(rows(StreamingIngest.readPrioritySample(spark, samplePath, 5))
       == rows(TextAnalysis.prioritySample(
         (a ++ b ++ c).toDF("doc_id", "w"), 5, "w")))
