@@ -27,12 +27,12 @@ import org.apache.spark.sql.functions._
   * a streaming caller), so a crash after any subset of stores committed
   * is repaired by replaying the call verbatim: committed stores no-op
   * on their recorded token, stragglers commit, and only then does the
-  * facade write its own token + commit marker. The facade epoch
-  * therefore counts COMPLETED quintet appends; individual stores may
-  * run ahead transiently (mid-recovery) or independently via their own
-  * `compact()`/`retrain()` (which bump only their internal epochs —
-  * the facade reads always resolve each store's latest state, so
-  * per-store maintenance is invisible to the composition).
+  * facade write its own commit marker, which records the token. The
+  * facade epoch therefore counts COMPLETED quintet appends; individual
+  * stores may run ahead transiently (mid-recovery) or independently via
+  * their own `compact()`/`retrain()` (which bump only their internal
+  * epochs — the facade reads always resolve each store's latest state,
+  * so per-store maintenance is invisible to the composition).
   *
   * Reads: [[kept]] filters any corpus frame through all five families;
   * [[keptCorpus]] applies it to the stored corpus (the substring
@@ -83,6 +83,7 @@ class CurationDB private (val spark: SparkSession, val root: String,
   def append(batch: DataFrame, token: String): Long =
     EpochStoreKit.replayCheck(fs, root, token, epoch).getOrElse {
       val n = epoch + 1
+      EpochStoreKit.completeToken(fs, root, n - 1)
       val b = batch.select(col("doc_id").cast("long").as("doc_id"),
         col("text").cast("string").as("text"),
         col("key").cast("string").as("key"), col("embedding"))
@@ -106,14 +107,12 @@ class CurationDB private (val spark: SparkSession, val root: String,
       val (subE, fpE, fzE, mhE, smE) =
         (es(0), es(1), es(2), es(3), es(4))
       b.unpersist(false)
-      EpochStoreKit.writeToken(fs,
-        EpochStoreKit.tokenPath(root, token), n)
       // the facade marker RECORDS the member epochs this commit bound
-      // together — the time-travel map keptAt replays (on a crash
-      // replay the members no-op and return the same recorded epochs,
-      // so the rewrite is byte-identical)
-      EpochStoreKit.writeText(fs, marker(n),
-        CurationDB.memberRecord(subE, fpE, fzE, mhE, smE))
+      // together — the time-travel map keptAt replays — and the token
+      // (the EpochStore token order: its file follows at the next append)
+      EpochStoreKit.commitMarker(fs, marker(n),
+        CurationDB.memberRecord(subE, fpE, fzE, mhE, smE) + "," +
+          EpochStoreKit.tokenField(token))
       n
     }
 
@@ -175,7 +174,7 @@ class CurationDB private (val spark: SparkSession, val root: String,
           "markers written before the time-travel format only serve " +
           "latest reads"))
     val m = rec.split(",").map(_.split("=")).collect {
-      case Array(k, v) => k -> v.toLong
+      case Array(k, v) if k != "token" => k -> v.toLong
     }.toMap
     (m("sub"), m("fp"), m("fz"), m("mh"), m("sm"))
   }

@@ -21,7 +21,8 @@ import org.apache.spark.sql.graftbridge.Bridge
   *   <snapshot kind>/epoch=N/  snapshot epochs: the FULL state; delta
   *                             epochs: only the rows the append added
   *                             or changed; pruned below the snapshot
-  *   _commits/N                empty marker file — the epoch's commit point
+  *   _commits/N                marker file — the epoch's commit point;
+  *                             records the token of a token append
   *   _snapshots/N              marks epoch N as a full snapshot
   *   _tokens/<token>-<digest>  the epoch a token-carrying append committed
   * }}}
@@ -29,8 +30,9 @@ import org.apache.spark.sql.graftbridge.Bridge
   * CRASH SAFETY (single writer) — the contract every store inherits:
   *
   *  - [[commit]] writes the epoch's artifacts FIRST, in declared order
-  *    (idempotent overwrites), then the append's idempotence token, then
-  *    the commit marker, created atomically with overwrite=false.
+  *    (idempotent overwrites), then the commit marker, renamed into
+  *    place atomically and refused if it exists. The marker is the last
+  *    write; it records a token append's idempotence token.
   *    Readers resolve at the highest MARKED epoch, so unmarked litter is
   *    invisible and the retry overwrites it; a replayed commit onto a
   *    marked epoch fails loudly at the marker create.
@@ -38,20 +40,23 @@ import org.apache.spark.sql.graftbridge.Bridge
   *    LATEST-EPOCH-WINS per key (valid whenever rows are only added or
   *    relabeled, never deleted — each store documents why) or a plain
   *    union of disjoint row slices.
-  *  - [[compact]] commits the resolved state as ONE new epoch and marks
-  *    it a snapshot AFTER its commit marker: a crash between the two
-  *    leaves a committed epoch whose full content reads correctly as a
-  *    delta, and the next [[compact]] re-marks. A store whose resolution
-  *    cannot absorb a full-content delta marks before the commit instead
-  *    ([[SemanticDedupStore]]).
+  *  - [[compact]] commits the resolved state as ONE new epoch, marked a
+  *    snapshot BEFORE its commit marker (a sum or union resolution
+  *    cannot read a full state as a delta, so the mark may never trail
+  *    the commit). A mark above the committed head is a torn
+  *    compaction's: readers ignore it, the next [[compact]] re-marks
+  *    and the next delta commit at that epoch clears it.
   *  - Pruning only removes directories BELOW the latest snapshot, which
   *    readers never resolve, so an interrupted prune is finished by the
   *    next compaction's sweep.
   *  - Token appends are exactly-once ([[EpochStoreKit.replayCheck]]): a
-  *    crash before the token leaves no record and the replay recomputes;
-  *    a crash between token and marker leaves a token naming epoch+1
-  *    and the replay recomputes and commits; a crash after the marker
-  *    leaves a token naming a committed epoch and the replay is a no-op.
+  *    crash before the marker leaves no record and the replay
+  *    recomputes; once the marker lands the replay finds the token in
+  *    the head marker's record, and the next [[commit]] copies it to
+  *    the token's file under `_tokens/`. A token file therefore exists
+  *    only for an epoch that token committed: it stays valid whatever
+  *    commits or compactions run before the replay, and after any
+  *    prune of the markers.
   *
   * Every mutating filesystem operation goes through [[EpochStoreKit]],
   * whose fault boundaries let FaultSweepSpec kill each operation at
@@ -75,10 +80,10 @@ private[graft] abstract class EpochStore(val spark: SparkSession,
   /** Highest committed epoch, or -1 for a never-initialized root. */
   def epoch: Long = EpochStoreKit.maxMarked(fs, new Path(s"$root/_commits"))
 
-  /** Highest epoch whose snapshot kinds are full snapshots (0 after
-    * `init`; bumped by [[compact]]). */
+  /** Highest committed epoch whose snapshot kinds are full snapshots (0
+    * after `init`; bumped by [[compact]]). */
   def latestSnapshot: Long =
-    EpochStoreKit.maxMarked(fs, new Path(s"$root/_snapshots"))
+    EpochStoreKit.maxMarked(fs, new Path(s"$root/_snapshots"), epoch)
 
   protected def requireCommitted(): Long = {
     val e = epoch
@@ -168,28 +173,31 @@ private[graft] abstract class EpochStore(val spark: SparkSession,
 
   // ---- writes --------------------------------------------------------
 
-  /** Commit epoch `n`: `artifacts` (one per data kind, then one per
-    * snapshot kind) in order, then `token`, then the commit marker. */
+  /** Commit epoch `n`: write the head's token file, then `artifacts`
+    * (one per data kind, then one per snapshot kind) in order, then the
+    * commit marker recording `token` — always the last write. */
   protected def commit(n: Long, artifacts: Seq[DataFrame],
                        token: Option[String] = None): Unit = {
     val kinds = dataKinds.map(_._1) ++ snapshotKinds.map(_._1)
     require(artifacts.size == kinds.size,
       s"$storeName: ${artifacts.size} artifacts for kinds $kinds")
+    if (n > 0) EpochStoreKit.completeToken(fs, root, n - 1)
     kinds.zip(artifacts).foreach { case (k, df) =>
       EpochStoreKit.writeParquet(df, s"$root/$k/epoch=$n")
     }
-    token.foreach(t =>
-      EpochStoreKit.writeToken(fs, EpochStoreKit.tokenPath(root, t), n))
-    EpochStoreKit.commitMarker(fs, new Path(s"$root/_commits/$n"))
+    EpochStoreKit.commitMarker(fs, new Path(s"$root/_commits/$n"),
+      token.map(EpochStoreKit.tokenField).getOrElse(""))
   }
 
   /** Commit the delta epoch `n` of an append, free the checkpoints the
     * write was the last consumer of, and fold the chain once it spans
     * `autoCompactEpochs` deltas (0 disables; SCALE.md's measured curve
-    * sizes it). Returns `n`. */
+    * sizes it). A torn compaction's mark at `n` is cleared first (epoch
+    * 0 is never a compaction's). Returns `n`. */
   protected def commitDelta(n: Long, artifacts: Seq[DataFrame],
                             token: Option[String],
                             pinned: DataFrame*): Long = {
+    if (n > 0) EpochStoreKit.unmark(fs, new Path(s"$root/_snapshots/$n"))
     commit(n, artifacts, token)
     pinned.foreach(Bridge.unpersistCheckpoint)
     if (autoCompactEpochs > 0 && n - latestSnapshot >= autoCompactEpochs)
@@ -197,17 +205,15 @@ private[graft] abstract class EpochStore(val spark: SparkSession,
     n
   }
 
-  /** Commit the snapshot epoch `n`, free the pinned checkpoints, then
-    * mark it a snapshot. */
+  /** Mark `n` a snapshot, commit it, and free the pinned checkpoints. */
   protected def commitSnapshot(n: Long, artifacts: Seq[DataFrame],
                                pinned: DataFrame*): Unit = {
+    markSnapshot(n)
     commit(n, artifacts)
     pinned.foreach(Bridge.unpersistCheckpoint)
-    markSnapshot(n)
   }
 
-  /** The post-commit snapshot marker (idempotent: a torn window
-    * re-marks). */
+  /** The pre-commit snapshot mark (idempotent: a retry re-marks). */
   protected def markSnapshot(n: Long): Unit =
     EpochStoreKit.markFile(fs, new Path(s"$root/_snapshots/$n"))
 

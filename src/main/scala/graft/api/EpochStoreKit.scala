@@ -78,11 +78,16 @@ private[graft] object EpochStoreKit {
   // ---- idempotence tokens (the streaming bridge) --------------------
   //
   // append(batch, token) is exactly-once under Structured Streaming's
-  // replay contract: the token file (content = the epoch it committed)
-  // lands between an epoch's artifacts and its commit marker — the
-  // crash windows are argued once in EpochStore's contract.
+  // replay contract: the commit marker's record names the token, and the
+  // next commit writes the token file (content = the epoch it committed)
+  // — the crash windows are argued once in EpochStore's contract.
 
-  def tokenPath(root: String, token: String): Path = {
+  def tokenPath(root: String, token: String): Path =
+    new Path(s"$root/_tokens/${tokenName(token)}")
+
+  /** The token's file name under `_tokens/`, which the commit marker's
+    * record also carries. */
+  def tokenName(token: String): String = {
     val safe = sanitizeToken(token)
     // sanitization alone is not injective ("a/b" and "a_b" collide, and a
     // collision makes replayCheck treat a NEW append as a committed replay
@@ -91,8 +96,11 @@ private[graft] object EpochStoreKit {
     val digest = java.security.MessageDigest.getInstance("MD5")
       .digest(token.getBytes("UTF-8")).take(8)
       .map(b => f"${b & 0xff}%02x").mkString
-    new Path(s"$root/_tokens/$safe-$digest")
+    s"$safe-$digest"
   }
+
+  /** The marker-record field naming the token an epoch committed. */
+  def tokenField(token: String): String = s"token=${tokenName(token)}"
 
   private def sanitizeToken(token: String): String =
     token.map(c =>
@@ -141,21 +149,40 @@ private[graft] object EpochStoreKit {
       } finally in.close()
     }
 
+  /** The token file name recorded in epoch `e`'s commit marker, if the
+    * epoch was committed by a token append. */
+  private def recordedToken(fs: FileSystem, root: String,
+                            e: Long): Option[String] =
+    readText(fs, new Path(s"$root/_commits/$e")).toSeq
+      .flatMap(_.split(",")).find(_.startsWith("token="))
+      .map(_.stripPrefix("token="))
+
   /** The shared replay protocol for token-carrying appends: returns
     * `Some(epoch)` when `token` already committed (the caller no-ops),
-    * `None` when the append must (re-)run — after checking that a torn
-    * token (recorded but uncommitted) names exactly the next epoch. */
+    * `None` when the append must (re-)run. A token file only exists for
+    * an epoch that token committed; the head epoch's token has no file
+    * yet and is read off the head marker's record. */
   def replayCheck(fs: FileSystem, root: String, token: String,
                   currentEpoch: Long): Option[Long] =
     readToken(fs, tokenPath(root, token)) match {
-      case Some(n) if n <= currentEpoch => Some(n)
       case Some(n) =>
-        require(n == currentEpoch + 1,
+        require(n <= currentEpoch,
           s"token '$token' at $root recorded epoch $n but the store " +
             s"is at $currentEpoch — the token file is corrupt or the " +
             "store was rolled back under it")
-        None
-      case None => None
+        Some(n)
+      case None =>
+        Some(currentEpoch).filter(e => e >= 0 &&
+          recordedToken(fs, root, e).contains(tokenName(token)))
+    }
+
+  /** Write the token file of the head epoch `e`, if a token committed
+    * it — run before the next epoch commits, so only the head ever
+    * lacks its file. */
+  def completeToken(fs: FileSystem, root: String, e: Long): Unit =
+    recordedToken(fs, root, e).foreach { name =>
+      val p = new Path(s"$root/_tokens/$name")
+      if (!fs.exists(p)) writeToken(fs, p, e)
     }
 
   /** Highest numeric child of `dir` (commit/snapshot marker dirs) not
@@ -169,18 +196,24 @@ private[graft] object EpochStoreKit {
       .filter(_ <= upTo)
       .foldLeft(-1L)(math.max)
 
-  /** Create an empty marker file atomically (overwrite=false): the
-    * commit point. A second writer replaying the same epoch fails HERE,
-    * after which its (identical-input) artifact overwrites have harmed
-    * nothing. */
-  def commitMarker(fs: FileSystem, marker: Path): Unit = {
+  /** Create the commit marker carrying `record`: the commit point. The
+    * record is written to a hidden temp file that is then renamed onto
+    * the marker, so a crash leaves either no marker or the whole record.
+    * A second writer replaying the same epoch fails HERE, after which
+    * its (identical-input) artifact overwrites have harmed nothing. */
+  def commitMarker(fs: FileSystem, marker: Path,
+                   record: String = ""): Unit = {
     boundary(marker.toString)
     fs.mkdirs(marker.getParent)
-    val out = fs.create(marker, false)
+    val tmp = new Path(marker.getParent, s".${marker.getName}.tmp")
+    val out = fs.create(tmp, true)
+    out.write(record.getBytes("UTF-8"))
     out.close()
+    require(!fs.exists(marker) && fs.rename(tmp, marker),
+      s"commit marker $marker already exists")
   }
 
-  /** Idempotent marker create (snapshot marks, compact sentinels):
+  /** Idempotent marker create (snapshot marks):
     * unlike [[commitMarker]], an existing file is fine — re-marking
     * after a torn window must converge, not fail. */
   def markFile(fs: FileSystem, path: Path): Unit = {

@@ -4,6 +4,7 @@ import graft.operators.{Ckpt, Clustering, Dedup}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** PERSISTED incremental semantic-dedup store — the deployment
   * packaging of [[graft.operators.Dedup.extendSemanticDeduped]]
@@ -42,23 +43,16 @@ import org.apache.spark.sql.functions._
   *   _trainmass/T        the full-corpus assignment mass at train time
   *                       (one ASCII long) — survives compaction pruning
   *                       so staleness stays train-relative
-  *   _compacts/N         sentinel marking epoch N a trainer-free
-  *                       [[compact]] snapshot (full asg+comp under the
-  *                       SAME frozen centroids)
   * }}}
   *
   * A COMMITTED epoch is a snapshot iff it carries a `centroids/epoch=N`
-  * directory (init/[[retrain]]) or a `_compacts/N` sentinel
-  * ([[compact]]) — no post-commit snapshot marker. This is deliberate:
-  * assignment resolution here is a plain union over disjoint vec_id
-  * slices, so the [[SubstringDedupStore]] trick (a
-  * committed-but-unmarked snapshot reads correctly as a full-content
-  * delta under latest-wins) does NOT carry over — a full assignment
-  * resolved as a delta would duplicate every vec_id. Deriving
-  * snapshot-ness from artifacts written BEFORE the commit marker
-  * removes the torn window entirely: either the marker exists and the
-  * epoch is a complete snapshot, or it doesn't and the litter is
-  * invisible (and swept by the next [[append]]).
+  * directory (init/[[retrain]]) or the core's `_snapshots/N` mark
+  * ([[compact]]). Both are written BEFORE the commit marker —
+  * assignment resolution is a plain union over disjoint vec_id slices,
+  * so a full assignment read as a delta would duplicate every vec_id:
+  * either the marker exists and the epoch is a complete snapshot, or it
+  * doesn't and the litter is invisible (and cleared before the epoch
+  * number is reused).
   *
   * SNAPSHOT ≠ TRAIN GENERATION: [[compact]] bounds read-side
   * resolution (the asg union fan-in and the comp latest-wins window)
@@ -82,9 +76,9 @@ import org.apache.spark.sql.functions._
   * snapshot; older epochs were pruned and fail loudly.
   *
   * Crash safety and the commit/replay sequence are the [[EpochStore]]
-  * contract, with the snapshot rule above in place of its post-commit
-  * marker. Appended vec_ids must be DISJOINT from every stored id
-  * (checked, fails loudly). Zero-norm embeddings are unassignable and therefore
+  * contract, with the centroids dir as a train epoch's snapshot mark.
+  * Appended vec_ids must be DISJOINT from every stored id (checked,
+  * fails loudly). Zero-norm embeddings are unassignable and therefore
   * never pair — they survive [[kept]] by construction, matching
   * [[graft.operators.Dedup.semanticDeduped]].
   *
@@ -121,17 +115,8 @@ class SemanticDedupStore private (spark: SparkSession, root: String,
   /** Highest full-assignment snapshot epoch — the resolution base for
     * asg/comp reads: the latest committed TRAIN epoch or trainer-free
     * [[compact]] epoch, whichever is higher. */
-  override def latestSnapshot: Long = {
-    val e = epoch
-    val dir = new Path(s"$root/_compacts")
-    val compacts =
-      if (e < 0 || !fs.exists(dir)) -1L
-      else fs.listStatus(dir).map(_.getPath.getName)
-        .flatMap(n => scala.util.Try(n.toLong).toOption)
-        .filter(_ <= e) // sentinel litter above the committed head
-        .foldLeft(-1L)(math.max)
-    math.max(latestTrain, compacts)
-  }
+  override def latestSnapshot: Long =
+    math.max(latestTrain, super.latestSnapshot)
 
   private def vecsAt(e: Long): DataFrame = dataAt("vecs", e)
 
@@ -242,11 +227,10 @@ class SemanticDedupStore private (spark: SparkSession, root: String,
       comp, batchAsg, b)
   }
 
-  /** Torn-retrain/torn-compact litter at the still-uncommitted epoch
-    * `n`: a crashed retrain may have left a centroids dir (+ trainmass
-    * file), a crashed compact its `_compacts` sentinel. Once a commit
-    * at `n` lands, that litter would falsely read as a snapshot — a
-    * trainer-free commit would promote never-used centroids to
+  /** Torn-retrain litter at the still-uncommitted epoch `n`: a crashed
+    * retrain may have left a centroids dir (+ trainmass file). Once a
+    * commit at `n` lands, that litter would falsely read as a snapshot —
+    * a trainer-free commit would promote never-used centroids to
     * [[latestTrain]] (later appends would assign against a generation
     * the stored pair graph never saw) and truncate assignment
     * resolution — so appends and compactions clear it before their
@@ -254,8 +238,8 @@ class SemanticDedupStore private (spark: SparkSession, root: String,
   private def clearLitter(n: Long): Unit = {
     val cdir = new Path(s"$root/centroids/epoch=$n")
     if (fs.exists(cdir)) fs.delete(cdir, true)
-    Seq(new Path(s"$root/_compacts/$n"), new Path(s"$root/_trainmass/$n"))
-      .foreach(p => if (fs.exists(p)) fs.delete(p, false))
+    val mass = new Path(s"$root/_trainmass/$n")
+    if (fs.exists(mass)) fs.delete(mass, false)
   }
 
   /** Train centroids on `all`, and commit its full assignment + closure
@@ -275,25 +259,17 @@ class SemanticDedupStore private (spark: SparkSession, root: String,
     Clustering.saveCentroids(spark, cents, s"$root/centroids/epoch=$n")
     EpochStoreKit.writeToken(fs, new Path(s"$root/_trainmass/$n"),
       asg.count())
-    // the epoch write is the last consumer of the pinned frames (§5)
-    commitSnapshot(n, Seq(vecs, asg, comp), comp, asg, all)
+    // the centroids dir is this snapshot's mark; the epoch write is the
+    // last consumer of the pinned frames (§5)
+    commit(n, Seq(vecs, asg, comp))
+    Seq(comp, asg, all).foreach(Bridge.unpersistCheckpoint)
   }
-
-  /** Snapshot-ness derives from artifacts written before the commit
-    * marker (the centroids dir, the `_compacts` sentinel): no
-    * post-commit marker. */
-  override protected def markSnapshot(n: Long): Unit = ()
 
   /** [[compact]] is trainer-free: it rewrites the resolved asg + comp
     * under the SAME frozen centroids (sound because extension under
-    * them is append-monotone) and leaves [[staleFrac]] unchanged. Its
-    * `_compacts` sentinel is written BEFORE the commit marker, so
-    * snapshot-ness stays atomic with the commit and there is no torn
-    * commit-then-mark window. */
-  override protected def beforeCompactCommit(n: Long): Unit = {
+    * them is append-monotone) and leaves [[staleFrac]] unchanged. */
+  override protected def beforeCompactCommit(n: Long): Unit =
     clearLitter(n)
-    EpochStoreKit.markFile(fs, new Path(s"$root/_compacts/$n"))
-  }
 
   /** Re-train the centroids on the FULL stored corpus, rewrite the
     * assignment + closure as one new SNAPSHOT epoch (empty vecs delta),
@@ -313,14 +289,13 @@ class SemanticDedupStore private (spark: SparkSession, root: String,
     n
   }
 
-  /** Prune below the new snapshot: asg/comp epochs and `_compacts`
-    * sentinels are absorbed, but the TRAIN-generation artifacts
+  /** Prune below the new snapshot: asg/comp epochs and snapshot marks
+    * are absorbed, but the TRAIN-generation artifacts
     * (centroids dir, `_trainmass`) survive down to [[latestTrain]] —
     * after a [[compact]] the frozen generation is still in use below
     * the snapshot; after a [[retrain]] latestTrain IS the snapshot. */
   override protected def pruneBelow(snap: Long): Unit = {
-    pruneKinds(Seq("asg", "comp"), snap)
-    pruneMarkers("_compacts", snap)
+    super.pruneBelow(snap)
     val t = latestTrain
     pruneKinds(Seq("centroids"), t)
     pruneMarkers("_trainmass", t)

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import graft.api.{EpochStore, EpochStoreKit}
+import graft.api.EpochStore
 import graft.operators.{Pipeline, Retrieval, Sketches, SubstringIndex,
   TextAnalysis}
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -24,15 +23,11 @@ import org.apache.spark.sql.types.StructType
   * `_snapshots` and `_tokens`. The one snapshot kind resolves as
   * `merge(union of deltas from the latest snapshot)`; [[compact]]
   * commits exactly that as a new snapshot epoch, so a compaction always
-  * applies the merge the reader uses. Appends are exactly-once per
-  * token (the stream's batch id): a replayed id no-ops even after
-  * compaction pruned its delta.
-  *
-  * Sum and union merges cannot read a full-state epoch as a delta, so
-  * snapshot marks land BEFORE the commit marker (epoch 0, whose delta is
-  * the whole state, and [[compact]]); a mark above the committed head is
-  * a torn compaction's, ignored by readers and cleared by the next
-  * append before it reuses that epoch number. Single writer per root. */
+  * applies the merge the reader uses, and prunes the deltas and commit
+  * markers below it. Appends are exactly-once per token (the stream's
+  * batch id): a replayed id no-ops even after compaction pruned its
+  * delta. `_tokens` keeps one small file per batch id ever committed —
+  * it is probed by name, never listed. Single writer per root. */
 sealed abstract class LiveArtifact(spark: SparkSession, root: String)
     extends EpochStore(spark, root, autoCompactEpochs = 0) {
 
@@ -57,20 +52,21 @@ sealed abstract class LiveArtifact(spark: SparkSession, root: String)
   }
 
   /** Commit `batch`'s delta as the next epoch, exactly once per
-    * `token`; returns the epoch (a replay returns the original one). */
+    * `token`; returns the epoch (a replay returns the original one).
+    * The first delta is the whole state, so epoch 0 is a snapshot. */
   def append(batch: DataFrame, token: String): Long = replayOr(token) {
     val n = epoch + 1
     if (n == 0) markSnapshot(0)
-    else EpochStoreKit.unmark(fs, new Path(s"$root/_snapshots/$n"))
-    commit(n, Seq(build(batch)), Some(token))
-    n
+    commitDelta(n, Seq(build(batch)), Some(token))
   }
 
-  override def latestSnapshot: Long =
-    EpochStoreKit.maxMarked(fs, new Path(s"$root/_snapshots"), epoch)
-
-  override protected def beforeCompactCommit(n: Long): Unit =
-    markSnapshot(n)
+  /** Compaction also prunes the commit markers it absorbed, so listing
+    * `_commits` costs the epochs since the last compaction, not every
+    * batch ever ingested. */
+  override protected def pruneBelow(snap: Long): Unit = {
+    super.pruneBelow(snap)
+    pruneMarkers("_commits", snap)
+  }
 }
 
 /** Count-min frequency sketch ([[Sketches.countMin]]): cellwise sum. */

@@ -101,6 +101,48 @@ class FaultSweepSpec extends SparkSpec {
     }
   }
 
+  /** Cross-op sweep: kill `torn` at each of its write boundaries on a
+    * fresh copy of the store, run `recover` (a DIFFERENT operation
+    * sequence than the same-op retry), and require the content of the
+    * never-faulted `torn` + `recover` run. */
+  private def crossOp(name: String, build: String => Unit,
+                      torn: String => Unit, recover: String => Unit,
+                      read: String => Any): Unit = {
+    val baseDir = Files.createTempDirectory(s"graft-fault-$name").toString
+    val pristine = s"$baseDir/pristine"
+    build(pristine)
+    val expectRoot = s"$baseDir/expect"
+    copyDir(pristine, expectRoot)
+    torn(expectRoot)
+    recover(expectRoot)
+    val expect = read(expectRoot)
+    val cntRoot = s"$baseDir/count"
+    copyDir(pristine, cntRoot)
+    var count = 0
+    EpochStoreKit.installFaultHook(cntRoot, _ => count += 1)
+    try torn(cntRoot)
+    finally EpochStoreKit.clearFaultHook(cntRoot)
+    info(s"$name: ${count} write boundaries swept")
+    for (k <- 1 to count) {
+      val d = s"$baseDir/k$k"
+      copyDir(pristine, d)
+      var fired = 0
+      var at = ""
+      EpochStoreKit.installFaultHook(d, p => {
+        fired += 1
+        if (fired == k) { at = p; throw new FaultInjected(p) }
+      })
+      val died =
+        try { torn(d); false }
+        catch { case _: FaultInjected => true }
+        finally EpochStoreKit.clearFaultHook(d)
+      assert(died, s"$name k=$k: boundary never fired")
+      recover(d)
+      assert(read(d) == expect,
+        s"$name k=$k (killed at $at): recovery misread")
+    }
+  }
+
   // ---- fixtures (minimal corpora exercising every artifact kind) ----
 
   private def subBase = Seq(
@@ -259,41 +301,45 @@ class FaultSweepSpec extends SparkSpec {
       // reaches an append landing on a torn compaction's pre-commit
       // snapshot mark — a sum merge would then read the append's delta
       // as the whole state
-      val next = (r: String) => {
+      crossOp(s"$name-xop", build2, compact,
+        r => { artifact(r).append(laBatch(3), "3"); () }, read)
+    }
+  }
+
+  test("a token append torn at every boundary, then compact(), then the " +
+    "replay of the same token: the batch lands exactly once (live " +
+    "artifacts and a dedup store share the token protocol)") {
+    // the compaction takes the epoch number the torn append was about
+    // to commit — a token that merely named that epoch would read the
+    // compaction's commit as its own and drop the batch on replay
+    val families: Seq[(String, String => LiveArtifact)] = Seq(
+      "la-cms" -> (r => new CountMinArtifact(spark, r, "text", 3, 16)),
+      "la-ps" -> (r => new PrioritySampleArtifact(spark, r, 5, "w")))
+    for ((name, artifact) <- families) {
+      val append3 = (r: String) => {
         artifact(r).append(laBatch(3), "3"); ()
       }
-      val baseDir = Files
-        .createTempDirectory(s"graft-fault-$name-xop").toString
-      val pristine = s"$baseDir/pristine"
-      build2(pristine)
-      val expectRoot = s"$baseDir/expect"
-      copyDir(pristine, expectRoot)
-      next(expectRoot)
-      val expect = read(expectRoot)
-      val cntRoot = s"$baseDir/count"
-      copyDir(pristine, cntRoot)
-      var count = 0
-      EpochStoreKit.installFaultHook(cntRoot, _ => count += 1)
-      try compact(cntRoot)
-      finally EpochStoreKit.clearFaultHook(cntRoot)
-      for (k <- 1 to count) {
-        val d = s"$baseDir/k$k"
-        copyDir(pristine, d)
-        var fired = 0
-        EpochStoreKit.installFaultHook(d, p => {
-          fired += 1
-          if (fired == k) throw new FaultInjected(p)
-        })
-        val died =
-          try { compact(d); false }
-          catch { case _: FaultInjected => true }
-          finally EpochStoreKit.clearFaultHook(d)
-        assert(died, s"$name-xop k=$k: boundary never fired")
-        next(d)
-        assert(read(d) == expect,
-          s"$name-xop k=$k: the append after the torn compact misread")
-      }
+      crossOp(s"$name-xop-append",
+        r => {
+          val a = artifact(r)
+          a.append(laBatch(1), "1"); a.append(laBatch(2), "2"); ()
+        },
+        append3,
+        r => { artifact(r).compact(); append3(r) },
+        r => rowSet(artifact(r).read))
     }
+    val fpBatch2 = Seq((20L, H ^ 2L), (21L, 0x2468ACE013L))
+      .toDF("_id", "simhash")
+    val append2 = (r: String) => {
+      FingerprintStore.open(spark, r).append(fpBatch2, "b2"); ()
+    }
+    crossOp("fp-xop-append",
+      r => {
+        FingerprintStore.init(spark, r, fpBase).append(fpBatch, "b1"); ()
+      },
+      append2,
+      r => { FingerprintStore.open(spark, r).compact(); append2(r) },
+      fpRead)
   }
 
   test("CurationDB composed append: kill at EVERY write boundary " +

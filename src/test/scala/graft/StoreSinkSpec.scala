@@ -86,16 +86,17 @@ class StoreSinkSpec extends SparkSpec {
     assert(ids(store.kept(allIds)) == kept1)
 
     // crash window: kill exactly at the commit-marker create for the
-    // next batch — artifacts + token are on disk, the epoch is NOT
-    // committed, readers see the prior state
+    // next batch — the artifacts are on disk, the epoch is NOT
+    // committed (the marker would record the token), readers see the
+    // prior state
     EpochStoreKit.installFaultHook(root, p =>
       if (p.contains("/_commits/")) throw new RuntimeException("boom"))
     intercept[RuntimeException] { sink(b2, 1L) }
     EpochStoreKit.clearFaultHook(root)
     assert(store.epoch == 1L)
     assert(ids(store.kept(allIds)) == kept1)
-    // the replay (same batchId) finds the torn token naming epoch 2,
-    // recomputes over unchanged inputs, and commits exactly once
+    // the replay (same batchId) finds no token, recomputes over
+    // unchanged inputs, and commits exactly once
     sink(b2, 1L)
     assert(store.epoch == 2L)
     val allIds2 = (b0 unionByName b1 unionByName b2)

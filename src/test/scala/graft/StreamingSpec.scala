@@ -910,6 +910,9 @@ class StreamingSpec extends SparkSpec {
     assert(post.compact() == 3L)
     assert(!exists(s"$pPath/delta/epoch=0"))
     assert(exists(s"$pPath/delta/epoch=3"))
+    // the absorbed commit markers go too: listing `_commits` costs the
+    // epochs since the last compaction
+    assert(!exists(s"$pPath/_commits/2") && exists(s"$pPath/_commits/3"))
     assert(post.latestSnapshot == 3L)
     assert(prows(StreamingIngest.readPostings(spark, pPath)) == want)
     // the critical replay property: batch 1's delta no longer exists,
