@@ -82,8 +82,12 @@ private[graft] abstract class EpochStore(val spark: SparkSession,
 
   /** Highest committed epoch whose snapshot kinds are full snapshots (0
     * after `init`; bumped by [[compact]]). */
-  def latestSnapshot: Long =
-    EpochStoreKit.maxMarked(fs, new Path(s"$root/_snapshots"), epoch)
+  def latestSnapshot: Long = latestSnapshotAt(epoch)
+
+  /** [[latestSnapshot]] under the committed `head` the caller already
+    * holds: one `_snapshots` listing, no `_commits` listing. */
+  protected def latestSnapshotAt(head: Long): Long =
+    EpochStoreKit.maxMarked(fs, new Path(s"$root/_snapshots"), head)
 
   protected def requireCommitted(): Long = {
     val e = epoch
@@ -97,10 +101,12 @@ private[graft] abstract class EpochStore(val spark: SparkSession,
       fs.exists(new Path(s"$root/_commits/$e")),
       s"epoch $e not committed at $root")
 
-  /** Snapshot base for reads at epoch `e` — fails loudly when `e`
-    * predates the latest compaction (its deltas were pruned). */
-  protected def snapshotFor(e: Long): Long = {
-    val s = latestSnapshot
+  /** Snapshot base for reads at epoch `e` under the committed `head`
+    * (listed here unless the caller passes the one it holds) — fails
+    * loudly when `e` predates the latest compaction (its deltas were
+    * pruned). */
+  protected def snapshotFor(e: Long, head: Long = epoch): Long = {
+    val s = latestSnapshotAt(head)
     require(s >= 0 && s <= e,
       s"epoch $e at $root is below the latest snapshot $s — its delta " +
         "epochs were pruned by compaction; time-travel only reaches " +
@@ -126,10 +132,11 @@ private[graft] abstract class EpochStore(val spark: SparkSession,
       dataKinds.find(_._1 == kind).get._2)
 
   /** Snapshot kind `kind` at `e` as the plain union of disjoint slices
-    * from the governing snapshot. */
-  protected def unionAt(kind: String, e: Long,
-                        cols: Seq[String]): DataFrame =
-    EpochStoreKit.unionEpochs(spark, root, kind, snapshotFor(e), e, cols)
+    * from the governing snapshot, under the committed `head`. */
+  protected def unionAt(kind: String, e: Long, cols: Seq[String],
+                        head: Long = epoch): DataFrame =
+    EpochStoreKit.unionEpochs(spark, root, kind, snapshotFor(e, head), e,
+      cols)
 
   /** Snapshot kind `kind` at `e`, latest-epoch-wins per `keys`. */
   protected def latestWinsAt(kind: String, e: Long, keys: Seq[String],
@@ -200,7 +207,7 @@ private[graft] abstract class EpochStore(val spark: SparkSession,
     if (n > 0) EpochStoreKit.unmark(fs, new Path(s"$root/_snapshots/$n"))
     commit(n, artifacts, token)
     pinned.foreach(Bridge.unpersistCheckpoint)
-    if (autoCompactEpochs > 0 && n - latestSnapshot >= autoCompactEpochs)
+    if (autoCompactEpochs > 0 && n - latestSnapshotAt(n) >= autoCompactEpochs)
       compact()
     n
   }
@@ -221,9 +228,13 @@ private[graft] abstract class EpochStore(val spark: SparkSession,
   protected def beforeCompactCommit(n: Long): Unit = ()
 
   /** The exactly-once wrapper: a token that already committed returns
-    * its epoch; otherwise `append` runs. */
-  protected def replayOr(token: String)(append: => Long): Long =
-    EpochStoreKit.replayCheck(fs, root, token, epoch).getOrElse(append)
+    * its epoch; otherwise `append` runs on the committed head this
+    * check listed (-1 for a never-initialized root). */
+  protected def replayOr(token: String)(append: Long => Long): Long = {
+    val head = epoch
+    EpochStoreKit.replayCheck(fs, root, token, head)
+      .getOrElse(append(head))
+  }
 
   /** Rewrite the resolved state as ONE new snapshot epoch — an empty
     * slice for each data kind, the eagerly resolved state for each
@@ -233,7 +244,7 @@ private[graft] abstract class EpochStore(val spark: SparkSession,
     * prune. Returns the snapshot epoch. */
   def compact(): Long = {
     val e = requireCommitted()
-    if (latestSnapshot == e) { pruneBelow(e); return e }
+    if (latestSnapshotAt(e) == e) { pruneBelow(e); return e }
     val n = e + 1
     val empties = dataKinds.map { case (k, cols) =>
       spark.read.parquet(s"$root/$k/epoch=0").select(cols.map(col): _*)

@@ -43,14 +43,30 @@ private[graft] object EpochStoreKit {
     * silently exempt every prune delete from the sweep). Called BEFORE
     * the mutation, so a throwing hook simulates a crash that prevented
     * it. */
-  private[graft] def boundary(path: String): Unit =
-    if (!faultHooks.isEmpty) {
-      val it = faultHooks.entrySet().iterator()
+  private[graft] def boundary(path: String): Unit = fire(faultHooks, path)
+
+  private def fire(hooks: java.util.concurrent.ConcurrentHashMap[
+      String, String => Unit], path: String): Unit =
+    if (!hooks.isEmpty) {
+      val it = hooks.entrySet().iterator()
       while (it.hasNext) {
         val en = it.next()
         if (path.contains(en.getKey)) en.getValue.apply(path)
       }
     }
+
+  // Marker-directory listings ([[maxMarked]]) announce themselves the
+  // same way (test-only, read-side): a spec counts how often an
+  // operation lists `_commits`.
+  private val listingProbes =
+    new java.util.concurrent.ConcurrentHashMap[String, String => Unit]()
+
+  private[graft] def installListingProbe(rootPrefix: String,
+                                         probe: String => Unit): Unit =
+    listingProbes.put(rootPrefix, probe)
+
+  private[graft] def clearListingProbe(rootPrefix: String): Unit =
+    listingProbes.remove(rootPrefix)
 
   /** True when a fault hook overlaps `root` (the hook's key is inside
     * the root or vice versa) — the fault sweeps enumerate write
@@ -191,10 +207,13 @@ private[graft] object EpochStoreKit {
   def maxMarked(fs: FileSystem, dir: Path,
                 upTo: Long = Long.MaxValue): Long =
     if (!fs.exists(dir)) -1L
-    else fs.listStatus(dir).map(_.getPath.getName)
-      .flatMap(n => scala.util.Try(n.toLong).toOption)
-      .filter(_ <= upTo)
-      .foldLeft(-1L)(math.max)
+    else {
+      fire(listingProbes, dir.toString)
+      fs.listStatus(dir).map(_.getPath.getName)
+        .flatMap(n => scala.util.Try(n.toLong).toOption)
+        .filter(_ <= upTo)
+        .foldLeft(-1L)(math.max)
+    }
 
   /** Create the commit marker carrying `record`: the commit point. The
     * record is written to a hidden temp file that is then renamed onto

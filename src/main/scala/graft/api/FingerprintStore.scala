@@ -86,7 +86,7 @@ class FingerprintStore private (spark: SparkSession, root: String,
     * Streaming `foreachBatch` bridge): a replayed call with the same
     * `token` is a NO-OP returning the original epoch. */
   def append(batchHashes: DataFrame, token: String): Long =
-    replayOr(token)(appendImpl(batchHashes, Some(token)))
+    replayOr(token)(_ => appendImpl(batchHashes, Some(token)))
 
   private def appendImpl(batchHashes: DataFrame,
                          token: Option[String]): Long = {

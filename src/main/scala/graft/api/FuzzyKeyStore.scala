@@ -101,7 +101,7 @@ class FuzzyKeyStore private (spark: SparkSession, root: String,
     * Streaming `foreachBatch` bridge): a replayed call with the same
     * `token` is a NO-OP returning the original epoch. */
   def append(batch: DataFrame, token: String): Long =
-    replayOr(token)(appendImpl(batch, Some(token)))
+    replayOr(token)(_ => appendImpl(batch, Some(token)))
 
   private def appendImpl(batch: DataFrame,
                          token: Option[String]): Long = {

@@ -105,7 +105,7 @@ class MinHashDedupStore private (spark: SparkSession, root: String,
     * `token` is a NO-OP returning the original epoch. */
   def append(batch: DataFrame, idCol: String, textCol: String,
              token: String): Long =
-    replayOr(token)(appendImpl(batch, idCol, textCol, Some(token)))
+    replayOr(token)(_ => appendImpl(batch, idCol, textCol, Some(token)))
 
   private def appendImpl(batch: DataFrame, idCol: String,
                          textCol: String,

@@ -100,8 +100,9 @@ class SemanticDedupStore private (spark: SparkSession, root: String,
     * bumped by every [[retrain]]; NOT bumped by [[compact]]). Centroid
     * litter at an uncommitted epoch is invisible (the `<= epoch`
     * filter). */
-  def latestTrain: Long = {
-    val e = epoch
+  def latestTrain: Long = latestTrainAt(epoch)
+
+  private def latestTrainAt(e: Long): Long = {
     val dir = new Path(s"$root/centroids")
     if (e < 0 || !fs.exists(dir)) -1L
     else fs.listStatus(dir).map(_.getPath.getName)
@@ -115,8 +116,8 @@ class SemanticDedupStore private (spark: SparkSession, root: String,
   /** Highest full-assignment snapshot epoch — the resolution base for
     * asg/comp reads: the latest committed TRAIN epoch or trainer-free
     * [[compact]] epoch, whichever is higher. */
-  override def latestSnapshot: Long =
-    math.max(latestTrain, super.latestSnapshot)
+  override protected def latestSnapshotAt(head: Long): Long =
+    math.max(latestTrainAt(head), super.latestSnapshotAt(head))
 
   private def vecsAt(e: Long): DataFrame = dataAt("vecs", e)
 
@@ -184,7 +185,7 @@ class SemanticDedupStore private (spark: SparkSession, root: String,
     * Streaming `foreachBatch` bridge): a replayed call with the same
     * `token` is a NO-OP returning the original epoch. */
   def append(batch: DataFrame, token: String): Long =
-    replayOr(token)(appendImpl(batch, Some(token)))
+    replayOr(token)(_ => appendImpl(batch, Some(token)))
 
   private def appendImpl(batch: DataFrame,
                          token: Option[String]): Long = {

@@ -106,7 +106,7 @@ class SubstringDedupStore private (spark: SparkSession, root: String,
     * a replayed call with the same `token` (e.g. the stream's batchId)
     * is a NO-OP returning the original epoch. */
   def append(batch: DataFrame, token: String): Long =
-    replayOr(token)(appendImpl(batch, Some(token)))
+    replayOr(token)(_ => appendImpl(batch, Some(token)))
 
   private def appendImpl(batch: DataFrame,
                          token: Option[String]): Long = {

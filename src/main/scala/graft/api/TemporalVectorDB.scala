@@ -1,6 +1,6 @@
 package graft.api
 
-import graft.model.Defaults
+import graft.model.{Defaults, Schemas}
 import graft.operators._
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.functions._
@@ -20,16 +20,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - batch APIs are genuinely set-based (the reference's batch_reconstruct
   *    loops one-at-a-time, reconstruction_service.py:176-183).
   *
-  * Single-item convenience methods (`getVersion` etc.) run the same set-based
-  * jobs with a 1-row target; results come back as DataFrames so callers
-  * compose further without leaving the engine.
+  * Single-content reads (`getVersion`, `getVersionRange`,
+  * `getLatestVersion`, `getVersionAtTime`) run the set-based fold on one
+  * content's rows, gathered by one scan job, and return computed local
+  * frames; single-query searches rank the pinned index with one bounded
+  * top-k. Results come back as DataFrames so callers compose further
+  * without leaving the engine.
   */
 class TemporalVectorDB(
     val spark: SparkSession,
     val path: String,
     val cfg: VersionStore.Config = VersionStore.Config()) {
 
-  def versions: DataFrame = spark.read.parquet(path)
+  /** The store relation, read with the declared [[Schemas.versions]] —
+    * the schema every writer of the store produces — so resolving it
+    * lists the store's files but runs no footer schema-inference job. */
+  def versions: DataFrame = spark.read.schema(Schemas.versions).parquet(path)
 
   private var basesCache: Option[DataFrame] = None
   private var latestCache: Option[DataFrame] = None
@@ -570,10 +576,13 @@ class TemporalVectorDB(
   }
 
   /** Reconstruct one version; empty result if the target precedes the
-    * earliest base (the reference raises there, delta_computer.py:116-119). */
+    * earliest base (the reference raises there, delta_computer.py:116-119).
+    * Computed before it returns, in one Spark job
+    * ([[Reconstruction.reconstructOne]]): the returned frame is a local
+    * relation holding the values, so it stays valid, unchanged, after any
+    * later [[addVersions]]. */
   def getVersion(contentId: String, seq: Int): DataFrame =
-    batchReconstruct(spark.createDataFrame(
-      Seq((contentId, seq))).toDF("content_id", "seq"))
+    Reconstruction.reconstructOne(versions, contentId, Seq(seq))
 
   /** Parse "{content}_v{seq}" ids (reference temporal_database.py:197-220). */
   def getVersionById(versionId: String): DataFrame = {
@@ -583,54 +592,63 @@ class TemporalVectorDB(
       versionId.substring(idx + 2).toInt)
   }
 
-  /** Latest version of one content (reference :222-236): one scan,
-    * filtered to the content. */
+  /** Latest version of one content (reference :222-236): one scan job,
+    * filtered to the content ([[Reconstruction.latestOne]]). Computed
+    * before it returns; the returned local frame keeps its values after
+    * later [[addVersions]] (call again for the new latest). */
   def getLatestVersion(contentId: String): DataFrame =
-    Reconstruction.latest(versions.where(col("content_id") === contentId))
+    Reconstruction.latestOne(versions, contentId)
 
   /** As-of read: greatest seq with ts <= t (reference :238-253; `<=`
     * semantics core/data_structures.py:213-227), folded from every row at
-    * or before that seq. One scan, filtered to the content. */
+    * or before that seq. One scan job, filtered to the content; computed
+    * before it returns, and valid unchanged after later [[addVersions]]. */
   def getVersionAtTime(contentId: String, t: java.sql.Timestamp): DataFrame =
-    Reconstruction.latest(versions.where(col("content_id") === contentId),
+    Reconstruction.latestOne(versions, contentId,
       visible = col("ts") <= lit(t))
 
-  /** All versions in [fromSeq, toSeq] reconstructed in ONE set-based job
-    * (reference get_version_range loops, :255-272). */
+  /** All versions in [fromSeq, toSeq] reconstructed from ONE scan job of
+    * the content's rows at or before `toSeq` (reference
+    * get_version_range loops, :255-272). Computed before it returns, and
+    * valid unchanged after later [[addVersions]]. The driver holds one
+    * copy of the content's history per target, so for ranges far wider
+    * than the content's stored versions use [[batchReconstruct]]. */
   def getVersionRange(contentId: String, fromSeq: Int, toSeq: Int): DataFrame =
-    batchReconstruct(spark.range(fromSeq, toSeq + 1)
-      .select(lit(contentId).as("content_id"), col("id").cast("int").as("seq")))
+    Reconstruction.reconstructOne(versions, contentId, fromSeq to toSeq)
 
-  /** Set-based batch reconstruction of (content_id, seq) targets. */
+  /** Set-based batch reconstruction of (content_id, seq) targets. Lazy:
+    * the frame re-reads the store each time it runs, so it sees later
+    * [[addVersions]]. */
   def batchReconstruct(targets: DataFrame): DataFrame =
     Reconstruction.reconstruct(versions, targets)
 
   /** Cosine kNN over base snapshots only — exactly the reference's search
     * corpus semantics (storage_engine.py:89-110, 439-469: delta-only
-    * versions are never indexed). */
+    * versions are never indexed). Ranked by one bounded top-k over the
+    * pinned [[cacheBases]] index ([[SimilaritySearch.topKOne]]): one
+    * Spark job when collected. The frame is lazy over the pinned index,
+    * so it is valid until the next [[addVersions]] replaces that index
+    * (see [[pin]]'s lifetime contract): collect before appending. */
   def searchSimilarContent(query: Array[Float], k: Int = Defaults.DefaultK)
-      : DataFrame = {
-    import spark.implicits._
-    val q = Seq((1L, query)).toDF("query_id", "qvec")
-    SimilaritySearch.topK(q, cacheBases()
+      : DataFrame =
+    SimilaritySearch.topKOne(query, cacheBases()
         .select(concat_ws("#", col("content_id"), col("seq")).as("id"),
           col("vec")), k)
       .select(col("rank"), col("id"), col("sim"))
-  }
 
   /** Cosine kNN over each content's RECONSTRUCTED LATEST version (SURVEY
     * §3.3's optional extension beyond the reference's bases-only corpus):
     * the freshest state of every content is searchable even when the
     * latest version is a delta. The corpus is the MATERIALIZED
     * [[cacheLatest]] projection — reconstruction runs once (plus
-    * incremental per-batch refresh), not per query. */
+    * incremental per-batch refresh), not per query — ranked by one
+    * bounded top-k ([[SimilaritySearch.topKOne]]), one Spark job when
+    * collected. Lazy over the pinned index: valid until the next
+    * [[addVersions]]; collect before appending. */
   def searchLatestVersions(query: Array[Float], k: Int = Defaults.DefaultK)
-      : DataFrame = {
-    import spark.implicits._
-    val q = Seq((1L, query)).toDF("query_id", "qvec")
-    SimilaritySearch.topK(q, latestCorpus(), k)
+      : DataFrame =
+    SimilaritySearch.topKOne(query, latestCorpus(), k)
       .select(col("rank"), col("id"), col("sim"))
-  }
 
   /** Batch form of [[searchLatestVersions]]: exact cosine top-k for every
     * row of `queries` ((query_id, qvec)) against the materialized latest

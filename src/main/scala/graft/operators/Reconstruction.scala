@@ -3,7 +3,9 @@ package graft.operators
 import graft.functions.VectorFunctions.foldChainNative
 import graft.model.Defaults
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.types._
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import scala.jdk.CollectionConverters._
 
 /** Set-based version reconstruction (SURVEY §2 rows 19, 24-25, 41, 45;
   * reference read path /root/reference/core/reconstruction_service.py:61-127,
@@ -60,16 +62,79 @@ object Reconstruction {
   def latest(rows: DataFrame, visible: Column = lit(true)): DataFrame =
     fold(histories(rows, max(when(visible, col("seq"))).as("_target")))
 
+  /** [[reconstruct]] for targets of ONE content, computed now: one Spark
+    * job scans `versions` with the literal `content_id = contentId AND
+    * seq <= max(seqs)` on the scan and returns that content's stored
+    * rows to the driver — exactly the rows [[reconstruct]]'s exchange
+    * would send to one task — and [[fold]] runs on them as a local
+    * relation (no exchange, no dedup aggregate, no further job when the
+    * result is collected). Same rows, bit for bit, as `reconstruct` over
+    * the distinct `seqs`. The result holds its values: later appends to
+    * the store do not change it. The local relation carries the history
+    * once per target, so it suits a content's own range of versions,
+    * not millions of targets. */
+  def reconstructOne(versions: DataFrame, contentId: String,
+                     seqs: Seq[Int]): DataFrame = {
+    val targets = seqs.distinct
+    val rows =
+      if (targets.isEmpty) Array.empty[Row]
+      else contentRows(versions, contentId, Some(targets.max), lit(true))
+    foldOne(versions, contentId, rows, targets)
+  }
+
+  /** [[latest]] for ONE content, computed now, with the same one-job
+    * scan as [[reconstructOne]] (no seq bound: the target is the
+    * content's max seq among the rows where `visible` holds, evaluated
+    * on the scan). */
+  def latestOne(versions: DataFrame, contentId: String,
+                visible: Column = lit(true)): DataFrame = {
+    val rows = contentRows(versions, contentId, None, visible)
+    val target = rows.filter(_.getBoolean(1)).map(_.getStruct(0).getInt(0))
+    foldOne(versions, contentId, rows,
+      if (target.isEmpty) Nil else Seq(target.max))
+  }
+
+  /** The fold kernel's history entry of one stored row. */
+  private def entry: Column =
+    struct(col("seq"), (col("kind") === "base").as("is_base"),
+      col("embedding"), col("delta_idx"), col("delta_val"),
+      col("change_magnitude"))
+
+  /** One content's base/delta rows, at or before `upTo` when given, as
+    * (history entry, visible) — one job, both predicates on the scan. */
+  private def contentRows(versions: DataFrame, contentId: String,
+                          upTo: Option[Int], visible: Column): Array[Row] = {
+    val scoped = versions.where(col("content_id") === contentId &&
+      col("kind").isin("base", "delta"))
+    upTo.fold(scoped)(k => scoped.where(col("seq") <= k))
+      .select(entry.as("_e"), coalesce(visible, lit(false)).as("_v"))
+      .collect()
+  }
+
+  /** [[fold]] over a local relation of one history row per target. */
+  private def foldOne(versions: DataFrame, contentId: String,
+                      rows: Array[Row], targets: Seq[Int]): DataFrame = {
+    val history = rows.map(_.getStruct(0)).toSeq
+    val bases = history.filter(_.getBoolean(1)).map(_.getInt(0))
+    val firstBase: Any = if (bases.isEmpty) null else bases.min
+    val schema = StructType(Seq(
+      StructField("content_id", StringType),
+      StructField("_history",
+        ArrayType(versions.select(entry).schema.head.dataType)),
+      StructField("_first_base", IntegerType),
+      StructField("_target", IntegerType)))
+    fold(versions.sparkSession.createDataFrame(
+      targets.map(t => Row(contentId, history, firstBase, t)).asJava,
+      schema))
+  }
+
   /** One row per content: its stored rows collected as the fold kernel's
     * `_history`, the first base seq (to drop targets before it without
     * running the kernel), plus `more` aggregates. */
   private def histories(rows: DataFrame, more: Column*): DataFrame =
     rows.where(col("kind").isin("base", "delta"))
       .groupBy("content_id")
-      .agg(collect_list(struct(col("seq"),
-          (col("kind") === "base").as("is_base"), col("embedding"),
-          col("delta_idx"), col("delta_val"), col("change_magnitude")))
-          .as("_history"),
+      .agg(collect_list(entry).as("_history"),
         min(when(col("kind") === "base", col("seq"))).as("_first_base")
           +: more: _*)
 

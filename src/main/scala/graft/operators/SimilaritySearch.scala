@@ -26,28 +26,63 @@ object SimilaritySearch {
     * only (reference storage_engine.py:464-467). */
   def topK(queries: DataFrame, corpus: DataFrame, k: Int,
            positiveOnly: Boolean = true): DataFrame = {
-    val qn = queries
-      .withColumn("_qnorm", l2NormNative(col("qvec")))
-      .where(col("_qnorm") > 0)
-      .withColumn("qvec", l2NormalizeWithNative(col("qvec"), col("_qnorm")))
-      .drop("_qnorm")
-    val cn = corpus
-      .withColumn("_cnorm", l2NormNative(col("vec")))
-      .where(col("_cnorm") > 0)
-      .withColumn("vec", l2NormalizeWithNative(col("vec"), col("_cnorm")))
-      .drop("_cnorm")
-
-    val scored = cn.crossJoin(broadcast(qn))
-      .withColumn("sim", dotNative(col("qvec"), col("vec")))
-
     // salted two-phase ranking: a handful of query ids would otherwise
     // each rank the whole corpus on a single task (hot-key skew)
-    val ranked = TopK.perKeySalted(scored, "query_id",
+    val ranked = TopK.perKeySalted(scored(queries, corpus), "query_id",
       Seq(desc("sim"), col("id")), k)
 
     (if (positiveOnly) ranked.where(col("sim") > 0) else ranked)
       .drop("qvec", "vec")
   }
+
+  /** [[topK]] for ONE query vector: the same normalization, scores and
+    * `sim > 0` filter, so (rank, id, sim) are bit-identical, but ranked
+    * by one bounded top-k (`orderBy(desc(sim), id).limit(k)`, planned as
+    * a TakeOrderedAndProject) instead of two salted window exchanges.
+    * The query is normalized on the driver (a local relation, no job)
+    * and joins the corpus as a literal, so no broadcast runs either:
+    * collecting the result runs one Spark job. The rank window runs over
+    * the ≤ k rows the limit keeps, on its single partition (a local sort,
+    * no exchange). Output: the corpus columns but `vec`, plus rank and
+    * sim. */
+  def topKOne(query: Array[Float], corpus: DataFrame, k: Int): DataFrame = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val qn = normalizedQueries(Seq((1L, query)).toDF("query_id", "qvec"))
+      .select("qvec").as[Array[Float]].collect()
+    normalizedCorpus(corpus)
+      .where(lit(qn.nonEmpty)) // a zero query ranks nothing, as in topK
+      .withColumn("sim",
+        dotNative(typedLit(qn.headOption.getOrElse(query)), col("vec")))
+      .orderBy(desc("sim"), col("id")).limit(k)
+      // the positive rows lead the order, so their rank within the
+      // `sim > 0` partition is their overall rank; the partition key
+      // keeps the window off a whole-frame AllTuples requirement
+      .withColumn("rank", row_number().over(Window
+        .partitionBy(col("sim") > 0).orderBy(desc("sim"), col("id"))))
+      .where(col("sim") > 0)
+      .drop("vec")
+  }
+
+  /** Unit-normalize both sides (zero-norm rows dropped) and score every
+    * (corpus row, query) pair by the dot product of the unit vectors. */
+  private def scored(queries: DataFrame, corpus: DataFrame): DataFrame =
+    normalizedCorpus(corpus).crossJoin(broadcast(normalizedQueries(queries)))
+      .withColumn("sim", dotNative(col("qvec"), col("vec")))
+
+  private def normalizedQueries(queries: DataFrame): DataFrame =
+    queries
+      .withColumn("_qnorm", l2NormNative(col("qvec")))
+      .where(col("_qnorm") > 0)
+      .withColumn("qvec", l2NormalizeWithNative(col("qvec"), col("_qnorm")))
+      .drop("_qnorm")
+
+  private def normalizedCorpus(corpus: DataFrame): DataFrame =
+    corpus
+      .withColumn("_cnorm", l2NormNative(col("vec")))
+      .where(col("_cnorm") > 0)
+      .withColumn("vec", l2NormalizeWithNative(col("vec"), col("_cnorm")))
+      .drop("_cnorm")
 
   /** Approximate top-k via hyperplane-LSH buckets (the 100 TB path): both
     * sides get a deterministic [[Dedup.hyperplaneBucket]] from the RAW

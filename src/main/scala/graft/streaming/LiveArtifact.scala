@@ -43,7 +43,10 @@ sealed abstract class LiveArtifact(spark: SparkSession, root: String)
   protected val dataKinds = Nil
   protected val snapshotKinds = Seq("delta" -> stateAt _)
 
-  private def stateAt(e: Long): DataFrame = merge(unionAt("delta", e, cols))
+  // resolved only at the committed head (by read and compact), so `e` is
+  // the head and `_commits` is not listed again
+  private def stateAt(e: Long): DataFrame =
+    merge(unionAt("delta", e, cols, head = e))
 
   /** The live state: the merge of every committed delta. */
   def read: DataFrame = {
@@ -54,11 +57,12 @@ sealed abstract class LiveArtifact(spark: SparkSession, root: String)
   /** Commit `batch`'s delta as the next epoch, exactly once per
     * `token`; returns the epoch (a replay returns the original one).
     * The first delta is the whole state, so epoch 0 is a snapshot. */
-  def append(batch: DataFrame, token: String): Long = replayOr(token) {
-    val n = epoch + 1
-    if (n == 0) markSnapshot(0)
-    commitDelta(n, Seq(build(batch)), Some(token))
-  }
+  def append(batch: DataFrame, token: String): Long =
+    replayOr(token) { head =>
+      val n = head + 1
+      if (n == 0) markSnapshot(0)
+      commitDelta(n, Seq(build(batch)), Some(token))
+    }
 
   /** Compaction also prunes the commit markers it absorbed, so listing
     * `_commits` costs the epochs since the last compaction, not every

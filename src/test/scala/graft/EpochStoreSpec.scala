@@ -1,7 +1,8 @@
 package graft
 
-import graft.api.{EpochStore, FingerprintStore, FuzzyKeyStore,
-  MinHashDedupStore, SemanticDedupStore, SubstringDedupStore}
+import graft.api.{EpochStore, EpochStoreKit, FingerprintStore,
+  FuzzyKeyStore, MinHashDedupStore, SemanticDedupStore,
+  SubstringDedupStore}
 import graft.streaming.{CountMinArtifact, LiveArtifact,
   PrioritySampleArtifact}
 import org.apache.spark.sql.DataFrame
@@ -107,5 +108,32 @@ class EpochStoreSpec extends SparkSpec {
     liveFamily("count-min", new CountMinArtifact(spark, _, "text", 3, 16))
     liveFamily("priority-sample",
       new PrioritySampleArtifact(spark, _, 3, "w"))
+  }
+
+  test("a live artifact's read, token append and replay each list " +
+    "_commits once: the head epoch is passed down, not listed again") {
+    val root = Files.createTempDirectory("graft-listings").toString +
+      "/cms"
+    val a = new CountMinArtifact(spark, root, "text", 3, 16)
+    val listed = new java.util.concurrent.atomic.AtomicInteger(0)
+    def commitListings[A](op: => A): Int = {
+      listed.set(0)
+      op
+      listed.get()
+    }
+    def batch(k: Int) = Seq(s"w$k", "w").toDF("text")
+    EpochStoreKit.installListingProbe(root,
+      p => if (p.endsWith("/_commits")) listed.incrementAndGet())
+    try {
+      // the init: no `_commits` directory yet, so nothing to list
+      assert(commitListings(a.append(batch(0), "0")) == 0)
+      assert(commitListings(a.append(batch(1), "1")) == 1)
+      assert(commitListings(a.append(batch(1), "1")) == 1) // the replay
+      assert(commitListings(a.read.collect()) == 1)
+      assert(a.compact() == 2L)
+      assert(commitListings(a.read.collect()) == 1)
+      assert(commitListings(a.append(batch(2), "2")) == 1)
+      assert(a.read.where($"cnt" > 0).count() > 0)
+    } finally EpochStoreKit.clearListingProbe(root)
   }
 }
