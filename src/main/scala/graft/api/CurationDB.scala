@@ -244,7 +244,8 @@ object CurationDB {
                     numHashes: Int = 16, bands: Int = 4,
                     semanticTau: Double = 0.95, nCells: Int = 16,
                     kmeansIters: Int = 3, maxStaleFrac: Double = 0.5,
-                    autoCompactEpochs: Int = 16)
+                    autoCompactEpochs: Int =
+                      EpochStore.DefaultAutoCompactEpochs)
 
   /** Doc-level text SimHash frame — the fingerprint family's input (one
     * compiled-kernel projection). */

@@ -5,11 +5,13 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.StructType
 
 /** The epoch protocol of the durable dedup stores ([[SubstringDedupStore]],
   * [[FingerprintStore]], [[FuzzyKeyStore]], [[MinHashDedupStore]],
-  * [[SemanticDedupStore]]) and the streaming live artifacts
-  * ([[graft.streaming.LiveArtifact]]), written once. A store supplies
+  * [[SemanticDedupStore]]), the streaming live artifacts
+  * ([[graft.streaming.LiveArtifact]]) and the versions table of the
+  * path-backed [[TemporalVectorDB]], written once. A store supplies
   * its artifact kinds, its batch → delta operator and its reads; this
   * class owns the commit, snapshot, replay, compaction and prune
   * sequence.
@@ -22,7 +24,9 @@ import org.apache.spark.sql.graftbridge.Bridge
   *                             epochs: only the rows the append added
   *                             or changed; pruned below the snapshot
   *   _commits/N                marker file — the epoch's commit point;
-  *                             records the token of a token append
+  *                             records the token of a token append;
+  *                             pruned below the snapshot by families
+  *                             without time travel
   *   _snapshots/N              marks epoch N as a full snapshot
   *   _tokens/<token>-<digest>  the epoch a token-carrying append committed
   * }}}
@@ -132,11 +136,13 @@ private[graft] abstract class EpochStore(val spark: SparkSession,
       dataKinds.find(_._1 == kind).get._2)
 
   /** Snapshot kind `kind` at `e` as the plain union of disjoint slices
-    * from the governing snapshot, under the committed `head`. */
+    * from the governing snapshot, under the committed `head`; a declared
+    * `schema` spares the footer schema-inference job. */
   protected def unionAt(kind: String, e: Long, cols: Seq[String],
-                        head: Long = epoch): DataFrame =
+                        head: Long = epoch,
+                        schema: Option[StructType] = None): DataFrame =
     EpochStoreKit.unionEpochs(spark, root, kind, snapshotFor(e, head), e,
-      cols)
+      cols, schema)
 
   /** Snapshot kind `kind` at `e`, latest-epoch-wins per `keys`. */
   protected def latestWinsAt(kind: String, e: Long, keys: Seq[String],
@@ -200,11 +206,14 @@ private[graft] abstract class EpochStore(val spark: SparkSession,
     * write was the last consumer of, and fold the chain once it spans
     * `autoCompactEpochs` deltas (0 disables; SCALE.md's measured curve
     * sizes it). A torn compaction's mark at `n` is cleared first (epoch
-    * 0 is never a compaction's). Returns `n`. */
+    * 0 is never a compaction's); epoch 0 — the first delta of a store
+    * without an `init` — holds the whole state, so it is marked a
+    * snapshot. Returns `n`. */
   protected def commitDelta(n: Long, artifacts: Seq[DataFrame],
                             token: Option[String],
                             pinned: DataFrame*): Long = {
     if (n > 0) EpochStoreKit.unmark(fs, new Path(s"$root/_snapshots/$n"))
+    else markSnapshot(0)
     commit(n, artifacts, token)
     pinned.foreach(Bridge.unpersistCheckpoint)
     if (autoCompactEpochs > 0 && n - latestSnapshotAt(n) >= autoCompactEpochs)
@@ -236,21 +245,35 @@ private[graft] abstract class EpochStore(val spark: SparkSession,
       .getOrElse(append(head))
   }
 
-  /** Rewrite the resolved state as ONE new snapshot epoch — an empty
-    * slice for each data kind, the eagerly resolved state for each
-    * snapshot kind — and prune the absorbed epochs below it, bounding
-    * read-side resolution work on a long-lived store. Idempotent:
-    * compacting an already-snapshot head only finishes any interrupted
-    * prune. Returns the snapshot epoch. */
+  /** Rewrite the resolved state as ONE new snapshot epoch and prune the
+    * absorbed epochs below it ([[compactWith]]), bounding read-side
+    * resolution work on a long-lived store. Idempotent: compacting an
+    * already-snapshot head only finishes any interrupted prune. Returns
+    * the snapshot epoch. */
   def compact(): Long = {
     val e = requireCommitted()
-    if (latestSnapshotAt(e) == e) { pruneBelow(e); return e }
+    if (latestSnapshotAt(e) == e) { pruneBelow(e); e }
+    else compactWith(e)(compactState)
+  }
+
+  /** The state [[compact]] commits: every snapshot kind resolved at the
+    * head `e`, eagerly. */
+  protected def compactState(e: Long): Seq[DataFrame] =
+    snapshotKinds.map { case (_, at) => Ckpt.eager(at(e)) }
+
+  /** The one commit-and-prune sequence of every rewrite: commit
+    * `state(e)` — one frame per snapshot kind, resolved at the committed
+    * head `e` — as snapshot epoch e + 1 with an empty slice per data
+    * kind, free the frames' checkpoints, and prune below it. A rewrite
+    * never touches the epochs it reads until its commit marker landed.
+    * Returns the snapshot epoch. */
+  protected def compactWith(e: Long)(state: Long => Seq[DataFrame]): Long = {
     val n = e + 1
     val empties = dataKinds.map { case (k, cols) =>
       spark.read.parquet(s"$root/$k/epoch=0").select(cols.map(col): _*)
         .limit(0)
     }
-    val snaps = snapshotKinds.map { case (_, at) => Ckpt.eager(at(e)) }
+    val snaps = state(e)
     beforeCompactCommit(n)
     commitSnapshot(n, empties ++ snaps, snaps: _*)
     pruneBelow(n)
@@ -263,11 +286,29 @@ private[graft] abstract class EpochStore(val spark: SparkSession,
   protected def pruneMarkers(dir: String, snap: Long): Unit =
     EpochStoreKit.pruneMarkersBelow(fs, new Path(s"$root/$dir"), snap)
 
-  /** Delete snapshot-kind epoch directories and snapshot markers below
-    * `snap` — safe to (re-)run any time, so [[compact]] uses it both as
-    * its prune step and as the recovery sweep for an interrupted prune. */
+  /** Whether commit markers below the latest snapshot are kept — the
+    * stores with time-travel reads ([[requireEpoch]]) keep them;
+    * families read only at the head prune them, so listing `_commits`
+    * costs the epochs since the last compaction, not every append. */
+  protected def keepsCommitHistory: Boolean = true
+
+  /** Delete snapshot-kind epoch directories and snapshot markers (and,
+    * without [[keepsCommitHistory]], commit markers) below `snap` — safe
+    * to (re-)run any time, so [[compact]] uses it both as its prune step
+    * and as the recovery sweep for an interrupted prune. */
   protected def pruneBelow(snap: Long): Unit = {
     pruneKinds(snapshotKinds.map(_._1), snap)
     pruneMarkers("_snapshots", snap)
+    if (!keepsCommitHistory) pruneMarkers("_commits", snap)
   }
+}
+
+private[graft] object EpochStore {
+
+  /** The auto-compaction cadence of every family: SCALE.md's
+    * "Auto-compaction, sized by measurement" picks 16 delta epochs. It
+    * also keeps a head read's epoch directories below Spark's 32-path
+    * parallel-listing threshold, so resolving a store lists on the
+    * driver without a listing job. */
+  val DefaultAutoCompactEpochs = 16
 }

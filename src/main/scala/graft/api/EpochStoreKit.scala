@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Low-level IO for the durable epoch stores: filesystem handles,
   * parquet/marker/token writes, epoch-chain resolution, prunes, and the
@@ -248,11 +249,13 @@ private[graft] object EpochStoreKit {
 
   /** Plain union of `kind`'s epoch directories `from..to` — the
     * resolution for artifacts whose epochs are DISJOINT row slices
-    * (appended data, new-key index deltas). */
+    * (appended data, new-key index deltas). A declared `schema` is read
+    * as is; without one Spark infers it from a footer. */
   def unionEpochs(spark: SparkSession, root: String, kind: String,
-                  from: Long, to: Long,
-                  outCols: Seq[String]): DataFrame =
-    spark.read.option("basePath", s"$root/$kind")
+                  from: Long, to: Long, outCols: Seq[String],
+                  schema: Option[StructType] = None): DataFrame =
+    schema.foldLeft(spark.read)(_.schema(_))
+      .option("basePath", s"$root/$kind")
       .parquet((from to to).map(n => s"$root/$kind/epoch=$n"): _*)
       .select(outCols.map(col): _*)
 

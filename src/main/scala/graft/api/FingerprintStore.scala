@@ -147,7 +147,8 @@ object FingerprintStore {
     * snapshot). Fails loudly if the root already has a committed epoch. */
   def init(spark: SparkSession, root: String, hashes: DataFrame,
            maxHamming: Int = 3,
-           autoCompactEpochs: Int = 16): FingerprintStore = {
+           autoCompactEpochs: Int = EpochStore.DefaultAutoCompactEpochs)
+      : FingerprintStore = {
     val s = new FingerprintStore(spark, root, maxHamming,
       autoCompactEpochs).fresh()
     val h = Ckpt.eager(hashes.select(col("_id").cast("long").as("_id"),
@@ -161,7 +162,8 @@ object FingerprintStore {
 
   /** Open an existing store (any committed epoch present). */
   def open(spark: SparkSession, root: String, maxHamming: Int = 3,
-           autoCompactEpochs: Int = 16): FingerprintStore =
+           autoCompactEpochs: Int = EpochStore.DefaultAutoCompactEpochs)
+      : FingerprintStore =
     new FingerprintStore(spark, root, maxHamming, autoCompactEpochs)
       .opened()
 }

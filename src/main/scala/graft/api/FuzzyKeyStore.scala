@@ -170,7 +170,8 @@ object FuzzyKeyStore {
     * if the root already has a committed epoch. */
   def init(spark: SparkSession, root: String, keys: DataFrame,
            maxKeyLen: Int = 64, maxEdit: Int = 1,
-           autoCompactEpochs: Int = 16): FuzzyKeyStore = {
+           autoCompactEpochs: Int = EpochStore.DefaultAutoCompactEpochs)
+      : FuzzyKeyStore = {
     val s = new FuzzyKeyStore(spark, root, maxKeyLen, maxEdit,
       autoCompactEpochs).fresh()
     val d = Ckpt.eager(keys.select(col("doc_id").cast("long")
@@ -196,7 +197,8 @@ object FuzzyKeyStore {
     * with — they parameterize the stored variant family. */
   def open(spark: SparkSession, root: String, maxKeyLen: Int = 64,
            maxEdit: Int = 1,
-           autoCompactEpochs: Int = 16): FuzzyKeyStore =
+           autoCompactEpochs: Int = EpochStore.DefaultAutoCompactEpochs)
+      : FuzzyKeyStore =
     new FuzzyKeyStore(spark, root, maxKeyLen, maxEdit, autoCompactEpochs)
       .opened()
 }

@@ -188,7 +188,8 @@ object MinHashDedupStore {
            tau: Double, idCol: String = "doc_id",
            textCol: String = "text", n: Int = 3, numHashes: Int = 16,
            bands: Int = 4,
-           autoCompactEpochs: Int = 16): MinHashDedupStore = {
+           autoCompactEpochs: Int = EpochStore.DefaultAutoCompactEpochs)
+      : MinHashDedupStore = {
     val s = new MinHashDedupStore(spark, root, tau, n, numHashes, bands,
       autoCompactEpochs).fresh()
     val sig = Ckpt.eager(s.normalizeSig(Dedup.signatureFrame(
@@ -214,7 +215,8 @@ object MinHashDedupStore {
     * parameterize the stored signatures and pair graph. */
   def open(spark: SparkSession, root: String, tau: Double,
            n: Int = 3, numHashes: Int = 16, bands: Int = 4,
-           autoCompactEpochs: Int = 16): MinHashDedupStore =
+           autoCompactEpochs: Int = EpochStore.DefaultAutoCompactEpochs)
+      : MinHashDedupStore =
     new MinHashDedupStore(spark, root, tau, n, numHashes, bands,
       autoCompactEpochs).opened()
 }

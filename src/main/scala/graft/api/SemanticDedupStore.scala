@@ -330,7 +330,8 @@ object SemanticDedupStore {
   def init(spark: SparkSession, root: String, vecs: DataFrame,
            nCells: Int, iters: Int = 3, tau: Double = 0.95,
            maxStaleFrac: Double = 0.5,
-           autoCompactEpochs: Int = 16): SemanticDedupStore = {
+           autoCompactEpochs: Int = EpochStore.DefaultAutoCompactEpochs)
+      : SemanticDedupStore = {
     val s = new SemanticDedupStore(spark, root, tau, maxStaleFrac,
       autoCompactEpochs).fresh()
     val v = Ckpt.eager(vecs.select(col("vec_id").cast("long")
@@ -344,7 +345,8 @@ object SemanticDedupStore {
     * with — they parameterize the stored pair graph. */
   def open(spark: SparkSession, root: String, tau: Double = 0.95,
            maxStaleFrac: Double = 0.5,
-           autoCompactEpochs: Int = 16): SemanticDedupStore =
+           autoCompactEpochs: Int = EpochStore.DefaultAutoCompactEpochs)
+      : SemanticDedupStore =
     new SemanticDedupStore(spark, root, tau, maxStaleFrac,
       autoCompactEpochs).opened()
 }

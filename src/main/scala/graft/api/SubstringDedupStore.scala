@@ -136,7 +136,8 @@ object SubstringDedupStore {
     * snapshot). Fails loudly if the root already has a committed epoch. */
   def init(spark: SparkSession, root: String, docs: DataFrame,
            window: Int,
-           autoCompactEpochs: Int = 16): SubstringDedupStore = {
+           autoCompactEpochs: Int = EpochStore.DefaultAutoCompactEpochs)
+      : SubstringDedupStore = {
     val s = new SubstringDedupStore(spark, root, window,
       autoCompactEpochs).fresh()
     val d = Ckpt.eager(docs.select(col("doc_id").cast("long").as("doc_id"),
@@ -149,7 +150,8 @@ object SubstringDedupStore {
 
   /** Open an existing store (any committed epoch present). */
   def open(spark: SparkSession, root: String, window: Int,
-           autoCompactEpochs: Int = 16): SubstringDedupStore =
+           autoCompactEpochs: Int = EpochStore.DefaultAutoCompactEpochs)
+      : SubstringDedupStore =
     new SubstringDedupStore(spark, root, window, autoCompactEpochs)
       .opened()
 }

@@ -4,7 +4,8 @@ import graft.model.{Defaults, Schemas}
 import graft.operators._
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** Public facade mirroring the reference's `TemporalVectorDatabase` surface
   * (/root/reference/storage/temporal_database.py:20-553; inventory SURVEY
@@ -20,6 +21,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - batch APIs are genuinely set-based (the reference's batch_reconstruct
   *    loops one-at-a-time, reconstruction_service.py:176-183).
   *
+  * Storage: the path-backed store is one [[EpochStore]] family
+  * ([[VersionsTable]]) — every append commits a delta epoch, every
+  * maintenance rewrite ([[compactStore]], [[applyBaseOptimization]]) a
+  * snapshot epoch, so a crash at any write leaves readers on the last
+  * committed epoch and a token append ([[addVersions]] with a token) is
+  * exactly-once. [[BucketedTemporalVectorDB]] keeps its catalog table.
+  *
   * Single-content reads (`getVersion`, `getVersionRange`,
   * `getLatestVersion`, `getVersionAtTime`) run the set-based fold on one
   * content's rows, gathered by one scan job, and return computed local
@@ -32,10 +40,13 @@ class TemporalVectorDB(
     val path: String,
     val cfg: VersionStore.Config = VersionStore.Config()) {
 
-  /** The store relation, read with the declared [[Schemas.versions]] —
-    * the schema every writer of the store produces — so resolving it
-    * lists the store's files but runs no footer schema-inference job. */
-  def versions: DataFrame = spark.read.schema(Schemas.versions).parquet(path)
+  private lazy val store = new VersionsTable(spark, path)
+
+  /** The store relation at the committed head, read with the declared
+    * [[Schemas.versions]] — the schema every writer of the store
+    * produces — so resolving it lists the epoch directories but runs no
+    * footer schema-inference job. Empty before the first append. */
+  def versions: DataFrame = store.read
 
   private var basesCache: Option[DataFrame] = None
   private var latestCache: Option[DataFrame] = None
@@ -65,8 +76,8 @@ class TemporalVectorDB(
       "vec")
 
   /** Pin a maintained corpus as an eager, LINEAGE-FREE materialization.
-    * `localCheckpoint` (not `cache`) on purpose: every parquet append to
-    * `path` triggers Spark's `recacheByPath`, which drops and lazily
+    * `localCheckpoint` (not `cache`) on purpose: every parquet write to
+    * the store triggers Spark's `recacheByPath`, which drops and lazily
     * RE-EXECUTES any cached plan that reads the store path — with a fresh
     * file listing, so a "cached" index would silently rebuild itself from
     * post-append state (wrong seq offsets, duplicated latest rows). A
@@ -76,7 +87,7 @@ class TemporalVectorDB(
     *
     * LIFETIME CONTRACT: a refresh frees the REPLACED checkpoint's blocks
     * immediately, so DataFrames returned by index-backed searches are
-    * valid until the next [[addVersions]]/[[refreshAfterAppend]] —
+    * valid until the next [[addVersions]] —
     * collect results before appending; a lazy plan held across an append
     * fails with a missing-checkpoint-block error (a checkpoint has no
     * lineage to recompute). */
@@ -109,12 +120,6 @@ class TemporalVectorDB(
     }
   }
 
-  /** Hook for writers that append to the store OUTSIDE [[addVersions]]
-    * (the streaming staged-commit path): refresh the maintained indexes
-    * from the versions-schema rows just written. */
-  private[graft] def refreshAfterAppend(written: DataFrame): Unit =
-    refreshCaches(written)
-
   /** Incremental index maintenance after a write, from the rows the write
     * just made (`written`, versions schema, pinned by the caller) — the
     * store itself is never re-read:
@@ -140,7 +145,7 @@ class TemporalVectorDB(
       // free the replaced checkpoint's blocks NOW — per-batch streaming
       // refreshes would otherwise pile up full-corpus copies in executor
       // storage until driver GC gets around to the old frame
-      org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(old)
+      Bridge.unpersistCheckpoint(old)
       merged
     }
     latestCache = latestCache.map { old =>
@@ -154,7 +159,7 @@ class TemporalVectorDB(
         .select("content_id", "seq", "embedding")
       val carried = old.join(touched, Seq("content_id"), "left_anti")
       val merged = pin(carried.unionByName(rebuilt))
-      org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(old)
+      Bridge.unpersistCheckpoint(old)
       latestCount = None // corpus size changed; re-derive lazily
       merged
     }
@@ -173,7 +178,7 @@ class TemporalVectorDB(
           col("vec")), books, cents)
       val carried = old.join(touched, Seq("content_id"), "left_anti")
       val merged = pin(carried.unionByName(encoded))
-      org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(old)
+      Bridge.unpersistCheckpoint(old)
       // one count of the written contents (a small, pinned frame) — the
       // price of knowing how far the books have drifted
       pqRefreshedSinceTrain += touched.distinct().count()
@@ -299,8 +304,7 @@ class TemporalVectorDB(
       SimilaritySearch.sampleResiduals(sample, cents), mm, ks, iters = 5)
     val codes = pin(encodeWithLiveBooks(
       SimilaritySearch.withCell(corpus, cents, col("vec")), books, cents))
-    pqCodes.foreach(
-      org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint)
+    pqCodes.foreach(Bridge.unpersistCheckpoint)
     pqBooks = Some(books)
     pqCents = Some(cents)
     pqCodes = Some(codes)
@@ -495,8 +499,8 @@ class TemporalVectorDB(
       val newBases = pin(spark.read.parquet(s"$indexDir/bases"))
       val newLatest = pin(spark.read.parquet(s"$indexDir/latest"))
       val newCodes = pin(spark.read.parquet(s"$indexDir/codes"))
-      Seq(basesCache, latestCache, pqCodes).flatten.foreach(
-        org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint)
+      Seq(basesCache, latestCache, pqCodes).flatten
+        .foreach(Bridge.unpersistCheckpoint)
       basesCache = Some(newBases)
       latestCache = Some(newLatest)
       latestCount = None
@@ -528,8 +532,8 @@ class TemporalVectorDB(
     * (persist BEFORE closing to keep the zero-rebuild startup path).
     * Idempotent; safe to call with no live indexes. */
   def close(): Unit = synchronized {
-    Seq(basesCache, latestCache, pqCodes).flatten.foreach(
-      org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint)
+    Seq(basesCache, latestCache, pqCodes).flatten
+      .foreach(Bridge.unpersistCheckpoint)
     basesCache = None
     latestCache = None
     latestCount = None
@@ -542,37 +546,43 @@ class TemporalVectorDB(
   }
 
   /** Batch ingest of (content_id, ts, embedding[, metadata]) rows; assigns
-    * sequence numbers after any existing versions and appends to the store
-    * (reference add_content_version, temporal_database.py:86-178 — but one
-    * job for the whole batch instead of per-row timeline reloads). The
-    * ingested rows are pinned once: the append writes them and the live
-    * indexes are maintained from them (see [[refreshCaches]]), never
-    * rebuilt from a store scan; the pin is freed before returning. */
+    * sequence numbers after the committed versions and commits them as
+    * one delta epoch (reference add_content_version,
+    * temporal_database.py:86-178 — but one job for the whole batch
+    * instead of per-row timeline reloads). The ingested rows are pinned
+    * once: the epoch is written from them and the live indexes are
+    * maintained from them (see [[refreshCaches]]), never rebuilt from a
+    * store scan; the pin is freed before returning. A crash before the
+    * commit marker leaves nothing visible. */
   def addVersions(df: DataFrame): Unit = synchronized {
-    // synchronized up here (not just inside refreshCaches): the max-seq
-    // read + append must not interleave with another same-facade append
-    // (duplicate seqs) or with applyBaseOptimization's snapshot+overwrite
-    // window (a lost append)
-    val existing =
-      if (storeExists) Some(versions.select("content_id", "seq")) else None
-    val ingested = pin(VersionStore.ingest(df, existing, cfg))
-    try {
-      appendToStore(ingested)
-      refreshCaches(ingested)
-    } finally
-      org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(ingested)
+    store.appendOnce(None)(commitVersions(df, None))
   }
 
-  /** Storage seam (overridden by [[BucketedTemporalVectorDB]]). */
-  protected def appendToStore(ingested: DataFrame): Unit =
-    ingested.write.mode("append").parquet(path)
+  /** [[addVersions]] exactly once per `token` (e.g. a stream's batch
+    * id): a token that already committed is a no-op, and a retry after
+    * a crash at any write recomputes against the committed versions only.
+    * Returns the epoch the token committed. */
+  def addVersions(df: DataFrame, token: String): Long = synchronized {
+    store.appendOnce(Some(token))(commitVersions(df, Some(token)))
+  }
 
-  // Hadoop FS resolution, not java.io.File: the store path may live on
-  // HDFS/S3 at deployment scale, where a local-file check silently returns
-  // false and seq assignment would restart at 1, colliding with stored keys.
-  protected def storeExists: Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  private def commitVersions(df: DataFrame, token: Option[String])
+                            (head: Long): Long =
+    ingestAfter(df, if (head < 0) None else Some(store.at(head)))(
+      store.commitAppend(head, _, token))
+
+  /** Ingest `df` after the seqs of `stored`, hand the pinned rows to
+    * `write`, then maintain the live indexes from them. */
+  protected def ingestAfter[T](df: DataFrame, stored: Option[DataFrame])
+                              (write: DataFrame => T): T = {
+    val ingested =
+      pin(VersionStore.ingest(df, stored.map(_.select("content_id", "seq")),
+        cfg))
+    try {
+      val out = write(ingested)
+      refreshCaches(ingested)
+      out
+    } finally Bridge.unpersistCheckpoint(ingested)
   }
 
   /** Reconstruct one version; empty result if the target precedes the
@@ -729,76 +739,70 @@ class TemporalVectorDB(
     * per-version reconstruct+rewrite loops; here it is ONE set-based
     * job ([[VersionStore.promoteBases]]): reconstruct every version
     * whose cost is a positive multiple of maxCost+1, rewrite those rows
-    * as base snapshots, and swap the store — after which no version
-    * costs more than maxCost and [[optimizeContentBases]] reports
-    * nothing. An offline compaction-style maintenance job (the store is
-    * rewritten in full; schedule it like compaction). Values of every
-    * version are unchanged; the maintained indexes refresh incrementally
-    * for the touched contents. Returns the number of promoted
-    * versions. */
+    * as base snapshots, and commit the store as a snapshot epoch — after
+    * which no version costs more than maxCost and
+    * [[optimizeContentBases]] reports nothing. A compaction-style
+    * rewrite of the whole store; values of every version are unchanged,
+    * and the maintained indexes refresh incrementally for the touched
+    * contents. Returns the number of promoted versions. */
   def applyBaseOptimization(maxCost: Int = 10): Long = synchronized {
-    // synchronized serializes against this facade's index refreshes; the
-    // STORE-level contract is the same as any compaction job: no writer
-    // may append between the snapshot read and the swap (an append from
-    // another process in that window would be lost with the overwrite —
-    // schedule rewrites in the maintenance window external writers
-    // already respect)
+    // pinned: the rewrite prunes the epochs it was resolved from
     val targets = VersionStore.promotionTargets(versions, maxCost)
-      .transform(Ckpt.eager) // pinned: consumed after the store swaps
+      .transform(Ckpt.eager)
     val n = targets.count()
     if (n > 0) {
-      // materialized BEFORE overwriting the path it reads from
-      val rewritten = VersionStore.promoteBases(versions, maxCost)
-        .transform(Ckpt.eager)
-      overwriteStore(rewritten)
+      rewriteStore(VersionStore.promoteBases(_, maxCost))
       // the promoted rows are the only rows the rewrite changed
-      refreshCaches(rewritten.join(targets, Seq("content_id", "seq"),
+      val promoted = pin(versions.join(targets, Seq("content_id", "seq"),
         "left_semi"))
-      org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(rewritten)
+      refreshCaches(promoted)
+      Bridge.unpersistCheckpoint(promoted)
     }
-    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(targets)
+    Bridge.unpersistCheckpoint(targets)
     n
   }
 
-  /** Full-store rewrite seam (overridden by [[BucketedTemporalVectorDB]]);
-    * `rewritten` must be materialized (checkpointed) by the caller.
-    *
-    * The streaming staged-commit markers are NOT at risk here: they live
-    * BESIDE the store (`<store>_commits/`, see
-    * [[graft.streaming.StreamingIngest.processBatch]]) precisely so a
-    * destructive root overwrite cannot touch them under any crash timing
-    * — losing them would let a checkpoint-recovery replay re-append
-    * already-committed batches (duplicate rows). */
-  protected def overwriteStore(rewritten: DataFrame): Unit =
-    rewritten.write.mode("overwrite").parquet(path)
+  /** Commit `state` of the committed versions as the new whole store
+    * (overridden by [[BucketedTemporalVectorDB]]): a snapshot epoch
+    * through the core's compaction, which prunes the epochs below it
+    * once its marker landed — so an append never races a rewrite. */
+  protected def rewriteStore(state: DataFrame => DataFrame): Unit =
+    store.rewrite(state)
 
-  /** Number of visible data files in the store root (hidden `_`/`.`
-    * entries — commit markers, Spark metadata — excluded). Overridden by
+  /** Number of visible data files under the store root, recursively
+    * (path components starting with `_`/`.` — protocol markers, Spark
+    * metadata, checksums — excluded). Overridden by
     * [[BucketedTemporalVectorDB]] (table-backed, warehouse location). */
   protected def dataFileCount: Long = countFilesAt(path)
 
   protected final def countFilesAt(dir: String): Long = {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(root).count { f =>
-      val n = f.getPath.getName
-      f.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }.toLong
+    val prefix = root.toUri.getPath
+    var n = 0L
+    if (fs.exists(root)) {
+      val it = fs.listFiles(root, true)
+      while (it.hasNext) {
+        val rel = it.next().getPath.toUri.getPath.stripPrefix(prefix)
+        if (!rel.split("/").exists(c => c.startsWith("_") ||
+            c.startsWith("."))) n += 1
+      }
+    }
+    n
   }
 
-  /** Compact the versions store: rewrite the current snapshot into
+  /** Compact the versions store: rewrite the current state into
     * `targetPartitions` content-hashed files (default: the session's
-    * parallelism). The operational counterpart of the streaming ingest —
-    * every micro-batch's staged commit adds a file set, so a long-running
-    * stream accretes thousands of small files and every later scan pays
-    * per-file open cost (the classic small-file problem; at 100 TB the
-    * fix is this rewrite on a maintenance cadence). Data is bit-identical
-    * after (values never change — only file layout), commit markers
-    * survive (see [[overwriteStore]]), and the maintained indexes are
-    * untouched BY DESIGN: they are lineage-free checkpoints, so a store
-    * rewrite cannot invalidate or rebuild them. Same store-level writer
-    * contract as [[applyBaseOptimization]]: no concurrent external
-    * appends during the snapshot+overwrite window.
+    * parallelism) as one snapshot epoch, and prune every epoch below
+    * it. Every append commits its own file set, so a long-running
+    * stream accretes small files and every later scan pays per-file
+    * open cost (the classic small-file problem; at 100 TB the fix is
+    * this rewrite on a maintenance cadence — appends also fold the
+    * chain themselves every [[EpochStore.DefaultAutoCompactEpochs]]
+    * epochs). Data is bit-identical after (values never change — only
+    * file layout), idempotence tokens survive, and the maintained
+    * indexes are untouched BY DESIGN: they are lineage-free checkpoints,
+    * so a store rewrite cannot invalidate or rebuild them.
     *
     * `zorderBy` turns the same maintenance pass into a LAYOUT pass:
     * instead of content-hashed files, the rewrite range-partitions and
@@ -812,22 +816,16 @@ class TemporalVectorDB(
     * Returns (files before, files after). */
   def compactStore(targetPartitions: Int = 0, zorderBy: Seq[String] = Nil,
                    zorderBits: Int = 16): (Long, Long) = synchronized {
-    require(storeExists, s"no store at $path")
     val parts =
       if (targetPartitions > 0) targetPartitions
       else spark.sparkContext.defaultParallelism
     val before = dataFileCount
-    // repartition BEFORE the pin: the checkpoint holds the final layout,
-    // and the overwrite writes it with no further shuffle (for the
-    // z-order path, dropping zval is a projection — in-partition order
-    // survives into the written files)
-    val laid =
-      if (zorderBy.isEmpty) versions.repartition(parts, col("content_id"))
-      else Layout.zOrderLayout(versions, zorderBy, files = parts,
-        bits = zorderBits).drop("zval")
-    val snap = laid.transform(Ckpt.eager)
-    overwriteStore(snap)
-    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(snap)
+    // for the z-order path, dropping zval is a projection — in-partition
+    // order survives into the written files
+    rewriteStore(v =>
+      if (zorderBy.isEmpty) v.repartition(parts, col("content_id"))
+      else Layout.zOrderLayout(v, zorderBy, files = parts,
+        bits = zorderBits).drop("zval"))
     (before, dataFileCount)
   }
 
@@ -857,9 +855,12 @@ class TemporalVectorDB(
   * asserts, now on the facade path). On 100 TB this removes the read path's dominant data
   * movement; appends land bucket-aligned via `saveAsTable(Append)`.
   *
-  * `table` is a session-catalog table name, not a filesystem path; the
-  * streaming staged-commit path (file renames) applies only to the
-  * path-backed parent. */
+  * `table` is a session-catalog table name, not a filesystem path. One
+  * protocol per facade: this one writes through the catalog —
+  * `saveAsTable` appends, and rewrites that overwrite the table — and
+  * runs none of the path-backed store's epoch protocol, so it has no
+  * exactly-once token append (that call fails loudly) and the
+  * path-backed store's crash safety does not extend to it. */
 class BucketedTemporalVectorDB(
     spark: SparkSession,
     val table: String,
@@ -875,22 +876,32 @@ class BucketedTemporalVectorDB(
     spark.conf.get("spark.sql.warehouse.dir").stripSuffix("/") +
       s"/${table}_idx"
 
-  override protected def storeExists: Boolean =
-    spark.catalog.tableExists(table)
-
-  override protected def appendToStore(ingested: DataFrame): Unit =
-    ingested.write.mode("append")
+  private def bucketed(df: DataFrame, mode: String): Unit =
+    df.write.mode(mode)
       .bucketBy(buckets, "content_id")
       .sortBy("content_id", "seq")
       .format("parquet")
       .saveAsTable(table)
 
-  override protected def overwriteStore(rewritten: DataFrame): Unit =
-    rewritten.write.mode("overwrite")
-      .bucketBy(buckets, "content_id")
-      .sortBy("content_id", "seq")
-      .format("parquet")
-      .saveAsTable(table)
+  override def addVersions(df: DataFrame): Unit = synchronized {
+    ingestAfter(df,
+        if (spark.catalog.tableExists(table)) Some(versions) else None)(
+      bucketed(_, "append"))
+  }
+
+  override def addVersions(df: DataFrame, token: String): Long =
+    throw new UnsupportedOperationException(
+      "exactly-once token appends need the path-backed TemporalVectorDB's " +
+        "epoch protocol; the bucketed facade appends through the catalog " +
+        "(addVersions without a token)")
+
+  // the table cannot be overwritten while the overwrite reads it:
+  // materialize the new state first
+  override protected def rewriteStore(state: DataFrame => DataFrame): Unit = {
+    val snap = Ckpt.eager(state(versions))
+    bucketed(snap, "overwrite")
+    Bridge.unpersistCheckpoint(snap)
+  }
 
   // table-backed: count the managed table's files under the warehouse
   // (every append lands one file PER BUCKET, so long-running ingest
@@ -920,4 +931,57 @@ class BucketedTemporalVectorDB(
     super.compactStore(
       if (targetPartitions > 0) targetPartitions else buckets)
   }
+}
+
+/** The path-backed versions table as one [[EpochStore]] family. Its one
+  * snapshot kind, `versions`, is a plain union of disjoint row slices:
+  * an append's delta epoch holds exactly the rows
+  * [[VersionStore.ingest]] wrote; a snapshot epoch (the first append, a
+  * compaction, a facade rewrite) holds the whole table. Reads union the
+  * committed epoch directories from the latest snapshot up to the head
+  * with the declared [[Schemas.versions]], so unmarked litter of a torn
+  * write stays invisible and no schema is inferred. Layout under the
+  * store path: `versions/epoch=N/` plus the core's `_commits`,
+  * `_snapshots` and `_tokens`. Read only at the head, so compaction also
+  * prunes the absorbed commit markers. Single writer per root. */
+private[api] final class VersionsTable(spark: SparkSession, root: String)
+    extends EpochStore(spark, root, EpochStore.DefaultAutoCompactEpochs) {
+
+  private val cols = Schemas.versions.fieldNames.toSeq
+
+  protected val dataKinds = Nil
+  protected val snapshotKinds = Seq("versions" -> at _)
+
+  override protected def keepsCommitHistory = false
+
+  /** The table at the committed head `e`. */
+  def at(e: Long): DataFrame =
+    unionAt("versions", e, cols, head = e, Some(Schemas.versions))
+
+  def read: DataFrame = {
+    val e = epoch
+    if (e < 0)
+      spark.createDataFrame(java.util.List.of[Row](), Schemas.versions)
+    else at(e)
+  }
+
+  /** Run `append` on the committed head, exactly once per `token` when
+    * there is one. */
+  def appendOnce(token: Option[String])(append: Long => Long): Long =
+    token.fold(append(epoch))(replayOr(_)(append))
+
+  /** Commit `rows` as the delta epoch after `head`. */
+  def commitAppend(head: Long, rows: DataFrame,
+                   token: Option[String]): Long =
+    commitDelta(head + 1, Seq(rows), token)
+
+  /** Commit `state` of the table at the head as a snapshot epoch. */
+  def rewrite(state: DataFrame => DataFrame): Long =
+    compactWith(requireCommitted())(e => Seq(state(at(e))))
+
+  // an append's own fold: the default compactStore layout, written
+  // straight from the epochs it reads (the snapshot lands beside them)
+  override protected def compactState(e: Long): Seq[DataFrame] =
+    Seq(at(e).repartition(spark.sparkContext.defaultParallelism,
+      col("content_id")))
 }

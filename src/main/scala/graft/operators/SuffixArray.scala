@@ -845,20 +845,13 @@ object SuffixArray {
                        textCol: String = "text"): DataFrame = {
     require(window >= 1 && window <= (1 << 24),
       s"window out of range: $window")
-    // DEFAULT FORMULATION (r16): content window keys — window equality
-    // by the 112-bit md5 span key ([[SubstringIndex.windowKeys]], the
-    // same key the maintained index persists and q115 proved
-    // output-identical against q101's rank-formulation oracle). Map-only
-    // keying + ONE keyed aggregation replaces the log2(W) full-corpus
-    // doubling rounds per run (guide §1.2 — the distributed algorithm
-    // first; §2.4 — remove shuffles outright). The rank formulation
-    // stays available under `spark.graft.substring.useRanks=true` (the
-    // spec cross-checks them equal); its exactness trade is the
-    // SubstringIndex doc's: 112-bit-hash-exact vs rank-exact, odds far
-    // below the 56-bit r0 hashing the rank path itself accepts.
-    if (docs.sparkSession.conf
-        .getOption("spark.graft.substring.useRanks").contains("true"))
-      return substringDedupedRanks(docs, window, idCol, textCol)
+    // content window keys: window equality by the 112-bit md5 span key
+    // ([[SubstringIndex.windowKeys]], the same key the maintained index
+    // persists and q115 proved output-identical against q101's
+    // rank-formulation oracle). Map-only keying + ONE keyed aggregation
+    // replaces log2(W) full-corpus doubling rounds per run; the
+    // exactness trade is the SubstringIndex doc's: 112-bit-hash-exact
+    // vs rank-exact.
     val d = docs.select(col(idCol).cast("long").as("doc_id"),
       col(textCol).cast("string").as("text"))
     val keys = SubstringIndex.windowKeys(d, window, "doc_id", "text")
@@ -874,42 +867,6 @@ object SuffixArray {
         (col("doc_id") === col("_keep.doc_id") &&
           col("pos") === col("_keep.pos")).as("_canon"))
     rebuildWithVeto(d, flags, window)
-  }
-
-  /** The suffix-rank formulation of [[substringDeduped]] — retained as
-    * the cross-check reference (spec-gated equal to the content-key
-    * default) and for corpora where the 112-bit span-hash trade is
-    * unwanted. */
-  private[graft] def substringDedupedRanks(docs: DataFrame,
-                                           window: Int = 16,
-                                           idCol: String = "doc_id",
-                                           textCol: String = "text")
-      : DataFrame = {
-    require(window >= 1 && window <= (1 << 24),
-      s"window out of range: $window")
-    val kLev = 63 - java.lang.Long.numberOfLeadingZeros(window.toLong)
-    val shift = window - (1 << kLev)
-    val wide = suffixRanks(docs, math.max(1, kLev), idCol, textCol)
-    val byPos = Window.partitionBy("doc_id").orderBy("pos")
-    val win = wide.select(col("doc_id"), col("pos"), col("len_rem"),
-        col(s"r$kLev").as("_k1"))
-      .withColumn("_k2",
-        if (shift == 0) col("_k1")
-        else lead(col("_k1"), shift).over(byPos))
-      .where(col("len_rem") >= window)
-    // duplicate window groups + canonical pick: ONE keyed aggregation
-    // (map-side partial combine; no per-key window sort), then the
-    // corpus-sized join back touches only duplicate keys
-    val canon = win.groupBy("_k1", "_k2")
-      .agg(min(struct(col("doc_id"), col("pos"))).as("_keep"),
-        count(lit(1)).as("_occ"))
-      .where(col("_occ") >= 2)
-    val flags = win.join(canon, Seq("_k1", "_k2"))
-      .select(col("doc_id"), col("pos"),
-        (col("doc_id") === col("_keep.doc_id") &&
-          col("pos") === col("_keep.pos")).as("_canon"))
-    rebuildWithVeto(docs.select(col(idCol).cast("long").as("doc_id"),
-      col(textCol).cast("string").as("text")), flags, window)
   }
 
   /** Shared removal/rebuild tail of [[substringDeduped]] (also driven by

@@ -24,12 +24,14 @@ import org.apache.spark.sql.types.StructType
   * `merge(union of deltas from the latest snapshot)`; [[compact]]
   * commits exactly that as a new snapshot epoch, so a compaction always
   * applies the merge the reader uses, and prunes the deltas and commit
-  * markers below it. Appends are exactly-once per token (the stream's
-  * batch id): a replayed id no-ops even after compaction pruned its
-  * delta. `_tokens` keeps one small file per batch id ever committed —
-  * it is probed by name, never listed. Single writer per root. */
+  * markers below it. An append folds the chain itself once it spans the
+  * core's default cadence of delta epochs. Appends are exactly-once per
+  * token (the stream's query and batch id): a replayed id no-ops even
+  * after compaction pruned its delta. `_tokens` keeps one small file per
+  * batch id ever committed — it is probed by name, never listed. Single
+  * writer per root. */
 sealed abstract class LiveArtifact(spark: SparkSession, root: String)
-    extends EpochStore(spark, root, autoCompactEpochs = 0) {
+    extends EpochStore(spark, root, EpochStore.DefaultAutoCompactEpochs) {
 
   protected def build(batch: DataFrame): DataFrame
   protected def merge(deltas: DataFrame): DataFrame
@@ -55,22 +57,13 @@ sealed abstract class LiveArtifact(spark: SparkSession, root: String)
   }
 
   /** Commit `batch`'s delta as the next epoch, exactly once per
-    * `token`; returns the epoch (a replay returns the original one).
-    * The first delta is the whole state, so epoch 0 is a snapshot. */
+    * `token`; returns the epoch (a replay returns the original one). */
   def append(batch: DataFrame, token: String): Long =
-    replayOr(token) { head =>
-      val n = head + 1
-      if (n == 0) markSnapshot(0)
-      commitDelta(n, Seq(build(batch)), Some(token))
-    }
+    replayOr(token)(head => commitDelta(head + 1, Seq(build(batch)),
+      Some(token)))
 
-  /** Compaction also prunes the commit markers it absorbed, so listing
-    * `_commits` costs the epochs since the last compaction, not every
-    * batch ever ingested. */
-  override protected def pruneBelow(snap: Long): Unit = {
-    super.pruneBelow(snap)
-    pruneMarkers("_commits", snap)
-  }
+  // read only at the head: compaction prunes the absorbed commit markers
+  override protected def keepsCommitHistory = false
 }
 
 /** Count-min frequency sketch ([[Sketches.countMin]]): cellwise sum. */

@@ -13,7 +13,7 @@ import org.apache.spark.sql.DataFrame
   * completed. A plain `store.append` under replay would either fail
   * loudly (the id-disjointness guard) or, worse for stores without one,
   * double-apply. Each sink here calls the store's token-carrying
-  * `append(batch, token = "stream-<batchId>")`, which rides the
+  * `append(batch, token = batchToken(batch, batchId))`, which rides the
   * [[graft.api.EpochStoreKit]] token protocol: the token file is
   * written between the epoch's artifacts and its commit marker, so
   *  - a replayed batchId that already committed is a NO-OP;
@@ -45,20 +45,32 @@ import org.apache.spark.sql.DataFrame
   */
 object StoreSink {
 
-  private def tok(batchId: Long): String = s"stream-$batchId"
+  /** The idempotence token of a micro-batch — the one token function of
+    * every streaming writer (these sinks, [[StreamingIngest.start]] and
+    * the live artifacts). Batch ids restart at 0 for every new
+    * checkpoint, so the token is scoped by the query's id, which Spark
+    * persists in the checkpoint and sets as the `sql.streaming.queryId`
+    * local property on the micro-batch thread: a restart from the same
+    * checkpoint replays under the same tokens, a query on a fresh
+    * checkpoint never matches an earlier query's. Outside a query (a
+    * direct call) the token is `stream-<batchId>`. */
+  private[graft] def batchToken(batch: DataFrame, batchId: Long): String =
+    Option(batch.sparkSession.sparkContext
+        .getLocalProperty("sql.streaming.queryId"))
+      .fold(s"stream-$batchId")(q => s"stream-$q-$batchId")
 
   /** Sink a stream of (doc_id, text) into a [[SubstringDedupStore]]. */
   def substring(store: SubstringDedupStore)
       : (DataFrame, Long) => Unit =
-    (batch, batchId) => { store.append(batch, tok(batchId)); () }
+    (batch, batchId) => { store.append(batch, batchToken(batch, batchId)); () }
 
   /** Sink a stream of (_id, simhash) into a [[FingerprintStore]]. */
   def fingerprint(store: FingerprintStore): (DataFrame, Long) => Unit =
-    (batch, batchId) => { store.append(batch, tok(batchId)); () }
+    (batch, batchId) => { store.append(batch, batchToken(batch, batchId)); () }
 
   /** Sink a stream of (doc_id, key) into a [[FuzzyKeyStore]]. */
   def fuzzyKey(store: FuzzyKeyStore): (DataFrame, Long) => Unit =
-    (batch, batchId) => { store.append(batch, tok(batchId)); () }
+    (batch, batchId) => { store.append(batch, batchToken(batch, batchId)); () }
 
   /** Sink a stream of (vec_id, embedding) into a
     * [[SemanticDedupStore]]. The staleness gate applies per batch — a
@@ -67,13 +79,13 @@ object StoreSink {
     * resumes from the failed batch, whose token then commits it
     * exactly once). */
   def semantic(store: SemanticDedupStore): (DataFrame, Long) => Unit =
-    (batch, batchId) => { store.append(batch, tok(batchId)); () }
+    (batch, batchId) => { store.append(batch, batchToken(batch, batchId)); () }
 
   /** Sink a stream of (idCol, textCol) into a [[MinHashDedupStore]]. */
   def minhash(store: MinHashDedupStore, idCol: String = "doc_id",
               textCol: String = "text"): (DataFrame, Long) => Unit =
     (batch, batchId) =>
-      { store.append(batch, idCol, textCol, tok(batchId)); () }
+      { store.append(batch, idCol, textCol, batchToken(batch, batchId)); () }
 
   /** Sink a stream of full curation rows (doc_id, text, key, embedding)
     * into a [[CurationDB]] — all five member stores advance exactly
@@ -81,5 +93,5 @@ object StoreSink {
     * replay (or a crash after any subset of members committed) is
     * repaired by the engine re-delivering the batch. */
   def curation(db: CurationDB): (DataFrame, Long) => Unit =
-    (batch, batchId) => { db.append(batch, tok(batchId)); () }
+    (batch, batchId) => { db.append(batch, batchToken(batch, batchId)); () }
 }

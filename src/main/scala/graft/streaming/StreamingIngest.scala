@@ -1,11 +1,10 @@
 package graft.streaming
 
-import graft.api.{BucketedTemporalVectorDB, TemporalVectorDB}
+import graft.api.TemporalVectorDB
 import graft.model.VersionRecord
-import graft.operators.{Ckpt, VersionStore}
+import graft.operators.VersionStore
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Per-content ingest state for [[StreamingIngest.statefulIngest]]: the
@@ -23,104 +22,26 @@ case class IngestState(lastSeq: Int, lastEmbedding: Array[Float])
   * pipeline against the current store state, so streaming and batch ingest
   * have identical semantics by construction.
   *
-  * Delivery semantics: foreachBatch is at-least-once; a naive append would
-  * duplicate a retried micro-batch's (content_id, seq) rows. [[start]] is
-  * EXACTLY-ONCE on plain parquet via a staged commit:
-  *   1. skip if `<store>_commits/<batchId>` exists (committed);
-  *   2. ROLL BACK any root files carrying this batch's `b<id>-` prefix
-  *      (uncommitted leftovers of a crashed attempt — the marker is the
-  *      only commit point, so they are invisible to the protocol);
-  *   3. write the ingested batch under `<store>_staging/<batchId>`,
-  *      computed against the rolled-back store;
-  *   4. rename each staged file into the table root under the batch
-  *      prefix, then write the commit marker and drop the staging dir.
-  * A crash ANYWHERE before the marker replays from step 2 with the same
-  * inputs; a crash after the marker replays as a no-op. No crash point
-  * loses or duplicates rows (fault-injection test in StreamingSpec).
-  * Single-writer assumption: one streaming query owns the store path.
+  * Delivery semantics: foreachBatch is at-least-once; [[start]] is
+  * EXACTLY-ONCE because each micro-batch is a token append
+  * ([[TemporalVectorDB.addVersions]] with the batch's
+  * [[StoreSink.batchToken]]) on the store's epoch protocol
+  * ([[graft.api.EpochStore]]): a crash before the commit marker leaves
+  * nothing visible and the replay recomputes against the committed
+  * versions; a replay after the marker is a no-op. Single-writer
+  * assumption: one streaming query owns the store path.
   */
 object StreamingIngest {
 
-  /** Start ingesting a stream of (content_id, ts, embedding) rows.
-    * Micro-batches are applied through [[TemporalVectorDB.addVersions]]
-    * (seq offsets continue from the stored max per content); replayed
-    * batch ids whose commit marker exists are skipped (see class doc). */
+  /** Start ingesting a stream of (content_id, ts, embedding) rows into
+    * a path-backed store. Micro-batches are applied through
+    * [[TemporalVectorDB.addVersions]] (seq offsets continue from the
+    * committed max per content), exactly once per batch (see class
+    * doc). */
   def start(stream: DataFrame, db: TemporalVectorDB,
             checkpoint: String): StreamingQuery =
-    eachBatch(stream, checkpoint)(processBatch(db, _, _))
-
-  /** One micro-batch through the staged exactly-once commit (class doc).
-    * Exposed for direct testing; `crashBeforeMarker` is a fault-injection
-    * point that dies after the data renames but before the commit marker —
-    * the worst-case crash the protocol must absorb. */
-  def processBatch(db: TemporalVectorDB, batch: DataFrame, batchId: Long,
-                   crashBeforeMarker: Boolean = false): Unit = {
-    import org.apache.hadoop.fs.Path
-    // the staged commit renames files under db.path — only valid for the
-    // path-backed store (a bucketed facade's `path` is a catalog table
-    // NAME; renaming into it would stray-write a relative directory the
-    // table never reads)
-    require(!db.isInstanceOf[BucketedTemporalVectorDB],
-      "streaming staged commit requires a path-backed TemporalVectorDB; " +
-        "BucketedTemporalVectorDB appends go through addVersions")
-    val root = new Path(db.path)
-    val fs = root.getFileSystem(
-      batch.sparkSession.sparkContext.hadoopConfiguration)
-    // markers and staging live BESIDE the store (the indexDir
-    // convention), not inside it: a maintenance overwrite of the root
-    // (compaction, base promotion) then cannot touch them under ANY
-    // crash timing — keeping them inside and restoring after the
-    // overwrite would leave a window where a crash loses every marker
-    // and a checkpoint-recovery replay re-appends committed batches
-    val commits = new Path(db.path.stripSuffix("/") + "_commits")
-    val marker = new Path(commits, batchId.toString)
-    val staging = new Path(
-      new Path(db.path.stripSuffix("/") + "_staging"), batchId.toString)
-    if (fs.exists(marker)) { // committed: replay is a no-op
-      if (fs.exists(staging)) fs.delete(staging, true) // lazy cleanup
-      return
-    }
-    if (batch.isEmpty) return
-    val prefix = s"b$batchId-"
-    // roll back uncommitted leftovers of a crashed earlier attempt, so the
-    // seq-offset read below never sees this batch's own partial files
-    if (fs.exists(root))
-      fs.listStatus(root).iterator
-        .filter(s => s.isFile && s.getPath.getName.startsWith(prefix))
-        .foreach(s => fs.delete(s.getPath, false))
-    val hasData = fs.exists(root) && fs.listStatus(root).exists { s =>
-      val n = s.getPath.getName
-      s.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-    val existing =
-      if (hasData) Some(db.versions.select("content_id", "seq")) else None
-    // pinned once: staged from, then the live indexes refresh from it
-    val ingested = Ckpt.eager(VersionStore.ingest(batch, existing, db.cfg))
-    try {
-      ingested.write.mode("overwrite").parquet(staging.toString)
-      // per-file renames (atomic on HDFS-like filesystems); the batch prefix
-      // marks them uncommitted until the marker lands. Hadoop rename reports
-      // most failures by RETURNING FALSE, not throwing — an unchecked false
-      // here would let the marker commit a batch whose files never moved,
-      // then delete them with the staging dir: silent permanent loss. Abort
-      // instead; replay rolls back and retries.
-      fs.listStatus(staging).map(_.getPath)
-        .filter(_.getName.startsWith("part-"))
-        .foreach { p =>
-          val dest = new Path(root, prefix + p.getName)
-          if (!fs.rename(p, dest))
-            throw new java.io.IOException(
-              s"staged-commit rename failed: $p -> $dest (batch $batchId); " +
-                "aborting before marker — replay will roll back and retry")
-        }
-      if (crashBeforeMarker)
-        throw new IllegalStateException("failpoint: crash before marker")
-      fs.mkdirs(commits)
-      fs.create(marker, true).close()
-      fs.delete(staging, true)
-      db.refreshAfterAppend(ingested)
-    } finally Bridge.unpersistCheckpoint(ingested)
-  }
+    eachBatch(stream, checkpoint)((batch, batchId) =>
+      db.addVersions(batch, StoreSink.batchToken(batch, batchId)))
 
   /** Fully streaming-native versioned ingest via `flatMapGroupsWithState`:
     * per-content state carries (lastSeq, lastEmbedding), so every
@@ -501,11 +422,12 @@ object StreamingIngest {
       .start()
 
   /** Maintain `artifact` over `stream`: each micro-batch commits its
-    * delta exactly once, token = the batch id ([[LiveArtifact]]). */
+    * delta exactly once ([[LiveArtifact]]), token =
+    * [[StoreSink.batchToken]]. */
   private def maintain(stream: DataFrame, checkpoint: String,
                        artifact: LiveArtifact): StreamingQuery =
     eachBatch(stream, checkpoint)((batch, batchId) =>
-      artifact.append(batch, batchId.toString))
+      artifact.append(batch, StoreSink.batchToken(batch, batchId)))
 
   // ---- maintained live artifacts ----------------------------------
   //

@@ -1,10 +1,11 @@
 package graft
 
-import graft.api.{FingerprintStore, MinHashDedupStore,
-  SemanticDedupStore}
+import graft.api.{BucketedTemporalVectorDB, FingerprintStore,
+  MinHashDedupStore, SemanticDedupStore, TemporalVectorDB}
+import graft.streaming.{CountMinArtifact, PostingsArtifact}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 /** The `autoCompactEpochs` knob: once the latest-wins resolution window
   * spans the threshold, append() folds it automatically — and the fold
@@ -116,5 +117,65 @@ class AutoCompactSpec extends SparkSpec {
     def kept(s: SemanticDedupStore): Set[Long] = s.kept(allIds, "vec_id")
       .select(col("vec_id").cast("long")).as[Long].collect().toSet
     assert(kept(auto) == kept(manual))
+  }
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("live artifacts fold at the default cadence: 20 token appends " +
+    "compact at the 17th, and every read equals a never-folded twin " +
+    "holding the same rows as one delta") {
+    val base = Files.createTempDirectory("graft-ac-la").toString
+    val cms = new CountMinArtifact(spark, s"$base/cms", "text", 3, 32)
+    val post = new PostingsArtifact(spark, s"$base/post")
+    def batch(k: Int) = (0 until 5)
+      .map(i => (100L * k + i, s"w${(i * k) % 7} w${k % 4} tail"))
+      .toDF("doc_id", "text")
+    for (k <- 1 to 20) {
+      cms.append(batch(k), s"b$k")
+      post.append(batch(k), s"b$k")
+      if (k >= 15) {
+        val all = (1 to k).map(batch).reduce(_ unionByName _)
+        val cmsTwin = new CountMinArtifact(spark, s"$base/cms-twin$k",
+          "text", 3, 32)
+        cmsTwin.append(all, "all")
+        assert(rows(cms.read) == rows(cmsTwin.read), s"count-min at $k")
+        val postTwin = new PostingsArtifact(spark, s"$base/post-twin$k")
+        postTwin.append(all, "all")
+        assert(rows(post.read) == rows(postTwin.read), s"postings at $k")
+      }
+    }
+    // epochs 0..15 are deltas, the 17th append (epoch 16) folds them
+    assert(cms.latestSnapshot == 17L && cms.epoch == 20L)
+    assert(!Files.exists(Paths.get(s"$base/cms/delta/epoch=0")))
+  }
+
+  test("the versions table folds at the default cadence: 20 appends " +
+    "compact at the 17th, and the store reads equal a never-folded " +
+    "(bucketed, catalog-backed) twin's at every step past the fold") {
+    val dir = Files.createTempDirectory("graft-ac-tv").toString + "/v"
+    val db = new TemporalVectorDB(spark, dir)
+    spark.sql("DROP TABLE IF EXISTS graft_ac_twin")
+    val twin = new BucketedTemporalVectorDB(spark, "graft_ac_twin",
+      buckets = 2)
+    // two versions per content per append: a base, then a sparse delta
+    def batch(k: Int) = (for (c <- Seq("x", "y"); v <- 0 to 1) yield
+      (c, new java.sql.Timestamp(1700000000000L + k * 1000L + v),
+        Array.tabulate(16)(j =>
+          if (j == k % 16) k.toFloat + v else 0.5f)))
+      .toDF("content_id", "ts", "embedding")
+    try {
+      for (k <- 1 to 20) {
+        db.addVersions(batch(k))
+        twin.addVersions(batch(k))
+        if (k >= 15)
+          assert(rows(db.versions) == rows(twin.versions), s"after $k")
+      }
+      assert(!Files.exists(Paths.get(s"$dir/versions/epoch=0")))
+      assert(Files.exists(Paths.get(s"$dir/_snapshots/17")))
+      val targets = db.versions.select("content_id", "seq")
+      assert(rows(db.batchReconstruct(targets)) ==
+        rows(twin.batchReconstruct(targets)))
+    } finally spark.sql("DROP TABLE IF EXISTS graft_ac_twin")
   }
 }

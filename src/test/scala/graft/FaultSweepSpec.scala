@@ -1,7 +1,8 @@
 package graft
 
 import graft.api.{EpochStoreKit, FingerprintStore, FuzzyKeyStore,
-  MinHashDedupStore, SemanticDedupStore, SubstringDedupStore}
+  MinHashDedupStore, SemanticDedupStore, SubstringDedupStore,
+  TemporalVectorDB}
 import graft.streaming.{CountMinArtifact, LiveArtifact,
   PrioritySampleArtifact}
 import org.apache.spark.sql.DataFrame
@@ -340,6 +341,44 @@ class FaultSweepSpec extends SparkSpec {
       append2,
       r => { FingerprintStore.open(spark, r).compact(); append2(r) },
       fpRead)
+  }
+
+  // three contents, four versions each per batch: a base, then sparse
+  // deltas, so chains grow and base promotion has targets
+  private def tvBatch(k: Int) = (for (c <- 0 until 3; v <- 0 until 4)
+    yield (s"v$c", new java.sql.Timestamp(1700000000000L + k * 100L + v),
+      Array.tabulate(8)(j => if (j == (c + v) % 8) 0.1f * (k + v) else 0.5f)))
+    .toDF("content_id", "ts", "embedding")
+
+  private def tvRead(root: String): Any =
+    rowSet(new TemporalVectorDB(spark, root).versions)
+
+  test("versions table: kill at every write boundary of a token append " +
+    "(the retry is its replay), compactStore and applyBaseOptimization, " +
+    "and a token append torn at every boundary, then compactStore, then " +
+    "its replay — the batch lands exactly once") {
+    def db(r: String) = new TemporalVectorDB(spark, r)
+    val build = (r: String) => { db(r).addVersions(tvBatch(1), "b1"); () }
+    val append2 = (r: String) => { db(r).addVersions(tvBatch(2), "b2"); () }
+    sweep(Scenario("tv-append", build, append2, tvRead))
+    val build2 = (r: String) => { build(r); append2(r) }
+    sweep(Scenario("tv-compact", build2,
+      r => { db(r).compactStore(targetPartitions = 2); () }, tvRead))
+    sweep(Scenario("tv-promote", build2, r => {
+      assert(db(r).applyBaseOptimization(maxCost = 1) >= 0); ()
+    }, tvRead))
+    crossOp("tv-xop-append", build2,
+      r => { db(r).addVersions(tvBatch(3), "b3"); () },
+      r => {
+        db(r).compactStore(targetPartitions = 2)
+        db(r).addVersions(tvBatch(3), "b3")
+        db(r).addVersions(tvBatch(3), "b3") // a second replay: a no-op
+        ()
+      }, tvRead)
+    // promotion had targets, so the sweep above rewrote the store
+    val probe = Files.createTempDirectory("graft-fault-tv-probe").toString
+    build2(probe)
+    assert(db(probe).applyBaseOptimization(maxCost = 1) > 0)
   }
 
   test("CurationDB composed append: kill at EVERY write boundary " +

@@ -106,9 +106,13 @@ class PointReadSpec extends SparkSpec {
     def check(after: String): Unit = {
       val (rel, jobs) = jobsOf(db.versions)
       assert(jobs == 0, s"after $after: resolving the store ran $jobs jobs")
-      assert(rel.schema == spark.read.parquet(db.path).schema,
-        s"after $after: ${rel.schema.treeString} vs " +
-          spark.read.parquet(db.path).schema.treeString)
+      // the schema Spark infers from the store's epoch directories,
+      // without the directories' own `epoch` partition column
+      val inferred = org.apache.spark.sql.types.StructType(
+        spark.read.parquet(s"${db.path}/versions").schema
+          .filterNot(_.name == "epoch"))
+      assert(rel.schema == inferred,
+        s"after $after: ${rel.schema.treeString} vs ${inferred.treeString}")
     }
     check("addVersions")
     assert(db.applyBaseOptimization(maxCost = 1) > 0)
@@ -193,6 +197,30 @@ class PointReadSpec extends SparkSpec {
     val db = freshDb()
     checkSearches(loaded(db))
     db.close()
+  }
+
+  test("40 appends and no compactStore: the store folds itself every " +
+    "16 delta epochs, so a read lists few epoch directories and " +
+    "getVersion still runs at most one job") {
+    val db = freshDb()
+    val r = new scala.util.Random(23)
+    var cur = Array.fill(dim)(r.nextFloat() - 0.3f)
+    for (k <- 1 to 40) {
+      cur = step(cur, r)
+      db.addVersions(Seq(("a", ts(k), cur.clone()), ("b", ts(k), cur.map(-_)))
+        .toDF("content_id", "ts", "embedding"))
+    }
+    val epochDirs = new java.io.File(s"${db.path}/versions").list()
+      .count(_.startsWith("epoch="))
+    assert(epochDirs <= 16, s"$epochDirs epoch directories after 40 appends")
+    for (s <- Seq(1, 17, 37, 40)) {
+      val (one, jobs) = jobsOf(recon(db.getVersion("a", s)))
+      assert(jobs <= 1, s"getVersion(a, $s) ran $jobs jobs")
+      assert(one == recon(db.batchReconstruct(
+        Seq(("a", s)).toDF("content_id", "seq"))), s"getVersion(a, $s)")
+      assert(one.size == 1)
+    }
+    assert(db.versions.count() == 80)
   }
 
   test("the bucketed facade's point reads equal its set-based paths and " +

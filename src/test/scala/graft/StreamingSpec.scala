@@ -1,8 +1,8 @@
 package graft
 
-import graft.api.TemporalVectorDB
+import graft.api.{EpochStoreKit, FingerprintStore, TemporalVectorDB}
 import graft.operators.VersionStore
-import graft.streaming.StreamingIngest
+import graft.streaming.{StoreSink, StreamingIngest}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
@@ -63,7 +63,7 @@ class StreamingSpec extends SparkSpec {
       // build the maintained index over the streamed-so-far corpus...
       assert(db.searchLatestVersionsPq(vec(3), k = 1, refine = 4)
         .select("id").as[String].collect().head == "s03#1")
-      // ...then stream MORE contents: refreshAfterAppend must re-encode
+      // ...then stream MORE contents: each append's refresh must re-encode
       // them with the EXISTING centroids/codebooks (no retrain, no
       // rebuild) and searches must find them immediately
       stream.addData(("zz", ts(2), vec(99)))
@@ -110,21 +110,75 @@ class StreamingSpec extends SparkSpec {
     val batch = Seq(("r1", ts(1), Array.fill(8)(0.5f)),
       ("r1", ts(2), Array.fill(8)(0.6f)))
       .toDF("content_id", "ts", "embedding")
-    StreamingIngest.processBatch(db, batch, batchId = 0L)
+    assert(db.addVersions(batch, "0") == 0L)
     assert(db.versions.count() == 2)
-    // at-least-once replay of the SAME batch id: must be a no-op
-    StreamingIngest.processBatch(db, batch, batchId = 0L)
+    // at-least-once replay of the SAME batch id: a no-op that returns
+    // the epoch the token committed
+    assert(db.addVersions(batch, "0") == 0L)
     assert(db.versions.count() == 2)
     // a NEW batch id still appends
-    StreamingIngest.processBatch(db,
-      Seq(("r1", ts(3), Array.fill(8)(0.7f)))
-        .toDF("content_id", "ts", "embedding"), batchId = 1L)
+    db.addVersions(Seq(("r1", ts(3), Array.fill(8)(0.7f)))
+      .toDF("content_id", "ts", "embedding"), "1")
     assert(db.versions.count() == 3)
     assert(db.validateTimelineIntegrity().count() == 0)
   }
 
+  test("streaming tokens are scoped by the query: a second query on a " +
+    "fresh checkpoint lands its batch 0 in a versions store, a store " +
+    "sink and a live artifact a first query already wrote") {
+    implicit val sqlCtx = spark.sqlContext
+    val base = Files.createTempDirectory("tvdb-two-queries").toString
+    val db = new TemporalVectorDB(spark, s"$base/versions")
+    val h = 0x00FF00FF00L
+    val fp = FingerprintStore.init(spark, s"$base/fp",
+      Seq((1L, h)).toDF("_id", "simhash"))
+    val cms = s"$base/cms"
+    // each query runs on its own checkpoint, so both start at batch id 0
+    def runQuery(k: Int): Unit = {
+      val ck = s"$base/ck$k"
+      val vs = MemoryStream[(String, Timestamp, Array[Float])]
+      val ps = MemoryStream[(Long, Long)]
+      val ws = MemoryStream[String]
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+        (Option[String], String)]()
+      val sink = ps.toDF().toDF("_id", "simhash").writeStream
+        .option("checkpointLocation", s"$ck/fp")
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+          seen.add((Option(b.sparkSession.sparkContext
+            .getLocalProperty("sql.streaming.queryId")),
+            StoreSink.batchToken(b, id)))
+          StoreSink.fingerprint(fp)(b, id)
+        }.start()
+      val queries = Seq(sink,
+        StreamingIngest.start(
+          vs.toDF().toDF("content_id", "ts", "embedding"), db, s"$ck/v"),
+        StreamingIngest.streamingCountMin(ws.toDF().toDF("_v"), "_v", cms,
+          s"$ck/cms"))
+      try {
+        vs.addData((s"q$k", ts(k), Array.fill(8)(0.1f * k)))
+        ps.addData((100L * k, h ^ (1L << k)))
+        ws.addData(s"w$k")
+        queries.foreach(_.processAllAvailable())
+      } finally queries.foreach(_.stop())
+      // the query id is set on the micro-batch thread, and the token
+      // carries it
+      val qid = sink.id.toString
+      assert(seen.toArray.toSeq == Seq((Some(qid), s"stream-$qid-0")))
+    }
+    runQuery(1)
+    runQuery(2)
+    assert(db.versions.select("content_id").as[String].collect().sorted
+      .toSeq == Seq("q1", "q2"))
+    assert(fp.prints.count() == 3)
+    val cmsRow0 = StreamingIngest.readCountMin(spark, cms)
+      .where(col("row") === 0).agg(sum("cnt")).as[Long].head()
+    assert(cmsRow0 == 2L)
+    // outside a query, the token keeps its direct-call form
+    assert(StoreSink.batchToken(spark.emptyDataFrame, 7L) == "stream-7")
+  }
+
   test("compactStore: streamed small files collapse, data is identical, " +
-    "commit markers survive the rewrite — replayed batches still skip") {
+    "idempotence tokens survive the rewrite — replayed batches still skip") {
     val dir = Files.createTempDirectory("tvdb-compact").toFile
     dir.delete()
     val db = new TemporalVectorDB(spark, dir.getAbsolutePath)
@@ -134,65 +188,66 @@ class StreamingSpec extends SparkSpec {
         .toDF("content_id", "ts", "embedding")
     }
     batches.zipWithIndex.foreach { case (bt, id) =>
-      StreamingIngest.processBatch(db, bt, id.toLong) }
+      db.addVersions(bt, id.toString) }
     val rowsBefore = db.versions
       .select("content_id", "seq", "kind")
       .as[(String, Int, String)].collect().sorted.toSeq
     assert(rowsBefore.length == 20)
     val (nBefore, nAfter) = db.compactStore(targetPartitions = 2)
-    // five staged commits accreted a file set per batch; two files remain
+    // five delta epochs accreted a file set per batch; two files remain
     assert(nBefore > nAfter && nAfter <= 2L, s"$nBefore -> $nAfter")
     val rowsAfter = db.versions
       .select("content_id", "seq", "kind")
       .as[(String, Int, String)].collect().sorted.toSeq
     assert(rowsAfter == rowsBefore)
     assert(db.validateTimelineIntegrity().count() == 0)
-    // the commit markers survived: an at-least-once replay of an already
-    // committed batch is STILL a no-op (without marker preservation the
-    // rewrite would have silently downgraded exactly-once to duplicates)
-    StreamingIngest.processBatch(db, batches(3), batchId = 3L)
+    // the tokens survived: an at-least-once replay of an already
+    // committed batch is STILL a no-op (without them the rewrite would
+    // have silently downgraded exactly-once to duplicates)
+    db.addVersions(batches(3), "3")
     assert(db.versions.count() == 20)
     // and ingest continues normally on the compacted store
-    StreamingIngest.processBatch(db,
-      Seq(("k0", ts(9), Array.fill(8)(0.9f)))
-        .toDF("content_id", "ts", "embedding"), batchId = 5L)
+    db.addVersions(Seq(("k0", ts(9), Array.fill(8)(0.9f)))
+      .toDF("content_id", "ts", "embedding"), "5")
     assert(db.versions.count() == 21)
     assert(db.validateTimelineIntegrity().count() == 0)
   }
 
-  test("exactly-once: a crash between data rename and commit marker " +
-    "neither loses nor duplicates rows on replay (fault injection)") {
+  test("exactly-once: a crash at the commit marker leaves the batch " +
+    "invisible, and the replay neither loses nor duplicates rows " +
+    "(fault injection)") {
     val dir = Files.createTempDirectory("tvdb-crash").toFile
     dir.delete()
-    val db = new TemporalVectorDB(spark, dir.getAbsolutePath)
-    StreamingIngest.processBatch(db,
-      Seq(("c1", ts(1), Array.fill(8)(0.5f)))
-        .toDF("content_id", "ts", "embedding"), batchId = 0L)
+    val root = dir.getAbsolutePath
+    val db = new TemporalVectorDB(spark, root)
+    db.addVersions(Seq(("c1", ts(1), Array.fill(8)(0.5f)))
+      .toDF("content_id", "ts", "embedding"), "0")
     assert(db.versions.count() == 1)
     val batch1 = Seq(("c1", ts(2), Array.fill(8)(0.6f)),
       ("c2", ts(1), Array.fill(8)(0.1f)))
       .toDF("content_id", "ts", "embedding")
-    // worst-case crash: data files already renamed into the root, marker
-    // never written — the batch's rows are visible but uncommitted
-    intercept[IllegalStateException] {
-      StreamingIngest.processBatch(db, batch1, batchId = 1L,
-        crashBeforeMarker = true)
-    }
-    assert(db.versions.count() == 3) // uncommitted rows visible (expected)
-    // replay of the same batch id: rollback + re-stage + commit
-    StreamingIngest.processBatch(db, batch1, batchId = 1L)
+    // worst-case crash: the epoch's data files are written, its commit
+    // marker never lands
+    EpochStoreKit.installFaultHook(root, p =>
+      if (p.endsWith("/_commits/1"))
+        throw new IllegalStateException("fault injected before the marker"))
+    try intercept[IllegalStateException](db.addVersions(batch1, "1"))
+    finally EpochStoreKit.clearFaultHook(root)
+    assert(new java.io.File(s"$root/versions/epoch=1").exists)
+    assert(db.versions.count() == 1) // uncommitted rows stay invisible
+    // replay of the same batch id: recompute + overwrite + commit
+    db.addVersions(batch1, "1")
     assert(db.versions.count() == 3) // no duplicates
     val got = db.versions.select("content_id", "seq")
       .as[(String, Int)].collect().sorted.toSeq
     assert(got == Seq(("c1", 1), ("c1", 2), ("c2", 1))) // no losses either
     assert(db.validateTimelineIntegrity().count() == 0)
     // a second replay after commit is a no-op
-    StreamingIngest.processBatch(db, batch1, batchId = 1L)
+    db.addVersions(batch1, "1")
     assert(db.versions.count() == 3)
     // and the next batch continues normally
-    StreamingIngest.processBatch(db,
-      Seq(("c2", ts(2), Array.fill(8)(0.2f)))
-        .toDF("content_id", "ts", "embedding"), batchId = 2L)
+    db.addVersions(Seq(("c2", ts(2), Array.fill(8)(0.2f)))
+      .toDF("content_id", "ts", "embedding"), "2")
     assert(db.versions.count() == 4)
     assert(db.validateTimelineIntegrity().count() == 0)
   }
@@ -600,10 +655,11 @@ class StreamingSpec extends SparkSpec {
     val live = StreamingIngest.readCountMin(spark, sketchPath)
     // the merge identity: streamed deltas sum EXACTLY to the batch build
     assert(cells(live) == cells(batchEquiv))
-    // a replayed micro-batch (same id, even different data) is a no-op
+    // a replayed micro-batch (same id, even different data) is a no-op;
+    // a streamed batch's token is its query id + batch id
     val cms = new graft.streaming.CountMinArtifact(spark, sketchPath, "w",
       3, 32)
-    cms.append(Seq.fill(99)("tokX").toDF("w"), "0")
+    cms.append(Seq.fill(99)("tokX").toDF("w"), s"stream-${q.id}-0")
     assert(cells(StreamingIngest.readCountMin(spark, sketchPath)) ==
       cells(batchEquiv))
     // a crashed append leaves only uncommitted litter; the next commit
@@ -652,7 +708,7 @@ class StreamingSpec extends SparkSpec {
     // a replayed micro-batch (same id, even different data) is a no-op
     val hll = new graft.streaming.HllArtifact(spark, sketchPath, "g", "w",
       6)
-    hll.append(Seq(("fr", "tokX")).toDF("g", "w"), "0")
+    hll.append(Seq(("fr", "tokX")).toDF("g", "w"), s"stream-${q.id}-0")
     assert(cells(StreamingIngest.readHll(spark, sketchPath, "g")) ==
       cells(batchEquiv))
     // a crashed append leaves only uncommitted litter; the next commit
@@ -705,7 +761,8 @@ class StreamingSpec extends SparkSpec {
       rows(batchEquiv))
     // a replayed micro-batch (same id, even different data) is a no-op
     val man = new graft.streaming.ManifestArtifact(spark, mPath, "grp")
-    man.append(Seq((9L, "g9", "junk")).toDF("doc_id", "grp", "text"), "0")
+    man.append(Seq((9L, "g9", "junk")).toDF("doc_id", "grp", "text"),
+      s"stream-${q.id}-0")
     assert(rows(StreamingIngest.readManifest(spark, mPath, "grp")) ==
       rows(batchEquiv))
     // a crashed append leaves only uncommitted litter; the next commit
@@ -768,7 +825,8 @@ class StreamingSpec extends SparkSpec {
       rows(batchEquiv))
     // replayed micro-batch (same id, different data) is a no-op
     val pack = new graft.streaming.PackingCountsArtifact(spark, pPath)
-    pack.append(Seq((99L, "junk junk junk")).toDF("doc_id", "text"), "0")
+    pack.append(Seq((99L, "junk junk junk")).toDF("doc_id", "text"),
+      s"stream-${q.id}-0")
     assert(rows(StreamingIngest.readPackingManifest(spark, pPath, 8L)) ==
       rows(batchEquiv))
     // uncommitted crash litter is overwritten by the next commit
@@ -827,7 +885,8 @@ class StreamingSpec extends SparkSpec {
       ded(SuffixArray.substringDeduped(union, W)))
     // replayed micro-batch (same id, different data) is a no-op
     val ssi = new graft.streaming.SubstringIndexArtifact(spark, iPath, W)
-    ssi.append(Seq((99L, "j j j j")).toDF("doc_id", "text"), "0")
+    ssi.append(Seq((99L, "j j j j")).toDF("doc_id", "text"),
+      s"stream-${q.id}-0")
     assert(rows(StreamingIngest.readSubstringIndex(spark, iPath, W)) ==
       rows(SubstringIndex.buildIndex(union, W)))
     // uncommitted crash litter is overwritten by the next commit
@@ -1053,7 +1112,7 @@ class StreamingSpec extends SparkSpec {
     assert(rows(live) == rows(Retrieval.postings(union)))
     // a replayed micro-batch (same id, even different data) is a no-op
     val post = new graft.streaming.PostingsArtifact(spark, postPath)
-    post.append(Seq((99L, "x y z")).toDF("doc_id", "text"), "0")
+    post.append(Seq((99L, "x y z")).toDF("doc_id", "text"), s"stream-${q.id}-0")
     assert(rows(StreamingIngest.readPostings(spark, postPath)) ==
       rows(Retrieval.postings(union)))
     // a crashed append leaves only uncommitted litter; the next commit
@@ -1104,7 +1163,7 @@ class StreamingSpec extends SparkSpec {
     // a replayed micro-batch (same id, different data) is a no-op
     val ps = new graft.streaming.PrioritySampleArtifact(spark, samplePath,
       5, "w")
-    ps.append(Seq((9999L, 9999L)).toDF("doc_id", "w"), "0")
+    ps.append(Seq((9999L, 9999L)).toDF("doc_id", "w"), s"stream-${q.id}-0")
     assert(rows(StreamingIngest.readPrioritySample(spark, samplePath, 5))
       == rows(batchEquiv))
     // uncommitted crash litter is overwritten by the next commit

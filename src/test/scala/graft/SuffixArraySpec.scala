@@ -303,8 +303,14 @@ class SuffixArraySpec extends SparkSpec {
       4L -> Seq.fill(12)("x").mkString(" "),       // periodic self-repeat
       5L -> "only two",                            // shorter than any window
       6L -> "   ",                                 // whitespace-only
-      7L -> (1 to 15).map(i => s"u$i").mkString(" ")) // unique, untouched
-    for (w <- Seq(3, 5, 8)) { // 8 = pow2 (shift 0), 3/5 composite keys
+      7L -> (1 to 15).map(i => s"u$i").mkString(" "), // unique, untouched
+      8L -> "a b a b a b a b",                     // overlapping windows
+      9L -> "a b a b a b a b",                     // ...repeated
+      10L -> "  c  d   a b a  b e  ",              // space runs
+      11L -> "c d a b a b e f",                    // doc 10's tokens
+      12L -> "x\ty\nz x y z",                      // tab/newline separators
+      13L -> "")
+    for (w <- Seq(1, 2, 3, 4, 5, 8)) { // 8 = pow2, 3/5 composite keys
       assert(runDedup(docs, w) == bruteDedup(docs, w), s"window=$w")
     }
   }
