@@ -4,7 +4,6 @@ import graft.operators.Ckpt
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.StructType
 
 /** The epoch protocol of the durable dedup stores ([[SubstringDedupStore]],
@@ -202,32 +201,35 @@ private[graft] abstract class EpochStore(val spark: SparkSession,
       token.map(EpochStoreKit.tokenField).getOrElse(""))
   }
 
-  /** Commit the delta epoch `n` of an append, free the checkpoints the
-    * write was the last consumer of, and fold the chain once it spans
+  /** Build and commit the delta epoch `n` of an append in one
+    * [[Ckpt.scope]] — every checkpoint the build made is freed once the
+    * epoch write landed — then fold the chain once it spans
     * `autoCompactEpochs` deltas (0 disables; SCALE.md's measured curve
-    * sizes it). A torn compaction's mark at `n` is cleared first (epoch
-    * 0 is never a compaction's); epoch 0 — the first delta of a store
-    * without an `init` — holds the whole state, so it is marked a
-    * snapshot. Returns `n`. */
-  protected def commitDelta(n: Long, artifacts: Seq[DataFrame],
-                            token: Option[String],
-                            pinned: DataFrame*): Long = {
-    if (n > 0) EpochStoreKit.unmark(fs, new Path(s"$root/_snapshots/$n"))
-    else markSnapshot(0)
-    commit(n, artifacts, token)
-    pinned.foreach(Bridge.unpersistCheckpoint)
+    * sizes it). A torn compaction's mark at `n` is cleared before the
+    * commit (epoch 0 is never a compaction's); epoch 0 — the first delta
+    * of a store without an `init` — holds the whole state, so it is
+    * marked a snapshot. Returns `n`. */
+  protected def commitDelta(n: Long, token: Option[String])(
+      artifacts: => Seq[DataFrame]): Long = {
+    Ckpt.scope {
+      val built = artifacts
+      if (n > 0) EpochStoreKit.unmark(fs, new Path(s"$root/_snapshots/$n"))
+      else markSnapshot(0)
+      commit(n, built, token)
+    }
     if (autoCompactEpochs > 0 && n - latestSnapshotAt(n) >= autoCompactEpochs)
       compact()
     n
   }
 
-  /** Mark `n` a snapshot, commit it, and free the pinned checkpoints. */
-  protected def commitSnapshot(n: Long, artifacts: Seq[DataFrame],
-                               pinned: DataFrame*): Unit = {
-    markSnapshot(n)
-    commit(n, artifacts)
-    pinned.foreach(Bridge.unpersistCheckpoint)
-  }
+  /** Build the snapshot epoch `n`, mark it, and commit it in one
+    * [[Ckpt.scope]]: the build's checkpoints free once the write landed. */
+  protected def commitSnapshot(n: Long)(artifacts: => Seq[DataFrame]): Unit =
+    Ckpt.scope {
+      val built = artifacts
+      markSnapshot(n)
+      commit(n, built)
+    }
 
   /** The pre-commit snapshot mark (idempotent: a retry re-marks). */
   protected def markSnapshot(n: Long): Unit =
@@ -264,18 +266,20 @@ private[graft] abstract class EpochStore(val spark: SparkSession,
   /** The one commit-and-prune sequence of every rewrite: commit
     * `state(e)` — one frame per snapshot kind, resolved at the committed
     * head `e` — as snapshot epoch e + 1 with an empty slice per data
-    * kind, free the frames' checkpoints, and prune below it. A rewrite
-    * never touches the epochs it reads until its commit marker landed.
-    * Returns the snapshot epoch. */
+    * kind ([[commitSnapshot]] frees the state's checkpoints), and prune
+    * below it. A rewrite never touches the epochs it reads until its
+    * commit marker landed. Returns the snapshot epoch. */
   protected def compactWith(e: Long)(state: Long => Seq[DataFrame]): Long = {
     val n = e + 1
-    val empties = dataKinds.map { case (k, cols) =>
-      spark.read.parquet(s"$root/$k/epoch=0").select(cols.map(col): _*)
-        .limit(0)
+    commitSnapshot(n) {
+      val empties = dataKinds.map { case (k, cols) =>
+        spark.read.parquet(s"$root/$k/epoch=0").select(cols.map(col): _*)
+          .limit(0)
+      }
+      val snaps = state(e)
+      beforeCompactCommit(n)
+      empties ++ snaps
     }
-    val snaps = state(e)
-    beforeCompactCommit(n)
-    commitSnapshot(n, empties ++ snaps, snaps: _*)
     pruneBelow(n)
     n
   }

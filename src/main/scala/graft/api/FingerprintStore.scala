@@ -91,24 +91,24 @@ class FingerprintStore private (spark: SparkSession, root: String,
   private def appendImpl(batchHashes: DataFrame,
                          token: Option[String]): Long = {
     val e = requireCommitted()
-    val b = Ckpt.eager(batchHashes.select(
-      col("_id").cast("long").as("_id"), col("simhash").cast("long")
-        .as("simhash")))
-    requireDisjoint(b, printsAt(e), "_id",
-      "a duplicated id would double-count in the drop set")
-    val oldComp = compAt(e)
-    // the stored prints are never re-aggregated and the grp artifact is
-    // never shuffled: the batch-present hashes resolve through a
-    // key-restricted latest-wins window (batch-sized), and the banded
-    // candidate join scans the PLAIN grp union (duplicate undercut reps
-    // are closure-neutral — extendHashComponentsArtifact's contract)
-    val sharedGrp = Ckpt.eager(latestWinsFor("grp", e, Seq("_sh"),
-      Seq("_sh", "_rep"), b.select(col("simhash").as("_sh")).distinct()))
-    val comp = Dedup.extendHashComponentsArtifact(sharedGrp,
-      unionAt("grp", e, Seq("_sh", "_rep")), oldComp, b, maxHamming)
-    // the epoch write is the last consumer of the pinned batch frames (§5)
-    commitDelta(e + 1, Seq(b, Dedup.hashGroupDelta(sharedGrp, b),
-      changedRows(comp, oldComp)), token, comp, sharedGrp, b)
+    commitDelta(e + 1, token) {
+      val b = Ckpt.eager(batchHashes.select(
+        col("_id").cast("long").as("_id"), col("simhash").cast("long")
+          .as("simhash")))
+      requireDisjoint(b, printsAt(e), "_id",
+        "a duplicated id would double-count in the drop set")
+      val oldComp = compAt(e)
+      // the stored prints are never re-aggregated and the grp artifact is
+      // never shuffled: the batch-present hashes resolve through a
+      // key-restricted latest-wins window (batch-sized), and the banded
+      // candidate join scans the PLAIN grp union (duplicate undercut reps
+      // are closure-neutral — extendHashComponentsArtifact's contract)
+      val sharedGrp = Ckpt.eager(latestWinsFor("grp", e, Seq("_sh"),
+        Seq("_sh", "_rep"), b.select(col("simhash").as("_sh")).distinct()))
+      val comp = Dedup.extendHashComponentsArtifact(sharedGrp,
+        unionAt("grp", e, Seq("_sh", "_rep")), oldComp, b, maxHamming)
+      Seq(b, Dedup.hashGroupDelta(sharedGrp, b), changedRows(comp, oldComp))
+    }
   }
 
   /** The kept rows of `corpus` (one per duplicate cluster — the min
@@ -151,12 +151,11 @@ object FingerprintStore {
       : FingerprintStore = {
     val s = new FingerprintStore(spark, root, maxHamming,
       autoCompactEpochs).fresh()
-    val h = Ckpt.eager(hashes.select(col("_id").cast("long").as("_id"),
-      col("simhash").cast("long").as("simhash")))
-    val comp0 = Dedup.hashComponents(h, maxHamming)
-    // the epoch write is the last consumer of the pinned frames (§5)
-    s.commitSnapshot(0L, Seq(h, Dedup.hashGroupArtifact(h), comp0),
-      comp0, h)
+    s.commitSnapshot(0L) {
+      val h = Ckpt.eager(hashes.select(col("_id").cast("long").as("_id"),
+        col("simhash").cast("long").as("simhash")))
+      Seq(h, Dedup.hashGroupArtifact(h), Dedup.hashComponents(h, maxHamming))
+    }
     s
   }
 

@@ -1,6 +1,6 @@
 package graft.api
 
-import graft.operators.{Ckpt, Dedup}
+import graft.operators.{Ckpt, Closure, Dedup}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -106,36 +106,34 @@ class FuzzyKeyStore private (spark: SparkSession, root: String,
   private def appendImpl(batch: DataFrame,
                          token: Option[String]): Long = {
     val e = requireCommitted()
-    val b = Ckpt.eager(batch.select(
-      col("doc_id").cast("long").as("doc_id"),
-      col("key").cast("string").as("key")))
-    val storedMax = keysAt(e).agg(max(col("doc_id"))).collect()
-      .headOption.filter(!_.isNullAt(0)).map(_.getLong(0))
-      .getOrElse(Long.MinValue)
-    val batchMin = b.agg(min(col("doc_id"))).collect()
-      .headOption.filter(!_.isNullAt(0)).map(_.getLong(0))
-      .getOrElse(Long.MaxValue)
-    require(batchMin > storedMax,
-      s"FuzzyKeyStore.append: batch min id $batchMin does not exceed " +
-        s"the stored max id $storedMax at $root — appended ids must be " +
-        "strictly above every stored id so min-id reps stay invariant")
-    val idx = indexAt(e)
-    // variants computed ONCE: the epoch's index delta AND the pair
-    // probe are the same frame (the refactor extendFuzzyKeyPairs
-    // itself composes)
-    val nv0 = Dedup.fuzzyNewVariants(idx, b, "key", "doc_id", maxKeyLen,
-      maxEdit)
-    val nv = Ckpt.eager(nv0)
-    val pairs = Dedup.extendFuzzyKeyPairsOf(idx, nv, maxEdit)
-      .select(col("rep_a").as("id1"), col("rep_b").as("id2"))
-    val oldComp = compAt(e)
-    // extendComponents returns an eagerly-checkpointed frame (and frees
-    // its internal checkpoints itself) — no second Ckpt.eager copy here
-    val comp = Dedup.extendComponents(oldComp, pairs)
-    // the epoch write is the last consumer of the pinned batch frames,
-    // nv0's internal distinct-key checkpoint included (§5)
-    commitDelta(e + 1, Seq(b, nv, changedRows(comp, oldComp)), token,
-      comp, nv, nv0, b)
+    commitDelta(e + 1, token) {
+      val b = Ckpt.eager(batch.select(
+        col("doc_id").cast("long").as("doc_id"),
+        col("key").cast("string").as("key")))
+      val storedMax = keysAt(e).agg(max(col("doc_id"))).collect()
+        .headOption.filter(!_.isNullAt(0)).map(_.getLong(0))
+        .getOrElse(Long.MinValue)
+      val batchMin = b.agg(min(col("doc_id"))).collect()
+        .headOption.filter(!_.isNullAt(0)).map(_.getLong(0))
+        .getOrElse(Long.MaxValue)
+      require(batchMin > storedMax,
+        s"FuzzyKeyStore.append: batch min id $batchMin does not exceed " +
+          s"the stored max id $storedMax at $root — appended ids must be " +
+          "strictly above every stored id so min-id reps stay invariant")
+      val idx = indexAt(e)
+      // variants computed ONCE: the epoch's index delta AND the pair
+      // probe are the same frame (the refactor extendFuzzyKeyPairs
+      // itself composes)
+      val nv = Ckpt.eager(Dedup.fuzzyNewVariants(idx, b, "key", "doc_id",
+        maxKeyLen, maxEdit))
+      val pairs = Dedup.extendFuzzyKeyPairsOf(idx, nv, maxEdit)
+        .select(col("rep_a").as("id1"), col("rep_b").as("id2"))
+      val oldComp = compAt(e)
+      // extendComponents returns an eagerly-checkpointed frame (and frees
+      // its internal checkpoints itself) — no second Ckpt.eager copy here
+      val comp = Dedup.extendComponents(oldComp, pairs)
+      Seq(b, nv, changedRows(comp, oldComp))
+    }
   }
 
   /** The fuzzy-deduped key corpus at the latest epoch — one row per
@@ -174,21 +172,19 @@ object FuzzyKeyStore {
       : FuzzyKeyStore = {
     val s = new FuzzyKeyStore(spark, root, maxKeyLen, maxEdit,
       autoCompactEpochs).fresh()
-    val d = Ckpt.eager(keys.select(col("doc_id").cast("long")
-      .as("doc_id"), col("key").cast("string").as("key")))
-    val idx0 = Dedup.fuzzyVariantIndex(d, "key", "doc_id", maxKeyLen,
-      maxEdit)
-    val idx = Ckpt.eager(idx0.select(col("rep"), col("key"), col("_vh")))
-    // from-scratch pairs = the extension's within-join against an empty
-    // base (one code path for both, so the q120 theorem covers init too)
-    val pairs = Dedup.extendFuzzyKeyPairsOf(idx.limit(0), idx, maxEdit)
-      .select(col("rep_a").as("id1"), col("rep_b").as("id2"))
-    // connectedComponents already returns a checkpoint-backed frame —
-    // no second Ckpt.eager copy; free the pinned frames (idx0's internal
-    // distinct-key checkpoint included) once the epoch write — their
-    // last consumer — lands (§5)
-    val comp0 = Dedup.connectedComponents(pairs)
-    s.commitSnapshot(0L, Seq(d, idx, comp0), comp0, idx, idx0, d)
+    s.commitSnapshot(0L) {
+      val d = Ckpt.eager(keys.select(col("doc_id").cast("long")
+        .as("doc_id"), col("key").cast("string").as("key")))
+      val idx = Ckpt.eager(Dedup.fuzzyVariantIndex(d, "key", "doc_id",
+          maxKeyLen, maxEdit)
+        .select(col("rep"), col("key"), col("_vh")))
+      // from-scratch pairs = the extension's within-join against an
+      // empty base (one code path for both, so the q120 theorem covers
+      // init too)
+      Seq(d, idx, Closure.components(
+        Dedup.extendFuzzyKeyPairsOf(idx.limit(0), idx, maxEdit)
+          .select(col("rep_a").as("id1"), col("rep_b").as("id2"))))
+    }
     s
   }
 

@@ -1,6 +1,6 @@
 package graft.api
 
-import graft.operators.{Ckpt, Dedup}
+import graft.operators.{Ckpt, Closure, Dedup}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -111,43 +111,40 @@ class MinHashDedupStore private (spark: SparkSession, root: String,
                          textCol: String,
                          token: Option[String]): Long = {
     val e = requireCommitted()
-    val bSig = Ckpt.eager(normalizeSig(Dedup.signatureFrame(
-      batch.select(col(idCol).cast("long").as(idCol), col(textCol)),
-      idCol, textCol, n, numHashes)))
-    val baseSig = sigAt(e)
-    requireDisjoint(bSig, baseSig, "_id",
-      "a duplicated id would corrupt the min-id keep policy")
-    // ONE shared exact-dup collapse of the batch (r15): the within-pair,
-    // cross-pair and band-artifact consumers all ride the same
-    // (membership, rep) frames instead of re-collapsing the batch three
-    // times — the fixed-cost term that dominated small-batch appends.
-    // The appended edges: batch-internal pairs + batch×base pairs — the
-    // batch's banded projection broadcasts against a SCAN of the stored
-    // band artifact (no re-collapse or re-banding of the base minima);
-    // the stored sig frame is touched only by the candidate-keyed
-    // verify/expansion joins
-    val (bMem, bRep) = Dedup.collapseFromSignatures(bSig)
-    val newEdges = Dedup
-      .sigNearDupPairsCollapsed(bMem, bRep, tau, numHashes, bands)
-      .select(col("id1").cast("long"), col("id2").cast("long"))
-      .unionByName(Dedup
-        .crossBandNearDupPairsCollapsed(bMem, bRep, dataAt("band", e),
-          baseSig, tau, numHashes, bands)
-        .select(col("existing_id").cast("long").as("id1"),
-          col("new_id").cast("long").as("id2")))
-    val oldComp = compAt(e)
-    // extendComponents returns an eagerly-checkpointed frame (and frees
-    // its internal checkpoints itself) — no second Ckpt.eager copy here
-    val comp = Dedup.extendComponents(oldComp, newEdges)
-    val band = Dedup.bandArtifactOfRep(bRep, numHashes, bands)
-    // the epoch write is the last consumer of the pinned batch frames
-    // (the band artifact and both pair frames are checkpoint-backed):
-    // free them NOW instead of leaking them per append into executor
-    // storage until driver GC (§5)
-    val k = commitDelta(e + 1, Seq(bSig, band, changedRows(comp, oldComp)),
-      token, comp, bSig, band, newEdges)
-    bRep.unpersist(false)
-    k
+    commitDelta(e + 1, token) {
+      val bSig = Ckpt.eager(normalizeSig(Dedup.signatureFrame(
+        batch.select(col(idCol).cast("long").as(idCol), col(textCol)),
+        idCol, textCol, n, numHashes)))
+      val baseSig = sigAt(e)
+      requireDisjoint(bSig, baseSig, "_id",
+        "a duplicated id would corrupt the min-id keep policy")
+      // ONE shared exact-dup collapse of the batch (r15): the within-pair,
+      // cross-pair and band-artifact consumers all ride the same
+      // (membership, rep) frames instead of re-collapsing the batch three
+      // times — the fixed-cost term that dominated small-batch appends.
+      // The appended edges: batch-internal pairs + batch×base pairs — the
+      // batch's banded projection broadcasts against a SCAN of the stored
+      // band artifact (no re-collapse or re-banding of the base minima);
+      // the stored sig frame is touched only by the candidate-keyed
+      // verify/expansion joins
+      val (bMem, bRep) = Dedup.collapseFromSignatures(bSig)
+      val newEdges = Dedup
+        .sigNearDupPairsCollapsed(bMem, bRep, tau, numHashes, bands)
+        .select(col("id1").cast("long"), col("id2").cast("long"))
+        .unionByName(Dedup
+          .crossBandNearDupPairsCollapsed(bMem, bRep, dataAt("band", e),
+            baseSig, tau, numHashes, bands)
+          .select(col("existing_id").cast("long").as("id1"),
+            col("new_id").cast("long").as("id2")))
+      val oldComp = compAt(e)
+      // extendComponents returns an eagerly-checkpointed frame (and frees
+      // its internal checkpoints itself) — no second Ckpt.eager copy here
+      val comp = Dedup.extendComponents(oldComp, newEdges)
+      // the band artifact (a checkpoint) is the rep frame's last consumer
+      val band = Dedup.bandArtifactOfRep(bRep, numHashes, bands)
+      bRep.unpersist(false)
+      Seq(bSig, band, changedRows(comp, oldComp))
+    }
   }
 
   /** Pin the signature frame's id to long and its column order to the
@@ -192,21 +189,20 @@ object MinHashDedupStore {
       : MinHashDedupStore = {
     val s = new MinHashDedupStore(spark, root, tau, n, numHashes, bands,
       autoCompactEpochs).fresh()
-    val sig = Ckpt.eager(s.normalizeSig(Dedup.signatureFrame(
-      docs.select(col(idCol).cast("long").as(idCol), col(textCol)),
-      idCol, textCol, n, numHashes)))
-    // one shared collapse for the pair and band-artifact consumers (r15)
-    val (mem, rep) = Dedup.collapseFromSignatures(sig)
-    val pairs = Dedup.sigNearDupPairsCollapsed(mem, rep, tau, numHashes,
-        bands)
-      .select(col("id1").cast("long"), col("id2").cast("long"))
-    // connectedComponents already returns a checkpoint-BACKED frame: no
-    // second Ckpt.eager copy; free it (and the pinned sig, band artifact
-    // and pairs) once the epoch write — their last consumer — lands (§5)
-    val comp0 = Dedup.connectedComponents(pairs)
-    val band = Dedup.bandArtifactOfRep(rep, numHashes, bands)
-    s.commitSnapshot(0L, Seq(sig, band, comp0), comp0, sig, band, pairs)
-    rep.unpersist(false)
+    s.commitSnapshot(0L) {
+      val sig = Ckpt.eager(s.normalizeSig(Dedup.signatureFrame(
+        docs.select(col(idCol).cast("long").as(idCol), col(textCol)),
+        idCol, textCol, n, numHashes)))
+      // one shared collapse for the pair and band-artifact consumers (r15)
+      val (mem, rep) = Dedup.collapseFromSignatures(sig)
+      val comp0 = Closure.components(Dedup
+        .sigNearDupPairsCollapsed(mem, rep, tau, numHashes, bands)
+        .select(col("id1").cast("long"), col("id2").cast("long")))
+      // the band artifact (a checkpoint) is the rep frame's last consumer
+      val band = Dedup.bandArtifactOfRep(rep, numHashes, bands)
+      rep.unpersist(false)
+      Seq(sig, band, comp0)
+    }
     s
   }
 

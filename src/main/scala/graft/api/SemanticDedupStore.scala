@@ -1,10 +1,9 @@
 package graft.api
 
-import graft.operators.{Ckpt, Clustering, Dedup}
+import graft.operators.{Ckpt, Closure, Clustering, Dedup}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 
 /** PERSISTED incremental semantic-dedup store — the deployment
   * packaging of [[graft.operators.Dedup.extendSemanticDeduped]]
@@ -192,40 +191,40 @@ class SemanticDedupStore private (spark: SparkSession, root: String,
     val e = requireCommitted()
     val t = latestTrain
     val n = e + 1
-    val b = Ckpt.eager(batch.select(col("vec_id").cast("long")
-      .as("vec_id"), col("embedding")))
-    requireDisjoint(b, vecsAt(e), "vec_id",
-      "a duplicated id would corrupt the keep policy")
-    // cumulative staleness gate (the PQ-codebook discipline): count the
-    // post-TRAIN assignment mass, not just this batch — via the same
-    // helper staleFrac reports, so the gate and the metric cannot
-    // diverge
-    val (trainMass, since) = staleCounts(e)
-    val nb = b.count()
-    require(trainMass > 0,
-      s"SemanticDedupStore.append: the frozen centroids at $root " +
-        "assigned ZERO rows at train time (an unassignable corpus — " +
-        "all zero-norm embeddings?) — staleness cannot be bounded " +
-        "against an empty baseline, and retrain() on the same corpus " +
-        "would reproduce it; re-init the store once assignable rows " +
-        "exist")
-    require(since + nb <= maxStaleFrac * trainMass,
-      s"SemanticDedupStore.append: appending $nb rows would put " +
-        s"${since + nb} post-train rows over maxStaleFrac=" +
-        s"$maxStaleFrac of the train-time mass $trainMass — the frozen " +
-        "centroids are stale; call retrain() to re-freeze, then append")
-    val cents = Clustering.loadCentroids(spark, s"$root/centroids/epoch=$t")
-    val batchAsg = Ckpt.eager(
-      Clustering.assignVecWithCentroids(b, cents))
-    val oldComp = compAt(e)
-    // extendSemanticComponents returns an eagerly-checkpointed frame
-    // (extendComponents' contract) — no second Ckpt.eager copy here
-    val comp = Dedup.extendSemanticComponents(
-      asgAt(e), oldComp, batchAsg, tau)
-    clearLitter(n)
-    // the epoch write is the last consumer of the pinned batch frames (§5)
-    commitDelta(n, Seq(b, batchAsg, changedRows(comp, oldComp)), token,
-      comp, batchAsg, b)
+    commitDelta(n, token) {
+      val b = Ckpt.eager(batch.select(col("vec_id").cast("long")
+        .as("vec_id"), col("embedding")))
+      requireDisjoint(b, vecsAt(e), "vec_id",
+        "a duplicated id would corrupt the keep policy")
+      // cumulative staleness gate (the PQ-codebook discipline): count the
+      // post-TRAIN assignment mass, not just this batch — via the same
+      // helper staleFrac reports, so the gate and the metric cannot
+      // diverge
+      val (trainMass, since) = staleCounts(e)
+      val nb = b.count()
+      require(trainMass > 0,
+        s"SemanticDedupStore.append: the frozen centroids at $root " +
+          "assigned ZERO rows at train time (an unassignable corpus — " +
+          "all zero-norm embeddings?) — staleness cannot be bounded " +
+          "against an empty baseline, and retrain() on the same corpus " +
+          "would reproduce it; re-init the store once assignable rows " +
+          "exist")
+      require(since + nb <= maxStaleFrac * trainMass,
+        s"SemanticDedupStore.append: appending $nb rows would put " +
+          s"${since + nb} post-train rows over maxStaleFrac=" +
+          s"$maxStaleFrac of the train-time mass $trainMass — the frozen " +
+          "centroids are stale; call retrain() to re-freeze, then append")
+      val cents = Clustering.loadCentroids(spark, s"$root/centroids/epoch=$t")
+      val batchAsg = Ckpt.eager(
+        Clustering.assignVecWithCentroids(b, cents))
+      val oldComp = compAt(e)
+      // extendSemanticComponents returns an eagerly-checkpointed frame
+      // (extendComponents' contract) — no second Ckpt.eager copy here
+      val comp = Dedup.extendSemanticComponents(
+        asgAt(e), oldComp, batchAsg, tau)
+      clearLitter(n)
+      Seq(b, batchAsg, changedRows(comp, oldComp))
+    }
   }
 
   /** Torn-retrain litter at the still-uncommitted epoch `n`: a crashed
@@ -244,26 +243,24 @@ class SemanticDedupStore private (spark: SparkSession, root: String,
   }
 
   /** Train centroids on `all`, and commit its full assignment + closure
-    * as snapshot epoch `n` with `vecs` as the epoch's data slice. The
-    * centroids dir IS the snapshot marker once the commit marker lands,
-    * so it (and the train-mass record staleness needs after a later
-    * compact prunes this epoch's asg) is durable BEFORE the commit. */
+    * as snapshot epoch `n` with `vecs` as the epoch's data slice, in
+    * the caller's [[Ckpt.scope]] (it frees the pinned frames once the
+    * epoch write landed). The centroids dir IS the snapshot marker once
+    * the commit marker lands, so it (and the train-mass record
+    * staleness needs after a later compact prunes this epoch's asg) is
+    * durable BEFORE the commit. */
   private def trainSnapshot(n: Long, all: DataFrame, vecs: DataFrame,
                             nCells: Int, iters: Int): Unit = {
     val cents = Clustering.kmeansCentroidsD(all, nCells, iters)
     val asg = Ckpt.eager(Clustering.assignVecWithCentroids(all, cents))
-    // connectedComponents already returns a checkpoint-backed frame —
-    // no second Ckpt.eager copy
-    val comp = Dedup.connectedComponents(
+    val comp = Closure.components(
       Dedup.assignmentDupPairs(asg, tau).select("id1", "id2"))
     EpochStoreKit.boundary(s"$root/centroids/epoch=$n")
     Clustering.saveCentroids(spark, cents, s"$root/centroids/epoch=$n")
     EpochStoreKit.writeToken(fs, new Path(s"$root/_trainmass/$n"),
       asg.count())
-    // the centroids dir is this snapshot's mark; the epoch write is the
-    // last consumer of the pinned frames (§5)
+    // the centroids dir is this snapshot's mark
     commit(n, Seq(vecs, asg, comp))
-    Seq(comp, asg, all).foreach(Bridge.unpersistCheckpoint)
   }
 
   /** [[compact]] is trainer-free: it rewrites the resolved asg + comp
@@ -284,8 +281,10 @@ class SemanticDedupStore private (spark: SparkSession, root: String,
   def retrain(nCells: Int, iters: Int = 3): Long = {
     val e = requireCommitted()
     val n = e + 1
-    val all = Ckpt.eager(vecsAt(e))
-    trainSnapshot(n, all, all.limit(0), nCells, iters)
+    Ckpt.scope {
+      val all = Ckpt.eager(vecsAt(e))
+      trainSnapshot(n, all, all.limit(0), nCells, iters)
+    }
     pruneBelow(n)
     n
   }
@@ -334,9 +333,11 @@ object SemanticDedupStore {
       : SemanticDedupStore = {
     val s = new SemanticDedupStore(spark, root, tau, maxStaleFrac,
       autoCompactEpochs).fresh()
-    val v = Ckpt.eager(vecs.select(col("vec_id").cast("long")
-      .as("vec_id"), col("embedding")))
-    s.trainSnapshot(0L, v, v, nCells, iters)
+    Ckpt.scope {
+      val v = Ckpt.eager(vecs.select(col("vec_id").cast("long")
+        .as("vec_id"), col("embedding")))
+      s.trainSnapshot(0L, v, v, nCells, iters)
+    }
     s
   }
 

@@ -111,21 +111,20 @@ class SubstringDedupStore private (spark: SparkSession, root: String,
   private def appendImpl(batch: DataFrame,
                          token: Option[String]): Long = {
     val e = requireCommitted()
-    val b = Ckpt.eager(batch.select(col("doc_id").cast("long")
-      .as("doc_id"), col("text").cast("string").as("text")))
-    // the index is consumed KEY-RESTRICTED: the latest-wins window runs
-    // only over the rows whose key the batch (then the touched docs)
-    // actually carries — filtering on the window's own partition keys
-    // first is resolution-transparent — so the stored index is scanned,
-    // never shuffled whole (the former base-linear append term, r14)
-    val indexFor: DataFrame => DataFrame = keys =>
-      latestWinsFor("index", e, Seq("k1", "k2"), indexCols, keys)
-    val (dedDelta, idxDelta) = SubstringIndex.appendDeltas(
-      dataAt("corpus", e), indexFor, b, window)
-    // the epoch write is the last consumer of the pinned batch and of
-    // whatever checkpoints appendDeltas handed back (§5)
-    commitDelta(e + 1, Seq(b, idxDelta, dedDelta), token,
-      dedDelta, idxDelta, b)
+    commitDelta(e + 1, token) {
+      val b = Ckpt.eager(batch.select(col("doc_id").cast("long")
+        .as("doc_id"), col("text").cast("string").as("text")))
+      // the index is consumed KEY-RESTRICTED: the latest-wins window runs
+      // only over the rows whose key the batch (then the touched docs)
+      // actually carries — filtering on the window's own partition keys
+      // first is resolution-transparent — so the stored index is scanned,
+      // never shuffled whole (the former base-linear append term, r14)
+      val indexFor: DataFrame => DataFrame = keys =>
+        latestWinsFor("index", e, Seq("k1", "k2"), indexCols, keys)
+      val (dedDelta, idxDelta) = SubstringIndex.appendDeltas(
+        dataAt("corpus", e), indexFor, b, window)
+      Seq(b, idxDelta, dedDelta)
+    }
   }
 }
 
@@ -140,11 +139,13 @@ object SubstringDedupStore {
       : SubstringDedupStore = {
     val s = new SubstringDedupStore(spark, root, window,
       autoCompactEpochs).fresh()
-    val d = Ckpt.eager(docs.select(col("doc_id").cast("long").as("doc_id"),
-      col("text").cast("string").as("text")))
-    // the epoch write is the last consumer of the pinned corpus (§5)
-    s.commitSnapshot(0L, Seq(d, SubstringIndex.buildIndex(d, window),
-      SuffixArray.substringDeduped(d, window)), d)
+    s.commitSnapshot(0L) {
+      val d = Ckpt.eager(docs.select(
+        col("doc_id").cast("long").as("doc_id"),
+        col("text").cast("string").as("text")))
+      Seq(d, SubstringIndex.buildIndex(d, window),
+        SuffixArray.substringDeduped(d, window))
+    }
     s
   }
 

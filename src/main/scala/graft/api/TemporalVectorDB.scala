@@ -90,8 +90,8 @@ class TemporalVectorDB(
     * valid until the next [[addVersions]] —
     * collect results before appending; a lazy plan held across an append
     * fails with a missing-checkpoint-block error (a checkpoint has no
-    * lineage to recompute). */
-  private def pin(df: DataFrame): DataFrame = df.transform(Ckpt.eager)
+    * lineage to recompute). No [[Ckpt.scope]] owns it. */
+  private def pin(df: DataFrame): DataFrame = Ckpt.lasting(df)
 
   /** Cached normalized base snapshots — the engine's "vector index"
     * (reference storage_engine.py:89-110 rebuilds FAISS from a full scan;
@@ -574,15 +574,12 @@ class TemporalVectorDB(
   /** Ingest `df` after the seqs of `stored`, hand the pinned rows to
     * `write`, then maintain the live indexes from them. */
   protected def ingestAfter[T](df: DataFrame, stored: Option[DataFrame])
-                              (write: DataFrame => T): T = {
-    val ingested =
-      pin(VersionStore.ingest(df, stored.map(_.select("content_id", "seq")),
-        cfg))
-    try {
-      val out = write(ingested)
-      refreshCaches(ingested)
-      out
-    } finally Bridge.unpersistCheckpoint(ingested)
+                              (write: DataFrame => T): T = Ckpt.scope {
+    val ingested = Ckpt.eager(VersionStore.ingest(df,
+      stored.map(_.select("content_id", "seq")), cfg))
+    val out = write(ingested)
+    refreshCaches(ingested)
+    out
   }
 
   /** Reconstruct one version; empty result if the target precedes the
@@ -746,20 +743,19 @@ class TemporalVectorDB(
     * and the maintained indexes refresh incrementally for the touched
     * contents. Returns the number of promoted versions. */
   def applyBaseOptimization(maxCost: Int = 10): Long = synchronized {
-    // pinned: the rewrite prunes the epochs it was resolved from
-    val targets = VersionStore.promotionTargets(versions, maxCost)
-      .transform(Ckpt.eager)
-    val n = targets.count()
-    if (n > 0) {
-      rewriteStore(VersionStore.promoteBases(_, maxCost))
-      // the promoted rows are the only rows the rewrite changed
-      val promoted = pin(versions.join(targets, Seq("content_id", "seq"),
-        "left_semi"))
-      refreshCaches(promoted)
-      Bridge.unpersistCheckpoint(promoted)
+    Ckpt.scope {
+      // pinned: the rewrite prunes the epochs it was resolved from
+      val targets = Ckpt.eager(VersionStore.promotionTargets(versions,
+        maxCost))
+      val n = targets.count()
+      if (n > 0) {
+        rewriteStore(VersionStore.promoteBases(_, maxCost))
+        // the promoted rows are the only rows the rewrite changed
+        refreshCaches(Ckpt.eager(versions.join(targets,
+          Seq("content_id", "seq"), "left_semi")))
+      }
+      n
     }
-    Bridge.unpersistCheckpoint(targets)
-    n
   }
 
   /** Commit `state` of the committed versions as the new whole store
@@ -898,9 +894,7 @@ class BucketedTemporalVectorDB(
   // the table cannot be overwritten while the overwrite reads it:
   // materialize the new state first
   override protected def rewriteStore(state: DataFrame => DataFrame): Unit = {
-    val snap = Ckpt.eager(state(versions))
-    bucketed(snap, "overwrite")
-    Bridge.unpersistCheckpoint(snap)
+    Ckpt.scope(bucketed(Ckpt.eager(state(versions)), "overwrite"))
   }
 
   // table-backed: count the managed table's files under the warehouse
@@ -973,7 +967,7 @@ private[api] final class VersionsTable(spark: SparkSession, root: String)
   /** Commit `rows` as the delta epoch after `head`. */
   def commitAppend(head: Long, rows: DataFrame,
                    token: Option[String]): Long =
-    commitDelta(head + 1, Seq(rows), token)
+    commitDelta(head + 1, token)(Seq(rows))
 
   /** Commit `state` of the table at the head as a snapshot epoch. */
   def rewrite(state: DataFrame => DataFrame): Long =

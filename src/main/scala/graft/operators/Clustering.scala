@@ -38,7 +38,7 @@ object Clustering {
     *
     * The quantized corpus projection persists across the iteration jobs
     * and is freed before returning; the result is checkpoint-backed
-    * (same lifetime contract as [[Dedup.connectedComponents]]). */
+    * (same lifetime contract as [[Closure.components]]). */
   def kmeansAssign(corpus: DataFrame, nCells: Int = 8,
                    iters: Int = 3): DataFrame = {
     val (nrm, cents) = train(corpus, nCells, iters)

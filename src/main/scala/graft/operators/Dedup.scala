@@ -18,13 +18,6 @@ import org.apache.spark.sql.DataFrame
   */
 object Dedup {
 
-  /** Dedicated non-convergence signal of the closure loops — subclasses
-    * IllegalStateException (existing catchers keep working) but gives the
-    * hybrid plain→star fallback a type that cannot match an UNRELATED
-    * illegal-state failure. */
-  final class NonConvergence(msg: String)
-    extends IllegalStateException(msg)
-
   /** 2^31-1, Mersenne prime; all minhash arithmetic stays below 2^62. */
   val P: Long = 2147483647L
   def hashA(j: Int): Long = (637543L + 104729L * j) % P
@@ -285,8 +278,7 @@ object Dedup {
       .where(lit(1.0) >= tau)
 
     // pairs are tiny next to the corpus: materialize them so both
-    // caches free NOW (same lifetime contract as connectedComponents
-    // — the result is checkpoint-backed)
+    // caches free NOW (the result is checkpoint-backed)
     cross.unionByName(within).transform(Ckpt.eager)
   }
 
@@ -664,245 +656,7 @@ object Dedup {
     docs.join(pairs.select(col("id2").as(idCol)).distinct(),
       Seq(idCol), "left_anti")
 
-  /** Connected components over an undirected pair list — the step that
-    * turns near-dup PAIRS into duplicate CLUSTERS (transitive closure:
-    * A~B, B~C puts all three in one group even when A~C was never a
-    * candidate). Input: (id1, id2) numeric pairs; output: (id, component)
-    * for every id appearing in any pair, component = the minimum id
-    * reachable from it.
-    *
-    * Algorithm: iterative min-label propagation. Each round is ONE
-    * edge⋈label join + ONE min aggregate (both shuffles keyed by id — at
-    * cluster scale they co-partition after the first round), labels only
-    * ever decrease, and the loop stops when a round changes nothing.
-    * Rounds needed = the largest component's min-label eccentricity;
-    * dedup clusters are shallow (near-clique), so 2-4 rounds is typical.
-    * Long chains would want the large-star/small-star variant (doubles
-    * reach per round) — maxIter guards against that shape rather than
-    * silently emitting partial components.
-    *
-    * Iterative-DataFrame hygiene (the part that bites at scale): every
-    * round's result is pinned with `localCheckpoint(true)` — truncating
-    * the lineage that would otherwise grow one join+agg DEEPER per round
-    * and re-execute the whole history each action — and the replaced
-    * round's storage is freed immediately (Bridge.unpersistCheckpoint).
-    * Convergence is checked with an exact DECIMAL sum of labels (labels
-    * decrease monotonically, so equal sums ⟺ fixpoint; a LONG sum could
-    * in principle wrap). */
-  /** SIZE-GATED LOCAL CLOSURE (guide §1.2/§2 — the distributed
-    * algorithm is the wrong algorithm for a tiny graph): a bounded
-    * probe collects at most `spark.graft.cc.localMaxRows`+1 edges
-    * (default 1M, ~tens of MB on an 8g driver); if the graph fits, the
-    * probe IS the closure input and the whole closure runs as that ONE
-    * job + an in-memory union-find instead of O(log) distributed rounds
-    * at 2-3 driver-latency-bound jobs each. If it does not fit, the
-    * probe cost one bounded partial evaluation of the pair pipeline and
-    * the distributed rounds run unchanged (plan-size statistics cannot
-    * make this call: join-built pair frames estimate at 1e19 regardless
-    * of true size, so the capped collect is the only reliable gate —
-    * routing-only either way). Union always points the larger root at
-    * the smaller, so each root IS its component's minimum id — the
-    * exact output contract of both distributed closures, self-pair
-    * singletons included. The store append protocols (q117-q122) extend
-    * corpus-scale assignments by BATCH-sized edge graphs, which is
-    * exactly this regime at any corpus scale; set localMaxRows=0 to
-    * force the distributed path (spec-gated output-identical). */
-  private def localClosure(pairs: DataFrame): Option[DataFrame] = {
-    val spark = pairs.sparkSession
-    val maxRows = spark.conf.getOption("spark.graft.cc.localMaxRows")
-      .map(_.toInt).getOrElse(1000000)
-    if (maxRows <= 0) None
-    else {
-      val rows = pairs
-        .select(col("id1").cast("long"), col("id2").cast("long"))
-        .limit(maxRows + 1).collect()
-      if (rows.length > maxRows) None
-      else {
-        val parent = new java.util.HashMap[Long, Long](rows.length * 2)
-        def add(x: Long): Unit =
-          if (!parent.containsKey(x)) parent.put(x, x)
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.get(r) != r) r = parent.get(r)
-          var c = x
-          while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
-          r
-        }
-        rows.foreach { r =>
-          val a = r.getLong(0); val b = r.getLong(1)
-          add(a); add(b)
-          val ra = find(a); val rb = find(b)
-          if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
-        }
-        import scala.jdk.CollectionConverters._
-        val out = parent.keySet().asScala.toSeq
-          .map(id => (id, find(id)))
-        import spark.implicits._
-        Some(out.toDF("id", "component"))
-      }
-    }
-  }
-
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    // fail fast on non-integral ids: a silent cast would turn e.g. string
-    // ids into nulls and emit garbage components; map ids to longs first
-    Seq("id1", "id2").foreach { c =>
-      val dt = pairs.schema(c).dataType
-      require(dt == org.apache.spark.sql.types.LongType ||
-        dt == org.apache.spark.sql.types.IntegerType ||
-        dt == org.apache.spark.sql.types.ShortType,
-        s"connectedComponents needs integral ids; $c is $dt — " +
-          "map ids to longs before calling")
-    }
-    // tiny graphs close on the driver in one job (see localClosure)
-    localClosure(pairs) match {
-      case Some(local) => return local
-      case None => ()
-    }
-    val half = pairs.select(col("id1").cast("long").as("s"),
-      col("id2").cast("long").as("t"))
-    val edges = half
-      .unionByName(half.select(col("t").as("s"), col("s").as("t")))
-      .distinct().transform(Ckpt.eager)
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      Option(df.agg(sum(col("comp").cast("decimal(38,0)"))).first()
-        .getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO) // empty input
-    // init fused with the first propagation round: comp(id) =
-    // min(id ∪ neighbors) is what round 1 over identity labels would
-    // produce, computed here with ONE aggregate instead of a distinct +
-    // join + union + aggregate
-    var cur = edges.groupBy(col("s").as("id"))
-      .agg(min(least(col("s"), col("t"))).as("comp"))
-      .transform(Ckpt.eager)
-    var curSum = labelSum(cur)
-    var it = 0
-    var converged = false
-    while (it < maxIter && !converged) {
-      val prop = edges.join(cur, edges("s") === cur("id"))
-        .select(edges("t").as("id"), col("comp"))
-      val next = cur.unionByName(prop)
-        .groupBy("id").agg(min("comp").as("comp"))
-        .transform(Ckpt.eager)
-      val nextSum = labelSum(next)
-      Bridge.unpersistCheckpoint(cur)
-      converged = nextSum.compareTo(curSum) == 0
-      cur = next; curSum = nextSum; it += 1
-    }
-    Bridge.unpersistCheckpoint(edges)
-    if (!converged) {
-      // free the final round's checkpointed labels before the throw —
-      // the hybrid fallback (hashComponentsOf) makes non-convergence
-      // ROUTINE control flow, so a leaked frame per fallback would
-      // accumulate across appends
-      Bridge.unpersistCheckpoint(cur)
-      throw new NonConvergence(
-        s"connectedComponents did not converge in $maxIter rounds — " +
-          "component diameter exceeds the iteration budget")
-    }
-    // NOTE: the result is checkpoint-BACKED (it must survive the loop's
-    // intermediate frees). Long-lived sessions that run many closures
-    // should Bridge.unpersistCheckpoint the returned frame once consumed;
-    // otherwise the blocks live until driver GC collects the RDD handle.
-    cur.select(col("id"), col("comp").as("component"))
-  }
-
-  /** Connected components via alternating large-star/small-star rounds
-    * (the MapReduce-era two-operation formulation): converges in
-    * O(log²) rounds in the component size REGARDLESS of diameter —
-    * the long-chain graphs where [[connectedComponents]]' min-label
-    * propagation needs O(diameter) rounds and trips its `maxIter`.
-    * Same output contract: (id, component = min reachable id).
-    *
-    *  - large-star: every node's LARGER neighbors re-attach to the
-    *    minimum of its neighborhood (incl. itself) — doubles the reach
-    *    of small labels down long chains;
-    *  - small-star: every node and its smaller non-minimum neighbors
-    *    attach to the neighborhood minimum, canonicalizing toward star
-    *    graphs (edges always (bigger, smaller) afterwards).
-    *
-    * Fixpoint = the edge set is unchanged (checked with an exact
-    * anti-join both ways, not a hash heuristic); at fixpoint the edges
-    * form stars whose centers are the component minima. Same iterative
-    * hygiene as the label loop: every round localCheckpoints and frees
-    * the replaced round's storage. Prefer this for unknown/long-chain
-    * graphs; the label loop does fewer shuffles per round on the
-    * shallow near-clique graphs dedup produces. */
-  def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 50)
-      : DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    Seq("id1", "id2").foreach { c =>
-      val dt = pairs.schema(c).dataType
-      require(dt == org.apache.spark.sql.types.LongType ||
-        dt == org.apache.spark.sql.types.IntegerType ||
-        dt == org.apache.spark.sql.types.ShortType,
-        s"connectedComponentsStar needs integral ids; $c is $dt")
-    }
-    // tiny graphs close on the driver in one job (see localClosure)
-    localClosure(pairs) match {
-      case Some(local) => return local
-      case None => ()
-    }
-    val half = pairs.select(col("id1").cast("long").as("s"),
-      col("id2").cast("long").as("t")).where(col("s") =!= col("t"))
-    // canonical directed form: (big, small); `cur` stays canonical and
-    // deduplicated across rounds
-    var cur = half.select(greatest(col("s"), col("t")).as("a"),
-        least(col("s"), col("t")).as("b"))
-      .distinct().transform(Ckpt.eager)
-    var it = 0
-    var converged = cur.isEmpty
-    while (it < maxIter && !converged) {
-      // large-star over the SYMMETRIC neighborhood: per node u,
-      // m = min(u ∪ N(u)); larger neighbors v > u re-attach as (v, m)
-      val sym = cur.select(col("a").as("s"), col("b").as("t"))
-        .unionByName(cur.select(col("b").as("s"), col("a").as("t")))
-      val mins = sym.groupBy("s").agg(min(least(col("s"), col("t"))).as("m"))
-      val ls = sym.join(mins, "s").where(col("t") > col("s"))
-        .select(col("t").as("a"), col("m").as("b"))
-        .distinct()
-      // small-star over the directed (big, small) edges: per node a,
-      // m = min of its smaller neighbors; a and every non-minimum
-      // smaller neighbor attach to m
-      val m2 = ls.groupBy("a").agg(min("b").as("m"))
-      val next = ls.join(m2, "a")
-        .where(col("b") =!= col("m"))
-        .select(col("b").as("a"), col("m").as("b"))
-        .unionByName(m2.select(col("a"), col("m").as("b")))
-        .distinct().transform(Ckpt.eager)
-      // exact fixpoint test: edge sets equal in both directions — both
-      // anti-joins union into ONE action (one job per round, not two;
-      // O(log²) rounds make the per-round action count matter)
-      converged =
-        next.join(cur, Seq("a", "b"), "left_anti")
-          .unionByName(cur.join(next, Seq("a", "b"), "left_anti"))
-          .isEmpty
-      Bridge.unpersistCheckpoint(cur)
-      cur = next; it += 1
-    }
-    if (!converged && it >= maxIter) {
-      Bridge.unpersistCheckpoint(cur)
-      throw new NonConvergence(
-        s"connectedComponentsStar did not converge in $maxIter rounds")
-    }
-    // at fixpoint the edges are stars (member, root): roots label
-    // themselves, members label their root
-    val fromEdges = cur.select(col("b").as("id"), col("b").as("comp"))
-      .unionByName(cur.select(col("a").as("id"), col("b").as("comp")))
-      .groupBy("id").agg(min("comp").as("component"))
-    // ids that appear ONLY in self-pairs were dropped by the s =!= t
-    // filter above; [[connectedComponents]] emits them as their own
-    // singleton component, so this variant must too (same output
-    // contract — q42 and q42b share one oracle)
-    val allIds = pairs.select(col("id1").cast("long").as("id"))
-      .unionByName(pairs.select(col("id2").cast("long").as("id")))
-      .distinct()
-    fromEdges.unionByName(
-      allIds.join(fromEdges.select("id"), Seq("id"), "left_anti")
-        .select(col("id"), col("id").as("component")))
-  }
-
-  /** Cluster summary over [[connectedComponents]] output: one row per
+  /** Cluster summary over [[Closure.components]] output: one row per
     * component with its size and representative (the component id is
     * already the minimum member id — the member every keep-lowest-id
     * dedup policy retains). */
@@ -917,28 +671,19 @@ object Dedup {
     * id1 is itself a dropped member of another cluster, where the
     * pair-based form can over-keep). One anti-join after the closure.
     *
-    * The closure is [[connectedComponentsStar]] (O(log²) rounds
-    * regardless of component diameter): on a corpus-scale NEAR-DUP pair
-    * graph, banding chains document families into long components, and
+    * The closure is [[Closure.components]]; above its local cap it
+    * runs the star loop (O(log²) rounds regardless of component
+    * diameter — banding chains document families into long components;
     * controlled 100× single-shots measured min-label propagation at
-    * 266 s where the star closure finished the SAME relation in ~102 s
-    * (2.6×; bench_r8_full_100x.json + the notes' re-runs). q45 itself is
-    * pair-generation-bound at that scale (241 → 237 s under the switch),
-    * so this is diameter INSURANCE at ~0.5 s oracle-scale cost, not a
-    * q45 speedup; the relations are identical (spec-gated equivalence),
-    * so the output — and the q45 oracle — are unchanged. */
+    * 266 s where the star closure finished the SAME relation in ~102 s,
+    * bench_r8_full_100x.json). */
   def dedupedCorpusCC(docs: DataFrame, idCol: String,
                       pairs: DataFrame): DataFrame = {
-    // same integral-id contract as connectedComponents (which enforces it
-    // on `pairs`); enforce on the docs side too so a string-id corpus
-    // cannot silently anti-join on nulls and come back undeduplicated
-    val dt = docs.schema(idCol).dataType
-    require(dt == org.apache.spark.sql.types.LongType ||
-      dt == org.apache.spark.sql.types.IntegerType ||
-      dt == org.apache.spark.sql.types.ShortType,
-      s"dedupedCorpusCC needs an integral $idCol; got $dt — " +
-        "map ids to longs before calling")
-    val drop = connectedComponentsStar(pairs)
+    // the closure's integral-id contract on the docs side too, so a
+    // string-id corpus cannot silently anti-join on nulls and come back
+    // undeduplicated
+    Closure.requireIntegral(docs, idCol, "dedupedCorpusCC")
+    val drop = Closure.components(pairs)
       .where(col("id") =!= col("component"))
       .select(col("id").as("_drop_id"))
     docs.join(drop, docs(idCol).cast("long") === drop("_drop_id"),
@@ -958,25 +703,16 @@ object Dedup {
     * near-ties would make the kept set engine-dependent.
     *
     * Shape: the closure runs over the PAIR graph only
-    * ([[connectedComponentsStar]], O(log²) rounds); the corpus then
+    * ([[Closure.components]]); the corpus then
     * aggregates ONCE by component with a map-side-combinable
     * max(struct(quality, -id)) argmax — no per-component sort window, no
     * corpus self-join, one exchange keyed by component. Output: one row
     * per KEPT doc — (<idCol>, component, <qualityCol>, n_members). */
   def canonicalByQuality(docs: DataFrame, idCol: String,
                          qualityCol: String, pairs: DataFrame): DataFrame = {
-    val dt = docs.schema(idCol).dataType
-    require(dt == org.apache.spark.sql.types.LongType ||
-      dt == org.apache.spark.sql.types.IntegerType ||
-      dt == org.apache.spark.sql.types.ShortType,
-      s"canonicalByQuality needs an integral $idCol; got $dt")
-    val qt = docs.schema(qualityCol).dataType
-    require(qt == org.apache.spark.sql.types.LongType ||
-      qt == org.apache.spark.sql.types.IntegerType ||
-      qt == org.apache.spark.sql.types.ShortType,
-      s"canonicalByQuality needs an integral $qualityCol (exact argmax); " +
-        s"got $qt — quantize float scores to µ-unit longs first")
-    val comp = connectedComponentsStar(pairs)
+    Seq(idCol, qualityCol).foreach(
+      Closure.requireIntegral(docs, _, "canonicalByQuality"))
+    val comp = Closure.components(pairs)
     docs
       .select(col(idCol).cast("long").as("_id"),
         col(qualityCol).cast("long").as("_q"))
@@ -1187,24 +923,22 @@ object Dedup {
     * hashes, not rows. */
   def hashDeduped(corpus: DataFrame, idCol: String, hashes: DataFrame,
                   maxHamming: Int = 3): DataFrame = {
-    val dt = corpus.schema(idCol).dataType
-    require(dt == org.apache.spark.sql.types.LongType ||
-      dt == org.apache.spark.sql.types.IntegerType ||
-      dt == org.apache.spark.sql.types.ShortType,
-      s"hashDeduped needs an integral $idCol; got $dt")
+    Closure.requireIntegral(corpus, idCol, "hashDeduped")
     val sh = hashes.withColumnRenamed("simhash", "_sh")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val grp = hashGroups(sh)
     val mem = sh.join(grp.select(col("_sh"), col("_rep")), Seq("_sh"))
       .select(col("_id"), col("_rep"))
-    val allComp = hashComponentsOf(grp, maxHamming)
     // drop set pinned so the hash frame frees NOW (the returned anti-join
-    // would otherwise re-decode the corpus per downstream action)
-    val drop = mem
-      .join(allComp, mem("_rep").cast("long") === allComp("id"))
-      .where(col("_id").cast("long") =!= col("component"))
-      .select(col("_id").cast("long").as("_drop_id"))
-      .transform(Ckpt.eager)
+    // would otherwise re-decode the corpus per downstream action); the
+    // closure's own checkpoints free with the scope
+    val drop = Ckpt.scope {
+      val allComp = hashComponentsOf(grp, maxHamming)
+      Ckpt.eager(mem
+        .join(allComp, mem("_rep").cast("long") === allComp("id"))
+        .where(col("_id").cast("long") =!= col("component"))
+        .select(col("_id").cast("long").as("_drop_id")))
+    }
     sh.unpersist(false)
     corpus.join(drop, corpus(idCol).cast("long") === drop("_drop_id"),
       "left_anti")
@@ -1219,40 +953,10 @@ object Dedup {
   private def hashComponentsOf(grp: DataFrame,
                                maxHamming: Int): DataFrame = {
     val reps = grp.select(col("_rep").as("_id"), col("_sh"))
-    // plain min-label propagation first (dedup clusters are shallow
-    // near-cliques — 2-4 rounds, the cheapest shape), falling back to
-    // the star closure when the graph is a Hamming CHAIN (a drifting
-    // near-dup series pairs i with i±1 only, so min-label eccentricity
-    // equals the chain length — the 10× varied fixture blew the round
-    // budget here, r14): star reaches fixpoint in O(log² n) rounds
-    // regardless of diameter, with identical output labels. The pair
-    // frame is pinned so the fallback re-reads, not re-bands.
-    val pairs = Ckpt.eager(
+    // a Hamming CHAIN (a drifting near-dup series pairs i with i±1
+    // only) is the long-diameter shape the closure's star route is for
+    val repComp = Closure.components(
       bandedHashPairs(reps, maxHamming).select(col("id1"), col("id2")))
-    val repComp =
-      try {
-        // the label loop's result is checkpoint-backed (lineage
-        // truncated): pairs' only consumers have run — free it NOW
-        // instead of leaking one pair checkpoint per closure (§5)
-        val c = connectedComponents(pairs, maxIter = 8)
-        org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(pairs)
-        c
-      } catch {
-        // the DEDICATED non-convergence type, not IllegalStateException
-        // wholesale: an unrelated illegal-state failure must propagate,
-        // not silently reroute into the star closure
-        case _: NonConvergence =>
-          // the star closure's output still references pairs lazily (its
-          // singleton re-union reads the pair ids), so materialize it
-          // before freeing pairs and the star loop's final round — both
-          // created here, never caller-owned
-          import org.apache.spark.sql.graftbridge.Bridge
-          val kept = Bridge.checkpointRddIds(grp)
-          val lazyC = connectedComponentsStar(pairs)
-          val c = Ckpt.eager(lazyC)
-          Bridge.unpersistCheckpointExcept(lazyC, kept)
-          c
-      }
     val cliqueOnly = grp.where(col("_e") > 1)
       .select(col("_rep").cast("long").as("id"),
         col("_rep").cast("long").as("component"))
@@ -1268,15 +972,12 @@ object Dedup {
     * corpus rebuild is `hashDeduped(corpus, hashes)` and this artifact
     * refreshes with it. */
   def hashComponents(hashes: DataFrame, maxHamming: Int = 3): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
     val sh = hashes.withColumnRenamed("simhash", "_sh")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val kept = Bridge.checkpointRddIds(hashes)
-    val lazyOut = hashComponentsOf(hashGroups(sh), maxHamming)
-    val out = Ckpt.eager(lazyOut)
-    // free the closure's internal checkpoints (never the caller's own
-    // pinned hash frame) now that the artifact is materialized (§5)
-    Bridge.unpersistCheckpointExcept(lazyOut, kept)
+    // materialized before the hash frame frees; the closure's own
+    // checkpoints free with the scope
+    val out = Ckpt.scope(Ckpt.eager(hashComponentsOf(hashGroups(sh),
+      maxHamming)))
     sh.unpersist(false)
     out
   }
@@ -1310,11 +1011,7 @@ object Dedup {
                         baseHashes: DataFrame, baseComp: DataFrame,
                         newHashes: DataFrame,
                         maxHamming: Int = 3): DataFrame = {
-    val dt = corpus.schema(idCol).dataType
-    require(dt == org.apache.spark.sql.types.LongType ||
-      dt == org.apache.spark.sql.types.IntegerType ||
-      dt == org.apache.spark.sql.types.ShortType,
-      s"extendHashDeduped needs an integral $idCol; got $dt")
+    Closure.requireIntegral(corpus, idCol, "extendHashDeduped")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val bh = baseHashes.withColumnRenamed("simhash", "_sh").persist(lvl)
     val nh = newHashes.withColumnRenamed("simhash", "_sh").persist(lvl)
@@ -1452,7 +1149,7 @@ object Dedup {
 
   private def extendHashComponentsOf(bg: DataFrame, ng: DataFrame,
                                      baseComp: DataFrame,
-                                     maxHamming: Int): DataFrame = {
+                                     maxHamming: Int): DataFrame = Ckpt.scope {
     // the base side is consumed STREAMING-ONLY: every bg access is an
     // inner/banded join whose batch side carries a broadcast hint (ng is
     // batch-sized by the append contract), so the stored group frame is
@@ -1493,14 +1190,12 @@ object Dedup {
       .where(col("_e") > 1)
       .select(col("_rep").cast("long").as("id"),
         col("_rep").cast("long").as("component"))
-    // extendComponents materializes its result, so the pinned `shared`
-    // probe frame can be freed here instead of leaking per append (§5)
-    val out = extendComponents(
+    // extendComponents materializes its result, so the scope frees the
+    // pinned `shared` probe frame instead of leaking it per append (§5)
+    extendComponents(
       baseComp.unionByName(newCliques
         .join(baseComp.select("id"), Seq("id"), "left_anti")),
       sharedEdges.unionByName(crossEdges).unionByName(withinEdges))
-    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(shared)
-    out
   }
 
   /** 56-bit SimHash over word tokens: bit j is set iff the majority of
@@ -1908,7 +1603,7 @@ object Dedup {
   }
 
   /** SemDeDup keep policy over [[semanticDupPairs]]: connect the pair
-    * graph ([[connectedComponents]] — components never span cells, since
+    * graph ([[Closure.components]] — components never span cells, since
     * pairs don't) and keep, per near-dup group, the member LEAST similar
     * to its cluster centroid (the paper's choice: the most typical
     * examples are the redundant ones; ties break to the lowest id).
@@ -1934,7 +1629,7 @@ object Dedup {
         .withColumn("cosine", dotNativeD(col("a.dv"), col("b.dv")))
         .where(col("cosine") >= tau)
         .select(col("a.vec_id").as("id1"), col("b.vec_id").as("id2"))
-      val drop = connectedComponents(pairs)
+      val drop = Closure.components(pairs)
         .join(asg.select(col("vec_id"), col("sim")),
           col("id") === col("vec_id"))
         .withColumn("_rnk", row_number().over(org.apache.spark.sql
@@ -1992,7 +1687,7 @@ object Dedup {
         .withColumn("cosine", dotNativeD(col("a.dv"), col("b.dv")))
         .where(col("cosine") >= tau)
         .select(col("a._rid").as("id1"), col("b._rid").as("id2"))
-      val repComp = connectedComponents(repPairs)
+      val repComp = Closure.components(repPairs)
       // isolated multi-member groups whose members still pair with each
       // other (self-dot clears tau): a clique with no external edge is
       // its own component, labeled by its minimum member id = the rep
@@ -2016,9 +1711,8 @@ object Dedup {
 
   /** INCREMENTAL connected-components maintenance — the q111 economics
     * for the MinHash family: a persisted `(id, component)` assignment
-    * (a previous [[connectedComponents]]/[[connectedComponentsStar]]
-    * run) extends under an appended batch's NEW edges
-    * (batch-internal [[nearDupPairs]] ∪ cross-corpus
+    * (a previous [[Closure.components]] run) extends under an appended
+    * batch's NEW edges (batch-internal [[nearDupPairs]] ∪ cross-corpus
     * [[crossNearDupPairs]]) without re-banding or re-joining the base
     * corpus. Each old component collapses to its STAR (component ←
     * member edges): stars preserve exactly the old connectivity AND
@@ -2043,12 +1737,19 @@ object Dedup {
     * member id (labels are minimum member ids — a raise_error fires on
     * the first violating row). Singleton assignments (id == component,
     * no new edge) are preserved in the output as their own components,
-    * matching the from-scratch closure's self-pair contract. */
+    * matching the from-scratch closure's self-pair contract.
+    *
+    * The result is materialized; every checkpoint the call made (the
+    * pinned batch-pair frame, the closure's) is freed before it returns
+    * ([[Ckpt.scope]]) — the r15 shape leaked one batch-pair checkpoint
+    * per large append (§5). The returned checkpoint belongs to the
+    * caller's scope (the store appends' epoch scope frees it once the
+    * epoch write landed). */
   def extendComponents(assignments: DataFrame,
-                       newPairs: DataFrame): DataFrame = {
+                       newPairs: DataFrame): DataFrame = Ckpt.scope {
     // contract guard: the star construction's correctness REQUIRES the
     // assignment label to be the minimum member id (what
-    // connectedComponents/connectedComponentsStar produce). A foreign
+    // Closure.components produces). A foreign
     // assignment violating it would silently relabel components; the
     // cheap necessary condition component ≤ id is checked loudly on
     // every row, map-side (a full min-membership audit would cost a
@@ -2060,7 +1761,7 @@ object Dedup {
           col("component").cast("long"), lit(" exceeds member id "),
           col("id").cast("long"),
           lit(" — labels must be minimum member ids (a " +
-            "connectedComponents/connectedComponentsStar output)"))))
+            "Closure.components output)"))))
         .otherwise(col("component").cast("long")).as("component"))
     def singletons(ids: DataFrame, closed: DataFrame): DataFrame =
       ids.join(closed.select(col("id")), Seq("id"), "left_anti")
@@ -2076,7 +1777,7 @@ object Dedup {
       val star = asg
         .where(col("id") =!= col("component"))
         .select(col("component").as("id1"), col("id").as("id2"))
-      val closed = connectedComponentsStar(star.unionByName(pairs))
+      val closed = Closure.components(star.unionByName(pairs))
       closed.unionByName(singletons(asg.select(col("id")), closed))
     }
     // TOUCHED-COMPONENT restriction (r15), STATS-GATED: a stored
@@ -2099,7 +1800,6 @@ object Dedup {
     // `spark.graft.extend.broadcastMaxBytes` (default 256 MB), fall
     // back to the full-star closure, which never broadcasts. All three
     // paths are output-identical (DedupSpec forces each via the knobs).
-    import org.apache.spark.sql.graftbridge.Bridge
     val conf = assignments.sparkSession.conf
     val restrictMin = conf
       .getOption("spark.graft.extend.restrictMinBytes")
@@ -2131,27 +1831,13 @@ object Dedup {
           val star = affected
             .where(col("id") =!= col("component"))
             .select(col("component").as("id1"), col("id").as("id2"))
-          val closed = connectedComponentsStar(star.unionByName(np))
+          val closed = Closure.components(star.unionByName(np))
           closed
             .unionByName(singletons(affected.select(col("id")), closed))
             .unionByName(untouched)
         }
       }
-    // materialize the extension NOW so every checkpoint this call
-    // created (the pinned batch-pair frame np, the star loop's final
-    // round — both still referenced by the lazy result lineage) can be
-    // FREED before returning: the r15 shape leaked one batch-pair
-    // checkpoint per large append (§5). Only internally-created
-    // checkpoints are freed — the caller may keep reading its own
-    // checkpointed inputs after the call returns. The returned frame is
-    // checkpoint-backed; long-lived callers should
-    // Bridge.unpersistCheckpoint it once consumed (the store appends
-    // do, after their epoch write lands).
-    val callerOwned = Bridge.checkpointRddIds(assignments) ++
-      Bridge.checkpointRddIds(newPairs)
-    val out = Ckpt.eager(result)
-    Bridge.unpersistCheckpointExcept(result, callerOwned)
-    out
+    Ckpt.eager(result)
   }
 
   /** Within-cell cosine pairs over a PRECOMPUTED assignment frame
@@ -2304,7 +1990,7 @@ object Dedup {
     *
     * Output: one row per unordered pair of DISTINCT keys within
     * `maxEdit` — (rep_a, rep_b, key_a, key_b, cnt_a, cnt_b, dist),
-    * rep_a < rep_b. Feed into [[connectedComponents]] for canonical
+    * rep_a < rep_b. Feed into [[Closure.components]] for canonical
     * key clusters. The reference has no fuzzy-string machinery (its
     * dedup surface is vector-level; see reference storage_engine.py) —
     * training-data-pipeline tier. */
@@ -2367,22 +2053,23 @@ object Dedup {
     // the length guard applied post-aggregation — per distinct key,
     // same loudness. Whole from-scratch chain after: ~15 s — one
     // unavoidable derivation pass + ~2 s of join work.
-    val projected = Ckpt.eager(df.select(
-      col(idCol).cast("long").as("_fid"), col(keyCol).as("key")))
     val lenGuard = when(length(col("key")) > maxKeyLen,
       raise_error(concat(lit("fuzzyVariantIndex: key length "),
         length(col("key")),
         lit(s" exceeds maxKeyLen $maxKeyLen — long keys make the " +
           "single-deletion variant set quadratic; truncate or hash " +
           "upstream")))).otherwise(col("key"))
-    val keys = Ckpt.eager(projected.where(length(col("key")) > 0)
-      .groupBy(col("key"))
-      .agg(min(col("_fid")).as("rep"),
-        count(lit(1)).as("cnt"))
-      .select(lenGuard.as("key"), col("rep"), col("cnt")))
     // the projection's blocks are dead once the keys aggregate has its
-    // own checkpoint — free them now rather than at driver GC
-    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(projected)
+    // own checkpoint — the scope frees them now rather than at driver GC
+    val keys = Ckpt.scope {
+      val projected = Ckpt.eager(df.select(
+        col(idCol).cast("long").as("_fid"), col(keyCol).as("key")))
+      Ckpt.eager(projected.where(length(col("key")) > 0)
+        .groupBy(col("key"))
+        .agg(min(col("_fid")).as("rep"),
+          count(lit(1)).as("cnt"))
+        .select(lenGuard.as("key"), col("rep"), col("cnt")))
+    }
     // identity + each ≤maxEdit-deletion variant (Garbe's symmetric
     // deletes are a complete candidate cover for Levenshtein ≤ maxEdit),
     // deduplicated, via the compiled kernel — the equivalent

@@ -81,14 +81,8 @@ object Packing {
       : DataFrame = {
     require(seqLen > 0 && shards > 0,
       s"need positive seqLen/shards, got $seqLen/$shards")
-    // fail fast on non-integral ids: a silent cast would null them and
-    // the packing pass reads the long directly
-    val dt = docs.schema("doc_id").dataType
-    require(dt == org.apache.spark.sql.types.LongType ||
-      dt == org.apache.spark.sql.types.IntegerType ||
-      dt == org.apache.spark.sql.types.ShortType,
-      s"packGreedy needs an integral doc_id; got $dt — map ids to longs " +
-        "before calling")
+    // the packing pass reads the long id directly
+    Closure.requireIntegral(docs, "doc_id", "packGreedy")
     val d = docs.select(col("doc_id").cast("long").as("doc_id"),
         counter(col("text")).as("_n"))
       .where(col("_n") > 0)

@@ -171,7 +171,7 @@ object Pipeline {
     * eval by construction (the reason dedup-before-split is a standing
     * rule in the dedup literature). Here every document draws on its
     * duplicate-cluster REPRESENTATIVE (the component minimum from
-    * [[Dedup.connectedComponents]] over `pairs`; unpaired docs are
+    * [[Closure.components]] over `pairs`; unpaired docs are
     * their own representative, so they draw exactly as the naive
     * assignment would), which makes the split a pure function of the
     * cluster: all members land together, and the assignment stays
@@ -184,7 +184,7 @@ object Pipeline {
       splits: Seq[(String, Long)] = Seq(
         ("train", 800000L), ("val", 100000L), ("test", 100000L)))
       : DataFrame = {
-    val comp = Dedup.connectedComponents(pairs)
+    val comp = Closure.components(pairs)
       .withColumnRenamed("id", idCol)
     val withRep = docs.join(comp, Seq(idCol), "left")
       .withColumn("rep",

@@ -245,11 +245,10 @@ object SubstringIndex {
                    newDocs: DataFrame, window: Int,
                    idCol: String = "doc_id",
                    textCol: String = "text"): (DataFrame, DataFrame) = {
-    val (touched, changed, idxDelta) =
-      appendCore(baseDocs, indexFor, newDocs, window, idCol, textCol)
     // both results are already pinned, so the touched-id pin has no
-    // consumer left: free it instead of leaving it to driver GC
-    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(touched)
+    // consumer left: the caller's scope frees it with the results
+    val (_, changed, idxDelta) =
+      appendCore(baseDocs, indexFor, newDocs, window, idCol, textCol)
     (changed, idxDelta)
   }
 

@@ -116,7 +116,7 @@ object TextAnalysis {
     * round — the k-means-centroid discipline. The apply is a pure
     * column fold (exactly the left-to-right scan, no UDF). */
   def bpeTrainMerges(docs: DataFrame, nMerges: Int,
-                     textCol: String = "text"): DataFrame = {
+                     textCol: String = "text"): DataFrame = Ckpt.scope {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
     val spark = docs.sparkSession
     import spark.implicits._
@@ -170,7 +170,6 @@ object TextAnalysis {
         step += 1
       }
     }
-    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(st)
     learned.toSeq.toDF("step", "lhs", "rhs", "pair_count")
   }
 
@@ -387,9 +386,8 @@ object TextAnalysis {
     // materialize the (small, 4-long-column) result so the temporary
     // token-count cache can be freed NOW — without this the returned
     // plan references the persisted frame and repeated packShards calls
-    // accumulate cached blocks for the session. Same lifetime contract
-    // as [[Dedup.connectedComponents]]: the result is checkpoint-backed;
-    // long-lived sessions Bridge.unpersistCheckpoint it once consumed.
+    // accumulate cached blocks for the session. The result is a
+    // checkpoint the caller's [[Ckpt.scope]] (or the caller) owns.
     val out = inBucket.join(broadcast(offsets), Seq("_b"))
       .withColumn("cum_subtokens", col("_off") + col("_cumb"))
       .withColumn("shard_id",

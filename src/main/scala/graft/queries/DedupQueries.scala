@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.operators.{Dedup, QualityModels, TextAnalysis}
+import graft.operators.{Ckpt, Closure, Dedup, QualityModels, TextAnalysis}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -80,7 +80,7 @@ object DedupQueries {
     * batch's media. */
   private def incrementalHashDedup(s: SparkSession, d: String,
                                    hashes: DataFrame): DataFrame = {
-    val h = graft.operators.Ckpt.eager(hashes)
+    val h = Ckpt.eager(hashes)
     val baseH = h.where(pmod(col("_id"), lit(4)) =!= 3)
     val batchH = h.where(pmod(col("_id"), lit(4)) === 3)
     // the persisted artifacts from the prior round: the base prints and
@@ -415,12 +415,10 @@ object DedupQueries {
       val batch = corpus.where(col("vec_id") >= 10000)
       // the persisted artifacts a deployment holds from the prior round
       val cents = graft.operators.Clustering.kmeansCentroidsD(base, 8, 3)
-      val baseAsg = graft.operators.Ckpt.eager(
+      val baseAsg = Ckpt.eager(
         graft.operators.Clustering.assignVecWithCentroids(base, cents))
-      val baseComp = graft.operators.Ckpt.eager(
-        Dedup.connectedComponents(
-          Dedup.assignmentDupPairs(baseAsg, 0.95)
-            .select("id1", "id2")))
+      val baseComp = Closure.components(
+        Dedup.assignmentDupPairs(baseAsg, 0.95).select("id1", "id2"))
       Dedup.extendSemanticDeduped(corpus, "vec_id", baseAsg, baseComp,
           batch, cents, tau = 0.95)
         .select(col("vec_id").cast("long").as("vec_id"))
@@ -452,21 +450,20 @@ object DedupQueries {
       val aug = augDocs(s, d)
       val base = aug.where(col("doc_id") < 10000)
       val batch = aug.where(col("doc_id") >= 10000)
-      // the persisted artifact a deployment holds from the prior round
-      val baseAsg = graft.operators.Ckpt.eager(
-        Dedup.connectedComponents(
-          Dedup.nearDupPairs(base, "doc_id", "text", tau = 0.5)))
-      val newEdges = Dedup
-        .nearDupPairs(batch, "doc_id", "text", tau = 0.5)
-        .select(col("id1"), col("id2"))
-        .unionByName(Dedup.crossNearDupPairs(batch, base,
-            "doc_id", "text", tau = 0.5)
-          .select(col("existing_id").as("id1"), col("new_id").as("id2")))
-      // extendComponents materializes its result, so the pinned base
-      // artifact can be freed here — one fewer leaked checkpoint per run
-      val ext = Dedup.extendComponents(baseAsg, newEdges)
-      org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(baseAsg)
-      ext.select(col("id").as("doc_id"), col("component"))
+      // extendComponents materializes its result, so the scope frees the
+      // base artifact and the pair pins once it returns
+      Ckpt.scope {
+        // the persisted artifact a deployment holds from the prior round
+        val baseAsg = Closure.components(
+          Dedup.nearDupPairs(base, "doc_id", "text", tau = 0.5))
+        val newEdges = Dedup
+          .nearDupPairs(batch, "doc_id", "text", tau = 0.5)
+          .select(col("id1"), col("id2"))
+          .unionByName(Dedup.crossNearDupPairs(batch, base,
+              "doc_id", "text", tau = 0.5)
+            .select(col("existing_id").as("id1"), col("new_id").as("id2")))
+        Dedup.extendComponents(baseAsg, newEdges)
+      }.select(col("id").as("doc_id"), col("component"))
         .orderBy("doc_id")
     }),
 
@@ -508,7 +505,7 @@ object DedupQueries {
       import graft.api.CurationDB
       val docs = Tables.documents(s, d).select("doc_id", "text")
       val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
-      val corp = graft.operators.Ckpt.eager(
+      val corp = Ckpt.eager(
         docs.join(emb, docs("doc_id") === emb("vec_id"))
           .select(col("doc_id"), col("text"),
             trim(substring(lower(regexp_replace(col("text"),
@@ -603,23 +600,25 @@ object DedupQueries {
         .orderBy("id1", "id2")),
 
     // Pairs -> CLUSTERS: connected components over the q23b near-dup pair
-    // graph (transitive closure; component = min reachable id). The oracle
-    // replays the closure with a recursive label-propagation CTE.
+    // graph (transitive closure; component = min reachable id). At
+    // oracle scale the pairs fit under the closure's local cap, so this
+    // is the driver-side union-find route. The oracle replays the
+    // closure with a recursive label-propagation CTE.
     "q42_dedup_components" -> ((s, d) => {
       val pairs = Dedup.nearDupPairs(augDocs(s, d), "doc_id", "text",
         tau = 0.5)
-      Dedup.connectedComponents(pairs)
+      Closure.components(pairs)
         .select(col("id").as("doc_id"), col("component"))
         .orderBy("doc_id")
     }),
 
-    // The same closure computed by the diameter-proof large-star/
-    // small-star algorithm — identical output, so it shares q42's
-    // oracle verbatim (the oracle doesn't care which engine loop ran).
+    // The same closure forced onto its distributed route (local cap 0:
+    // the large-star/small-star loop) — identical output, so it shares
+    // q42's oracle verbatim and hash-checks the star loop at any scale.
     "q42b_dedup_components_star" -> ((s, d) => {
       val pairs = Dedup.nearDupPairs(augDocs(s, d), "doc_id", "text",
         tau = 0.5)
-      Dedup.connectedComponentsStar(pairs)
+      Closure.components(pairs, localMaxEdges = 0)
         .select(col("id").as("doc_id"), col("component"))
         .orderBy("doc_id")
     }),
@@ -711,7 +710,7 @@ object DedupQueries {
     "q114_fuzzy_clusters" -> ((s, d) => {
       val pairs = Dedup.fuzzyKeyPairs(fuzzKeys(s, d), "key", "doc_id")
         .select(col("rep_a").as("id1"), col("rep_b").as("id2"))
-      Dedup.connectedComponents(pairs)
+      Closure.components(pairs)
         .select(col("id").as("doc_id"), col("component"))
         .orderBy("doc_id")
     }),
@@ -746,22 +745,20 @@ object DedupQueries {
       val fk = fuzzKeys(s, d)
       val base = fk.where(col("doc_id") < 30000)
       val batch = fk.where(col("doc_id") >= 30000)
-      // the persisted artifacts a deployment holds from the prior round
-      val baseIdx = graft.operators.Ckpt.eager(
-        Dedup.fuzzyVariantIndex(base, "key", "doc_id"))
-      val baseAsg = graft.operators.Ckpt.eager(
-        Dedup.connectedComponents(
+      // extendComponents materializes its result, so the scope frees the
+      // base artifacts once it returns
+      Ckpt.scope {
+        // the persisted artifacts a deployment holds from the prior round
+        val baseIdx = Ckpt.eager(
+          Dedup.fuzzyVariantIndex(base, "key", "doc_id"))
+        val baseAsg = Closure.components(
           Dedup.fuzzyKeyPairs(base, "key", "doc_id")
-            .select(col("rep_a").as("id1"), col("rep_b").as("id2"))))
-      val newPairs = Dedup.extendFuzzyKeyPairs(baseIdx, batch,
-          "key", "doc_id")
-        .select(col("rep_a").as("id1"), col("rep_b").as("id2"))
-      // extendComponents materializes its result, so the pinned base
-      // artifacts can be freed here — two fewer leaked checkpoints per run
-      val ext = Dedup.extendComponents(baseAsg, newPairs)
-      org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(baseAsg)
-      org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(baseIdx)
-      ext.select(col("id").as("doc_id"), col("component"))
+            .select(col("rep_a").as("id1"), col("rep_b").as("id2")))
+        val newPairs = Dedup.extendFuzzyKeyPairs(baseIdx, batch,
+            "key", "doc_id")
+          .select(col("rep_a").as("id1"), col("rep_b").as("id2"))
+        Dedup.extendComponents(baseAsg, newPairs)
+      }.select(col("id").as("doc_id"), col("component"))
         .orderBy("doc_id")
     })
   )

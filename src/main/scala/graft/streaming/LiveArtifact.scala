@@ -59,8 +59,8 @@ sealed abstract class LiveArtifact(spark: SparkSession, root: String)
   /** Commit `batch`'s delta as the next epoch, exactly once per
     * `token`; returns the epoch (a replay returns the original one). */
   def append(batch: DataFrame, token: String): Long =
-    replayOr(token)(head => commitDelta(head + 1, Seq(build(batch)),
-      Some(token)))
+    replayOr(token)(head => commitDelta(head + 1, Some(token))(
+      Seq(build(batch))))
 
   // read only at the head: compaction prunes the absorbed commit markers
   override protected def keepsCommitHistory = false

@@ -25,27 +25,6 @@ object Bridge {
       case _ => ()
     }
 
-  /** The RDD ids of every checkpoint-backed node in `df`'s lineage —
-    * lets an operator record which checkpoints its CALLER owns before
-    * freeing its own (see [[unpersistCheckpointExcept]]). */
-  def checkpointRddIds(df: org.apache.spark.sql.DataFrame): Set[Int] =
-    df.queryExecution.analyzed.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
-    }.toSet
-
-  /** [[unpersistCheckpoint]] restricted to checkpoints NOT in `keep`:
-    * an operator that checkpoints internally (closure rounds, pinned
-    * batch frames) frees exactly what it created, never a caller-owned
-    * input the caller still reads after the call returns. */
-  def unpersistCheckpointExcept(df: org.apache.spark.sql.DataFrame,
-                                keep: Set[Int]): Unit =
-    df.queryExecution.analyzed.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD
-          if !keep.contains(r.rdd.id) =>
-        r.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** The catalog's default (managed) location for a default-database
     * table name — where `saveAsTable` would put it. Lets callers clear a
     * stale location left by a DIFFERENT session's managed table (the

@@ -4,7 +4,6 @@ import graft.api.TemporalVectorDB
 import graft.operators.VersionStore
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 import java.sql.Timestamp
 import java.nio.file.Files
 
@@ -483,7 +482,7 @@ class ApiSpec extends SparkSpec {
     db.addVersions(walk("a", 1, 3, 1).toDF("content_id", "ts", "embedding"))
     assert(extra.isEmpty)
     val live = () => Seq(db.cacheBases(), db.cacheLatest())
-      .flatMap(Bridge.checkpointRddIds).toSet
+      .flatMap(graft.operators.Ckpt.rdds(_).map(_.id)).toSet
     val built = live() // builds both indexes
     assert(built.size == 2 && extra == built)
     for (step <- 1 to 3) {

@@ -1,7 +1,8 @@
 package graft
 
-import graft.operators.{Ckpt, Dedup, Graph, SuffixArray}
+import graft.operators.{Ckpt, Closure, Dedup, Graph, SuffixArray}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Reliable-vs-local checkpoint parity for the iterative pyramids
   * (VERDICT r9 item 4): `spark.graft.checkpoint.reliable=true` must
@@ -9,8 +10,9 @@ import org.apache.spark.sql.DataFrame
   * executor-loss-safe), never a single output bit. Gated here on the
   * exact operators the verdict named — pageRank (q100 shape),
   * suffixRanks + the LCP stats built on them (q96 shape), and both
-  * connected-components variants — plus the loud-failure contract when
-  * the mode is flipped without a checkpoint dir. */
+  * connected-components routes — plus the loud-failure contract when
+  * the mode is flipped without a checkpoint dir, and the scope
+  * ownership of every checkpoint a closure makes. */
 class CkptSpec extends SparkSpec {
   import spark.implicits._
 
@@ -70,15 +72,64 @@ class CkptSpec extends SparkSpec {
     assert(a._1.nonEmpty && a._2.nonEmpty)
   }
 
-  test("connectedComponents (label and star) are bit-identical in both " +
+  test("closure routes (union-find and star) are bit-identical in both " +
     "modes") {
     val pairs = Seq[(Long, Long)]((1L, 2L), (2L, 3L), (10L, 11L), (5L, 5L),
       (11L, 12L), (12L, 13L), (20L, 21L)).toDF("id1", "id2")
+    // 7 edges fit the local cap, so the second closure forces the star
+    // route: reliable mode must checkpoint its rounds, not skip them
     val (a, b) = bothModes((
-      sortedRows(Dedup.connectedComponents(pairs)),
-      sortedRows(Dedup.connectedComponentsStar(pairs))))
+      sortedRows(Closure.components(pairs)),
+      sortedRows(Closure.components(pairs, localMaxEdges = 0))))
     assert(a == b)
+    assert(a._1 == a._2)
     assert(a._1.nonEmpty && a._2.nonEmpty)
+  }
+
+  test("closures pin nothing past their result: after each returned " +
+    "frame is freed, no persisted RDD is left above the baseline") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val pairs = Seq[(Long, Long)]((1L, 2L), (2L, 3L), (10L, 11L), (5L, 5L),
+      (11L, 12L), (20L, 21L)).toDF("id1", "id2")
+    val asg = Seq[(Long, Long)]((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L),
+      (11L, 10L), (40L, 40L)).toDF("id", "component")
+    val newPairs = Seq[(Long, Long)]((3L, 4L), (11L, 20L), (30L, 31L))
+      .toDF("id1", "id2")
+    val docs = (1L to 31L).map(i => (i, i * 7 % 5)).toDF("doc_id", "q")
+    val hashes = Seq[(Long, Long)]((1L, 0xFF00L), (2L, 0xFF01L),
+      (3L, 0xFF00L), (4L, 0x123456789L)).toDF("_id", "simhash")
+    val before = persisted
+    // growth, not equality (as in EpochStoreSpec): RDDs an earlier suite
+    // left to the context cleaner may be collected mid-test
+    val grown = scala.collection.mutable.ArrayBuffer.empty[String]
+    def step(what: String)(op: => DataFrame): Unit = {
+      val out = op
+      assert(out.count() > 0, what)
+      Bridge.unpersistCheckpoint(out)
+      val g = persisted -- before
+      if (g.nonEmpty) grown += s"$what: ${g.toSeq.sorted.mkString(",")}"
+    }
+    step("components, union-find")(Closure.components(pairs))
+    step("components, star")(Closure.components(pairs, localMaxEdges = 0))
+    step("hashComponents")(Dedup.hashComponents(hashes))
+    step("extendComponents, full star")(
+      Dedup.extendComponents(asg, newPairs))
+    spark.conf.set("spark.graft.extend.restrictMinBytes", "0")
+    try {
+      step("extendComponents, restricted")(
+        Dedup.extendComponents(asg, newPairs))
+      spark.conf.set("spark.graft.extend.broadcastMaxBytes", "0")
+      step("extendComponents, over budget")(
+        Dedup.extendComponents(asg, newPairs))
+    } finally {
+      spark.conf.unset("spark.graft.extend.restrictMinBytes")
+      spark.conf.unset("spark.graft.extend.broadcastMaxBytes")
+    }
+    step("dedupedCorpusCC")(Dedup.dedupedCorpusCC(docs, "doc_id", pairs))
+    step("canonicalByQuality")(
+      Dedup.canonicalByQuality(docs, "doc_id", "q", pairs))
+    assert(grown.isEmpty,
+      s"persisted RDDs above the baseline after ${grown.mkString("; ")}")
   }
 
   /** Destroy every cached block in the context — the observable state an

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Dedup
+import graft.operators.{Ckpt, Closure, Dedup}
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
@@ -459,12 +459,12 @@ class DedupSpec extends SparkSpec {
   test("connected components: transitive chains close, islands stay apart") {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (20L, 21L))
       .toDF("id1", "id2")
-    val got = Dedup.connectedComponents(pairs)
+    val got = Closure.components(pairs)
       .as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L))
     val summary = Dedup.componentSummary(
-        Dedup.connectedComponents(pairs))
+        Closure.components(pairs))
       .as[(Long, Long, Long)].collect().toSet
     assert(summary == Set((1L, 4L, 4L), (10L, 2L, 11L), (20L, 2L, 21L)))
   }
@@ -487,74 +487,140 @@ class DedupSpec extends SparkSpec {
     }
     val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
     val expected = nodes.map(n => n -> find(n)).toMap
-    val got = Dedup.connectedComponents(edges.toDF("id1", "id2"))
+    val got = Closure.components(edges.toDF("id1", "id2"))
       .as[(Long, Long)].collect().toMap
     assert(got == expected)
   }
 
   test("connected components: empty pair list yields empty output") {
     val empty = Seq.empty[(Long, Long)].toDF("id1", "id2")
-    assert(Dedup.connectedComponents(empty).count() == 0)
-    assert(Dedup.connectedComponentsStar(empty).count() == 0)
+    assert(Closure.components(empty).count() == 0)
+    assert(Closure.components(empty, localMaxEdges = 0).count() == 0)
   }
 
   test("star components equal label-propagation components on random graphs") {
+    // driver-side min-label propagation to a fixpoint is the reference
+    def labelProp(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+      var label = edges.flatMap(e => Seq(e._1, e._2)).map(n => n -> n).toMap
+      var changed = true
+      while (changed) {
+        val next = edges.foldLeft(label) { case (m, (a, b)) =>
+          val l = math.min(m(a), m(b))
+          m.updated(a, l).updated(b, l)
+        }
+        changed = next != label
+        label = next
+      }
+      label
+    }
     val rnd = new scala.util.Random(4242)
-    for (_ <- 1 to 3) {
+    for (trial <- 1 to 3) {
       val edges = (0 until 50).map(_ =>
         (rnd.nextInt(30).toLong, rnd.nextInt(30).toLong))
         .filter(e => e._1 != e._2)
       val df = edges.toDF("id1", "id2")
-      val label = Dedup.connectedComponents(df)
+      val expected = labelProp(edges)
+      val local = Closure.components(df).as[(Long, Long)].collect().toMap
+      val star = Closure.components(df, localMaxEdges = 0)
         .as[(Long, Long)].collect().toMap
-      val star = Dedup.connectedComponentsStar(df)
-        .as[(Long, Long)].collect().toMap
-      assert(star == label)
+      assert(local == expected, s"trial $trial: local != label-prop")
+      assert(star == expected, s"trial $trial: star != label-prop")
     }
   }
 
-  test("star components close a 400-hop chain that exhausts the label loop") {
-    // a path graph of diameter 400: under the DEFAULT size gate this
-    // tiny graph closes locally (one collect + union-find), correctly
+  test("connected components close a 400-hop chain on both routes") {
+    // a path graph of diameter 400: under the DEFAULT cap this tiny
+    // graph closes locally (one collect + union-find), correctly
     val chain = (0L until 400L).map(i => (i, i + 1)).toDF("id1", "id2")
-    val local = Dedup.connectedComponents(chain, maxIter = 20)
+    val local = Closure.components(chain)
       .as[(Long, Long)].collect()
     assert(local.length == 401 && local.forall(_._2 == 0L))
-    // with the local path disabled, min-label propagation moves the
-    // label one hop per round (maxIter=20 fails fast — honest, not
-    // partial); the star algorithm's reach doubles per round and closes
-    spark.conf.set("spark.graft.cc.localMaxRows", "0")
-    try {
-      intercept[IllegalStateException] {
-        Dedup.connectedComponents(chain, maxIter = 20)
-      }
-      val star = Dedup.connectedComponentsStar(chain)
-        .as[(Long, Long)].collect()
-      assert(star.length == 401 && star.forall(_._2 == 0L))
-    } finally spark.conf.unset("spark.graft.cc.localMaxRows")
+    // forced onto the star route, whose reach doubles per round, it
+    // closes in O(log² n) rounds — a label loop would need 400
+    val star = Closure.components(chain, localMaxEdges = 0)
+      .as[(Long, Long)].collect()
+    assert(star.length == 401 && star.forall(_._2 == 0L))
   }
 
   test("local and distributed closures agree on random graphs, self-pair " +
     "singletons and min-labels included (the size gate is routing-only)") {
+    def routes(df: org.apache.spark.sql.DataFrame) =
+      (Closure.components(df).as[(Long, Long)].collect().toMap,
+        Closure.components(df, localMaxEdges = 0)
+          .as[(Long, Long)].collect().toMap)
     val rnd = new scala.util.Random(7)
     for (trial <- 1 to 3) {
       val edges = Seq.fill(120)(
         (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong)) ++
         Seq((77L, 77L)) // self-pair singleton must survive both paths
-      val df = edges.toDF("id1", "id2")
-      val local = Dedup.connectedComponents(df)
-        .as[(Long, Long)].collect().toMap
-      spark.conf.set("spark.graft.cc.localMaxRows", "0")
-      val (dist, star) =
-        try (Dedup.connectedComponents(df)
-          .as[(Long, Long)].collect().toMap,
-          Dedup.connectedComponentsStar(df)
-            .as[(Long, Long)].collect().toMap)
-        finally spark.conf.unset("spark.graft.cc.localMaxRows")
-      assert(local == dist, s"trial $trial: local != label-prop")
+      val (local, star) = routes(edges.toDF("id1", "id2"))
       assert(local == star, s"trial $trial: local != star")
       assert(local(77L) == 77L)
     }
+  }
+
+  test("an overflowing pair frame is evaluated exactly once: the probe " +
+    "and the star loop both read one pin") {
+    val evals = spark.sparkContext.longAccumulator("pair-row-evals")
+    val tick = udf { (x: Long) => evals.add(1); x }.asNondeterministic()
+    val pairs = spark.range(0, 6)
+      .select(tick(col("id")).as("id1"), (col("id") + 1).as("id2"))
+    // cap 3 < 6 edges: the probe overflows and the star loop runs
+    val star = Closure.components(pairs, localMaxEdges = 3)
+      .as[(Long, Long)].collect()
+    assert(star.length == 7 && star.forall(_._2 == 0L))
+    assert(evals.value == 6L, s"${evals.value} row evaluations, want 6")
+    evals.reset()
+    assert(Closure.components(pairs).count() == 7)
+    assert(evals.value == 6L, s"${evals.value} row evaluations, want 6")
+    // frames that only look like a checkpoint are pinned too: an
+    // RDD-backed frame, and a UDF projection over a real checkpoint
+    evals.reset()
+    val rddPairs = spark.createDataFrame(
+      spark.sparkContext.parallelize(0L until 6L, 2).map { i =>
+        evals.add(1); org.apache.spark.sql.Row(i, i + 1)
+      }, pairs.schema)
+    val base = Ckpt.eager(spark.range(0, 6).select(col("id").as("x"),
+      (col("id") + 1).as("y")))
+    val renamed = base.select(col("x").cast("int").as("id1"), col("y"))
+    assert(Ckpt.pin(base) eq base)
+    assert(Ckpt.pin(renamed) eq renamed)
+    val overCkpt = base.select(tick(col("x")).as("id1"), col("y").as("id2"))
+    for (in <- Seq(rddPairs, overCkpt); cap <- Seq(3, Closure.LocalMaxEdges)) {
+      assert(Closure.components(in, cap).count() == 7)
+      assert(evals.value == 6L,
+        s"cap $cap: ${evals.value} row evaluations, want 6")
+      evals.reset()
+    }
+    Ckpt.rdds(base).foreach(_.unpersist(false))
+  }
+
+  test("string ids (and a float quality) fail loudly at every " +
+    "integral-id entry") {
+    val lPairs = Seq((1L, 2L)).toDF("id1", "id2")
+    val sDocs = Seq(("a", "x y z", 1L)).toDF("doc_id", "text", "q")
+    val prints = Seq((1L, 7L)).toDF("_id", "simhash")
+    val comp = Seq((1L, 1L)).toDF("id", "component")
+    def fails(who: String, c: String)(op: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](op)
+      assert(e.getMessage.contains(s"$who needs an integral $c"),
+        e.getMessage)
+    }
+    fails("Closure.components", "id1")(
+      Closure.components(Seq(("a", "b")).toDF("id1", "id2")))
+    fails("dedupedCorpusCC", "doc_id")(
+      Dedup.dedupedCorpusCC(sDocs, "doc_id", lPairs))
+    fails("canonicalByQuality", "doc_id")(
+      Dedup.canonicalByQuality(sDocs, "doc_id", "q", lPairs))
+    fails("canonicalByQuality", "q")(
+      Dedup.canonicalByQuality(Seq((1L, 0.5)).toDF("doc_id", "q"),
+        "doc_id", "q", lPairs))
+    fails("hashDeduped", "doc_id")(
+      Dedup.hashDeduped(sDocs, "doc_id", prints))
+    fails("extendHashDeduped", "doc_id")(
+      Dedup.extendHashDeduped(sDocs, "doc_id", prints, comp, prints))
+    fails("packGreedy", "doc_id")(
+      graft.operators.Packing.packGreedy(sDocs, 8L, 2))
   }
 
   test("dedupedCorpusCC keeps exactly one doc per duplicate cluster") {
@@ -774,7 +840,7 @@ class DedupSpec extends SparkSpec {
     "fresh components, untouched components") {
     val oldEdges = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L))
       .toDF("id1", "id2")
-    val asg = Dedup.connectedComponents(oldEdges)
+    val asg = Closure.components(oldEdges)
     // new edges: 5-3 joins component {1,2,3}; 11-20 MERGES {10,11} with
     // {20,21}; 30-31 is a fresh component; {1,2,3} minus the join stays
     // internally untouched
@@ -783,7 +849,7 @@ class DedupSpec extends SparkSpec {
     def cc(df: org.apache.spark.sql.DataFrame) =
       df.select("id", "component").as[(Long, Long)].collect().toSet
     val incr = cc(Dedup.extendComponents(asg, newEdges))
-    val scratch = cc(Dedup.connectedComponents(
+    val scratch = cc(Closure.components(
       oldEdges.unionByName(newEdges)))
     assert(incr == scratch)
     assert(incr.contains((5L, 1L)) && incr.contains((21L, 10L)) &&
@@ -825,12 +891,12 @@ class DedupSpec extends SparkSpec {
     // singleton 50 (untouched), plus a fresh batch component 30-31
     val oldEdges = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L),
       (40L, 41L), (41L, 42L), (50L, 50L)).toDF("id1", "id2")
-    val asg = Dedup.connectedComponents(oldEdges)
+    val asg = Closure.components(oldEdges)
     val newEdges = Seq((3L, 5L), (11L, 20L), (30L, 31L))
       .toDF("id1", "id2")
     def cc(df: org.apache.spark.sql.DataFrame) =
       df.select("id", "component").as[(Long, Long)].collect().toSet
-    val scratch = cc(Dedup.connectedComponents(
+    val scratch = cc(Closure.components(
       oldEdges.unionByName(newEdges)))
     // default: the stats gate keeps a KB-sized assignment on the
     // original full-star path
@@ -942,12 +1008,12 @@ class DedupSpec extends SparkSpec {
     // component-level: extension ≡ from-scratch closure
     def cc(df: org.apache.spark.sql.DataFrame) =
       df.select("id", "component").as[(Long, Long)].collect().toSet
-    val baseAsg = Dedup.connectedComponents(
+    val baseAsg = Closure.components(
       Dedup.fuzzyKeyPairs(base, "key", "doc_id")
         .select(col("rep_a").as("id1"), col("rep_b").as("id2")))
     val ext = cc(Dedup.extendComponents(baseAsg,
       newPairs.select(col("rep_a").as("id1"), col("rep_b").as("id2"))))
-    val scratch = cc(Dedup.connectedComponents(
+    val scratch = cc(Closure.components(
       Dedup.fuzzyKeyPairs(union, "key", "doc_id")
         .select(col("rep_a").as("id1"), col("rep_b").as("id2"))))
     assert(ext == scratch)
@@ -992,14 +1058,14 @@ class DedupSpec extends SparkSpec {
     // (b) incremental == from-scratch under the SAME frozen centroids
     val baseAsg = Clustering.assignVecWithCentroids(base, cents)
       .persist()
-    val baseComp = Dedup.connectedComponents(
+    val baseComp = Closure.components(
       Dedup.assignmentDupPairs(baseAsg, 0.98).select("id1", "id2"))
     val kept = Dedup.extendSemanticDeduped(union, "vec_id",
         baseAsg, baseComp, batch, cents, tau = 0.98)
       .select(col("vec_id").cast("long")).as[Long].collect().toSet
     val unionAsg = Clustering.assignVecWithCentroids(union, cents)
       .persist()
-    val scratchDrop = Dedup.connectedComponents(
+    val scratchDrop = Closure.components(
         Dedup.assignmentDupPairs(unionAsg, 0.98).select("id1", "id2"))
       .join(unionAsg.select(col("vec_id"), col("sim")),
         col("id") === col("vec_id"))

@@ -1,7 +1,7 @@
 package graft
 
 import graft.api.FuzzyKeyStore
-import graft.operators.Dedup
+import graft.operators.{Closure, Dedup}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -53,7 +53,7 @@ class FuzzyKeyStoreSpec extends SparkSpec {
   }
 
   private def scratchComp(u: DataFrame): Set[(Long, Long)] =
-    compSet(Dedup.connectedComponents(
+    compSet(Closure.components(
       Dedup.fuzzyKeyPairs(u, "key", "doc_id")
         .select(col("rep_a").as("id1"), col("rep_b").as("id2"))))
 

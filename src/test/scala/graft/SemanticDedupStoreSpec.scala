@@ -1,7 +1,7 @@
 package graft
 
 import graft.api.SemanticDedupStore
-import graft.operators.{Clustering, Dedup}
+import graft.operators.{Closure, Clustering, Dedup}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -51,7 +51,7 @@ class SemanticDedupStoreSpec extends SparkSpec {
   private def scratchKept(union: DataFrame,
                           cents: Array[Array[Double]]): Set[Long] = {
     val asg = Clustering.assignVecWithCentroids(union, cents)
-    val comp = Dedup.connectedComponents(
+    val comp = Closure.components(
       Dedup.assignmentDupPairs(asg, TAU).select("id1", "id2"))
     val drop = Dedup.semanticDropIds(comp,
         asg.select(col("vec_id"), col("sim")))
@@ -83,7 +83,7 @@ class SemanticDedupStoreSpec extends SparkSpec {
     // replays over base and union pin the expected difference
     def compSet(v: DataFrame): Set[(Long, Long)] = {
       val asg = Clustering.assignVecWithCentroids(v, cents)
-      Dedup.connectedComponents(
+      Closure.components(
           Dedup.assignmentDupPairs(asg, TAU).select("id1", "id2"))
         .select(col("id").cast("long"), col("component").cast("long"))
         .as[(Long, Long)].collect().toSet

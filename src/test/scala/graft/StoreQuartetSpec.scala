@@ -1,7 +1,7 @@
 package graft
 
 import graft.api.{FingerprintStore, FuzzyKeyStore, MinHashDedupStore, SemanticDedupStore, SubstringDedupStore}
-import graft.operators.{Clustering, Dedup, SuffixArray}
+import graft.operators.{Closure, Clustering, Dedup, SuffixArray}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -130,7 +130,7 @@ class StoreQuartetSpec extends SparkSpec {
       val asg = Clustering.assignVecWithCentroids(
         union.select(col("doc_id").as("vec_id"), col("embedding")),
         cents)
-      val comp = Dedup.connectedComponents(
+      val comp = Closure.components(
         Dedup.assignmentDupPairs(asg, 0.95).select("id1", "id2"))
       val drop = Dedup.semanticDropIds(comp,
         asg.select(col("vec_id"), col("sim"))).as[Long].collect().toSet
