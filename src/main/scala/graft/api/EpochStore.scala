@@ -211,15 +211,26 @@ private[graft] abstract class EpochStore(val spark: SparkSession,
     * marked a snapshot. Returns `n`. */
   protected def commitDelta(n: Long, token: Option[String])(
       artifacts: => Seq[DataFrame]): Long = {
+    commitAndFold(n, token)(artifacts)
+    n
+  }
+
+  /** [[commitDelta]], returning the committed head it leaves that holds
+    * exactly epoch `n`'s state: the auto-fold's snapshot when the fold
+    * compacted `n` itself, else `n` (also when another writer's commit
+    * landed between the two, so the fold compacted a later head). */
+  protected def commitAndFold(n: Long, token: Option[String])(
+      artifacts: => Seq[DataFrame]): Long = {
     Ckpt.scope {
       val built = artifacts
       if (n > 0) EpochStoreKit.unmark(fs, new Path(s"$root/_snapshots/$n"))
       else markSnapshot(0)
       commit(n, built, token)
     }
-    if (autoCompactEpochs > 0 && n - latestSnapshotAt(n) >= autoCompactEpochs)
-      compact()
-    n
+    if (autoCompactEpochs > 0 && n - latestSnapshotAt(n) >= autoCompactEpochs) {
+      val folded = compact()
+      if (folded == n + 1) folded else n
+    } else n
   }
 
   /** Build the snapshot epoch `n`, mark it, and commit it in one

@@ -14,8 +14,10 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   *
   * Design differences vs the reference (deliberate, SURVEY §4.2):
   *  - no per-write full-timeline reload: ingest is one windowed batch job;
-  *  - no secondary metadata store: max-seq / base lists are derived
-  *    aggregations (cheap after partition pruning);
+  *  - no secondary metadata store: an append's seq offsets come from the
+  *    pinned latest index when it reflects the committed head (the
+  *    reference's maintained `max_sequence_number`), else from an
+  *    aggregation over the store; base lists are derived aggregations;
   *  - no in-memory FAISS index: the search corpus is a pruned projection of
   *    `kind='base'` rows, cacheable via [[cacheBases]];
   *  - batch APIs are genuinely set-based (the reference's batch_reconstruct
@@ -50,6 +52,8 @@ class TemporalVectorDB(
 
   private var basesCache: Option[DataFrame] = None
   private var latestCache: Option[DataFrame] = None
+  // the committed head `latestCache` reflects: None when unknown
+  private var latestHead: Option[Long] = None
   private var latestCount: Option[Long] = None
   private var pqBooks: Option[Array[Array[Array[Float]]]] = None
   private var pqCents: Option[Array[Array[Float]]] = None // coarse (IVF) layer
@@ -106,39 +110,58 @@ class TemporalVectorDB(
   }
 
   /** Materialized latest-state corpus: every content's RECONSTRUCTED
-    * latest version — (content_id, seq, embedding). Built once from the
-    * store ([[Reconstruction.latest]]: one scan, one groupBy), then
-    * maintained incrementally per [[addVersions]] batch from the rows the
-    * batch wrote, so repeated latest-state searches never re-run the full
-    * reconstruction. */
+    * latest version — (content_id, seq, embedding), one row per content,
+    * so its seq is the content's max stored seq. Built once from the
+    * store at the committed head ([[Reconstruction.latest]]: one scan,
+    * one groupBy), then maintained per [[addVersions]] batch from the
+    * rows the batch wrote, so repeated latest-state searches never re-run
+    * the full reconstruction.
+    *
+    * The facade records the head the index reflects: here, after each
+    * append through this facade whose numbering used the index (the
+    * auto-fold's snapshot included), and after [[compactStore]] and
+    * [[applyBaseOptimization]]; [[loadIndexes]] and [[close]] forget it.
+    * An append numbers its seqs from the index only when the head it
+    * listed is that recorded head — see [[ingestAfter]]. */
   def cacheLatest(): DataFrame = synchronized {
     latestCache.getOrElse {
-      val l = pin(Reconstruction.latest(versions)
+      val (head, rows) = headVersions()
+      val l = pin(Reconstruction.latest(rows)
         .select("content_id", "seq", "embedding"))
       latestCache = Some(l)
+      latestHead = head
       l
     }
   }
 
-  /** Incremental index maintenance after a write, from the rows the write
-    * just made (`written`, versions schema, pinned by the caller) — the
-    * store itself is never re-read:
+  /** The committed head and the store relation at it; no head for a
+    * store without epochs ([[BucketedTemporalVectorDB]]), whose appends
+    * therefore always number their seqs from the store. */
+  protected def headVersions(): (Option[Long], DataFrame) = {
+    val e = store.epoch
+    (Some(e), store.readAt(e))
+  }
+
+  /** Index maintenance after a write, from the rows the write just made
+    * (`written`, versions schema, pinned by the caller) — the bases
+    * index never re-reads the store:
     *  - bases: union in the normalized `kind='base'` rows of `written`
     *    (they are new rows, so nothing is indexed twice);
-    *  - latest: [[Reconstruction.latest]] over the touched contents'
-    *    previous latest rows (as bases at their seq) together with
-    *    `written`, then carry every untouched content's row unchanged.
-    *    Every batch [[VersionStore.ingest]] writes opens each content with
-    *    a base, and a promotion rewrites values it already had, so the
-    *    result equals a rebuild from the store.
+    *  - latest: `latestRows(old index)`, re-pinned — one fold over the
+    *    index and `written` after an append ([[appendedLatest]]), a
+    *    rebuild from the store after a promotion.
     * The merged frames are re-pinned lineage-free, so no plan here can be
     * invalidated or re-executed by this (or any later) append.
     *
     * Rows that other writers append to the store are not seen here: the
     * indexes reflect this facade's own writes, the same staleness
     * contract as [[loadIndexes]] — rebuild (`close()`, then `cacheLatest`
-    * / `cacheBases`) when external writers may have moved the store. */
-  private def refreshCaches(written: DataFrame): Unit = synchronized {
+    * / `cacheBases`) when external writers may have moved the store.
+    * A stale index can make searches stale; it never numbers seqs (see
+    * [[ingestAfter]]). */
+  private def refreshCaches(written: DataFrame,
+                            latestRows: DataFrame => DataFrame): Unit =
+      synchronized {
     val touched = written.select("content_id")
     basesCache = basesCache.map { old =>
       val merged = pin(old.unionByName(normalizedBases(written)))
@@ -149,16 +172,8 @@ class TemporalVectorDB(
       merged
     }
     latestCache = latestCache.map { old =>
-      val previous = old.join(touched, Seq("content_id"), "left_semi")
-        .select(col("content_id"), col("seq"), lit("base").as("kind"),
-          col("embedding"), lit(null).cast("array<int>").as("delta_idx"),
-          lit(null).cast("array<float>").as("delta_val"),
-          lit(null).cast("double").as("change_magnitude"))
-      val rebuilt = Reconstruction.latest(previous.unionByName(
-          written.select(previous.columns.map(col): _*)))
-        .select("content_id", "seq", "embedding")
-      val carried = old.join(touched, Seq("content_id"), "left_anti")
-      val merged = pin(carried.unionByName(rebuilt))
+      val merged = pin(latestRows(old)
+        .select("content_id", "seq", "embedding"))
       Bridge.unpersistCheckpoint(old)
       latestCount = None // corpus size changed; re-derive lazily
       merged
@@ -210,6 +225,23 @@ class TemporalVectorDB(
     if (pqCodes.nonEmpty && pqStaleness() >= threshold) {
       retrainPqIndex(); true
     } else false
+  }
+
+  /** The latest index after an append wrote `written`: ONE
+    * [[Reconstruction.latest]] over the old index rows, each a base at
+    * its seq, and the written rows. An untouched content folds its one
+    * base, which the fold copies bit for bit; a touched content folds
+    * from the batch's rows, since every batch [[VersionStore.ingest]]
+    * writes opens each content with a base above its stored seqs. */
+  private def appendedLatest(written: DataFrame)(old: DataFrame)
+      : DataFrame = {
+    val asBases = old.select(col("content_id"), col("seq"),
+      lit("base").as("kind"), col("embedding"),
+      lit(null).cast("array<int>").as("delta_idx"),
+      lit(null).cast("array<float>").as("delta_val"),
+      lit(null).cast("double").as("change_magnitude"))
+    Reconstruction.latest(asBases.unionByName(
+      written.select(asBases.columns.map(col): _*)))
   }
 
   private def normalizedLatest(latest: DataFrame): DataFrame =
@@ -503,6 +535,7 @@ class TemporalVectorDB(
         .foreach(Bridge.unpersistCheckpoint)
       basesCache = Some(newBases)
       latestCache = Some(newLatest)
+      latestHead = None // persisted at some head, which one is unknown
       latestCount = None
       pqBooks = Some(books)
       pqCents = Some(cents)
@@ -536,6 +569,7 @@ class TemporalVectorDB(
       .foreach(Bridge.unpersistCheckpoint)
     basesCache = None
     latestCache = None
+    latestHead = None
     latestCount = None
     pqBooks = None
     pqCents = None
@@ -549,7 +583,9 @@ class TemporalVectorDB(
     * sequence numbers after the committed versions and commits them as
     * one delta epoch (reference add_content_version,
     * temporal_database.py:86-178 — but one job for the whole batch
-    * instead of per-row timeline reloads). The ingested rows are pinned
+    * instead of per-row timeline reloads). The seqs continue from the
+    * pinned latest index when it reflects the committed head, else from
+    * the store ([[ingestAfter]]). The ingested rows are pinned
     * once: the epoch is written from them and the live indexes are
     * maintained from them (see [[refreshCaches]]), never rebuilt from a
     * store scan; the pin is freed before returning. A crash before the
@@ -566,19 +602,36 @@ class TemporalVectorDB(
     store.appendOnce(Some(token))(commitVersions(df, Some(token)))
   }
 
+  /** The append on the committed `head` the epoch protocol listed.
+    * Its seqs continue from the pinned latest index only when the index
+    * reflects exactly that head; afterwards the index reflects the head
+    * the commit (and its auto-fold) left. Otherwise — another writer's
+    * commit, an append torn after its marker but before its refresh, an
+    * index loaded from disk — they continue from the store's max seqs,
+    * and the index no longer tracks a head until [[cacheLatest]]
+    * rebuilds it. Returns the committed delta epoch. */
   private def commitVersions(df: DataFrame, token: Option[String])
-                            (head: Long): Long =
-    ingestAfter(df, if (head < 0) None else Some(store.at(head)))(
-      store.commitAppend(head, _, token))
+                            (head: Long): Long = {
+    val indexed = latestCache.filter(_ => latestHead.contains(head))
+    val maxSeqs =
+      if (head < 0) None
+      else Some(indexed.getOrElse(VersionStore.maxSeqs(store.at(head))))
+    val after = ingestAfter(df, maxSeqs)(store.commitAppend(head, _, token))
+    latestHead = indexed.map(_ => after)
+    head + 1
+  }
 
-  /** Ingest `df` after the seqs of `stored`, hand the pinned rows to
-    * `write`, then maintain the live indexes from them. */
-  protected def ingestAfter[T](df: DataFrame, stored: Option[DataFrame])
+  /** Ingest `df` after the per-content max seqs `maxSeqs` ((content_id,
+    * seq), one row per content — the pinned latest index or
+    * [[VersionStore.maxSeqs]] of the store; None for an empty store),
+    * hand the pinned rows to `write`, then maintain the live indexes from
+    * them. The caller passes the index only when it reflects the head
+    * `write` commits on, so seq numbering never trusts a stale index. */
+  protected def ingestAfter[T](df: DataFrame, maxSeqs: Option[DataFrame])
                               (write: DataFrame => T): T = Ckpt.scope {
-    val ingested = Ckpt.eager(VersionStore.ingest(df,
-      stored.map(_.select("content_id", "seq")), cfg))
+    val ingested = Ckpt.eager(VersionStore.ingestAfter(df, maxSeqs, cfg))
     val out = write(ingested)
-    refreshCaches(ingested)
+    refreshCaches(ingested, appendedLatest(ingested))
     out
   }
 
@@ -739,9 +792,11 @@ class TemporalVectorDB(
     * as base snapshots, and commit the store as a snapshot epoch — after
     * which no version costs more than maxCost and
     * [[optimizeContentBases]] reports nothing. A compaction-style
-    * rewrite of the whole store; values of every version are unchanged,
-    * and the maintained indexes refresh incrementally for the touched
-    * contents. Returns the number of promoted versions. */
+    * rewrite of the whole store; values of every version are unchanged.
+    * The bases index adds the promoted rows; the latest index is rebuilt
+    * from the rewritten store, since a promoted base inside a chain
+    * changes where the latest version's fold starts, and so its float
+    * rounding. Returns the number of promoted versions. */
   def applyBaseOptimization(maxCost: Int = 10): Long = synchronized {
     Ckpt.scope {
       // pinned: the rewrite prunes the epochs it was resolved from
@@ -750,9 +805,12 @@ class TemporalVectorDB(
       val n = targets.count()
       if (n > 0) {
         rewriteStore(VersionStore.promoteBases(_, maxCost))
+        val (head, rows) = headVersions()
         // the promoted rows are the only rows the rewrite changed
-        refreshCaches(Ckpt.eager(versions.join(targets,
-          Seq("content_id", "seq"), "left_semi")))
+        refreshCaches(Ckpt.eager(rows.join(targets,
+          Seq("content_id", "seq"), "left_semi")),
+          _ => Reconstruction.latest(rows))
+        latestHead = head
       }
       n
     }
@@ -761,9 +819,10 @@ class TemporalVectorDB(
   /** Commit `state` of the committed versions as the new whole store
     * (overridden by [[BucketedTemporalVectorDB]]): a snapshot epoch
     * through the core's compaction, which prunes the epochs below it
-    * once its marker landed — so an append never races a rewrite. */
-  protected def rewriteStore(state: DataFrame => DataFrame): Unit =
-    store.rewrite(state)
+    * once its marker landed — so an append never races a rewrite.
+    * Returns that snapshot epoch; None for a store without epochs. */
+  protected def rewriteStore(state: DataFrame => DataFrame): Option[Long] =
+    Some(store.rewrite(state))
 
   /** Number of visible data files under the store root, recursively
     * (path components starting with `_`/`.` — protocol markers, Spark
@@ -818,10 +877,14 @@ class TemporalVectorDB(
     val before = dataFileCount
     // for the z-order path, dropping zval is a projection — in-partition
     // order survives into the written files
-    rewriteStore(v =>
+    val snapshot = rewriteStore(v =>
       if (zorderBy.isEmpty) v.repartition(parts, col("content_id"))
       else Layout.zOrderLayout(v, zorderBy, files = parts,
         bits = zorderBits).drop("zval"))
+    // the snapshot holds the rows of the head below it: an index that
+    // reflected that head reflects the snapshot
+    if (latestHead.isDefined && latestHead == snapshot.map(_ - 1))
+      latestHead = snapshot
     (before, dataFileCount)
   }
 
@@ -866,6 +929,9 @@ class BucketedTemporalVectorDB(
 
   override def versions: DataFrame = spark.table(table)
 
+  override protected def headVersions(): (Option[Long], DataFrame) =
+    (None, versions)
+
   // `path` is a table name here, not a filesystem location — persist the
   // maintained indexes under the warehouse beside the table's data
   override protected def indexDir: String =
@@ -881,7 +947,9 @@ class BucketedTemporalVectorDB(
 
   override def addVersions(df: DataFrame): Unit = synchronized {
     ingestAfter(df,
-        if (spark.catalog.tableExists(table)) Some(versions) else None)(
+        if (spark.catalog.tableExists(table))
+          Some(VersionStore.maxSeqs(versions))
+        else None)(
       bucketed(_, "append"))
   }
 
@@ -893,8 +961,10 @@ class BucketedTemporalVectorDB(
 
   // the table cannot be overwritten while the overwrite reads it:
   // materialize the new state first
-  override protected def rewriteStore(state: DataFrame => DataFrame): Unit = {
+  override protected def rewriteStore(state: DataFrame => DataFrame)
+      : Option[Long] = {
     Ckpt.scope(bucketed(Ckpt.eager(state(versions)), "overwrite"))
+    None
   }
 
   // table-backed: count the managed table's files under the warehouse
@@ -948,30 +1018,48 @@ private[api] final class VersionsTable(spark: SparkSession, root: String)
 
   override protected def keepsCommitHistory = false
 
-  /** The table at the committed head `e`. */
-  def at(e: Long): DataFrame =
-    unionAt("versions", e, cols, head = e, Some(Schemas.versions))
+  // the relation at the last head read; committed epochs never change
+  @volatile private var resolved: Option[(Long, DataFrame)] = None
 
-  def read: DataFrame = {
-    val e = epoch
+  /** The table at the committed head `e`, resolved (its `_snapshots`
+    * listing, its epoch directories' file index) once per head: a
+    * commit or rewrite through this instance drops it, and any other
+    * writer's commit moves the head, so a read never reuses a relation
+    * over pruned epochs. */
+  def at(e: Long): DataFrame = resolved match {
+    case Some((`e`, df)) => df
+    case _ =>
+      val df = unionAt("versions", e, cols, head = e, Some(Schemas.versions))
+      resolved = Some((e, df))
+      df
+  }
+
+  /** The table at the committed head `e`; empty before the first commit. */
+  def readAt(e: Long): DataFrame =
     if (e < 0)
       spark.createDataFrame(java.util.List.of[Row](), Schemas.versions)
     else at(e)
-  }
+
+  def read: DataFrame = readAt(epoch)
 
   /** Run `append` on the committed head, exactly once per `token` when
     * there is one. */
   def appendOnce(token: Option[String])(append: Long => Long): Long =
     token.fold(append(epoch))(replayOr(_)(append))
 
-  /** Commit `rows` as the delta epoch after `head`. */
+  /** Commit `rows` as the delta epoch after `head`. Returns the
+    * committed head that holds exactly the table at that epoch: the
+    * auto-fold's snapshot of it when the append folded the chain. */
   def commitAppend(head: Long, rows: DataFrame,
                    token: Option[String]): Long =
-    commitDelta(head + 1, token)(Seq(rows))
+    try commitAndFold(head + 1, token)(Seq(rows))
+    finally resolved = None
 
-  /** Commit `state` of the table at the head as a snapshot epoch. */
+  /** Commit `state` of the table at the head as a snapshot epoch;
+    * returns that epoch. */
   def rewrite(state: DataFrame => DataFrame): Long =
-    compactWith(requireCommitted())(e => Seq(state(at(e))))
+    try compactWith(requireCommitted())(e => Seq(state(at(e))))
+    finally resolved = None
 
   // an append's own fold: the default compactStore layout, written
   // straight from the epochs it reads (the snapshot lands beside them)

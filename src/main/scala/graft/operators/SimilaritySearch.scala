@@ -39,21 +39,17 @@ object SimilaritySearch {
     * `sim > 0` filter, so (rank, id, sim) are bit-identical, but ranked
     * by one bounded top-k (`orderBy(desc(sim), id).limit(k)`, planned as
     * a TakeOrderedAndProject) instead of two salted window exchanges.
-    * The query is normalized on the driver (a local relation, no job)
-    * and joins the corpus as a literal, so no broadcast runs either:
-    * collecting the result runs one Spark job. The rank window runs over
-    * the ≤ k rows the limit keeps, on its single partition (a local sort,
-    * no exchange). Output: the corpus columns but `vec`, plus rank and
-    * sim. */
+    * The query is normalized in plain driver code ([[unitQuery]], nothing
+    * planned) and joins the corpus as a literal, so no broadcast runs
+    * either: collecting the result runs one Spark job. The rank window
+    * runs over the ≤ k rows the limit keeps, on its single partition (a
+    * local sort, no exchange). Output: the corpus columns but `vec`, plus
+    * rank and sim. */
   def topKOne(query: Array[Float], corpus: DataFrame, k: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val qn = normalizedQueries(Seq((1L, query)).toDF("query_id", "qvec"))
-      .select("qvec").as[Array[Float]].collect()
+    val qn = unitQuery(query)
     normalizedCorpus(corpus)
       .where(lit(qn.nonEmpty)) // a zero query ranks nothing, as in topK
-      .withColumn("sim",
-        dotNative(typedLit(qn.headOption.getOrElse(query)), col("vec")))
+      .withColumn("sim", dotNative(typedLit(qn.getOrElse(query)), col("vec")))
       .orderBy(desc("sim"), col("id")).limit(k)
       // the positive rows lead the order, so their rank within the
       // `sim > 0` partition is their overall rank; the partition key
@@ -62,6 +58,21 @@ object SimilaritySearch {
         .partitionBy(col("sim") > 0).orderBy(desc("sim"), col("id"))))
       .where(col("sim") > 0)
       .drop("vec")
+  }
+
+  /** [[normalizedQueries]] of one query vector, on the driver with the
+    * kernels' own arithmetic — the norm is [[graft.functions.DotProduct]]'s
+    * left-to-right double sum under `sqrt`, each element
+    * [[graft.functions.L2NormalizeExpr]]'s `(float)((double) v / norm)` —
+    * so the result is bit-identical; None when the column path drops the
+    * query (`_qnorm > 0` is false; Spark orders NaN above every number). */
+  private def unitQuery(query: Array[Float]): Option[Array[Float]] = {
+    var ss = 0.0
+    query.foreach(x => ss += x.toDouble * x.toDouble)
+    val norm = math.sqrt(ss)
+    if (norm > 0 || norm.isNaN)
+      Some(query.map(x => (x.toDouble / norm).toFloat))
+    else None
   }
 
   /** Unit-normalize both sides (zero-norm rows dropped) and score every

@@ -96,14 +96,27 @@ object VersionStore {
     * auto-increment, storage/temporal_database.py:114), with `existing` max
     * seqs as offsets for incremental appends. */
   def ingest(df: DataFrame, existing: Option[DataFrame] = None,
-             cfg: Config = Config()): DataFrame = {
+             cfg: Config = Config()): DataFrame =
+    ingestAfter(df, existing.map(maxSeqs), cfg)
+
+  /** Each content's max seq in `versions`: (content_id, seq), one row
+    * per content. */
+  def maxSeqs(versions: DataFrame): DataFrame =
+    versions.groupBy("content_id").agg(max("seq").as("seq"))
+
+  /** [[ingest]] after the per-content max seqs `maxSeqs` ((content_id,
+    * seq), at most one row per content) — [[maxSeqs]] of the stored
+    * versions, or any frame already holding them, such as a maintained
+    * latest index. */
+  def ingestAfter(df: DataFrame, maxSeqs: Option[DataFrame],
+                  cfg: Config = Config()): DataFrame = {
     val w = Window.partitionBy("content_id").orderBy("ts")
     val numbered = df.withColumn("seq", row_number().over(w))
-    val offset = existing match {
+    val offset = maxSeqs match {
       case None => numbered
-      case Some(ex) =>
-        val maxes = ex.groupBy("content_id").agg(max("seq").as("_max_seq"))
-        numbered.join(broadcast(maxes), Seq("content_id"), "left")
+      case Some(m) =>
+        numbered.join(broadcast(m.select(col("content_id"),
+            col("seq").as("_max_seq"))), Seq("content_id"), "left")
           .withColumn("seq", col("seq") + coalesce(col("_max_seq"), lit(0)))
           .drop("_max_seq")
     }

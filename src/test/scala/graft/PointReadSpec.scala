@@ -4,7 +4,6 @@ import graft.api.{BucketedTemporalVectorDB, TemporalVectorDB}
 import graft.operators.{Reconstruction, SimilaritySearch, VersionStore}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 import java.sql.Timestamp
 import java.nio.file.Files
 
@@ -56,24 +55,6 @@ class PointReadSpec extends SparkSpec {
     val out = v.clone()
     (0 until 3).foreach(_ => out(r.nextInt(dim)) += r.nextFloat() - 0.5f)
     out
-  }
-
-  /** Jobs started while `op` ran (the listener bus drained around it). */
-  private def jobsOf[A](op: => A): (A, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    Bridge.waitListenerBus(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = op
-      Bridge.waitListenerBus(spark.sparkContext)
-      (out, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   /** Reconstruction rows with every value as exact bits. */
