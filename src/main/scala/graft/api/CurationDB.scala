@@ -2,8 +2,9 @@ package graft.api
 
 import graft.operators.{Dedup, Pipeline}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import EpochStore.At
 
 /** ONE-CALL deployment surface for the proven five-store curation
   * composition (the StoreQuartetSpec-turned-quintet gate, productized):
@@ -21,13 +22,17 @@ import org.apache.spark.sql.functions._
   * protocol and the composed read.
   *
   * APPEND PROTOCOL (crash-convergent, exactly-once): a five-store
-  * append cannot be atomic, so [[append]] rides the
-  * [[EpochStoreKit]] token protocol END TO END — every store receives
-  * the SAME token (derived from the facade's next epoch, or supplied by
-  * a streaming caller), so a crash after any subset of stores committed
-  * is repaired by replaying the call verbatim: committed stores no-op
-  * on their recorded token, stragglers commit, and only then does the
-  * facade write its own commit marker, which records the token. The
+  * append cannot be atomic, so [[append]] rides the [[EpochStore]]
+  * token protocol END TO END — every store receives the SAME token
+  * (derived from the facade's next epoch, or supplied by a streaming
+  * caller), so a crash after any subset of stores committed is repaired
+  * by replaying the call verbatim: committed stores no-op on their
+  * recorded token, stragglers commit, and only then does the facade
+  * commit its own epoch. The facade epochs are an [[EpochStore]] family
+  * of their own with no artifact kinds: the append runs through the
+  * core's one entry ([[EpochStore.appendOnce]]), which lists the facade
+  * head once and replays a committed token, and the core's commit
+  * writes the marker recording the member epochs and the token. The
   * facade epoch therefore counts COMPLETED quintet appends; individual
   * stores may run ahead transiently (mid-recovery) or independently via
   * their own `compact()`/`retrain()` (which bump only their internal
@@ -45,10 +50,15 @@ import org.apache.spark.sql.functions._
   * epochs it bound together, so [[keptAt]] serves the composed filter
   * as of any committed facade epoch by replaying each member's
   * `keptAt` at its recorded epoch. Member maintenance prunes below its
-  * latest snapshot — facade epochs whose recorded member epochs were
-  * absorbed by a later member `compact()`/`retrain()` fail loudly with
-  * that member's message (the same contract the members themselves
-  * apply).
+  * latest snapshot — a recorded member epoch that a member `compact()`
+  * folded still reads (the [[EpochStore]] fold rule, so `keptAt(epoch)`
+  * ≡ [[kept]] after [[compactAll]]), while older ones, and any below a
+  * `retrain()`, fail loudly with that member's message (the same
+  * contract the members themselves apply).
+  *
+  * Every read resolves each member at one read position, listed once
+  * per member root: at its head for the current reads, at the recorded
+  * member epoch for the as-of reads.
   *
   * The reference's public surface is the single-store facade
   * (reference temporal_database.py); this is its curation-pipeline
@@ -60,61 +70,67 @@ class CurationDB private (val spark: SparkSession, val root: String,
                           val minhash: MinHashDedupStore,
                           val semantic: SemanticDedupStore) {
 
-  private def fs = EpochStoreKit.fsOf(spark, root)
-  private def marker(n: Long) = new Path(s"$root/_commits/$n")
+  private val facade = new CurationDB.FacadeEpochs(spark, root)
   private var pinned: List[DataFrame] = Nil
 
   /** Completed quintet appends (0 after [[CurationDB.init]]). */
-  def epoch: Long = EpochStoreKit.maxMarked(fs, new Path(s"$root/_commits"))
+  def epoch: Long = facade.epoch
 
   /** Append one batch — (doc_id, text, key, embedding) — to all five
     * stores, exactly once per facade epoch. Idempotent under retry
-    * after ANY crash window (see the class protocol note). Returns the
-    * new facade epoch. */
-  def append(batch: DataFrame): Long = {
-    val n = epoch + 1
-    append(batch, s"cdb-$n")
-  }
+    * after ANY crash window (see the class protocol note): the token is
+    * `cdb-<next facade epoch>`, which no committed facade epoch can
+    * carry. Returns the new facade epoch. */
+  def append(batch: DataFrame): Long =
+    facade.appendOnce(None)(head => appendAt(head, batch, s"cdb-${head + 1}"))
 
   /** [[append]] with a caller-supplied idempotence token (the
     * Structured Streaming `foreachBatch` bridge — pass
     * `"stream-<batchId>"`). A replayed token is a NO-OP returning the
     * originally committed facade epoch. */
   def append(batch: DataFrame, token: String): Long =
-    EpochStoreKit.replayCheck(fs, root, token, epoch).getOrElse {
-      val n = epoch + 1
-      EpochStoreKit.completeToken(fs, root, n - 1)
-      val b = batch.select(col("doc_id").cast("long").as("doc_id"),
-        col("text").cast("string").as("text"),
-        col("key").cast("string").as("key"), col("embedding"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // materialize the shared batch ONCE before the members run —
-      // the five appends then all read the cached blocks
-      b.count()
-      // the five member appends are INDEPENDENT Spark job chains over
-      // disjoint store roots; overlapping them fills the executor slots
-      // each member's small sequential jobs leave idle (guide §2.6) —
-      // crash-convergence is untouched (a failure in any member leaves
-      // exactly a crash window the verbatim replay repairs)
-      val es = CurationDB.runMembers(spark, root, Seq(
-        () => substring.append(b.select("doc_id", "text"), token),
-        () => fingerprint.append(CurationDB.textHashes(b), token),
-        () => fuzzy.append(b.select("doc_id", "key"), token),
-        () => minhash.append(b.select("doc_id", "text"), "doc_id",
-          "text", token),
-        () => semantic.append(b.select(col("doc_id").as("vec_id"),
-          col("embedding")), token)))
-      val (subE, fpE, fzE, mhE, smE) =
-        (es(0), es(1), es(2), es(3), es(4))
-      b.unpersist(false)
-      // the facade marker RECORDS the member epochs this commit bound
-      // together — the time-travel map keptAt replays — and the token
-      // (the EpochStore token order: its file follows at the next append)
-      EpochStoreKit.commitMarker(fs, marker(n),
-        CurationDB.memberRecord(subE, fpE, fzE, mhE, smE) + "," +
-          EpochStoreKit.tokenField(token))
-      n
-    }
+    facade.appendOnce(Some(token))(appendAt(_, batch, token))
+
+  private def appendAt(head: Long, batch: DataFrame, token: String): Long = {
+    val b = batch.select(col("doc_id").cast("long").as("doc_id"),
+      col("text").cast("string").as("text"),
+      col("key").cast("string").as("key"), col("embedding"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // materialize the shared batch ONCE before the members run —
+    // the five appends then all read the cached blocks
+    b.count()
+    // the five member appends are INDEPENDENT Spark job chains over
+    // disjoint store roots; overlapping them fills the executor slots
+    // each member's small sequential jobs leave idle (guide §2.6) —
+    // crash-convergence is untouched (a failure in any member leaves
+    // exactly a crash window the verbatim replay repairs)
+    val es = CurationDB.runMembers(spark, root, Seq(
+      () => substring.append(b.select("doc_id", "text"), token),
+      () => fingerprint.append(CurationDB.textHashes(b), token),
+      () => fuzzy.append(b.select("doc_id", "key"), token),
+      () => minhash.append(b.select("doc_id", "text"), "doc_id",
+        "text", token),
+      () => semantic.append(b.select(col("doc_id").as("vec_id"),
+        col("embedding")), token)))
+    b.unpersist(false)
+    // the facade marker RECORDS the member epochs this commit bound
+    // together — the time-travel map keptAt replays — and the token
+    facade.commitRecord(head + 1, CurationDB.memberRecord(es), Some(token))
+    head + 1
+  }
+
+  /** The five members' read positions: each at its head, listed once. */
+  private def heads: CurationDB.MemberAt = CurationDB.MemberAt(
+    substring.current, fingerprint.current, fuzzy.current,
+    minhash.current, semantic.current)
+
+  /** The five members' read positions at the member epochs facade epoch
+    * `n` recorded. */
+  private def recorded(n: Long): CurationDB.MemberAt = {
+    val (subE, fpE, fzE, mhE, smE) = memberEpochsAt(n)
+    CurationDB.MemberAt(substring.asOf(subE), fingerprint.asOf(fpE),
+      fuzzy.asOf(fzE), minhash.asOf(mhE), semantic.asOf(smE))
+  }
 
   /** The stored corpus (doc_id, text) — the substring store's data
     * epochs, which the facade treats as the corpus of record. */
@@ -125,55 +141,48 @@ class CurationDB private (val spark: SparkSession, val root: String,
     * membership family (substring, fuzzy-rep) + the three stores' own
     * kept anti-joins — no shingling, banding, or clustering at read
     * time; everything rides the maintained artifacts. */
-  def kept(corpus: DataFrame, idCol: String = "doc_id"): DataFrame = {
+  def kept(corpus: DataFrame, idCol: String = "doc_id"): DataFrame =
+    keptWith(heads, corpus, idCol)
+
+  private def keptWith(at: CurationDB.MemberAt, corpus: DataFrame,
+                       idCol: String): DataFrame = {
     val afterSub = corpus.join(
-      substring.deduped.select(col("doc_id").cast("long").as("_sub_id")),
+      substring.dedupedAt(at.sub)
+        .select(col("doc_id").cast("long").as("_sub_id")),
       corpus(idCol).cast("long") === col("_sub_id"), "left_semi")
     // fuzzy keeps KEYS; the doc-level policy (the quintet-gate lift): a
     // doc survives iff it carries a surviving key as that key's rep
     val afterFz = afterSub.join(
-      fuzzy.keptKeys.select(col("rep").cast("long").as("_fz_id"))
+      fuzzy.keptKeysAt(at.fz).select(col("rep").cast("long").as("_fz_id"))
         .distinct(),
       afterSub(idCol).cast("long") === col("_fz_id"), "left_semi")
-    semantic.kept(
-      minhash.kept(fingerprint.kept(afterFz, idCol), idCol), idCol)
+    semantic.keptAt(at.sm, minhash.keptAt(at.mh,
+      fingerprint.keptAt(at.fp, afterFz, idCol), idCol), idCol)
   }
 
+  /** The curated corpus at `at`: the stored corpus at the substring
+    * member's position, filtered through every member at its own. */
+  private def keptCorpusAt(at: CurationDB.MemberAt): DataFrame =
+    keptWith(at, substring.corpusAt(at.sub), "doc_id")
+
   /** The curated corpus at the current epoch. */
-  def keptCorpus: DataFrame = kept(corpus, "doc_id")
+  def keptCorpus: DataFrame = keptCorpusAt(heads)
 
   /** [[kept]] as of a PAST committed facade epoch: each member filter
     * replays at the member epoch the facade's commit marker recorded
-    * (audit/time-travel). Fails loudly when a member's recorded epoch
-    * was absorbed by a later member compact()/retrain() — the members'
-    * own time-travel contract. */
+    * (audit/time-travel), under the members' time-travel contract: a
+    * recorded epoch that a member compaction folded (the member's next
+    * epoch is the snapshot of it) reads from that snapshot; one further
+    * below a member snapshot, or below a semantic retrain, fails
+    * loudly. */
   def keptAt(n: Long, corpus: DataFrame,
-             idCol: String = "doc_id"): DataFrame = {
-    val (subE, fpE, fzE, mhE, smE) = memberEpochsAt(n)
-    val afterSub = corpus.join(
-      substring.dedupedAt(subE)
-        .select(col("doc_id").cast("long").as("_sub_id")),
-      corpus(idCol).cast("long") === col("_sub_id"), "left_semi")
-    val afterFz = afterSub.join(
-      fuzzy.keptKeysAt(fzE).select(col("rep").cast("long").as("_fz_id"))
-        .distinct(),
-      afterSub(idCol).cast("long") === col("_fz_id"), "left_semi")
-    semantic.keptAt(smE,
-      minhash.keptAt(mhE, fingerprint.keptAt(fpE, afterFz, idCol),
-        idCol), idCol)
-  }
+             idCol: String = "doc_id"): DataFrame =
+    keptWith(recorded(n), corpus, idCol)
 
   /** The member epochs facade epoch `n` bound together, parsed from
     * its commit marker record. */
   def memberEpochsAt(n: Long): (Long, Long, Long, Long, Long) = {
-    require(n >= 0 && n <= epoch && fs.exists(marker(n)),
-      s"facade epoch $n not committed at $root")
-    val rec = EpochStoreKit.readText(fs, marker(n)).getOrElse(
-      throw new IllegalArgumentException(
-        s"facade epoch $n at $root carries no member-epoch record — " +
-          "markers written before the time-travel format only serve " +
-          "latest reads"))
-    val m = rec.split(",").map(_.split("=")).collect {
+    val m = facade.recordAt(n).split(",").map(_.split("=")).collect {
       case Array(k, v) if k != "token" => k -> v.toLong
     }.toMap
     (m("sub"), m("fp"), m("fz"), m("mh"), m("sm"))
@@ -203,14 +212,11 @@ class CurationDB private (val spark: SparkSession, val root: String,
     * through every member at its recorded epoch — so a consumer can
     * re-verify any historical delivery's checksums, not just the
     * latest. manifestAt(epoch) ≡ [[manifest]] (spec-gated). Subject to
-    * the members' time-travel contract (fails loudly below a member
-    * snapshot). */
-  def manifestAt(n: Long): DataFrame = {
-    val (subE, _, _, _, _) = memberEpochsAt(n)
+    * the members' time-travel contract, as [[keptAt]]: a folded recorded
+    * epoch reads, older ones and any below a retrain fail loudly. */
+  def manifestAt(n: Long): DataFrame =
     Pipeline.datasetManifest(
-      keptAt(n, substring.corpusAt(subE)).withColumn("epoch", lit(n)),
-      "epoch")
-  }
+      keptCorpusAt(recorded(n)).withColumn("epoch", lit(n)), "epoch")
 
   /** Run every member store's compaction (trainer-free across the
     * board) — bounds each family's read-side resolution window. Member
@@ -234,18 +240,42 @@ class CurationDB private (val spark: SparkSession, val root: String,
 
 object CurationDB {
 
-  /** Store-family knobs; defaults match the declared-query pins.
-    * `autoCompactEpochs` follows the five members' measured default
-    * (SCALE.md: resolution cost flat through ~16 delta epochs); 0
-    * reverts every member to manual compaction. */
+  /** Store-family knobs; defaults match the declared-query pins. Every
+    * member folds its deltas at the family default cadence
+    * ([[EpochStore.DefaultAutoCompactEpochs]]). */
   case class Config(window: Int = 8, maxHamming: Int = 3,
                     maxKeyLen: Int = 64, maxEdit: Int = 1,
                     minhashTau: Double = 0.5, shingleN: Int = 3,
                     numHashes: Int = 16, bands: Int = 4,
                     semanticTau: Double = 0.95, nCells: Int = 16,
-                    kmeansIters: Int = 3, maxStaleFrac: Double = 0.5,
-                    autoCompactEpochs: Int =
-                      EpochStore.DefaultAutoCompactEpochs)
+                    kmeansIters: Int = 3, maxStaleFrac: Double = 0.5)
+
+  /** The facade epochs under `root/_commits`: an [[EpochStore]] family
+    * with no artifact kinds, whose commit markers record the member
+    * epochs each facade epoch bound together. */
+  private final class FacadeEpochs(spark: SparkSession, root: String)
+      extends EpochStore(spark, root, 0) {
+    protected val dataKinds = Nil
+    protected val snapshotKinds = Nil
+
+    def commitRecord(n: Long, record: Seq[String],
+                     token: Option[String]): Unit =
+      commit(n, Nil, token, record)
+
+    /** The record of committed facade epoch `n`. */
+    def recordAt(n: Long): String = {
+      requireEpoch(n)
+      EpochStoreKit.readText(fs, new Path(s"$root/_commits/$n")).getOrElse(
+        throw new IllegalArgumentException(
+          s"facade epoch $n at $root carries no member-epoch record — " +
+            "markers written before the time-travel format only serve " +
+            "latest reads"))
+    }
+  }
+
+  /** One read position per member store. */
+  private final case class MemberAt(sub: At, fp: At, fz: At, mh: At,
+                                    sm: At)
 
   /** Doc-level text SimHash frame — the fingerprint family's input (one
     * compiled-kernel projection). */
@@ -253,10 +283,10 @@ object CurationDB {
     docs.select(col("doc_id").as("_id"),
       Dedup.simhashNative(col("text")).as("simhash"))
 
-  /** The marker record format binding member epochs to a facade epoch. */
-  private[api] def memberRecord(subE: Long, fpE: Long, fzE: Long,
-                                mhE: Long, smE: Long): String =
-    s"sub=$subE,fp=$fpE,fz=$fzE,mh=$mhE,sm=$smE"
+  /** The marker record fields binding member epochs (in member order)
+    * to a facade epoch. */
+  private def memberRecord(es: Seq[Long]): Seq[String] =
+    Seq("sub", "fp", "fz", "mh", "sm").zip(es).map { case (k, e) => s"$k=$e" }
 
   /** Run the five member operations, OVERLAPPED on a small thread pool
     * (each member is a chain of small sequential Spark jobs over its own
@@ -267,14 +297,11 @@ object CurationDB {
     * type, so a failed parallel append leaves exactly the
     * some-members-committed crash window the verbatim replay repairs.
     * Falls back to the serial member order when a fault-sweep hook is
-    * driving this root (the sweeps enumerate write boundaries by order)
-    * or when `spark.graft.curation.parallelMembers=false`. */
-  private[api] def runMembers[T](spark: SparkSession, root: String,
-                                 tasks: Seq[() => T]): Seq[T] = {
-    val parallel = spark.conf
-      .getOption("spark.graft.curation.parallelMembers")
-      .forall(_ != "false") && !EpochStoreKit.hasHookFor(root)
-    if (!parallel) tasks.map(_())
+    * driving this root (the sweeps enumerate write boundaries by
+    * order). */
+  private def runMembers[T](spark: SparkSession, root: String,
+                             tasks: Seq[() => T]): Seq[T] =
+    if (EpochStoreKit.hasHookFor(root)) tasks.map(_())
     else {
       val pool =
         java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
@@ -294,7 +321,6 @@ object CurationDB {
         futs.map(_.get()).map(_.get)
       } finally pool.shutdown()
     }
-  }
 
   /** Initialize all five stores at `root` from a base corpus
     * (doc_id, text, key, embedding); facade epoch 0 = the base.
@@ -309,8 +335,7 @@ object CurationDB {
   def init(spark: SparkSession, root: String, base: DataFrame,
            cfg: Config = Config()): CurationDB = {
     val fs = EpochStoreKit.fsOf(spark, root)
-    require(
-      EpochStoreKit.maxMarked(fs, new Path(s"$root/_commits")) < 0,
+    require(new FacadeEpochs(spark, root).epoch < 0,
       s"CurationDB already initialized at $root")
     def committed(member: String): Boolean =
       EpochStoreKit.maxMarked(fs,
@@ -326,38 +351,35 @@ object CurationDB {
     val members = runMembers[Any](spark, root, Seq(
       () =>
         if (committed("sub"))
-          SubstringDedupStore.open(spark, s"$root/sub", cfg.window,
-            cfg.autoCompactEpochs)
+          SubstringDedupStore.open(spark, s"$root/sub", cfg.window)
         else SubstringDedupStore.init(spark, s"$root/sub",
-          b.select("doc_id", "text"), cfg.window, cfg.autoCompactEpochs),
+          b.select("doc_id", "text"), cfg.window),
       () =>
         if (committed("fp"))
-          FingerprintStore.open(spark, s"$root/fp", cfg.maxHamming,
-            cfg.autoCompactEpochs)
+          FingerprintStore.open(spark, s"$root/fp", cfg.maxHamming)
         else FingerprintStore.init(spark, s"$root/fp", textHashes(b),
-          cfg.maxHamming, cfg.autoCompactEpochs),
+          cfg.maxHamming),
       () =>
         if (committed("fz"))
           FuzzyKeyStore.open(spark, s"$root/fz", cfg.maxKeyLen,
-            cfg.maxEdit, cfg.autoCompactEpochs)
+            cfg.maxEdit)
         else FuzzyKeyStore.init(spark, s"$root/fz",
-          b.select("doc_id", "key"), cfg.maxKeyLen, cfg.maxEdit,
-          cfg.autoCompactEpochs),
+          b.select("doc_id", "key"), cfg.maxKeyLen, cfg.maxEdit),
       () =>
         if (committed("mh"))
           MinHashDedupStore.open(spark, s"$root/mh", cfg.minhashTau,
-            cfg.shingleN, cfg.numHashes, cfg.bands, cfg.autoCompactEpochs)
+            cfg.shingleN, cfg.numHashes, cfg.bands)
         else MinHashDedupStore.init(spark, s"$root/mh",
           b.select("doc_id", "text"), cfg.minhashTau, "doc_id", "text",
-          cfg.shingleN, cfg.numHashes, cfg.bands, cfg.autoCompactEpochs),
+          cfg.shingleN, cfg.numHashes, cfg.bands),
       () =>
         if (committed("sm"))
           SemanticDedupStore.open(spark, s"$root/sm", cfg.semanticTau,
-            cfg.maxStaleFrac, cfg.autoCompactEpochs)
+            cfg.maxStaleFrac)
         else SemanticDedupStore.init(spark, s"$root/sm",
           b.select(col("doc_id").as("vec_id"), col("embedding")),
-          cfg.nCells, cfg.kmeansIters, cfg.semanticTau, cfg.maxStaleFrac,
-          cfg.autoCompactEpochs)))
+          cfg.nCells, cfg.kmeansIters, cfg.semanticTau,
+          cfg.maxStaleFrac)))
     val db = new CurationDB(spark, root,
       members(0).asInstanceOf[SubstringDedupStore],
       members(1).asInstanceOf[FingerprintStore],
@@ -365,8 +387,7 @@ object CurationDB {
       members(3).asInstanceOf[MinHashDedupStore],
       members(4).asInstanceOf[SemanticDedupStore])
     b.unpersist(false)
-    EpochStoreKit.writeText(fs, new Path(s"$root/_commits/0"),
-      memberRecord(0L, 0L, 0L, 0L, 0L))
+    db.facade.commitRecord(0L, memberRecord(Seq.fill(5)(0L)), None)
     db
   }
 
@@ -376,16 +397,13 @@ object CurationDB {
   def open(spark: SparkSession, root: String,
            cfg: Config = Config()): CurationDB = {
     val db = new CurationDB(spark, root,
-      SubstringDedupStore.open(spark, s"$root/sub", cfg.window,
-        cfg.autoCompactEpochs),
-      FingerprintStore.open(spark, s"$root/fp", cfg.maxHamming,
-        cfg.autoCompactEpochs),
-      FuzzyKeyStore.open(spark, s"$root/fz", cfg.maxKeyLen, cfg.maxEdit,
-        cfg.autoCompactEpochs),
+      SubstringDedupStore.open(spark, s"$root/sub", cfg.window),
+      FingerprintStore.open(spark, s"$root/fp", cfg.maxHamming),
+      FuzzyKeyStore.open(spark, s"$root/fz", cfg.maxKeyLen, cfg.maxEdit),
       MinHashDedupStore.open(spark, s"$root/mh", cfg.minhashTau,
-        cfg.shingleN, cfg.numHashes, cfg.bands, cfg.autoCompactEpochs),
+        cfg.shingleN, cfg.numHashes, cfg.bands),
       SemanticDedupStore.open(spark, s"$root/sm", cfg.semanticTau,
-        cfg.maxStaleFrac, cfg.autoCompactEpochs))
+        cfg.maxStaleFrac))
     require(db.epoch >= 0,
       s"CurationDB at $root has no committed facade epoch")
     db

@@ -9,11 +9,20 @@ import org.apache.spark.sql.types.StructType
 /** The epoch protocol of the durable dedup stores ([[SubstringDedupStore]],
   * [[FingerprintStore]], [[FuzzyKeyStore]], [[MinHashDedupStore]],
   * [[SemanticDedupStore]]), the streaming live artifacts
-  * ([[graft.streaming.LiveArtifact]]) and the versions table of the
-  * path-backed [[TemporalVectorDB]], written once. A store supplies
-  * its artifact kinds, its batch → delta operator and its reads; this
-  * class owns the commit, snapshot, replay, compaction and prune
-  * sequence.
+  * ([[graft.streaming.LiveArtifact]]), the versions table of the
+  * path-backed [[TemporalVectorDB]] and [[CurationDB]]'s facade epochs,
+  * written once. A family supplies its artifact kinds, its delta builder
+  * (the listed head → the epoch's artifacts) and its reads; this class
+  * owns the commit, snapshot, replay, compaction and prune sequence.
+  *
+  * ONE LISTED HEAD PER OPERATION: [[appendOnce]] is every family's one
+  * append entry. It lists `_commits` once — a token append lists it in
+  * the replay check and reuses it — and hands that head down to
+  * everything the build resolves. A current read resolves at the head
+  * it lists once ([[current]]), an as-of read at the epoch that one
+  * listing guards ([[asOf]]); both pass the resulting [[EpochStore.At]]
+  * to every resolution (`dataAt`, [[unionAt]], [[latestWinsAt]],
+  * [[latestWinsFor]], [[compAt]]) instead of listing again.
   *
   * Layout shared by every store under `root/` (all parquet):
   * {{{
@@ -49,6 +58,13 @@ import org.apache.spark.sql.types.StructType
   *    the commit). A mark above the committed head is a torn
   *    compaction's: readers ignore it, the next [[compact]] re-marks
   *    and the next delta commit at that epoch clears it.
+  *  - THE FOLD RULE: a compaction of head `e` (an append's auto-fold,
+  *    [[compact]]) commits snapshot `e + 1` holding exactly `e`'s state,
+  *    so a read at `e` under that snapshot resolves from it — the epoch
+  *    an append returned stays readable after its own fold. Every other
+  *    read below the latest snapshot fails loudly (its deltas were
+  *    pruned), as does a read below a snapshot that is not a compaction
+  *    ([[isCompaction]]).
   *  - Pruning only removes directories BELOW the latest snapshot, which
   *    readers never resolve, so an interrupted prune is finished by the
   *    next compaction's sweep.
@@ -67,14 +83,16 @@ import org.apache.spark.sql.types.StructType
 private[graft] abstract class EpochStore(val spark: SparkSession,
                                          val root: String,
                                          val autoCompactEpochs: Int) {
+  import EpochStore.At
 
   /** Data kinds in commit order, with their columns: compaction writes
     * an empty slice for each. */
   protected def dataKinds: Seq[(String, Seq[String])]
 
   /** Snapshot kinds in commit order, with their resolved state at a
-    * committed epoch: compaction writes that state and prunes below it. */
-  protected def snapshotKinds: Seq[(String, Long => DataFrame)]
+    * read position: compaction writes the state at the committed head
+    * and prunes below it. */
+  protected def snapshotKinds: Seq[(String, At => DataFrame)]
 
   protected def fs: FileSystem = EpochStoreKit.fsOf(spark, root)
 
@@ -92,30 +110,56 @@ private[graft] abstract class EpochStore(val spark: SparkSession,
   protected def latestSnapshotAt(head: Long): Long =
     EpochStoreKit.maxMarked(fs, new Path(s"$root/_snapshots"), head)
 
+  /** Whether snapshot epoch `s` above 0 was committed by a compaction of
+    * `s - 1` and so holds exactly its state (the fold rule). The default
+    * holds for [[compact]]'s snapshots. A family that commits other
+    * state through [[compactWith]] (a retrain, a rewrite that changes
+    * rows) either overrides this or reads only at its head. */
+  protected def isCompaction(s: Long): Boolean = true
+
+  /** The committed head, listed once; fails loudly on a
+    * never-initialized root. */
   protected def requireCommitted(): Long = {
     val e = epoch
     require(e >= 0, s"$storeName at $root has no committed epoch")
     e
   }
 
-  /** The committed-epoch guard of time-travel reads. */
-  protected def requireEpoch(e: Long): Unit =
-    require(e >= 0 && e <= epoch &&
+  /** The committed-epoch guard of as-of reads: lists the head once and
+    * returns it. */
+  protected def requireEpoch(e: Long): Long = {
+    val head = epoch
+    require(e >= 0 && e <= head &&
       fs.exists(new Path(s"$root/_commits/$e")),
       s"epoch $e not committed at $root")
-
-  /** Snapshot base for reads at epoch `e` under the committed `head`
-    * (listed here unless the caller passes the one it holds) — fails
-    * loudly when `e` predates the latest compaction (its deltas were
-    * pruned). */
-  protected def snapshotFor(e: Long, head: Long = epoch): Long = {
-    val s = latestSnapshotAt(head)
-    require(s >= 0 && s <= e,
-      s"epoch $e at $root is below the latest snapshot $s — its delta " +
-        "epochs were pruned by compaction; time-travel only reaches " +
-        "epochs at or above the snapshot")
-    s
+    head
   }
+
+  /** Where a read at committed epoch `e` resolves under the committed
+    * `head` the caller listed: from the latest snapshot up to `e`, or
+    * the snapshot alone when it folded `e` (the fold rule). Fails loudly
+    * when `e` predates the latest compaction (its deltas were pruned). */
+  protected def position(e: Long, head: Long): At = {
+    val s = latestSnapshotAt(head)
+    if (s >= 0 && s <= e) At(e, s, e)
+    else {
+      require(s == e + 1 && isCompaction(s),
+        s"epoch $e at $root is below the latest snapshot $s — its delta " +
+          "epochs were pruned by compaction; time-travel only reaches " +
+          "epochs at or above the snapshot, or the one it folded")
+      At(e, s, s)
+    }
+  }
+
+  /** The read position at the committed head, listed once. */
+  protected[api] def current: At = {
+    val head = requireCommitted()
+    position(head, head)
+  }
+
+  /** The read position at committed epoch `e`, under the head its guard
+    * listed once. */
+  protected[api] def asOf(e: Long): At = position(e, requireEpoch(e))
 
   /** `init`'s guard: the root must not hold a committed epoch yet. */
   private[api] def fresh(): this.type = {
@@ -134,35 +178,31 @@ private[graft] abstract class EpochStore(val spark: SparkSession,
     EpochStoreKit.unionEpochs(spark, root, kind, 0L, e,
       dataKinds.find(_._1 == kind).get._2)
 
-  /** Snapshot kind `kind` at `e` as the plain union of disjoint slices
-    * from the governing snapshot, under the committed `head`; a declared
-    * `schema` spares the footer schema-inference job. */
-  protected def unionAt(kind: String, e: Long, cols: Seq[String],
-                        head: Long = epoch,
+  /** Snapshot kind `kind` at `at` as the plain union of disjoint slices;
+    * a declared `schema` spares the footer schema-inference job. */
+  protected def unionAt(kind: String, at: At, cols: Seq[String],
                         schema: Option[StructType] = None): DataFrame =
-    EpochStoreKit.unionEpochs(spark, root, kind, snapshotFor(e, head), e,
-      cols, schema)
+    EpochStoreKit.unionEpochs(spark, root, kind, at.from, at.to, cols,
+      schema)
 
-  /** Snapshot kind `kind` at `e`, latest-epoch-wins per `keys`. */
-  protected def latestWinsAt(kind: String, e: Long, keys: Seq[String],
+  /** Snapshot kind `kind` at `at`, latest-epoch-wins per `keys`. */
+  protected def latestWinsAt(kind: String, at: At, keys: Seq[String],
                              cols: Seq[String]): DataFrame =
-    EpochStoreKit.resolveLatestWins(spark, root, kind, snapshotFor(e), e,
+    EpochStoreKit.resolveLatestWins(spark, root, kind, at.from, at.to,
       keys, cols)
 
   /** [[latestWinsAt]] restricted to the keys in `keyFrame` — the
     * append-path resolution ([[EpochStoreKit.resolveLatestWinsForKeys]]). */
-  protected def latestWinsFor(kind: String, e: Long, keys: Seq[String],
+  protected def latestWinsFor(kind: String, at: At, keys: Seq[String],
                               cols: Seq[String],
                               keyFrame: DataFrame): DataFrame =
-    EpochStoreKit.resolveLatestWinsForKeys(spark, root, kind,
-      snapshotFor(e), e, keys, cols, keyFrame)
+    EpochStoreKit.resolveLatestWinsForKeys(spark, root, kind, at.from,
+      at.to, keys, cols, keyFrame)
 
   /** The `comp` kind of the cluster stores — the (id, component)
-    * assignment, latest-epoch-wins per id — at committed epoch `e`. */
-  protected def compAt(e: Long): DataFrame = {
-    requireEpoch(e)
-    latestWinsAt("comp", e, Seq("id"), Seq("id", "component"))
-  }
+    * assignment, latest-epoch-wins per id — at `at`. */
+  protected def compAt(at: At): DataFrame =
+    latestWinsAt("comp", at, Seq("id"), Seq("id", "component"))
 
   /** The rows of `comp` whose (id → component) mapping is new or changed
     * against `old` — extension never deletes a row, so latest-wins over
@@ -187,9 +227,11 @@ private[graft] abstract class EpochStore(val spark: SparkSession,
 
   /** Commit epoch `n`: write the head's token file, then `artifacts`
     * (one per data kind, then one per snapshot kind) in order, then the
-    * commit marker recording `token` — always the last write. */
+    * commit marker — always the last write — whose record is `fields`
+    * followed by `token`'s field. */
   protected def commit(n: Long, artifacts: Seq[DataFrame],
-                       token: Option[String] = None): Unit = {
+                       token: Option[String] = None,
+                       fields: Seq[String] = Nil): Unit = {
     val kinds = dataKinds.map(_._1) ++ snapshotKinds.map(_._1)
     require(artifacts.size == kinds.size,
       s"$storeName: ${artifacts.size} artifacts for kinds $kinds")
@@ -198,8 +240,31 @@ private[graft] abstract class EpochStore(val spark: SparkSession,
       EpochStoreKit.writeParquet(df, s"$root/$k/epoch=$n")
     }
     EpochStoreKit.commitMarker(fs, new Path(s"$root/_commits/$n"),
-      token.map(EpochStoreKit.tokenField).getOrElse(""))
+      (fields ++ token.map(EpochStoreKit.tokenField)).mkString(","))
   }
+
+  /** The one append entry of every family: list the committed head
+    * once — for a token, in the replay check, which returns the epoch
+    * the token already committed without running `append` — and run
+    * `append` on it (-1 for a never-initialized root). */
+  protected[api] def appendOnce(token: Option[String])(
+      append: Long => Long): Long =
+    token.fold(append(epoch)) { t =>
+      val head = epoch
+      EpochStoreKit.replayCheck(fs, root, t, head).getOrElse(append(head))
+    }
+
+  /** [[appendOnce]] of the families an `init` creates: build the delta
+    * epoch with `delta` at the listed head (refused on a
+    * never-initialized root) and commit it ([[commitDelta]]). Returns
+    * the appended epoch, which stays readable after an auto-fold (the
+    * fold rule). */
+  protected def appendDelta(token: Option[String])(
+      delta: At => Seq[DataFrame]): Long =
+    appendOnce(token) { head =>
+      require(head >= 0, s"$storeName at $root has no committed epoch")
+      commitDelta(head + 1, token)(delta(position(head, head)))
+    }
 
   /** Build and commit the delta epoch `n` of an append in one
     * [[Ckpt.scope]] — every checkpoint the build made is freed once the
@@ -249,15 +314,6 @@ private[graft] abstract class EpochStore(val spark: SparkSession,
   /** Runs just before [[compact]]'s commit. */
   protected def beforeCompactCommit(n: Long): Unit = ()
 
-  /** The exactly-once wrapper: a token that already committed returns
-    * its epoch; otherwise `append` runs on the committed head this
-    * check listed (-1 for a never-initialized root). */
-  protected def replayOr(token: String)(append: Long => Long): Long = {
-    val head = epoch
-    EpochStoreKit.replayCheck(fs, root, token, head)
-      .getOrElse(append(head))
-  }
-
   /** Rewrite the resolved state as ONE new snapshot epoch and prune the
     * absorbed epochs below it ([[compactWith]]), bounding read-side
     * resolution work on a long-lived store. Idempotent: compacting an
@@ -271,8 +327,10 @@ private[graft] abstract class EpochStore(val spark: SparkSession,
 
   /** The state [[compact]] commits: every snapshot kind resolved at the
     * head `e`, eagerly. */
-  protected def compactState(e: Long): Seq[DataFrame] =
-    snapshotKinds.map { case (_, at) => Ckpt.eager(at(e)) }
+  protected def compactState(e: Long): Seq[DataFrame] = {
+    val at = position(e, e)
+    snapshotKinds.map { case (_, state) => Ckpt.eager(state(at)) }
+  }
 
   /** The one commit-and-prune sequence of every rewrite: commit
     * `state(e)` — one frame per snapshot kind, resolved at the committed
@@ -319,6 +377,11 @@ private[graft] abstract class EpochStore(val spark: SparkSession,
 }
 
 private[graft] object EpochStore {
+
+  /** A read position: snapshot kinds resolve over epochs `from` to `to`
+    * (the governing snapshot up to `e`, or the snapshot alone when it
+    * folded `e`); data kinds over 0 to `e`. */
+  final case class At(e: Long, from: Long, to: Long)
 
   /** The auto-compaction cadence of every family: SCALE.md's
     * "Auto-compaction, sized by measurement" picks 16 delta epochs. It

@@ -298,21 +298,19 @@ private[graft] object EpochStoreKit {
   }
 
   /** Broadcast `keys` only while its PLAN-STATISTICS size estimate
-    * (driver-side, zero extra jobs) stays under
-    * `spark.graft.keys.broadcastMaxBytes` (default 256 MB). Past the
-    * budget the plain frame is returned and the join shuffles both
-    * sides — slower but bounded, where an unconditional broadcast of a
-    * flood batch's key set (or a touched-doc key set that scales with
-    * touched TEXT, not batch size) would OOM the driver. The join
-    * RESULT is identical either way. */
+    * (driver-side, zero extra jobs) stays under 256 MB. Past the budget
+    * the plain frame is returned and the join shuffles both sides —
+    * slower but bounded, where an unconditional broadcast of a flood
+    * batch's key set (or a touched-doc key set that scales with touched
+    * TEXT, not batch size) would OOM the driver. The join RESULT is
+    * identical either way. */
   private[graft] def guardedBroadcast(spark: SparkSession,
-                                      keys: DataFrame): DataFrame = {
-    val maxBytes = spark.conf
-      .getOption("spark.graft.keys.broadcastMaxBytes")
-      .map(_.toLong).getOrElse(256L * 1024 * 1024)
-    val est = keys.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est <= maxBytes) broadcast(keys) else keys
-  }
+                                      keys: DataFrame): DataFrame =
+    if (keys.queryExecution.optimizedPlan.stats.sizeInBytes <=
+          KeysBroadcastMaxBytes) broadcast(keys)
+    else keys
+
+  private val KeysBroadcastMaxBytes = 256L * 1024 * 1024
 
   /** Delete `kind/epoch=N` directories with N below `snap`. Readers
     * never resolve below the latest snapshot, so this is safe to

@@ -3,6 +3,7 @@ package graft.api
 import graft.operators.{Ckpt, Dedup}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import EpochStore.At
 
 /** PERSISTED incremental fingerprint-dedup store — the deployment
   * packaging of [[graft.operators.Dedup.extendHashDeduped]] for the
@@ -48,7 +49,8 @@ import org.apache.spark.sql.functions._
   * [[SubstringDedupStore]] epochs fixed for text. [[compact]] rewrites
   * the resolved assignment as ONE snapshot epoch and prunes absorbed
   * comp deltas; `prints` epochs must all be retained. Time-travel
-  * ([[keptAt]]) reaches epochs at or above the latest snapshot.
+  * ([[keptAt]]) reaches epochs at or above the latest snapshot, and the
+  * one a compaction folded.
   *
   * Crash safety and the commit/compact/replay sequence are the
   * [[EpochStore]] contract. Appended ids must be DISJOINT from every
@@ -64,15 +66,15 @@ class FingerprintStore private (spark: SparkSession, root: String,
 
   private def printsAt(e: Long): DataFrame = dataAt("prints", e)
 
-  private def grpAt(e: Long): DataFrame =
-    latestWinsAt("grp", e, Seq("_sh"), Seq("_sh", "_rep"))
+  private def grpAt(at: At): DataFrame =
+    latestWinsAt("grp", at, Seq("_sh"), Seq("_sh", "_rep"))
 
   /** Every stored fingerprint at the latest committed epoch. */
   def prints: DataFrame = printsAt(requireCommitted())
 
   /** The maintained rep-level component assignment (latest epoch,
     * snapshot + deltas resolved latest-wins). */
-  def components: DataFrame = compAt(requireCommitted())
+  def components: DataFrame = compAt(current)
 
   /** Append a batch's fingerprints (_id, simhash) — ids disjoint from
     * every stored id (fails loudly) — extend the component assignment
@@ -80,60 +82,62 @@ class FingerprintStore private (spark: SparkSession, root: String,
     * rows the batch ADDED or RELABELED. Returns the new epoch (the
     * head may advance further when `autoCompactEpochs` triggers a
     * compaction — read-identical, spec-gated). */
-  def append(batchHashes: DataFrame): Long = appendImpl(batchHashes, None)
+  def append(batchHashes: DataFrame): Long =
+    appendDelta(None)(delta(batchHashes))
 
   /** Exactly-once append for replayable callers (the Structured
     * Streaming `foreachBatch` bridge): a replayed call with the same
     * `token` is a NO-OP returning the original epoch. */
   def append(batchHashes: DataFrame, token: String): Long =
-    replayOr(token)(_ => appendImpl(batchHashes, Some(token)))
+    appendDelta(Some(token))(delta(batchHashes))
 
-  private def appendImpl(batchHashes: DataFrame,
-                         token: Option[String]): Long = {
-    val e = requireCommitted()
-    commitDelta(e + 1, token) {
-      val b = Ckpt.eager(batchHashes.select(
-        col("_id").cast("long").as("_id"), col("simhash").cast("long")
-          .as("simhash")))
-      requireDisjoint(b, printsAt(e), "_id",
-        "a duplicated id would double-count in the drop set")
-      val oldComp = compAt(e)
-      // the stored prints are never re-aggregated and the grp artifact is
-      // never shuffled: the batch-present hashes resolve through a
-      // key-restricted latest-wins window (batch-sized), and the banded
-      // candidate join scans the PLAIN grp union (duplicate undercut reps
-      // are closure-neutral — extendHashComponentsArtifact's contract)
-      val sharedGrp = Ckpt.eager(latestWinsFor("grp", e, Seq("_sh"),
-        Seq("_sh", "_rep"), b.select(col("simhash").as("_sh")).distinct()))
-      val comp = Dedup.extendHashComponentsArtifact(sharedGrp,
-        unionAt("grp", e, Seq("_sh", "_rep")), oldComp, b, maxHamming)
-      Seq(b, Dedup.hashGroupDelta(sharedGrp, b), changedRows(comp, oldComp))
-    }
+  private def delta(batchHashes: DataFrame)(at: At): Seq[DataFrame] = {
+    val b = Ckpt.eager(batchHashes.select(
+      col("_id").cast("long").as("_id"), col("simhash").cast("long")
+        .as("simhash")))
+    requireDisjoint(b, printsAt(at.e), "_id",
+      "a duplicated id would double-count in the drop set")
+    val oldComp = compAt(at)
+    // the stored prints are never re-aggregated and the grp artifact is
+    // never shuffled: the batch-present hashes resolve through a
+    // key-restricted latest-wins window (batch-sized), and the banded
+    // candidate join scans the PLAIN grp union (duplicate undercut reps
+    // are closure-neutral — extendHashComponentsArtifact's contract)
+    val sharedGrp = Ckpt.eager(latestWinsFor("grp", at, Seq("_sh"),
+      Seq("_sh", "_rep"), b.select(col("simhash").as("_sh")).distinct()))
+    val comp = Dedup.extendHashComponentsArtifact(sharedGrp,
+      unionAt("grp", at, Seq("_sh", "_rep")), oldComp, b, maxHamming)
+    Seq(b, Dedup.hashGroupDelta(sharedGrp, b), changedRows(comp, oldComp))
   }
 
   /** The kept rows of `corpus` (one per duplicate cluster — the min
     * member id — plus every unpaired doc) as of the latest epoch,
     * derived from the persisted artifacts: one aggregation over the
-    * prints, one join to the assignment — the media never decodes. */
+    * prints, one join to the assignment — the media never decodes. The
+    * frame is planned lazily: each action reads the store at the head
+    * this call resolved. */
   def kept(corpus: DataFrame, idCol: String = "doc_id"): DataFrame =
-    keptAt(requireCommitted(), corpus, idCol)
+    keptAt(current, corpus, idCol)
 
   /** [[kept]] as of a PAST committed epoch at or above the latest
-    * snapshot (audit/time-travel; older epochs' comp deltas were pruned
-    * by [[compact]], fails loudly) — the drop set uses only
-    * fingerprints appended at or before `e`. */
+    * snapshot, or the one a compaction folded (audit/time-travel; older
+    * epochs' comp deltas were pruned by [[compact]], fails loudly) — the
+    * drop set uses only fingerprints appended at or before `e`. */
   def keptAt(e: Long, corpus: DataFrame,
-             idCol: String = "doc_id"): DataFrame = {
-    val comp = compAt(e)
+             idCol: String = "doc_id"): DataFrame =
+    keptAt(asOf(e), corpus, idCol)
+
+  private[api] def keptAt(at: At, corpus: DataFrame,
+                          idCol: String): DataFrame = {
+    val comp = compAt(at)
     // the node mapping (hash → min member id) IS the maintained grp
     // artifact — no re-aggregation of the prints at read time
-    val node = grpAt(e).select(col("_sh").as("simhash"),
+    val node = grpAt(at).select(col("_sh").as("simhash"),
       col("_rep").as("_node"))
-    val drop = printsAt(e).join(node, Seq("simhash"))
+    val drop = printsAt(at.e).join(node, Seq("simhash"))
       .join(comp, col("_node").cast("long") === comp("id"))
       .where(col("_id").cast("long") =!= col("component"))
       .select(col("_id").cast("long").as("_drop_id"))
-      .transform(Ckpt.eager)
     corpus.join(drop, corpus(idCol).cast("long") === drop("_drop_id"),
       "left_anti")
   }

@@ -3,6 +3,7 @@ package graft.api
 import graft.operators.{Ckpt, Closure, Dedup}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import EpochStore.At
 
 /** PERSISTED incremental fuzzy-key store — the deployment packaging of
   * [[graft.operators.Dedup.extendFuzzyKeyPairs]], the way
@@ -45,7 +46,7 @@ import org.apache.spark.sql.functions._
   * epoch and prunes the absorbed delta directories — bounding read-side
   * union/resolution fan-in on a long-lived store; `keys/` is never
   * pruned. Time-travel ([[keptKeysAt]]) reaches epochs at or above the
-  * latest snapshot.
+  * latest snapshot, and the one a compaction folded.
   *
   * Crash safety and the commit/compact/replay sequence are the
   * [[EpochStore]] contract. APPEND CONTRACT: every batch id must
@@ -70,23 +71,23 @@ class FuzzyKeyStore private (spark: SparkSession, root: String,
   // verbatim would bake duplicate rows into every later snapshot — a
   // no-op shuffle in the normal disjoint-slice case buys the guarantee
   protected val snapshotKinds = Seq(
-    "index" -> ((e: Long) => indexAt(e).dropDuplicates("rep", "key", "_vh")),
+    "index" -> ((at: At) => indexAt(at).dropDuplicates("rep", "key", "_vh")),
     "comp" -> compAt _)
 
   private def keysAt(e: Long): DataFrame = dataAt("keys", e)
 
-  private def indexAt(e: Long): DataFrame =
-    unionAt("index", e, Seq("rep", "key", "_vh"))
+  private def indexAt(at: At): DataFrame =
+    unionAt("index", at, Seq("rep", "key", "_vh"))
 
   /** Every stored (doc_id, key) row at the latest committed epoch. */
   def keys: DataFrame = keysAt(requireCommitted())
 
   /** The maintained variant index (rep, key, _vh) — latest epoch. */
-  def index: DataFrame = indexAt(requireCommitted())
+  def index: DataFrame = indexAt(current)
 
   /** The maintained rep-level fuzzy-cluster assignment (latest epoch,
     * snapshot + deltas resolved latest-wins). */
-  def components: DataFrame = compAt(requireCommitted())
+  def components: DataFrame = compAt(current)
 
   /** Append a key batch (doc_id, key) — ids strictly above every stored
     * id (fails loudly) — extend the variant index with the batch's
@@ -95,45 +96,41 @@ class FuzzyKeyStore private (spark: SparkSession, root: String,
     * assignment rows the batch ADDED or RELABELED. Returns the new
     * epoch (the head may advance further when `autoCompactEpochs`
     * triggers a compaction — read-identical, spec-gated). */
-  def append(batch: DataFrame): Long = appendImpl(batch, None)
+  def append(batch: DataFrame): Long = appendDelta(None)(delta(batch))
 
   /** Exactly-once append for replayable callers (the Structured
     * Streaming `foreachBatch` bridge): a replayed call with the same
     * `token` is a NO-OP returning the original epoch. */
   def append(batch: DataFrame, token: String): Long =
-    replayOr(token)(_ => appendImpl(batch, Some(token)))
+    appendDelta(Some(token))(delta(batch))
 
-  private def appendImpl(batch: DataFrame,
-                         token: Option[String]): Long = {
-    val e = requireCommitted()
-    commitDelta(e + 1, token) {
-      val b = Ckpt.eager(batch.select(
-        col("doc_id").cast("long").as("doc_id"),
-        col("key").cast("string").as("key")))
-      val storedMax = keysAt(e).agg(max(col("doc_id"))).collect()
-        .headOption.filter(!_.isNullAt(0)).map(_.getLong(0))
-        .getOrElse(Long.MinValue)
-      val batchMin = b.agg(min(col("doc_id"))).collect()
-        .headOption.filter(!_.isNullAt(0)).map(_.getLong(0))
-        .getOrElse(Long.MaxValue)
-      require(batchMin > storedMax,
-        s"FuzzyKeyStore.append: batch min id $batchMin does not exceed " +
-          s"the stored max id $storedMax at $root — appended ids must be " +
-          "strictly above every stored id so min-id reps stay invariant")
-      val idx = indexAt(e)
-      // variants computed ONCE: the epoch's index delta AND the pair
-      // probe are the same frame (the refactor extendFuzzyKeyPairs
-      // itself composes)
-      val nv = Ckpt.eager(Dedup.fuzzyNewVariants(idx, b, "key", "doc_id",
-        maxKeyLen, maxEdit))
-      val pairs = Dedup.extendFuzzyKeyPairsOf(idx, nv, maxEdit)
-        .select(col("rep_a").as("id1"), col("rep_b").as("id2"))
-      val oldComp = compAt(e)
-      // extendComponents returns an eagerly-checkpointed frame (and frees
-      // its internal checkpoints itself) — no second Ckpt.eager copy here
-      val comp = Dedup.extendComponents(oldComp, pairs)
-      Seq(b, nv, changedRows(comp, oldComp))
-    }
+  private def delta(batch: DataFrame)(at: At): Seq[DataFrame] = {
+    val b = Ckpt.eager(batch.select(
+      col("doc_id").cast("long").as("doc_id"),
+      col("key").cast("string").as("key")))
+    val storedMax = keysAt(at.e).agg(max(col("doc_id"))).collect()
+      .headOption.filter(!_.isNullAt(0)).map(_.getLong(0))
+      .getOrElse(Long.MinValue)
+    val batchMin = b.agg(min(col("doc_id"))).collect()
+      .headOption.filter(!_.isNullAt(0)).map(_.getLong(0))
+      .getOrElse(Long.MaxValue)
+    require(batchMin > storedMax,
+      s"FuzzyKeyStore.append: batch min id $batchMin does not exceed " +
+        s"the stored max id $storedMax at $root — appended ids must be " +
+        "strictly above every stored id so min-id reps stay invariant")
+    val idx = indexAt(at)
+    // variants computed ONCE: the epoch's index delta AND the pair
+    // probe are the same frame (the refactor extendFuzzyKeyPairs
+    // itself composes)
+    val nv = Ckpt.eager(Dedup.fuzzyNewVariants(idx, b, "key", "doc_id",
+      maxKeyLen, maxEdit))
+    val pairs = Dedup.extendFuzzyKeyPairsOf(idx, nv, maxEdit)
+      .select(col("rep_a").as("id1"), col("rep_b").as("id2"))
+    val oldComp = compAt(at)
+    // extendComponents returns an eagerly-checkpointed frame (and frees
+    // its internal checkpoints itself) — no second Ckpt.eager copy here
+    val comp = Dedup.extendComponents(oldComp, pairs)
+    Seq(b, nv, changedRows(comp, oldComp))
   }
 
   /** The fuzzy-deduped key corpus at the latest epoch — one row per
@@ -142,18 +139,19 @@ class FuzzyKeyStore private (spark: SparkSession, root: String,
     * unpaired keys survive. Derived from the persisted artifacts: one
     * aggregation over the stored key batches, one anti-join to the
     * assignment — no variant work. */
-  def keptKeys: DataFrame = keptKeysAt(requireCommitted())
+  def keptKeys: DataFrame = keptKeysAt(current)
 
   /** [[keptKeys]] as of a PAST committed epoch at or above the latest
-    * snapshot (audit/time-travel; older epochs' deltas were pruned by
-    * [[compact]], fails loudly). */
-  def keptKeysAt(e: Long): DataFrame = {
-    val comp = compAt(e)
-    val ks = keysAt(e).where(length(col("key")) > 0)
+    * snapshot, or the one a compaction folded (audit/time-travel; older
+    * epochs' deltas were pruned by [[compact]], fails loudly). */
+  def keptKeysAt(e: Long): DataFrame = keptKeysAt(asOf(e))
+
+  private[api] def keptKeysAt(at: At): DataFrame = {
+    val ks = keysAt(at.e).where(length(col("key")) > 0)
       .groupBy("key")
       .agg(min(col("doc_id").cast("long")).as("rep"),
         count(lit(1)).as("cnt"))
-    val drop = comp.where(col("id") =!= col("component"))
+    val drop = compAt(at).where(col("id") =!= col("component"))
       .select(col("id").as("_drop_id"))
     ks.join(drop, ks("rep") === drop("_drop_id"), "left_anti")
       .select(col("rep"), col("key"), col("cnt"))

@@ -3,6 +3,7 @@ package graft.api
 import graft.operators.{Ckpt, Closure, Dedup}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import EpochStore.At
 
 /** PERSISTED incremental MinHash/Jaccard near-dup store — the
   * deployment packaging of the q117 compute path
@@ -86,7 +87,7 @@ class MinHashDedupStore private (spark: SparkSession, root: String,
 
   /** The maintained pair-graph component assignment (latest epoch,
     * snapshot + deltas resolved latest-wins). */
-  def components: DataFrame = compAt(requireCommitted())
+  def components: DataFrame = compAt(current)
 
   /** Append a text batch (idCol, textCol) — ids disjoint from every
     * stored id (fails loudly) — shingle ONLY the batch, band it against
@@ -98,53 +99,49 @@ class MinHashDedupStore private (spark: SparkSession, root: String,
     * read-identical, spec-gated). */
   def append(batch: DataFrame, idCol: String = "doc_id",
              textCol: String = "text"): Long =
-    appendImpl(batch, idCol, textCol, None)
+    appendDelta(None)(delta(batch, idCol, textCol))
 
   /** Exactly-once append for replayable callers (the Structured
     * Streaming `foreachBatch` bridge): a replayed call with the same
     * `token` is a NO-OP returning the original epoch. */
   def append(batch: DataFrame, idCol: String, textCol: String,
              token: String): Long =
-    replayOr(token)(_ => appendImpl(batch, idCol, textCol, Some(token)))
+    appendDelta(Some(token))(delta(batch, idCol, textCol))
 
-  private def appendImpl(batch: DataFrame, idCol: String,
-                         textCol: String,
-                         token: Option[String]): Long = {
-    val e = requireCommitted()
-    commitDelta(e + 1, token) {
-      val bSig = Ckpt.eager(normalizeSig(Dedup.signatureFrame(
-        batch.select(col(idCol).cast("long").as(idCol), col(textCol)),
-        idCol, textCol, n, numHashes)))
-      val baseSig = sigAt(e)
-      requireDisjoint(bSig, baseSig, "_id",
-        "a duplicated id would corrupt the min-id keep policy")
-      // ONE shared exact-dup collapse of the batch (r15): the within-pair,
-      // cross-pair and band-artifact consumers all ride the same
-      // (membership, rep) frames instead of re-collapsing the batch three
-      // times — the fixed-cost term that dominated small-batch appends.
-      // The appended edges: batch-internal pairs + batch×base pairs — the
-      // batch's banded projection broadcasts against a SCAN of the stored
-      // band artifact (no re-collapse or re-banding of the base minima);
-      // the stored sig frame is touched only by the candidate-keyed
-      // verify/expansion joins
-      val (bMem, bRep) = Dedup.collapseFromSignatures(bSig)
-      val newEdges = Dedup
-        .sigNearDupPairsCollapsed(bMem, bRep, tau, numHashes, bands)
-        .select(col("id1").cast("long"), col("id2").cast("long"))
-        .unionByName(Dedup
-          .crossBandNearDupPairsCollapsed(bMem, bRep, dataAt("band", e),
-            baseSig, tau, numHashes, bands)
-          .select(col("existing_id").cast("long").as("id1"),
-            col("new_id").cast("long").as("id2")))
-      val oldComp = compAt(e)
-      // extendComponents returns an eagerly-checkpointed frame (and frees
-      // its internal checkpoints itself) — no second Ckpt.eager copy here
-      val comp = Dedup.extendComponents(oldComp, newEdges)
-      // the band artifact (a checkpoint) is the rep frame's last consumer
-      val band = Dedup.bandArtifactOfRep(bRep, numHashes, bands)
-      bRep.unpersist(false)
-      Seq(bSig, band, changedRows(comp, oldComp))
-    }
+  private def delta(batch: DataFrame, idCol: String, textCol: String)(
+      at: At): Seq[DataFrame] = {
+    val bSig = Ckpt.eager(normalizeSig(Dedup.signatureFrame(
+      batch.select(col(idCol).cast("long").as(idCol), col(textCol)),
+      idCol, textCol, n, numHashes)))
+    val baseSig = sigAt(at.e)
+    requireDisjoint(bSig, baseSig, "_id",
+      "a duplicated id would corrupt the min-id keep policy")
+    // ONE shared exact-dup collapse of the batch (r15): the within-pair,
+    // cross-pair and band-artifact consumers all ride the same
+    // (membership, rep) frames instead of re-collapsing the batch three
+    // times — the fixed-cost term that dominated small-batch appends.
+    // The appended edges: batch-internal pairs + batch×base pairs — the
+    // batch's banded projection broadcasts against a SCAN of the stored
+    // band artifact (no re-collapse or re-banding of the base minima);
+    // the stored sig frame is touched only by the candidate-keyed
+    // verify/expansion joins
+    val (bMem, bRep) = Dedup.collapseFromSignatures(bSig)
+    val newEdges = Dedup
+      .sigNearDupPairsCollapsed(bMem, bRep, tau, numHashes, bands)
+      .select(col("id1").cast("long"), col("id2").cast("long"))
+      .unionByName(Dedup
+        .crossBandNearDupPairsCollapsed(bMem, bRep, dataAt("band", at.e),
+          baseSig, tau, numHashes, bands)
+        .select(col("existing_id").cast("long").as("id1"),
+          col("new_id").cast("long").as("id2")))
+    val oldComp = compAt(at)
+    // extendComponents returns an eagerly-checkpointed frame (and frees
+    // its internal checkpoints itself) — no second Ckpt.eager copy here
+    val comp = Dedup.extendComponents(oldComp, newEdges)
+    // the band artifact (a checkpoint) is the rep frame's last consumer
+    val band = Dedup.bandArtifactOfRep(bRep, numHashes, bands)
+    bRep.unpersist(false)
+    Seq(bSig, band, changedRows(comp, oldComp))
   }
 
   /** Pin the signature frame's id to long and its column order to the
@@ -159,14 +156,18 @@ class MinHashDedupStore private (spark: SparkSession, root: String,
     * shingle-less docs survive), derived from the persisted assignment:
     * one anti-join — no shingling, no banding. */
   def kept(corpus: DataFrame, idCol: String = "doc_id"): DataFrame =
-    keptAt(requireCommitted(), corpus, idCol)
+    keptAt(current, corpus, idCol)
 
   /** [[kept]] as of a PAST committed epoch at or above the latest
-    * snapshot (audit/time-travel; older epochs' comp deltas were pruned
-    * by [[compact]], fails loudly). */
+    * snapshot, or the one a compaction folded (audit/time-travel; older
+    * epochs' comp deltas were pruned by [[compact]], fails loudly). */
   def keptAt(e: Long, corpus: DataFrame,
-             idCol: String = "doc_id"): DataFrame = {
-    val drop = compAt(e)
+             idCol: String = "doc_id"): DataFrame =
+    keptAt(asOf(e), corpus, idCol)
+
+  private[api] def keptAt(at: At, corpus: DataFrame,
+                          idCol: String): DataFrame = {
+    val drop = compAt(at)
       .where(col("id") =!= col("component"))
       .select(col("id").as("_drop_id"))
     corpus.join(drop, corpus(idCol).cast("long") === drop("_drop_id"),

@@ -4,6 +4,7 @@ import graft.operators.{Ckpt, Closure, Clustering, Dedup}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import EpochStore.At
 
 /** PERSISTED incremental semantic-dedup store — the deployment
   * packaging of [[graft.operators.Dedup.extendSemanticDeduped]]
@@ -72,7 +73,9 @@ import org.apache.spark.sql.functions._
   * asg/comp/centroids epochs below it (the [[SubstringDedupStore]]
   * compaction discipline; `vecs/` is the data and is never pruned).
   * Time-travel ([[keptAt]]) reaches epochs at or above the latest
-  * snapshot; older epochs were pruned and fail loudly.
+  * snapshot, and the one a [[compact]] folded (a retrain re-clusters, so
+  * its snapshot folds nothing); older epochs were pruned and fail
+  * loudly.
   *
   * Crash safety and the commit/replay sequence are the [[EpochStore]]
   * contract, with the centroids dir as a train epoch's snapshot mark.
@@ -118,53 +121,61 @@ class SemanticDedupStore private (spark: SparkSession, root: String,
   override protected def latestSnapshotAt(head: Long): Long =
     math.max(latestTrainAt(head), super.latestSnapshotAt(head))
 
+  /** A train epoch re-clusters: its snapshot never holds the state of
+    * the epoch below it. */
+  override protected def isCompaction(s: Long): Boolean =
+    !fs.exists(new Path(s"$root/centroids/epoch=$s"))
+
   private def vecsAt(e: Long): DataFrame = dataAt("vecs", e)
 
-  private def asgAt(e: Long): DataFrame =
-    unionAt("asg", e, Seq("vec_id", "cell", "sim", "dv"))
+  private def asgAt(at: At): DataFrame =
+    unionAt("asg", at, Seq("vec_id", "cell", "sim", "dv"))
 
   /** Every stored (vec_id, embedding) row at the latest epoch. */
   def vectors: DataFrame = vecsAt(requireCommitted())
 
   /** The maintained frozen-centroid assignment (latest epoch). */
-  def assignment: DataFrame = asgAt(requireCommitted())
+  def assignment: DataFrame = asgAt(current)
 
   /** The maintained pair-graph component assignment (latest epoch). */
-  def components: DataFrame = compAt(requireCommitted())
+  def components: DataFrame = compAt(current)
 
   /** The frozen centroids of the latest TRAIN generation (init or
     * [[retrain]] — a [[compact]] snapshot reuses them). */
-  def centroids: Array[Array[Double]] = {
-    requireCommitted()
-    val t = latestTrain
+  def centroids: Array[Array[Double]] =
+    Clustering.loadCentroids(spark,
+      s"$root/centroids/epoch=${trainedAt(requireCommitted())}")
+
+  /** The latest train epoch under the committed `head`; fails loudly
+    * when there is none. */
+  private def trainedAt(head: Long): Long = {
+    val t = latestTrainAt(head)
     require(t >= 0, s"SemanticDedupStore at $root has no trained " +
       "centroids artifact")
-    Clustering.loadCentroids(spark, s"$root/centroids/epoch=$t")
+    t
   }
 
-  /** `(trainMass, sinceMass)` at epoch `e`: the full-corpus assignment
-    * mass when the frozen centroids were TRAINED (persisted in
-    * `_trainmass/T` before the train epoch's commit marker, so it
-    * survives compaction pruning) and the mass assigned since. Shared
-    * by [[staleFrac]] and [[append]]'s gate so the two can never
-    * diverge. Train-relative, NOT snapshot-relative: a trainer-free
-    * [[compact]] must not reset drift accounting. */
-  private def staleCounts(e: Long): (Long, Long) = {
-    val t = latestTrain
-    require(t >= 0, s"SemanticDedupStore at $root has no trained " +
-      "centroids artifact")
+  /** `(trainMass, sinceMass)` at the head read position `at`: the
+    * full-corpus assignment mass when the frozen centroids were TRAINED
+    * (persisted in `_trainmass/T` before the train epoch's commit
+    * marker, so it survives compaction pruning) and the mass assigned
+    * since. Shared by [[staleFrac]] and [[append]]'s gate so the two can
+    * never diverge. Train-relative, NOT snapshot-relative: a
+    * trainer-free [[compact]] must not reset drift accounting. */
+  private def staleCounts(at: At): (Long, Long) = {
+    val t = trainedAt(at.e)
     val trainMass = EpochStoreKit
       .readToken(fs, new Path(s"$root/_trainmass/$t"))
     require(trainMass.isDefined, s"SemanticDedupStore at $root has no " +
       s"_trainmass/$t record for its train epoch $t")
-    (trainMass.get, asgAt(e).count() - trainMass.get)
+    (trainMass.get, asgAt(at).count() - trainMass.get)
   }
 
   /** Mass appended since the last [[retrain]] as a fraction of the
     * train-time mass — [[append]] fails once a batch would push this
     * past `maxStaleFrac`. Unchanged by [[compact]] (spec-gated). */
   def staleFrac: Double = {
-    val (trainMass, since) = staleCounts(requireCommitted())
+    val (trainMass, since) = staleCounts(current)
     if (since == 0) 0.0
     else if (trainMass == 0) Double.PositiveInfinity
     else since.toDouble / trainMass
@@ -178,53 +189,48 @@ class SemanticDedupStore private (spark: SparkSession, root: String,
     * mass — call [[retrain]] first. Returns the new epoch (the head may
     * advance further when `autoCompactEpochs` triggers a trainer-free
     * [[compact]] — read-identical, train-relative staleness untouched). */
-  def append(batch: DataFrame): Long = appendImpl(batch, None)
+  def append(batch: DataFrame): Long = appendDelta(None)(delta(batch))
 
   /** Exactly-once append for replayable callers (the Structured
     * Streaming `foreachBatch` bridge): a replayed call with the same
     * `token` is a NO-OP returning the original epoch. */
   def append(batch: DataFrame, token: String): Long =
-    replayOr(token)(_ => appendImpl(batch, Some(token)))
+    appendDelta(Some(token))(delta(batch))
 
-  private def appendImpl(batch: DataFrame,
-                         token: Option[String]): Long = {
-    val e = requireCommitted()
-    val t = latestTrain
-    val n = e + 1
-    commitDelta(n, token) {
-      val b = Ckpt.eager(batch.select(col("vec_id").cast("long")
-        .as("vec_id"), col("embedding")))
-      requireDisjoint(b, vecsAt(e), "vec_id",
-        "a duplicated id would corrupt the keep policy")
-      // cumulative staleness gate (the PQ-codebook discipline): count the
-      // post-TRAIN assignment mass, not just this batch — via the same
-      // helper staleFrac reports, so the gate and the metric cannot
-      // diverge
-      val (trainMass, since) = staleCounts(e)
-      val nb = b.count()
-      require(trainMass > 0,
-        s"SemanticDedupStore.append: the frozen centroids at $root " +
-          "assigned ZERO rows at train time (an unassignable corpus — " +
-          "all zero-norm embeddings?) — staleness cannot be bounded " +
-          "against an empty baseline, and retrain() on the same corpus " +
-          "would reproduce it; re-init the store once assignable rows " +
-          "exist")
-      require(since + nb <= maxStaleFrac * trainMass,
-        s"SemanticDedupStore.append: appending $nb rows would put " +
-          s"${since + nb} post-train rows over maxStaleFrac=" +
-          s"$maxStaleFrac of the train-time mass $trainMass — the frozen " +
-          "centroids are stale; call retrain() to re-freeze, then append")
-      val cents = Clustering.loadCentroids(spark, s"$root/centroids/epoch=$t")
-      val batchAsg = Ckpt.eager(
-        Clustering.assignVecWithCentroids(b, cents))
-      val oldComp = compAt(e)
-      // extendSemanticComponents returns an eagerly-checkpointed frame
-      // (extendComponents' contract) — no second Ckpt.eager copy here
-      val comp = Dedup.extendSemanticComponents(
-        asgAt(e), oldComp, batchAsg, tau)
-      clearLitter(n)
-      Seq(b, batchAsg, changedRows(comp, oldComp))
-    }
+  private def delta(batch: DataFrame)(at: At): Seq[DataFrame] = {
+    val b = Ckpt.eager(batch.select(col("vec_id").cast("long")
+      .as("vec_id"), col("embedding")))
+    requireDisjoint(b, vecsAt(at.e), "vec_id",
+      "a duplicated id would corrupt the keep policy")
+    // cumulative staleness gate (the PQ-codebook discipline): count the
+    // post-TRAIN assignment mass, not just this batch — via the same
+    // helper staleFrac reports, so the gate and the metric cannot
+    // diverge
+    val (trainMass, since) = staleCounts(at)
+    val nb = b.count()
+    require(trainMass > 0,
+      s"SemanticDedupStore.append: the frozen centroids at $root " +
+        "assigned ZERO rows at train time (an unassignable corpus — " +
+        "all zero-norm embeddings?) — staleness cannot be bounded " +
+        "against an empty baseline, and retrain() on the same corpus " +
+        "would reproduce it; re-init the store once assignable rows " +
+        "exist")
+    require(since + nb <= maxStaleFrac * trainMass,
+      s"SemanticDedupStore.append: appending $nb rows would put " +
+        s"${since + nb} post-train rows over maxStaleFrac=" +
+        s"$maxStaleFrac of the train-time mass $trainMass — the frozen " +
+        "centroids are stale; call retrain() to re-freeze, then append")
+    val cents = Clustering.loadCentroids(spark,
+      s"$root/centroids/epoch=${trainedAt(at.e)}")
+    val batchAsg = Ckpt.eager(
+      Clustering.assignVecWithCentroids(b, cents))
+    val oldComp = compAt(at)
+    // extendSemanticComponents returns an eagerly-checkpointed frame
+    // (extendComponents' contract) — no second Ckpt.eager copy here
+    val comp = Dedup.extendSemanticComponents(
+      asgAt(at), oldComp, batchAsg, tau)
+    clearLitter(at.e + 1)
+    Seq(b, batchAsg, changedRows(comp, oldComp))
   }
 
   /** Torn-retrain litter at the still-uncommitted epoch `n`: a crashed
@@ -304,17 +310,23 @@ class SemanticDedupStore private (spark: SparkSession, root: String,
   /** The kept rows of `corpus` at the latest epoch under the SemDeDup
     * keep policy (per component keep the member LEAST similar to its
     * centroid, ties to the lowest id), derived from the persisted
-    * artifacts — no clustering, no pairing. */
+    * artifacts — no clustering, no pairing. The frame is planned
+    * lazily: each action reads the store at the head this call
+    * resolved. */
   def kept(corpus: DataFrame, idCol: String = "vec_id"): DataFrame =
-    keptAt(requireCommitted(), corpus, idCol)
+    keptAt(current, corpus, idCol)
 
   /** [[kept]] as of a PAST committed epoch at or above the latest
-    * snapshot (older epochs were pruned by [[retrain]], fails loudly). */
+    * snapshot, or the one a compaction folded (older epochs were pruned
+    * by [[compact]] or [[retrain]], fails loudly). */
   def keptAt(e: Long, corpus: DataFrame,
-             idCol: String = "vec_id"): DataFrame = {
-    val comp = compAt(e)
-    val sims = asgAt(e).select(col("vec_id"), col("sim"))
-    val drop = Ckpt.eager(Dedup.semanticDropIds(comp, sims))
+             idCol: String = "vec_id"): DataFrame =
+    keptAt(asOf(e), corpus, idCol)
+
+  private[api] def keptAt(at: At, corpus: DataFrame,
+                          idCol: String): DataFrame = {
+    val sims = asgAt(at).select(col("vec_id"), col("sim"))
+    val drop = Dedup.semanticDropIds(compAt(at), sims)
     corpus.join(drop, corpus(idCol).cast("long") === drop("_drop_id"),
       "left_anti")
   }

@@ -3,6 +3,7 @@ package graft.api
 import graft.operators.{Ckpt, SubstringIndex, SuffixArray}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import EpochStore.At
 
 /** PERSISTED incremental substring-dedup store — the deployment packaging
   * of [[graft.operators.SubstringIndex]]: a growing corpus deduped after
@@ -40,7 +41,8 @@ import org.apache.spark.sql.functions._
   * [[EpochStore]] contract.
   *
   * Time-travel: [[dedupedAt]] serves any epoch at or above the latest
-  * snapshot; epochs below it were pruned by [[compact]] and fail loudly.
+  * snapshot, and the one a compaction folded; epochs below it were
+  * pruned by [[compact]] and fail loudly.
   *
   * The reference engine has no substring machinery (vector-level dedup
   * only; reference storage_engine.py) — training-data-pipeline tier.
@@ -54,18 +56,18 @@ class SubstringDedupStore private (spark: SparkSession, root: String,
 
   protected val dataKinds = Seq("corpus" -> Seq("doc_id", "text"))
   protected val snapshotKinds =
-    Seq("index" -> indexAt _, "deduped" -> dedupedResolved _)
+    Seq("index" -> indexAt _, "deduped" -> (dedupedAt(_: At)))
 
-  private def indexAt(e: Long): DataFrame =
-    latestWinsAt("index", e, Seq("k1", "k2"), indexCols)
+  private def indexAt(at: At): DataFrame =
+    latestWinsAt("index", at, Seq("k1", "k2"), indexCols)
 
-  private def dedupedResolved(e: Long): DataFrame =
-    latestWinsAt("deduped", e, Seq("doc_id"),
+  private[api] def dedupedAt(at: At): DataFrame =
+    latestWinsAt("deduped", at, Seq("doc_id"),
       Seq("doc_id", "text", "n_tokens_before", "n_tokens_after"))
 
   /** The full corpus at the latest committed epoch (union of appended
     * batches — epoch pruning via the partition column). */
-  def corpus: DataFrame = corpusAt(requireCommitted())
+  def corpus: DataFrame = dataAt("corpus", requireCommitted())
 
   /** The corpus as of a PAST committed epoch — reaches ANY committed
     * epoch (`corpus/` holds the data itself and is never pruned, so
@@ -75,20 +77,20 @@ class SubstringDedupStore private (spark: SparkSession, root: String,
     dataAt("corpus", e)
   }
 
+  private[api] def corpusAt(at: At): DataFrame = dataAt("corpus", at.e)
+
   /** The maintained window-key index at the latest committed epoch
     * (snapshot + deltas, latest-epoch-wins per key). */
-  def index: DataFrame = indexAt(requireCommitted())
+  def index: DataFrame = indexAt(current)
 
   /** The deduped corpus at the latest committed epoch. */
-  def deduped: DataFrame = dedupedResolved(requireCommitted())
+  def deduped: DataFrame = dedupedAt(current)
 
   /** Dedup result as of a PAST committed epoch (audit/time-travel) —
-    * reaches any epoch at or above the latest snapshot; older epochs
-    * were pruned by [[compact]] and fail loudly. */
-  def dedupedAt(e: Long): DataFrame = {
-    requireEpoch(e)
-    dedupedResolved(e)
-  }
+    * reaches any epoch at or above the latest snapshot, and the one a
+    * compaction folded; older epochs were pruned by [[compact]] and fail
+    * loudly. */
+  def dedupedAt(e: Long): DataFrame = dedupedAt(asOf(e))
 
   /** Append a batch (ids strictly above every stored id — enforced by
     * [[graft.operators.SubstringIndex]]'s guard), commit epoch+1 as a
@@ -99,32 +101,28 @@ class SubstringDedupStore private (spark: SparkSession, root: String,
     * index keys — never the full corpus artifacts. Returns the new
     * epoch (the head may advance further when `autoCompactEpochs`
     * triggers a compaction — read-identical, spec-gated). */
-  def append(batch: DataFrame): Long = appendImpl(batch, None)
+  def append(batch: DataFrame): Long = appendDelta(None)(delta(batch))
 
   /** Exactly-once append for replayable callers (the Structured
     * Streaming `foreachBatch` bridge, [[graft.streaming.StoreSink]]):
     * a replayed call with the same `token` (e.g. the stream's batchId)
     * is a NO-OP returning the original epoch. */
   def append(batch: DataFrame, token: String): Long =
-    replayOr(token)(_ => appendImpl(batch, Some(token)))
+    appendDelta(Some(token))(delta(batch))
 
-  private def appendImpl(batch: DataFrame,
-                         token: Option[String]): Long = {
-    val e = requireCommitted()
-    commitDelta(e + 1, token) {
-      val b = Ckpt.eager(batch.select(col("doc_id").cast("long")
-        .as("doc_id"), col("text").cast("string").as("text")))
-      // the index is consumed KEY-RESTRICTED: the latest-wins window runs
-      // only over the rows whose key the batch (then the touched docs)
-      // actually carries — filtering on the window's own partition keys
-      // first is resolution-transparent — so the stored index is scanned,
-      // never shuffled whole (the former base-linear append term, r14)
-      val indexFor: DataFrame => DataFrame = keys =>
-        latestWinsFor("index", e, Seq("k1", "k2"), indexCols, keys)
-      val (dedDelta, idxDelta) = SubstringIndex.appendDeltas(
-        dataAt("corpus", e), indexFor, b, window)
-      Seq(b, idxDelta, dedDelta)
-    }
+  private def delta(batch: DataFrame)(at: At): Seq[DataFrame] = {
+    val b = Ckpt.eager(batch.select(col("doc_id").cast("long")
+      .as("doc_id"), col("text").cast("string").as("text")))
+    // the index is consumed KEY-RESTRICTED: the latest-wins window runs
+    // only over the rows whose key the batch (then the touched docs)
+    // actually carries — filtering on the window's own partition keys
+    // first is resolution-transparent — so the stored index is scanned,
+    // never shuffled whole (the former base-linear append term, r14)
+    val indexFor: DataFrame => DataFrame = keys =>
+      latestWinsFor("index", at, Seq("k1", "k2"), indexCols, keys)
+    val (dedDelta, idxDelta) = SubstringIndex.appendDeltas(
+      corpusAt(at), indexFor, b, window)
+    Seq(b, idxDelta, dedDelta)
   }
 }
 

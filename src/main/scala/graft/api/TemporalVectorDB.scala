@@ -804,7 +804,7 @@ class TemporalVectorDB(
         maxCost))
       val n = targets.count()
       if (n > 0) {
-        rewriteStore(VersionStore.promoteBases(_, maxCost))
+        rewriteStore(VersionStore.promoteBases(_, targets))
         val (head, rows) = headVersions()
         // the promoted rows are the only rows the rewrite changed
         refreshCaches(Ckpt.eager(rows.join(targets,
@@ -1014,7 +1014,8 @@ private[api] final class VersionsTable(spark: SparkSession, root: String)
   private val cols = Schemas.versions.fieldNames.toSeq
 
   protected val dataKinds = Nil
-  protected val snapshotKinds = Seq("versions" -> at _)
+  protected val snapshotKinds =
+    Seq("versions" -> ((p: EpochStore.At) => at(p.e)))
 
   override protected def keepsCommitHistory = false
 
@@ -1029,7 +1030,8 @@ private[api] final class VersionsTable(spark: SparkSession, root: String)
   def at(e: Long): DataFrame = resolved match {
     case Some((`e`, df)) => df
     case _ =>
-      val df = unionAt("versions", e, cols, head = e, Some(Schemas.versions))
+      val df = unionAt("versions", position(e, e), cols,
+        Some(Schemas.versions))
       resolved = Some((e, df))
       df
   }
@@ -1041,11 +1043,6 @@ private[api] final class VersionsTable(spark: SparkSession, root: String)
     else at(e)
 
   def read: DataFrame = readAt(epoch)
-
-  /** Run `append` on the committed head, exactly once per `token` when
-    * there is one. */
-  def appendOnce(token: Option[String])(append: Long => Long): Long =
-    token.fold(append(epoch))(replayOr(_)(append))
 
   /** Commit `rows` as the delta epoch after `head`. Returns the
     * committed head that holds exactly the table at that epoch: the

@@ -255,9 +255,9 @@ object SubstringIndex {
   /** The resolver a MATERIALIZED index frame induces: restriction is a
     * semi-join on the requested keys (resolution-transparent — the
     * frame is already resolved), broadcast only while the key frame's
-    * plan-statistics estimate stays under
-    * `spark.graft.keys.broadcastMaxBytes` (default 256 MB; driver-side
-    * check, zero extra jobs): the TOUCHED-doc key frame scales with
+    * plan-statistics estimate stays under 256 MB
+    * ([[graft.api.EpochStoreKit.guardedBroadcast]]; driver-side check,
+    * zero extra jobs): the TOUCHED-doc key frame scales with
     * touched-doc text rather than batch size, so a batch overlapping
     * many base docs could push an unconditional broadcast past driver
     * memory — past the budget the join falls back to a shuffle

@@ -310,24 +310,15 @@ object SuffixArray {
     * 0-sentinels past doc end) equals the nested binary comparison in
     * both EQUALITY and ORDER, so the round-boundary rank values are
     * bit-identical to the binary construction's. The LCP walk pays for
-    * the skipped levels with up to 2^step - 1 repeated checks per
+    * the skipped levels with up to 2^RoundStep - 1 repeated checks per
     * materialized level — joins against the checkpointed rank table,
     * traded against full-corpus shuffle rounds (guide §2.4/§1.2: the
-    * distributed algorithm first). Default 3 (8-ary, measured best on
-    * the declared corpora); `spark.graft.suffix.roundStep` overrides it
-    * per session — a corpus whose walk pairs rival the corpus size
-    * (dense adjacent-group duplication) may prefer 2 (shorter walks),
-    * results identical either way. */
-  private def roundStep(df: DataFrame): Int = {
-    val s = df.sparkSession.conf
-      .getOption("spark.graft.suffix.roundStep").map(_.toInt).getOrElse(3)
-    require(s >= 1 && s <= 4,
-      s"spark.graft.suffix.roundStep out of range [1,4]: $s")
-    s
-  }
+    * distributed algorithm first). 3 (8-ary) measured best on the
+    * declared corpora; results are identical at any step. */
+  private val RoundStep = 3
 
   /** The doubling loop shared by [[suffixRanks]] and the stats/removal
-    * entry points, m-ary (see [[roundStep]]) and with the
+    * entry points, m-ary (see [[RoundStep]]) and with the
     * PREFIX-DOUBLING FIXPOINT EARLY-EXIT: when a round splits NO group
     * (the distinct-tuple count equals the previous round's
     * distinct-rank count), the partition is provably stable under every
@@ -356,10 +347,9 @@ object SuffixArray {
     var k = 0
     var avail = List(0)
     var convergedAt = -1
-    val step = roundStep(toks)
     val byPos = Window.partitionBy("doc_id").orderBy("pos")
     while (k < levels) {
-      val t = math.min(k + step, levels)
+      val t = math.min(k + RoundStep, levels)
       if (convergedAt >= 0)
         cur = cur.withColumn(s"r$t", col(s"r$k"))
       else {

@@ -141,15 +141,15 @@ object VersionStore {
   /** EXECUTE the base-promotion recommendation the reference can only
     * REPORT (optimize_content_bases returns "Consider promoting N
     * versions to base snapshots", temporal_database.py:443-494, and no
-    * code path acts on it): reconstruct every [[promotionTargets]] row in
-    * ONE set-based job and rewrite it as a base snapshot — embedding
+    * code path acts on it): reconstruct every `targets` row ((content_id,
+    * seq) — [[promotionTargets]], computed once by the caller) in ONE
+    * set-based job and rewrite it as a base snapshot — embedding
     * materialized, delta arrays and from_seq cleared, ts / metadata /
     * change_magnitude preserved. Every version's VALUE is unchanged
     * (promotion materializes exactly what reconstruction computes); only
     * future read cost changes. Returns the rewritten store frame; the
     * facade's applyBaseOptimization handles the store swap. */
-  def promoteBases(versions: DataFrame, maxCost: Int = 10): DataFrame = {
-    val targets = promotionTargets(versions, maxCost)
+  def promoteBases(versions: DataFrame, targets: DataFrame): DataFrame = {
     val rebuilt = Reconstruction.reconstruct(versions, targets)
       .select(col("content_id"), col("seq"), col("embedding").as("_emb"))
     val promoted = versions

@@ -118,7 +118,8 @@ object Temporal {
     // delta columns cleared), replayed entirely by the oracle.
     "q51_promote_bases" -> ((s, d) => {
       val store = SyntheticVersions.versions(s, d)
-      VersionStore.promoteBases(store, maxCost = 3)
+      VersionStore.promoteBases(store,
+          VersionStore.promotionTargets(store, maxCost = 3))
         .select(col("content_id"), col("seq"), col("kind"),
           col("embedding").isNotNull.as("has_embedding"),
           coalesce(size(col("delta_idx")), lit(-1)).as("n_delta_dims"),

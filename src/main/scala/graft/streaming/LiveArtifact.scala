@@ -45,21 +45,19 @@ sealed abstract class LiveArtifact(spark: SparkSession, root: String)
   protected val dataKinds = Nil
   protected val snapshotKinds = Seq("delta" -> stateAt _)
 
-  // resolved only at the committed head (by read and compact), so `e` is
-  // the head and `_commits` is not listed again
-  private def stateAt(e: Long): DataFrame =
-    merge(unionAt("delta", e, cols, head = e))
+  private def stateAt(at: EpochStore.At): DataFrame =
+    merge(unionAt("delta", at, cols))
 
   /** The live state: the merge of every committed delta. */
   def read: DataFrame = {
     val e = epoch
-    if (e < 0) build(emptyInput) else stateAt(e)
+    if (e < 0) build(emptyInput) else stateAt(position(e, e))
   }
 
   /** Commit `batch`'s delta as the next epoch, exactly once per
     * `token`; returns the epoch (a replay returns the original one). */
   def append(batch: DataFrame, token: String): Long =
-    replayOr(token)(head => commitDelta(head + 1, Some(token))(
+    appendOnce(Some(token))(head => commitDelta(head + 1, Some(token))(
       Seq(build(batch))))
 
   // read only at the head: compaction prunes the absorbed commit markers

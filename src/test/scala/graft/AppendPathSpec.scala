@@ -265,4 +265,17 @@ class AppendPathSpec extends SparkSpec {
     assert(searchJobs <= 1, s"searchSimilarContent ran $searchJobs jobs")
     db.close()
   }
+
+  test("job budget: applyBaseOptimization evaluates the store-wide cost " +
+    "window once") {
+    val db = pinned(freshRoot(), VersionStore.Config(baseInterval = 50))
+    db.addVersions(batch(1))
+    val (promoted, jobs) = jobsOf(db.applyBaseOptimization(maxCost = 2))
+    assert(promoted > 0)
+    // the targets are pinned once and handed to the rewrite; evaluating
+    // the cost window again inside it adds its exchange's jobs (17)
+    assert(jobs <= 15, s"one promotion ran $jobs jobs")
+    info(s"jobs per promotion: $jobs")
+    db.close()
+  }
 }

@@ -119,6 +119,52 @@ class AutoCompactSpec extends SparkSpec {
     assert(kept(auto) == kept(manual))
   }
 
+  test("the epoch an auto-folding append returns stays readable: keptAt " +
+    "of a plain append's, a token append's and its replay's epoch equals " +
+    "a never-folded twin's; a read two epochs below the fold, or below a " +
+    "retrain, fails loudly") {
+    val rootA = Files.createTempDirectory("graft-ac9").toString + "/s"
+    val rootB = Files.createTempDirectory("graft-ac10").toString + "/s"
+    val init = Seq((1L, H), (2L, H)).toDF("_id", "simhash")
+    val auto = FingerprintStore.init(spark, rootA, init,
+      autoCompactEpochs = 1)
+    val plain = FingerprintStore.init(spark, rootB, init,
+      autoCompactEpochs = 0)
+    val allIds = (Seq(1L, 2L) ++ (1 to 2).flatMap(k => Seq(100L * k,
+      100L * k + 1))).toDF("doc_id")
+    def same(a: Long, p: Long, what: String): Unit =
+      assert(ids(auto.keptAt(a, allIds)) == ids(plain.keptAt(p, allIds)),
+        what)
+    val a1 = auto.append(batch(1))
+    val p1 = plain.append(batch(1))
+    assert(a1 == 1L && auto.latestSnapshot == 2L, "the fold fired")
+    same(a1, p1, "plain append")
+    val a2 = auto.append(batch(2), "t2")
+    val p2 = plain.append(batch(2), "t2")
+    assert(a2 == 3L && auto.latestSnapshot == 4L)
+    same(a2, p2, "token append")
+    assert(auto.append(batch(2), "t2") == a2)
+    assert(plain.append(batch(2), "t2") == p2)
+    same(a2, p2, "replay")
+    assert(ids(auto.kept(allIds)) == ids(plain.kept(allIds)))
+    val gone = intercept[IllegalArgumentException](
+      auto.keptAt(a1, allIds).collect())
+    assert(gone.getMessage.contains("below the latest snapshot"))
+
+    // a retrain's snapshot re-clusters: it folds nothing
+    val vecs = Seq((1L, Seq(1f, 0.01f, 0f, 0f)), (2L, Seq(0f, 1f, 0f, 0f)),
+      (3L, Seq(0f, 0f, 1f, 0f))).toDF("vec_id", "embedding")
+    val sm = SemanticDedupStore.init(spark,
+      Files.createTempDirectory("graft-ac11").toString + "/s", vecs,
+      nCells = 2, iters = 2, maxStaleFrac = 10.0, autoCompactEpochs = 0)
+    val e1 = sm.append(Seq((10L, Seq(1f, 0.015f, 0f, 0f)))
+      .toDF("vec_id", "embedding"))
+    assert(sm.retrain(nCells = 2, iters = 2) == e1 + 1)
+    val retrained = intercept[IllegalArgumentException](
+      sm.keptAt(e1, vecs.select("vec_id"), "vec_id").collect())
+    assert(retrained.getMessage.contains("below the latest snapshot"))
+  }
+
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
 

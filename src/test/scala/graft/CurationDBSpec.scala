@@ -100,11 +100,17 @@ class CurationDBSpec extends SparkSpec {
       org.apache.spark.storage.StorageLevel.NONE)
 
     // compactAll advances member snapshots without changing reads or
-    // the facade epoch
+    // the facade epoch; each member snapshot folds the recorded member
+    // epoch, so the as-of reads at the facade head still resolve
     val pre = ids(db.kept(allIds))
+    val preManifest = db.manifest.collect().map(_.toString).toSet
     db.compactAll()
     assert(db.epoch == 1L)
     assert(ids(db.kept(allIds)) == pre)
+    assert(ids(db.keptAt(db.epoch, allIds)) == pre)
+    assert(db.manifest.collect().map(_.toString).toSet == preManifest)
+    assert(db.manifestAt(db.epoch).collect().map(_.toString).toSet ==
+      preManifest)
   }
 
   test("facade time-travel: keptAt(n) replays every member at the " +
@@ -149,6 +155,8 @@ class CurationDBSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-cdb5").toString + "/db"
     val db = CurationDB.init(spark, root, base, cfg)
     db.append(batch)
+    val allIds1 = base.unionByName(batch).select("doc_id")
+    val kept1 = ids(db.kept(allIds1))
     // member maintenance advances member epochs past the facade count
     db.compactAll()
     val batch2 = rows(Seq(20L, 21L),
@@ -173,12 +181,9 @@ class CurationDBSpec extends SparkSpec {
         allIds2.select(col("doc_id").as("vec_id")), "vec_id"), "vec_id")
     assert(ids(db.keptAt(2L, allIds2)) == ids(db.kept(allIds2)))
     assert(ids(db.keptAt(2L, allIds2)) == direct)
-    // facade epoch 1's recorded member epochs were absorbed by the
-    // compaction — loud member failure, the documented contract
-    val gone = intercept[IllegalArgumentException] {
-      db.keptAt(1L, base.unionByName(batch).select("doc_id")).collect()
-    }
-    assert(gone.getMessage.contains("below the latest snapshot"))
+    // facade epoch 1's recorded member epochs were folded by the
+    // compaction: each member snapshot holds exactly that epoch's state
+    assert(ids(db.keptAt(1L, allIds1)) == kept1)
     // manifestAt at the head reproduces manifest exactly
     assert(db.manifestAt(2L).collect().map(_.toString).toSet ==
       db.manifest.collect().map(_.toString).toSet)

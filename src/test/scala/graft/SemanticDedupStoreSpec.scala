@@ -162,9 +162,11 @@ class SemanticDedupStoreSpec extends SparkSpec {
     assert(s.staleFrac == preStale) // train-relative, NOT reset
     assert(s.centroids.map(_.toSeq).toSeq ==
       cents.map(_.toSeq).toSeq) // same frozen generation
-    // absorbed asg/comp deltas pruned; time-travel below fails loudly
+    // absorbed asg/comp deltas pruned; the epoch the compaction folded
+    // reads from the snapshot, time-travel further below fails loudly
     assert(!new java.io.File(s"$root/asg/epoch=1").exists)
-    val old = intercept[IllegalArgumentException] { s.keptAt(1L, u1) }
+    assert(ids(s.keptAt(1L, u1)) == preKept)
+    val old = intercept[IllegalArgumentException] { s.keptAt(0L, base) }
     assert(old.getMessage.contains("below the latest snapshot"))
 
     // appends extend from the compacted snapshot under the SAME frozen

@@ -120,7 +120,8 @@ class VersionStoreSpec extends SparkSpec {
       .reconstruct(store, store.select("content_id", "seq"))
       .select("seq", "embedding").as[(Int, Seq[Float])].collect().toMap
 
-    val rewritten = VersionStore.promoteBases(store, maxCost = 3)
+    val rewritten = VersionStore.promoteBases(store,
+      VersionStore.promotionTargets(store, maxCost = 3))
     val kinds = rewritten.select("seq", "kind").as[(Int, String)]
       .collect().toMap
     assert((1 to 10).map(kinds) == Seq("base", "delta", "delta", "delta",
